@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deeplake_spark.operators.indexes import INDEX_KINDS
 from deeplake_spark.types import DLType
 
 _LOG_DIR = "_dl_log"
@@ -899,86 +900,15 @@ class Dataset:
                 f"column {column!r} already has an index; drop_index first")
         if column not in [f.name for f in (self.schema or T.StructType([])).fields]:
             raise ColumnDoesNotExistError(f"no column {column!r}")
-        idx_path = os.path.join(self.path, "_indexes", f"{column}_{kind}")
-        if kind == "inverted":
-            from deeplake_spark.operators.indexes import build_inverted_index
-
-            build_inverted_index(self.to_df(), text_col=column, id_col="_row_id").save(idx_path)
-        elif kind == "clustered":
-            from deeplake_spark.operators.similarity import build_ivf, save_ivf
-
-            save_ivf(
-                build_ivf(self.to_df(), vec_col=column, id_col="_row_id",
-                          **{k: v for k, v in options.items()
-                             if k in ("n_clusters", "seed", "max_iter",
-                                      "config")}),
-                idx_path,
-            )
-        elif kind == "numeric":
-            from deeplake_spark.operators.indexes import build_numeric_index
-
-            build_numeric_index(self.to_df(), column, id_col="_row_id").save(idx_path)
-        elif kind == "json":
-            from deeplake_spark.operators.indexes import build_json_index
-
-            paths = options.get("paths")
-            if not paths:
-                raise InvalidIndexCreationError("json index requires paths=[...]")
-            build_json_index(self.to_df(), column, paths, id_col="_row_id").save(idx_path)
-        elif kind == "exact":
-            from deeplake_spark.operators.indexes import build_exact_index
-
-            build_exact_index(self.to_df(), column, id_col="_row_id").save(idx_path)
-        elif kind == "pooled":
-            from deeplake_spark.operators.similarity import (
-                build_pooled_maxsim,
-                save_pooled_maxsim,
-            )
-
-            save_pooled_maxsim(
-                build_pooled_maxsim(self.to_df(), matrix_col=column, id_col="_row_id"),
-                idx_path,
-            )
-        elif kind == "clustered_quantized":
-            from deeplake_spark.operators.similarity import (
-                build_quantized,
-                save_quantized,
-            )
-
-            save_quantized(
-                build_quantized(self.to_df(), vec_col=column, id_col="_row_id"),
-                idx_path,
-            )
-        elif kind == "pq":
-            from deeplake_spark.operators.similarity import build_pq, save_pq
-
-            save_pq(
-                build_pq(self.to_df(), vec_col=column, id_col="_row_id",
-                         **{k: v for k, v in options.items()
-                            if k in ("m", "nbits", "seed", "max_iter",
-                                     "train_limit", "n_clusters", "config")}),
-                idx_path,
-            )
-        elif kind == "fingerprint":
-            from deeplake_spark.operators.multimodal import (
-                build_fingerprint_index,
-                save_fingerprint_index,
-            )
-
-            modality = options.get("modality")
-            if not modality:
-                raise InvalidIndexCreationError(
-                    "fingerprint index requires modality="
-                    "'image'|'audio'|'video'")
-            save_fingerprint_index(
-                build_fingerprint_index(
-                    self.to_df(), payload_col=column, id_col="_row_id",
-                    modality=modality,
-                    **{k: v for k, v in options.items() if k != "modality"}),
-                idx_path,
-            )
-        else:
+        spec = INDEX_KINDS.get(kind)
+        if spec is None:
             raise InvalidIndexCreationError(f"unsupported index kind {kind!r}")
+        if spec.required and not options.get(spec.required):
+            raise InvalidIndexCreationError(
+                f"{kind} index requires {spec.required}=...")
+        idx_path = os.path.join(self.path, "_indexes", f"{column}_{kind}")
+        spec.save(spec.build(self.to_df(), column, "_row_id", options),
+                  idx_path)
         refs = _read_refs(self.path)
         refs.setdefault("indexes", {})[column] = {
             "kind": kind, "path": idx_path, "options": options,
@@ -1084,59 +1014,15 @@ class Dataset:
     def _load_indexes(self) -> dict:
         """column → (kind, index, id_col) for every registered index —
         the translator's rewrite table (CONTAINS/EQUALS/BETWEEN/IN/JSON
-        semijoins + ORDER BY cosine LIMIT k ANN routing)."""
-        from deeplake_spark.operators.indexes import (
-            ExactTextIndex,
-            InvertedIndex,
-            JsonIndex,
-            NumericIndex,
-        )
-        from deeplake_spark.operators.similarity import load_ivf
-
-        from deeplake_spark.operators.multimodal import load_fingerprint_index
-
-        loaders = {
-            "inverted": InvertedIndex.load,
-            "numeric": NumericIndex.load,
-            "json": JsonIndex.load,
-            "exact": ExactTextIndex.load,
-            "clustered": load_ivf,
-            "fingerprint": load_fingerprint_index,
-        }
-        refs = _read_refs(self.path)
-        out = {}
-        for col, meta in refs.get("indexes", {}).items():
-            if meta["kind"] == "pooled":
-                from deeplake_spark.operators.similarity import load_pooled_maxsim
-
-                out[col] = (
-                    "pooled",
-                    load_pooled_maxsim(self.spark, meta["path"], source=self.to_df()),
-                    "_row_id",
-                )
-                continue
-            if meta["kind"] == "pq":
-                from deeplake_spark.operators.similarity import load_pq
-
-                out[col] = (
-                    "pq",
-                    load_pq(self.spark, meta["path"], source=self.to_df()),
-                    "_row_id",
-                )
-                continue
-            if meta["kind"] == "clustered_quantized":
-                from deeplake_spark.operators.similarity import load_quantized
-
-                out[col] = (
-                    "clustered_quantized",
-                    load_quantized(self.spark, meta["path"], source=self.to_df()),
-                    "_row_id",
-                )
-                continue
-            loader = loaders.get(meta["kind"])
-            if loader is not None:
-                out[col] = (meta["kind"], loader(self.spark, meta["path"]), "_row_id")
-        return out
+        semijoins + ORDER BY cosine LIMIT k ANN routing). Rerank kinds
+        bind the live snapshot; it is built only when one is present."""
+        refs = {c: m for c, m in _read_refs(self.path).get("indexes", {}).items()
+                if m["kind"] in INDEX_KINDS}
+        source = (self.to_df() if any(INDEX_KINDS[m["kind"]].needs_source
+                                      for m in refs.values()) else None)
+        return {col: (m["kind"], INDEX_KINDS[m["kind"]].load(
+                    self.spark, m["path"], source), "_row_id")
+                for col, m in refs.items()}
 
     def search(self, column: str, query_vec, k: int = 10, config=None,
                predicate: str | None = None):
@@ -1151,15 +1037,7 @@ class Dataset:
         (index_holder.hpp:30-36): the filtered row-id set (itself
         index-accelerated where possible) is handed to the probe as the
         candidate relation."""
-        from deeplake_spark.operators.similarity import (
-            ivf_search,
-            load_ivf,
-            load_pq,
-            load_quantized,
-            pq_search,
-            quantized_index_search,
-            topk_cosine,
-        )
+        from deeplake_spark.operators.similarity import topk_cosine
 
         config = config or self.query_config
         candidates = None
@@ -1170,24 +1048,12 @@ class Dataset:
             filtered = tql_query(f"SELECT * WHERE {predicate}", spark=self.spark,
                                  default=base, indexes=self._load_indexes())
             candidates = filtered.select("_row_id")
-        refs = _read_refs(self.path)
-        meta = refs.get("indexes", {}).get(column)
-        if meta and meta["kind"] == "clustered":
-            hits = ivf_search(load_ivf(self.spark, meta["path"]), query_vec, k=k,
-                              config=config, candidates=candidates)
-            # index assignments can outlive rows (deletes staged or
-            # committed with indexing_mode != 'automatic'): only return
-            # rows present in the live snapshot — matching the exact-scan
-            # path and the translator's ANN route
-            return hits.join(base.select("_row_id"), "_row_id", "left_semi")
-        if meta and meta["kind"] == "clustered_quantized":
-            idx = load_quantized(self.spark, meta["path"], source=base)
-            return quantized_index_search(idx, query_vec, k=k, config=config,
-                                          candidates=candidates)
-        if meta and meta["kind"] == "pq":
-            idx = load_pq(self.spark, meta["path"], source=base)
-            return pq_search(idx, query_vec, k=k, config=config,
-                             candidates=candidates)
+        meta = _read_refs(self.path).get("indexes", {}).get(column)
+        spec = INDEX_KINDS.get(meta["kind"]) if meta else None
+        if spec is not None and spec.search is not None:
+            return spec.search(spec.load(self.spark, meta["path"], base),
+                               query_vec, base, k=k, config=config,
+                               candidates=candidates)
         if candidates is not None:
             base = base.join(candidates.distinct(), "_row_id", "left_semi")
         return topk_cosine(base, column, query_vec, k=k, id_col="_row_id")
@@ -1205,29 +1071,25 @@ class Dataset:
         bounded list, weighted union, top-k (N = k * accuracy_factor).
         Returns (_row_id, fused). Column defaults resolve from the
         registered indexes when unambiguous."""
-        from deeplake_spark.operators.indexes import (
-            InvertedIndex,
-            bm25_via_index,
-            softmax_fuse,
-        )
+        from deeplake_spark.operators.indexes import bm25_via_index, softmax_fuse
 
         config = config or self.query_config
         refs = _read_refs(self.path).get("indexes", {})
+        inverted = {c: m for c, m in refs.items() if m["kind"] == "inverted"}
         if text_col is None:
-            cands = [c for c, m in refs.items() if m["kind"] == "inverted"]
-            if len(cands) != 1:
+            if len(inverted) != 1:
                 raise DatasetError(
                     "pass text_col= (no unique inverted index)")
-            text_col = cands[0]
+            text_col = next(iter(inverted))
         if vec_col is None:
-            vec_kinds = ("clustered", "clustered_quantized", "pq")
-            cands = [c for c, m in refs.items() if m["kind"] in vec_kinds]
+            cands = [c for c, m in refs.items()
+                     if getattr(INDEX_KINDS.get(m["kind"]), "search", None)]
             vec_col = cands[0] if len(cands) == 1 else "embedding"
-        meta = refs.get(text_col)
-        if not meta or meta["kind"] != "inverted":
+        meta = inverted.get(text_col)
+        if not meta:
             raise DatasetError(f"no inverted index on {text_col!r}")
         n = k * config.accuracy_factor
-        inv = InvertedIndex.load(self.spark, meta["path"])
+        inv = INDEX_KINDS[meta["kind"]].load(self.spark, meta["path"])
         bl = bm25_via_index(inv, list(terms), k=n).withColumnRenamed(
             "row_id", "_row_id")
         vl = self.search(vec_col, query_vec, k=n, config=config)
@@ -1765,46 +1627,9 @@ class Dataset:
         new_df = self.spark.read.schema(self.schema).parquet(
             *[os.path.join(self.path, _DATA_DIR, f) for f in new_files]
         )
-        kind, idx_path = meta["kind"], meta["path"]
-        if kind == "inverted":
-            from deeplake_spark.operators.indexes import build_inverted_index
-
-            build_inverted_index(new_df, text_col=column, id_col="_row_id").append_to(idx_path)
-        elif kind == "numeric":
-            from deeplake_spark.operators.indexes import build_numeric_index
-
-            build_numeric_index(new_df, column, id_col="_row_id").append_to(idx_path)
-        elif kind == "json":
-            from deeplake_spark.operators.indexes import build_json_index
-
-            paths = meta.get("options", {}).get("paths")
-            build_json_index(new_df, column, paths, id_col="_row_id").append_to(idx_path)
-        elif kind == "exact":
-            from deeplake_spark.operators.indexes import build_exact_index
-
-            build_exact_index(new_df, column, id_col="_row_id").append_to(idx_path)
-        elif kind == "clustered":
-            from deeplake_spark.operators.similarity import append_ivf_delta, load_ivf
-
-            append_ivf_delta(load_ivf(self.spark, idx_path), new_df, idx_path)
-        elif kind == "fingerprint":
-            from deeplake_spark.operators.multimodal import append_fingerprint_delta
-
-            append_fingerprint_delta(new_df, column, idx_path)
-        elif kind == "pooled":
-            from deeplake_spark.operators.similarity import append_pooled_delta
-
-            append_pooled_delta(new_df, matrix_col=column, id_col="_row_id",
-                                path=idx_path)
-        elif kind == "clustered_quantized":
-            from deeplake_spark.operators.similarity import append_quantized_delta
-
-            append_quantized_delta(new_df, vec_col=column, id_col="_row_id",
-                                   path=idx_path)
-        elif kind == "pq":
-            from deeplake_spark.operators.similarity import append_pq_delta, load_pq
-
-            append_pq_delta(load_pq(self.spark, idx_path), new_df, idx_path)
+        INDEX_KINDS[meta["kind"]].append(
+            self.spark, meta["path"], new_df, column, "_row_id",
+            meta.get("options", {}))
 
     def history(self) -> "History":
         out = []

@@ -179,14 +179,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every test table as a temp view so `spark.sql` works."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 #: (session key, plan semanticHash) -> probed partition count. Bounded;
 #: avoids re-running plan→RDD physical planning on every operator entry.
 _PARTITION_PROBE_CACHE: dict[tuple[str, int], int] = {}

@@ -1097,7 +1097,6 @@ def winnow_fingerprint_pairs(df: DataFrame, text_col: str = "text",
         # same economics as the rejected t28/t33 persists — so the
         # cap branch below stays recompute-shaped.
         fps = _track(fps)
-    if max_docs is None:
         kept = fps  # uncapped (the exactly-oracled t42 lane)
     else:
         bounded = (fps.groupBy("fp")

@@ -22,6 +22,7 @@ writes refresh the side table; refresh is an idempotent rebuild job.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -29,6 +30,8 @@ from pyspark.sql import functions as F
 
 from deeplake_spark.functions.text import tokenize
 from deeplake_spark.io import ensure_parallelism, session_key
+from deeplake_spark.operators import multimodal as _mm
+from deeplake_spark.operators import similarity as _sim
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75
@@ -418,25 +421,25 @@ def _heavy_map(counts: DataFrame, n: int, old: dict | None) -> dict:
     return {"n_docs": n, "floor_frac": floor, "heavy": heavy}
 
 
-def _load_stats_sidecar(path: str) -> dict | None:
-    """Read a heavy-hitter sidecar; corrupt or missing → None (the
+def _load_stats_sidecar(path: str) -> dict:
+    """Read a heavy-hitter sidecar; corrupt or missing → {} (the
     index loads stats-less and routes ungated — never fail the
     index over its stats)."""
     from deeplake_spark.storage import get_json, json_exists
 
     try:
         if not json_exists(path):
-            return None
+            return {}
         ts = get_json(path)
         return {
-            "n_docs": int(ts.get("n_docs", 0)),
+            "n_rows_est": int(ts.get("n_docs", 0)) or None,
             "floor_frac": float(ts.get("floor_frac", _HEAVY_FRAC)),
             "heavy": {k: int(v) for k, v in ts.get("heavy", {}).items()},
             "range_granule": (int(ts["range_granule"])
                               if ts.get("range_granule") else None),
         }
     except Exception:
-        return None
+        return {}
 
 
 # ----------------------------------------------------------- inverted (text)
@@ -521,6 +524,14 @@ class InvertedIndex:
         return _term_hit(self.granules, uniq).select("g", "lo", "hi")
 
     def save(self, path: str, mode: str = "overwrite") -> None:
+        """Write the side tables and the termstats sidecar. mode=
+        "append" is delta maintenance: this (delta-built) index's
+        postings/doclens land as NEW files next to the existing ones —
+        union-on-read, prior files untouched (reference IndexingMode
+        automatic, __init__.pyi:2885-2926). Stats accumulate one row
+        per delta; load() merges them."""
+        from deeplake_spark.storage import get_json, json_exists, put_json
+
         # A fresh (unloaded) index's frames share one corpus-tokenize
         # lineage, and the four actions below would each re-run it
         # (r14 review: ~5 full corpus passes per ingest). Persist the
@@ -544,23 +555,18 @@ class InvertedIndex:
             # table missing the base rows — load would serve ranges
             # that EXCLUDE true candidates); otherwise the sidecar key
             # is dropped and load falls back to the posting-row job.
+            # An append onto an empty path (no sidecar, no postings) is
+            # a fresh save and records its granule.
             granule_meta: int | None = DEFAULT_RANGE_GRANULE
-            from deeplake_spark.storage import (
-                get_json,
-                json_exists,
-                put_json,
-            )
-
             sidecar = os.path.join(path, "termstats.json")
+            old = get_json(sidecar) if json_exists(sidecar) else None
             if mode == "append":
-                try:
-                    old_g = (get_json(sidecar).get("range_granule")
-                             if json_exists(sidecar) else None)
-                except Exception:
-                    old_g = None
-                if old_g != DEFAULT_RANGE_GRANULE:
+                base = old is not None or json_exists(
+                    os.path.join(path, "postings"))
+                if base and (old or {}).get("range_granule") \
+                        != DEFAULT_RANGE_GRANULE:
                     granule_meta = None
-            else:
+            elif old is not None and old.pop("range_granule", None):
                 # OVERWRITE onto an existing index dir: strip the
                 # coverage key BEFORE any data write — a crash between
                 # the new granules and the new postings would otherwise
@@ -569,14 +575,9 @@ class InvertedIndex:
                 # EXCLUDE true candidate rows). With the key gone,
                 # every partially-overwritten state loads granule-less
                 # (sound fallback); the final _write_termstats restores
-                # it only after all writes landed.
-                try:
-                    if json_exists(sidecar):
-                        old_ts = get_json(sidecar)
-                        if old_ts.pop("range_granule", None) is not None:
-                            put_json(sidecar, old_ts)
-                except Exception:
-                    pass
+                # it only after all writes landed. A failing strip
+                # raises here, before anything is written.
+                put_json(sidecar, old)
             if granule_meta:
                 (self.postings
                  .groupBy("term",
@@ -608,33 +609,33 @@ class InvertedIndex:
             self.stats.write.mode(mode).parquet(os.path.join(path, "stats"))
             self.doclens.write.mode(mode).parquet(
                 os.path.join(path, "doclens"))
-            self._write_termstats(path, merge=(mode == "append"),
+            self._write_termstats(sidecar,
+                                  old if mode == "append" else None,
                                   granule=granule_meta)
         finally:
             if fresh:
                 self.postings.unpersist()
                 self.doclens.unpersist()
 
-    def _write_termstats(self, path: str, merge: bool,
+    def _write_termstats(self, sidecar: str, old: dict | None,
                          granule: int | None = None) -> None:
         """Persist the routing-gate sidecar: df for every HEAVY term
         (df >= floor_frac * n) + corpus size — the stats the reference
         injects into its cost hook (column_statistics.cpp:278-356).
         Bounded: heavy terms number at most avgdl/floor_frac, and a
         _HEAVY_CAP top-by-df cut raises the recorded floor so unknown
-        terms keep a sound upper bound. On delta append the maps merge
-        by summing, and a term already heavy in the OLD map gets its
-        EXACT delta df (probed below the delta's own floor) so repeated
-        appends cannot erode a frequent term's estimate below the gate;
-        a term absent from BOTH maps has df < floor*n_i in each
-        segment, hence < max(floor)*n overall — the bound survives."""
-        from deeplake_spark.storage import get_json, json_exists, put_json
+        terms keep a sound upper bound. On delta append (`old` = the
+        base's sidecar) the maps merge by summing, and a term already
+        heavy in the OLD map gets its EXACT delta df (probed below the
+        delta's own floor) so repeated appends cannot erode a frequent
+        term's estimate below the gate; a term absent from BOTH maps
+        has df < floor*n_i in each segment, hence < max(floor)*n
+        overall — the bound survives."""
+        from deeplake_spark.storage import put_json
 
         srow = self.stats.agg(
             F.sum("n_docs").cast("long").alias("n")).head()
         n = int(srow["n"] or 0)
-        sidecar = os.path.join(path, "termstats.json")
-        old = get_json(sidecar) if merge and json_exists(sidecar) else None
         counts = self.postings.groupBy(
             F.col("term").alias("key")).agg(F.count(F.lit(1)).alias("df"))
         payload = _heavy_map(counts, n, old)
@@ -645,16 +646,9 @@ class InvertedIndex:
             payload["range_granule"] = int(granule)
         put_json(sidecar, payload)
 
-    def append_to(self, path: str) -> None:
-        """Delta maintenance: write this (delta-built) index's postings/
-        doclens as NEW files next to the existing ones — union-on-read,
-        prior files untouched (reference IndexingMode automatic,
-        __init__.pyi:2885-2926). Stats accumulate one row per delta;
-        load() merges them."""
-        self.save(path, mode="append")
-
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "InvertedIndex":
+    def load(cls, spark: SparkSession, path: str,
+             source: DataFrame | None = None) -> "InvertedIndex":
         # stats may hold one row per appended delta: merge with a
         # doc-count-weighted average (tiny relation — rows == deltas)
         raw = spark.read.parquet(os.path.join(path, "stats"))
@@ -667,14 +661,11 @@ class InvertedIndex:
         # (est_selectivity None => never gated), the same fail-open
         # the JVM rule applies
         ts = _load_stats_sidecar(os.path.join(path, "termstats.json"))
-        heavy = ts["heavy"] if ts else None
-        n_est = (ts["n_docs"] or None) if ts else None
-        floor = ts["floor_frac"] if ts else _HEAVY_FRAC
         # granule side table: only trusted when the sidecar recorded
         # its granule in the same save (the key ⟺ full-coverage
         # invariant — see save()); a missing/unreadable table degrades
         # to the posting-row summary, never an error
-        gsize = ts.get("range_granule") if ts else None
+        gsize = ts.get("range_granule")
         granules = None
         if gsize:
             try:
@@ -689,9 +680,9 @@ class InvertedIndex:
             postings=spark.read.parquet(os.path.join(path, "postings")),
             stats=stats,
             doclens=spark.read.parquet(os.path.join(path, "doclens")),
-            heavy=heavy,
-            n_docs_est=n_est,
-            floor_frac=floor,
+            heavy=ts.get("heavy"),
+            n_docs_est=ts.get("n_rows_est"),
+            floor_frac=ts.get("floor_frac", _HEAVY_FRAC),
             loaded=True,
             granules=granules,
             granule_size=gsize,
@@ -893,77 +884,56 @@ class NumericIndex:
                 F.col("bucket").isin(sorted({self._bucket_of(v) for v in items})))
         return out.filter(F.col("value").isin(items)).select("row_id")
 
-    def save(self, path: str) -> None:
-        from deeplake_spark.storage import put_json
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """Write the range-bucketed values and the meta.json sidecar
+        (bucket bounds + histogram). mode="append" is a delta append
+        with the EXISTING bucket bounds — prior files untouched; the
+        histogram merges by summing per-bucket counts."""
+        from deeplake_spark.storage import get_json, put_json
 
-        bounds = self.values.agg(
-            F.min(F.col("value").cast("double")).alias("lo"),
-            F.max(F.col("value").cast("double")).alias("hi"),
-        ).head()
-        vmin = float(bounds["lo"]) if bounds["lo"] is not None else 0.0
-        vmax = float(bounds["hi"]) if bounds["hi"] is not None else vmin
-        width = (vmax - vmin) / _NUM_BUCKETS or 1.0
-        self._write_values(self.values, path, vmin, width, mode="overwrite")
-        counts = self._bucket_count_map(self.values, vmin, width)
-        put_json(os.path.join(path, "meta.json"),
-                 {"vmin": vmin, "width": width, "bucket_counts": counts,
-                  "n": sum(counts.values())})
-
-    @staticmethod
-    def _bucket_count_map(values: DataFrame, vmin: float,
-                          width: float) -> dict:
-        """Per-bucket row counts with the same bucket expression the
-        writer partitions by — ≤64 rows collected, build-time only."""
+        meta_path = os.path.join(path, "meta.json")
+        if mode == "append":
+            meta = get_json(meta_path)
+        else:
+            bounds = self.values.agg(
+                F.min(F.col("value").cast("double")).alias("lo"),
+                F.max(F.col("value").cast("double")).alias("hi"),
+            ).head()
+            vmin = float(bounds["lo"]) if bounds["lo"] is not None else 0.0
+            vmax = float(bounds["hi"]) if bounds["hi"] is not None else vmin
+            meta = {"vmin": vmin, "width": (vmax - vmin) / _NUM_BUCKETS or 1.0,
+                    "bucket_counts": {}, "n": 0}
         bucket = F.greatest(
             F.lit(0),
             F.least(
                 F.lit(_NUM_BUCKETS - 1),
-                F.floor((F.col("value").cast("double") - vmin) / width)
-                .cast("int"),
-            ),
-        )
-        rows = (values.groupBy(bucket.alias("b"))
-                .agg(F.count(F.lit(1)).alias("c")).collect())
-        return {str(int(r["b"])): int(r["c"]) for r in rows}
-
-    @staticmethod
-    def _write_values(values: DataFrame, path: str, vmin: float, width: float,
-                      mode: str) -> None:
-        bucket = F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(_NUM_BUCKETS - 1),
-                F.floor((F.col("value").cast("double") - vmin) / width).cast("int"),
+                F.floor((F.col("value").cast("double") - meta["vmin"])
+                        / meta["width"]).cast("int"),
             ),
         )
         # range-repartition before the partitionBy write (the
         # InvertedIndex.save layout rule): ~1 file per bucket dir at
         # small scale, files proportional to shuffle partitions at
         # 100 TB
-        values.withColumn("bucket", bucket) \
+        self.values.withColumn("bucket", bucket) \
             .repartitionByRange("bucket", "value") \
             .write.mode(mode).partitionBy("bucket") \
             .parquet(os.path.join(path, "values"))
-
-    def append_to(self, path: str) -> None:
-        """Delta append using the EXISTING bucket bounds — prior files
-        untouched. Gate stats merge by summing per-bucket counts."""
-        from deeplake_spark.storage import get_json, put_json
-
-        meta = get_json(os.path.join(path, "meta.json"))
-        self._write_values(self.values, path, meta["vmin"], meta["width"],
-                           mode="append")
-        delta = self._bucket_count_map(self.values, meta["vmin"],
-                                       meta["width"])
+        # per-bucket row counts with the same bucket expression the
+        # writer partitions by — ≤64 rows collected, build-time only
+        rows = (self.values.groupBy(bucket.alias("b"))
+                .agg(F.count(F.lit(1)).alias("c")).collect())
         counts = dict(meta.get("bucket_counts", {}))
-        for b, c in delta.items():
-            counts[b] = int(counts.get(b, 0)) + c
-        meta.update(bucket_counts=counts,
-                    n=int(meta.get("n", 0)) + sum(delta.values()))
-        put_json(os.path.join(path, "meta.json"), meta)
+        for r in rows:
+            b = str(int(r["b"]))
+            counts[b] = int(counts.get(b, 0)) + int(r["c"])
+        meta.update(bucket_counts=counts, n=int(meta.get("n", 0))
+                    + sum(int(r["c"]) for r in rows))
+        put_json(meta_path, meta)
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "NumericIndex":
+    def load(cls, spark: SparkSession, path: str,
+             source: DataFrame | None = None) -> "NumericIndex":
         from deeplake_spark.storage import get_json, json_exists
 
         vmin = width = counts = n = None
@@ -989,6 +959,34 @@ def build_numeric_index(df: DataFrame, col: str, id_col: str = "doc_id") -> Nume
 
 
 # -------------------------------------------------------------------- json
+
+
+def _save_heavy_keyed(frame: DataFrame, out: DataFrame, path: str,
+                      mode: str, table: str, part: str, order: tuple,
+                      sidecar: str, key: Column, n_by: list) -> None:
+    """The json/exact save: `out` (frame + its partition column) is
+    range-repartitioned on `order` (the InvertedIndex.save layout rule
+    — a persisted upstream otherwise writes one file per task per
+    partition) and written partitioned by `part` under `table`; the
+    heavy-hitter sidecar counts `key`, with n = the largest `n_by`
+    group (the whole frame when `n_by` is empty). Three actions share
+    the frame's corpus lineage (json extraction / md5), so it is
+    persisted for the save."""
+    from deeplake_spark.storage import get_json, json_exists, put_json
+
+    frame.persist()
+    try:
+        out.repartitionByRange(*order).write.mode(mode) \
+            .partitionBy(part).parquet(os.path.join(path, table))
+        sc = os.path.join(path, sidecar)
+        old = get_json(sc) if mode == "append" and json_exists(sc) else None
+        n = frame.groupBy(*n_by).agg(F.count(F.lit(1)).alias("c")) \
+            .agg(F.max("c")).head()[0]
+        counts = frame.groupBy(key.alias("key")).agg(
+            F.count(F.lit(1)).alias("df"))
+        put_json(sc, _heavy_map(counts, int(n or 0), old))
+    finally:
+        frame.unpersist()
 
 
 #: separator for the composite (path, value) key in the json-index
@@ -1037,44 +1035,23 @@ class JsonIndex:
         )
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        from deeplake_spark.storage import get_json, json_exists, put_json
-
-        # three actions share the corpus json-extraction lineage —
-        # persist it for the save (the InvertedIndex.save discipline)
-        self.entries.persist()
-        try:
-            # partition by json path: a probe reads exactly one
-            # directory; range-repartition first (the
-            # InvertedIndex.save layout rule — a persisted upstream
-            # otherwise writes one file per task per path)
-            self.entries.repartitionByRange("path", "value") \
-                .write.mode(mode).partitionBy("path").parquet(
-                    os.path.join(path, "entries"))
-            sidecar = os.path.join(path, "valstats.json")
-            old = get_json(sidecar) if mode == "append" \
-                and json_exists(sidecar) else None
-            per_path = self.entries.groupBy("path").agg(
-                F.count(F.lit(1)).alias("c")).agg(F.max("c")).head()[0]
-            counts = self.entries.groupBy(
-                F.concat_ws(_JSON_KEY_SEP, "path", "value").alias("key")
-            ).agg(F.count(F.lit(1)).alias("df"))
-            put_json(sidecar, _heavy_map(counts, int(per_path or 0), old))
-        finally:
-            self.entries.unpersist()
-
-    def append_to(self, path: str) -> None:
-        """Delta append: new entries land in new files under each path
+        """Entries partitioned by json path (a probe reads exactly one
+        directory) + the valstats.json heavy-value sidecar. mode=
+        "append": new entries land in new files under each path
         partition — prior files untouched; valstats merge by summing."""
-        self.save(path, mode="append")
+        _save_heavy_keyed(
+            self.entries, self.entries, path, mode, "entries", "path",
+            ("path", "value"), "valstats.json",
+            F.concat_ws(_JSON_KEY_SEP, "path", "value"), ["path"])
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "JsonIndex":
+    def load(cls, spark: SparkSession, path: str,
+             source: DataFrame | None = None) -> "JsonIndex":
         ts = _load_stats_sidecar(os.path.join(path, "valstats.json"))
         return cls(entries=spark.read.parquet(os.path.join(path, "entries")),
-                   loaded=True,
-                   heavy=ts["heavy"] if ts else None,
-                   n_rows_est=(ts["n_docs"] or None) if ts else None,
-                   floor_frac=ts["floor_frac"] if ts else _HEAVY_FRAC)
+                   loaded=True, heavy=ts.get("heavy"),
+                   n_rows_est=ts.get("n_rows_est"),
+                   floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
 
 
 def build_json_index(df: DataFrame, json_col: str, paths: list[str],
@@ -1149,48 +1126,159 @@ class ExactTextIndex:
         return out.filter(F.col("digest") == h).select("row_id")
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        from deeplake_spark.storage import get_json, json_exists, put_json
-
-        # three actions share the corpus md5 lineage — persist it for
-        # the save (the InvertedIndex.save discipline)
-        self.digests.persist()
-        try:
-            # digest-prefix buckets: probe() filters the bucket column
-            # so an exact lookup prunes to one partition directory;
-            # range-repartition first (the InvertedIndex.save layout
-            # rule)
-            self.digests.withColumn(
-                "bucket", F.substring("digest", 1, 2)
-            ).repartitionByRange("bucket", "digest") \
-                .write.mode(mode).partitionBy("bucket").parquet(
-                    os.path.join(path, "digests"))
-            sidecar = os.path.join(path, "digeststats.json")
-            old = get_json(sidecar) if mode == "append" \
-                and json_exists(sidecar) else None
-            srow = self.digests.agg(
-                F.count(F.lit(1)).alias("n")).head()
-            counts = self.digests.groupBy(
-                F.col("digest").alias("key")).agg(
-                F.count(F.lit(1)).alias("df"))
-            put_json(sidecar, _heavy_map(counts, int(srow["n"] or 0), old))
-        finally:
-            self.digests.unpersist()
-
-    def append_to(self, path: str) -> None:
-        """Delta append: new digests land in new files per bucket —
-        prior files untouched; digeststats merge by summing."""
-        self.save(path, mode="append")
+        """Digests in digest-prefix buckets (probe() filters the bucket
+        column so an exact lookup prunes to one partition directory) +
+        the digeststats.json sidecar. mode="append": new digests land
+        in new files per bucket — prior files untouched; digeststats
+        merge by summing."""
+        _save_heavy_keyed(
+            self.digests,
+            self.digests.withColumn("bucket", F.substring("digest", 1, 2)),
+            path, mode, "digests", "bucket", ("bucket", "digest"),
+            "digeststats.json", F.col("digest"), [])
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "ExactTextIndex":
+    def load(cls, spark: SparkSession, path: str,
+             source: DataFrame | None = None) -> "ExactTextIndex":
         ts = _load_stats_sidecar(os.path.join(path, "digeststats.json"))
         return cls(digests=spark.read.parquet(os.path.join(path, "digests")),
-                   heavy=ts["heavy"] if ts else None,
-                   n_rows_est=(ts["n_docs"] or None) if ts else None,
-                   floor_frac=ts["floor_frac"] if ts else _HEAVY_FRAC)
+                   heavy=ts.get("heavy"), n_rows_est=ts.get("n_rows_est"),
+                   floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
 
 
 def build_exact_index(df: DataFrame, col: str, id_col: str = "doc_id") -> ExactTextIndex:
     return ExactTextIndex(
         digests=df.select(F.md5(F.col(col)).alias("digest"), F.col(id_col).alias("row_id"))
     )
+
+
+# ---------------------------------------------------------- index kinds
+#
+# Every index is a persisted side table (reference: create_index builds
+# it, IndexingMode automatic refreshes it on commit — types.pyi:128-248,
+# __init__.pyi:2885-2926). INDEX_KINDS is the one place that says how
+# each kind is built, saved, delta-appended and loaded; Dataset, the
+# query-lane memo and the commit-time refresh all dispatch through it.
+# Each index class writes its own tables + sidecar in save(path, mode)
+# and reads them back in load(spark, path, source); the on-disk layout
+# (file names and sidecar keys) is read directly by the JVM routing
+# rule, so it must not drift.
+
+
+def write_side_table(df: DataFrame, path: str, table: str, sidecar: str,
+                     meta: dict, mode: str = "overwrite",
+                     partition_by: str | None = None) -> None:
+    """The vector/fingerprint families' save: `df` written under
+    <path>/<table> (`mode` overwrite or append; optionally partitioned)
+    and the JSON `sidecar` = `meta` + `n`, the side table's row count
+    after the write — the corpus size the range-coverage gate reads (a
+    stale undercount would decline pruning on exactly the
+    append-maintained indexes it targets). n is counted from the files
+    just written: parquet-metadata-cheap, no recompute of the plan."""
+    from deeplake_spark.storage import put_json
+
+    w = df.write.mode(mode)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(os.path.join(path, table))
+    n = int(df.sparkSession.read.parquet(os.path.join(path, table)).count())
+    put_json(os.path.join(path, sidecar), {**meta, "n": n})
+
+
+def read_side_table(spark: SparkSession, path: str, table: str,
+                    sidecar: str) -> tuple[DataFrame, dict]:
+    """(side table, sidecar dict) as written by write_side_table."""
+    from deeplake_spark.storage import get_json
+
+    meta = get_json(os.path.join(path, sidecar))
+    return spark.read.parquet(os.path.join(path, table)), meta
+
+
+@dataclass(frozen=True)
+class IndexKind:
+    """How one index kind is built, saved, delta-appended and loaded.
+
+    `cls` is the index class; `build(df, column, id_col, options)`
+    returns an unsaved index over `df`. `delta(saved_index, new_df,
+    column)`, when set, derives an append delta from the SAVED index
+    (trained centroids/codebooks, persisted decode params) instead of a
+    fresh build over the new rows. `needs_source` marks kinds whose
+    rerank reads the live relation bound at load; `required` names the
+    create_index option the kind cannot build without; `search`, for
+    ANN kinds, is the probe (index, query_vec, live, k=, config=,
+    candidates=) behind Dataset.search."""
+
+    cls: type
+    build: Callable
+    delta: Callable | None = None
+    needs_source: bool = False
+    required: str | None = None
+    search: Callable | None = None
+
+    def save(self, index, path: str) -> None:
+        index.save(path)
+
+    def append(self, spark: SparkSession, path: str, new_df: DataFrame,
+               column: str, id_col: str, options: dict) -> None:
+        """Delta maintenance for an append-only commit: index ONLY the
+        new rows and add them next to the existing side-table files,
+        which stay untouched."""
+        delta = (self.delta(self.load(spark, path), new_df, column)
+                 if self.delta else self.build(new_df, column, id_col, options))
+        delta.save(path, mode="append")
+
+    def load(self, spark: SparkSession, path: str,
+             source: DataFrame | None = None):
+        return self.cls.load(spark, path, source)
+
+
+def _pick(options: dict, *names: str) -> dict:
+    return {k: v for k, v in options.items() if k in names}
+
+
+def _ivf_live_search(index, query_vec, live: DataFrame, **kw) -> DataFrame:
+    # index assignments can outlive rows (deletes staged or committed
+    # with indexing_mode != 'automatic'): only return rows present in
+    # the live snapshot — matching the exact-scan path and the
+    # translator's ANN route (the rerank kinds read `live` already)
+    return _sim.ivf_search(index, query_vec, **kw).join(
+        live.select(index.id_col), index.id_col, "left_semi")
+
+
+INDEX_KINDS: dict[str, IndexKind] = {
+    "inverted": IndexKind(
+        InvertedIndex, lambda df, c, i, o: build_inverted_index(df, c, i)),
+    "numeric": IndexKind(
+        NumericIndex, lambda df, c, i, o: build_numeric_index(df, c, i)),
+    "json": IndexKind(
+        JsonIndex, lambda df, c, i, o: build_json_index(df, c, o["paths"], i),
+        required="paths"),
+    "exact": IndexKind(
+        ExactTextIndex, lambda df, c, i, o: build_exact_index(df, c, i)),
+    "clustered": IndexKind(
+        _sim.IVFIndex,
+        lambda df, c, i, o: _sim.build_ivf(df, c, i, **_pick(
+            o, "n_clusters", "seed", "max_iter", "config")),
+        delta=lambda ix, df, c: ix.delta(df), search=_ivf_live_search),
+    "pooled": IndexKind(
+        _sim.PooledMaxsimIndex,
+        lambda df, c, i, o: _sim.build_pooled_maxsim(df, c, i),
+        needs_source=True),
+    "clustered_quantized": IndexKind(
+        _sim.QuantizedIndex,
+        lambda df, c, i, o: _sim.build_quantized(df, c, i),
+        needs_source=True,
+        search=lambda ix, q, live, **kw: _sim.quantized_index_search(
+            ix, q, **kw)),
+    "pq": IndexKind(
+        _sim.PQIndex,
+        lambda df, c, i, o: _sim.build_pq(df, c, i, **_pick(
+            o, "m", "nbits", "seed", "max_iter", "train_limit",
+            "n_clusters", "config")),
+        delta=lambda ix, df, c: ix.delta(df), needs_source=True,
+        search=lambda ix, q, live, **kw: _sim.pq_search(ix, q, **kw)),
+    "fingerprint": IndexKind(
+        _mm.FingerprintIndex,
+        lambda df, c, i, o: _mm.build_fingerprint_index(df, c, i, **o),
+        delta=_mm.FingerprintIndex.delta, required="modality"),
+}

@@ -1614,28 +1614,6 @@ def decode_medical(df: DataFrame, payload_col: str = "scan",
     return df.mapInPandas(decode, out_schema)
 
 
-def medical_stats(df: DataFrame, payload_col: str = "scan",
-                  compression: str = "nii", strict: bool = False) -> DataFrame:
-    """Voxel statistics without materializing voxels in the plan:
-    (n_voxels, vmin, vmax, mean, std) per row."""
-    keep = [c for c in df.columns if c != payload_col]
-    out_schema = ", ".join(f"{c} {df.schema[c].dataType.simpleString()}" for c in keep)
-    out_schema += ", n_voxels bigint, vmin double, vmax double, mean double, std double"
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                a = _volume(p, compression, strict).astype(np.float64)
-                rows.append((a.size, float(a.min()), float(a.max()),
-                             float(a.mean()), float(a.std())))
-            out = pdf[keep].copy()
-            out[["n_voxels", "vmin", "vmax", "mean", "std"]] = rows
-            yield out
-
-    return df.mapInPandas(stats, out_schema)
-
-
 # ---------------------------------------------------------------- mesh
 
 
@@ -2041,8 +2019,8 @@ def video_near_dup_pairs(df: DataFrame, payload_col: str = "video",
 # ---------------------------------------- persisted fingerprint index
 #
 # Build-at-ingest side table of bit signatures keyed by row id — the
-# same save/load/append_delta protocol as the vector/text indexes
-# (similarity.save_ivf is the template; reference index side tables per
+# same save/load/delta protocol as the vector/text indexes
+# (indexes.INDEX_KINDS; reference index side tables per
 # SURVEY §4.3, Column.create_index `python/deeplake/__init__.pyi:1678`).
 # Decode economics: at 100 TB of payloads the mapInPandas decode
 # dominates a near-dup run by orders of magnitude, while the signature
@@ -2078,6 +2056,42 @@ class FingerprintIndex:
         self.loaded = loaded
         self.n_rows_est = n_rows_est
 
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """Persist: signatures range-partitioned + sorted by id
+        (row-group min/max stats make later id probes prunable, the
+        ingest layout convention; an append delta lands as written)
+        plus a meta.json sidecar carrying the decode params and
+        corpus size."""
+        from deeplake_spark.operators.indexes import write_side_table
+
+        sigs = self.signatures
+        if mode != "append":
+            sigs = (sigs.repartitionByRange(F.col(self.id_col))
+                    .sortWithinPartitions(self.id_col))
+        write_side_table(sigs, path, "signatures", "meta.json",
+                         {"modality": self.modality, "id_col": self.id_col,
+                          "params": self.params, "nbits": self.nbits},
+                         mode)
+
+    @classmethod
+    def load(cls, spark, path: str,
+             source: DataFrame | None = None) -> "FingerprintIndex":
+        from deeplake_spark.operators.indexes import read_side_table
+
+        sigs, meta = read_side_table(spark, path, "signatures", "meta.json")
+        return cls(signatures=sigs, modality=meta["modality"],
+                   id_col=meta["id_col"], params=meta.get("params", {}),
+                   nbits=int(meta.get("nbits", 64)), loaded=True,
+                   n_rows_est=meta.get("n"))
+
+    def delta(self, new_df: DataFrame, column: str) -> "FingerprintIndex":
+        """Incremental maintenance: decode ONLY the appended payloads in
+        `column` with the PERSISTED params (saved with mode="append",
+        existing signature files stay untouched, never a corpus
+        re-read)."""
+        return build_fingerprint_index(new_df, column, self.id_col,
+                                       self.modality, **self.params)
+
 
 def build_fingerprint_index(df: DataFrame, payload_col: str, id_col: str,
                             modality: str, **params) -> FingerprintIndex:
@@ -2112,67 +2126,6 @@ def build_fingerprint_index(df: DataFrame, payload_col: str, id_col: str,
     return FingerprintIndex(sigs, modality, id_col, params, nbits=nbits)
 
 
-def save_fingerprint_index(index: FingerprintIndex, path: str) -> None:
-    """Persist: signatures range-partitioned + sorted by id (row-group
-    min/max stats make later id probes prunable, the ingest layout
-    convention) plus a meta.json sidecar carrying the decode params and
-    corpus size."""
-    import os
-
-    from deeplake_spark.storage import put_json
-
-    sig_path = os.path.join(path, "signatures")
-    (index.signatures.repartitionByRange(F.col(index.id_col))
-     .sortWithinPartitions(index.id_col)
-     .write.mode("overwrite").parquet(sig_path))
-    spark = index.signatures.sparkSession
-    n = int(spark.read.parquet(sig_path).count())  # metadata-cheap
-    put_json(os.path.join(path, "meta.json"), {
-        "modality": index.modality,
-        "id_col": index.id_col,
-        "params": index.params,
-        "nbits": index.nbits,
-        "n": n,
-    })
-
-
-def load_fingerprint_index(spark, path: str) -> FingerprintIndex:
-    import os
-
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "meta.json"))
-    return FingerprintIndex(
-        signatures=spark.read.parquet(os.path.join(path, "signatures")),
-        modality=meta["modality"],
-        id_col=meta["id_col"],
-        params=meta.get("params", {}),
-        nbits=int(meta.get("nbits", 64)),
-        loaded=True,
-        n_rows_est=meta.get("n"),
-    )
-
-
-def append_fingerprint_delta(new_df: DataFrame, payload_col: str,
-                             path: str) -> None:
-    """Incremental maintenance: decode ONLY the appended payloads with
-    the PERSISTED params and append their signatures — existing
-    signature files untouched, never a corpus re-read (the inverted
-    index's append_to contract)."""
-    import os
-
-    from deeplake_spark.operators.similarity import _bump_meta_n
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "meta.json"))
-    delta = build_fingerprint_index(
-        new_df, payload_col, meta["id_col"], meta["modality"],
-        **meta.get("params", {}))
-    delta.signatures.write.mode("append").parquet(
-        os.path.join(path, "signatures"))
-    _bump_meta_n(new_df.sparkSession, path, "signatures", "meta.json")
-
-
 def fingerprint_index_near_dup_pairs(spark, index_path: str,
                                      modality: str, max_hamming: int,
                                      bands: int) -> DataFrame:
@@ -2181,7 +2134,7 @@ def fingerprint_index_near_dup_pairs(spark, index_path: str,
     tests); raises if the side table was built for another modality."""
     from deeplake_spark.operators.similarity import bits_near_dup_pairs
 
-    idx = load_fingerprint_index(spark, index_path)
+    idx = FingerprintIndex.load(spark, index_path)
     if idx.modality != modality:
         raise ValueError(
             f"index at {index_path} holds {idx.modality} fingerprints, "

@@ -170,20 +170,6 @@ def sample_with_replacement(df: DataFrame, weight: Column, n: int | None = None,
     )
 
 
-def limit_percent(df: DataFrame, pct: float, order_col: str) -> DataFrame:
-    """LIMIT p PERCENT (y:950, tql.md:633) with deterministic order.
-    Count-free and window-free: the limit is a broadcast 1-row
-    aggregate; ranking is a range-partitioned sort + partition-offset
-    row numbers (no unpartitioned window, no driver count)."""
-    lim = df.agg(F.ceil(F.count(F.lit(1)) * (pct / 100.0)).alias("__lim"))
-    ranked = _global_row_number(df, [F.col(order_col)], "__rn")
-    return (
-        ranked.crossJoin(F.broadcast(lim))
-        .filter(F.col("__rn") < F.col("__lim"))
-        .drop("__rn", "__lim")
-    )
-
-
 def md5_uniform(id_col: str, salt: str) -> Column:
     """Engine-portable deterministic uniform in [0, 1): the first 32
     bits of md5(id # salt). Pure per-row expression — no RNG, no state,

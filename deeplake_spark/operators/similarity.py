@@ -65,13 +65,6 @@ class SearchConfig:
         return cls(accuracy_factor=20, nprobe=8)
 
 
-def _as_literal_vec(vec) -> Column:
-    # one parsed expr, not 2 py4j round trips per element (trap 12);
-    # identical literal tree (functions.vector.literal_vec_sql)
-    from deeplake_spark.functions.vector import literal_vec_sql
-    return F.expr(literal_vec_sql(vec))
-
-
 def topk_cosine(df: DataFrame, vec_col: str, query_vec, k: int = 10,
                 id_col: str = "vec_id", payload_cols: tuple[str, ...] = ()) -> DataFrame:
     """Exact ORDER BY cosine DESC LIMIT k (TakeOrderedAndProject)."""
@@ -131,6 +124,40 @@ class IVFIndex:
     #: corpus size from the persisted meta (range-coverage gate)
     n_rows_est: int | None = None
 
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """Assignments written PARTITIONED BY cluster (a probe reads
+        only nprobe directories — the physical cluster prune);
+        centroids in the centroids.json sidecar."""
+        from deeplake_spark.operators.indexes import write_side_table
+
+        write_side_table(self.assignments, path, "assignments",
+                         "centroids.json",
+                         {"centroids": self.centroids,
+                          "vec_col": self.vec_col, "id_col": self.id_col},
+                         mode, partition_by="cluster")
+
+    @classmethod
+    def load(cls, spark, path: str, source: DataFrame | None = None) -> "IVFIndex":
+        from deeplake_spark.operators.indexes import read_side_table
+
+        assignments, meta = read_side_table(spark, path, "assignments",
+                                            "centroids.json")
+        return cls(assignments=assignments,
+                   centroids=[(int(c), v) for c, v in meta["centroids"]],
+                   vec_col=meta["vec_col"], id_col=meta["id_col"],
+                   loaded=True, n_rows_est=meta.get("n"))
+
+    def delta(self, new_df: DataFrame) -> "IVFIndex":
+        """Delta maintenance: NEW rows assigned to the existing
+        centroids. Saved with mode="append", prior cluster files and
+        centroids remain untouched (re-clustering only on an explicit
+        create_index; reference IndexingMode automatic,
+        __init__.pyi:2885-2926)."""
+        assigned = assign_to_centroids(
+            new_df.select(self.id_col, self.vec_col), self.vec_col,
+            self.centroids)
+        return IVFIndex(assigned, self.centroids, self.vec_col, self.id_col)
+
 
 def _ivf_build_plan(n_total: int, n_clusters: int) -> tuple[int, int]:
     """(nlist, training-set target) for an IVF build over `n_total`
@@ -183,41 +210,6 @@ def build_ivf(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id",
     return IVFIndex(assignments=assignments, centroids=centroids, vec_col=vec_col, id_col=id_col)
 
 
-def save_ivf(index: IVFIndex, path: str) -> None:
-    """Persist: assignments written PARTITIONED BY cluster (a probe
-    reads only nprobe directories — the physical cluster prune);
-    centroids as a tiny json sidecar."""
-    from deeplake_spark.storage import put_json
-
-    index.assignments.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(path, "assignments")
-    )
-    # corpus size for the range-coverage gate: counted from the files
-    # just written (parquet-metadata-cheap, no recompute of the plan)
-    n = int(index.assignments.sparkSession.read.parquet(
-        os.path.join(path, "assignments")).count())
-    put_json(os.path.join(path, "centroids.json"), {
-        "centroids": index.centroids,
-        "vec_col": index.vec_col,
-        "id_col": index.id_col,
-        "n": n,
-    })
-
-
-def load_ivf(spark, path: str) -> IVFIndex:
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "centroids.json"))
-    return IVFIndex(
-        assignments=spark.read.parquet(os.path.join(path, "assignments")),
-        centroids=[(int(c), v) for c, v in meta["centroids"]],
-        vec_col=meta["vec_col"],
-        id_col=meta["id_col"],
-        loaded=True,
-        n_rows_est=meta.get("n"),
-    )
-
-
 def assign_to_centroids(df: DataFrame, vec_col: str, centroids: list) -> DataFrame:
     """Nearest-centroid assignment as a pure JVM expression (no MLlib
     fit): per row, argmin of squared distance over the (broadcast-small)
@@ -238,19 +230,6 @@ def assign_to_centroids(df: DataFrame, vec_col: str, centroids: list) -> DataFra
     ])
     best = F.array_min(pairs)["c"]
     return df.withColumn("cluster", best)
-
-
-def append_ivf_delta(index: IVFIndex, new_df: DataFrame, path: str) -> None:
-    """Delta maintenance: assign NEW rows to the existing centroids and
-    append their assignments — prior cluster files and centroids remain
-    untouched (re-clustering only on an explicit create_index; reference
-    IndexingMode automatic, __init__.pyi:2885-2926)."""
-    assigned = assign_to_centroids(
-        new_df.select(index.id_col, index.vec_col), index.vec_col, index.centroids)
-    assigned.write.mode("append").partitionBy("cluster").parquet(
-        os.path.join(path, "assignments")
-    )
-    _bump_meta_n(new_df.sparkSession, path, "assignments", "centroids.json")
 
 
 def topk_l2(df: DataFrame, vec_col: str, query_vec, k: int = 10,
@@ -532,6 +511,25 @@ class QuantizedIndex:
     loaded: bool = False
     n_rows_est: int | None = None
 
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """The bits table + meta.json; mode="append" adds a delta
+        (sign-quantize ONLY the new rows: build over them, then save)."""
+        from deeplake_spark.operators.indexes import write_side_table
+
+        write_side_table(self.bits, path, "bits", "meta.json",
+                         {"vec_col": self.vec_col, "id_col": self.id_col},
+                         mode)
+
+    @classmethod
+    def load(cls, spark, path: str, source: DataFrame) -> "QuantizedIndex":
+        from deeplake_spark.operators.indexes import read_side_table
+
+        bits, meta = read_side_table(spark, path, "bits", "meta.json")
+        return cls(bits=bits,
+                   source=source.select(meta["id_col"], meta["vec_col"]),
+                   vec_col=meta["vec_col"], id_col=meta["id_col"],
+                   loaded=True, n_rows_est=meta.get("n"))
+
 
 def build_quantized(df: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id") -> QuantizedIndex:
@@ -541,55 +539,6 @@ def build_quantized(df: DataFrame, vec_col: str = "embedding",
         vec_col=vec_col,
         id_col=id_col,
     )
-
-
-def save_quantized(index: QuantizedIndex, path: str) -> None:
-    from deeplake_spark.storage import put_json
-
-    index.bits.write.mode("overwrite").parquet(os.path.join(path, "bits"))
-    n = int(index.bits.sparkSession.read.parquet(
-        os.path.join(path, "bits")).count())
-    put_json(os.path.join(path, "meta.json"),
-             {"vec_col": index.vec_col, "id_col": index.id_col, "n": n})
-
-
-def append_quantized_delta(new_df: DataFrame, vec_col: str, id_col: str,
-                           path: str) -> None:
-    """Delta maintenance: sign-quantize ONLY the new rows and append."""
-    new_df.select(id_col, sign_bits(f"`{vec_col}`").alias("bits")).write.mode(
-        "append"
-    ).parquet(os.path.join(path, "bits"))
-    _bump_meta_n(new_df.sparkSession, path, "bits", "meta.json")
-
-
-def load_quantized(spark, path: str, source: DataFrame) -> QuantizedIndex:
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "meta.json"))
-    return QuantizedIndex(
-        bits=spark.read.parquet(os.path.join(path, "bits")),
-        source=source.select(meta["id_col"], meta["vec_col"]),
-        vec_col=meta["vec_col"],
-        id_col=meta["id_col"],
-        loaded=True,
-        n_rows_est=meta.get("n"),
-    )
-
-
-def _bump_meta_n(spark, path: str, sub: str, meta_name: str) -> None:
-    """Refresh the persisted corpus size after a delta append — a stale
-    undercount makes the range-coverage gate decline pruning on exactly
-    the append-maintained indexes it targets (perf-only but silent).
-    Counted from the just-written files (parquet-metadata-cheap);
-    advisory — never fail an append over its stats."""
-    from deeplake_spark.storage import get_json, put_json
-
-    try:
-        meta = get_json(os.path.join(path, meta_name))
-        meta["n"] = int(spark.read.parquet(os.path.join(path, sub)).count())
-        put_json(os.path.join(path, meta_name), meta)
-    except Exception:
-        pass
 
 
 def _rerank_scan(index, cand: DataFrame, prune: bool = True,
@@ -726,6 +675,54 @@ class PQIndex:
     loaded: bool = False
     n_rows_est: int | None = None
 
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """The codes table (PARTITIONED BY cluster for IVF-PQ) +
+        codebooks.json."""
+        from deeplake_spark.operators.indexes import write_side_table
+
+        write_side_table(self.codes, path, "codes", "codebooks.json",
+                         {"codebooks": self.codebooks,
+                          "vec_col": self.vec_col, "id_col": self.id_col,
+                          "centroids": self.centroids},
+                         mode, partition_by=(
+                             "cluster" if self.centroids is not None
+                             else None))
+
+    @classmethod
+    def load(cls, spark, path: str,
+             source: DataFrame | None = None) -> "PQIndex":
+        from deeplake_spark.operators.indexes import read_side_table
+
+        codes, meta = read_side_table(spark, path, "codes", "codebooks.json")
+        cents = meta.get("centroids")
+        return cls(
+            codes=codes,
+            codebooks=meta["codebooks"],
+            source=(source.select(meta["id_col"], meta["vec_col"])
+                    if source is not None else None),
+            vec_col=meta["vec_col"],
+            id_col=meta["id_col"],
+            centroids=[(int(c), v) for c, v in cents] if cents else None,
+            loaded=True,
+            n_rows_est=meta.get("n"),
+        )
+
+    def delta(self, new_df: DataFrame) -> "PQIndex":
+        """Delta maintenance: encode ONLY the new rows with the existing
+        codebooks — and assign them to the existing coarse centroids
+        when the index is IVF-PQ. Saved with mode="append", codebooks,
+        centroids and prior code files stay untouched (re-training
+        only on an explicit create_index, like IVF)."""
+        base = new_df.select(self.id_col, self.vec_col)
+        extra: list[str] = []
+        if self.centroids is not None:
+            base = assign_to_centroids(base, self.vec_col, self.centroids)
+            extra = ["cluster"]
+        codes = _pq_code_cols(_pq_encoder(self.codebooks), base,
+                              self.vec_col, self.id_col, extra)
+        return PQIndex(codes, self.codebooks, None, self.vec_col,
+                       self.id_col, self.centroids)
+
 
 def _pq_encoder(codebooks: list):
     from deeplake_spark.functions.vector import pq_encode_pandas
@@ -825,63 +822,6 @@ def build_pq(df: DataFrame, vec_col: str = "embedding",
     return PQIndex(codes=codes, codebooks=codebooks,
                    source=df.select(id_col, vec_col),
                    vec_col=vec_col, id_col=id_col, centroids=centroids)
-
-
-def save_pq(index: PQIndex, path: str) -> None:
-    from deeplake_spark.storage import put_json
-
-    w = index.codes.write.mode("overwrite")
-    if index.centroids is not None:
-        w = w.partitionBy("cluster")
-    w.parquet(os.path.join(path, "codes"))
-    n = int(index.codes.sparkSession.read.parquet(
-        os.path.join(path, "codes")).count())
-    put_json(os.path.join(path, "codebooks.json"), {
-        "codebooks": index.codebooks,
-        "vec_col": index.vec_col,
-        "id_col": index.id_col,
-        "centroids": index.centroids,
-        "n": n,
-    })
-
-
-def load_pq(spark, path: str, source: DataFrame | None = None) -> PQIndex:
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "codebooks.json"))
-    src = (source.select(meta["id_col"], meta["vec_col"])
-           if source is not None else None)
-    cents = meta.get("centroids")
-    return PQIndex(
-        codes=spark.read.parquet(os.path.join(path, "codes")),
-        codebooks=meta["codebooks"],
-        source=src,
-        vec_col=meta["vec_col"],
-        id_col=meta["id_col"],
-        centroids=[(int(c), v) for c, v in cents] if cents else None,
-        loaded=True,
-        n_rows_est=meta.get("n"),
-    )
-
-
-def append_pq_delta(index: PQIndex, new_df: DataFrame, path: str) -> None:
-    """Delta maintenance: encode ONLY the new rows with the existing
-    codebooks (and assign them to the existing coarse centroids when
-    the index is IVF-PQ) and append — codebooks, centroids and prior
-    code files untouched (re-training only on an explicit
-    create_index, like IVF)."""
-    enc = _pq_encoder(index.codebooks)
-    base = new_df.select(index.id_col, index.vec_col)
-    extra: list[str] = []
-    if index.centroids is not None:
-        base = assign_to_centroids(base, index.vec_col, index.centroids)
-        extra = ["cluster"]
-    out = _pq_code_cols(enc, base, index.vec_col, index.id_col, extra)
-    w = out.write.mode("append")
-    if index.centroids is not None:
-        w = w.partitionBy("cluster")
-    w.parquet(os.path.join(path, "codes"))
-    _bump_meta_n(new_df.sparkSession, path, "codes", "codebooks.json")
 
 
 def pq_search(index: PQIndex, query_vec, k: int = 10,
@@ -1061,38 +1001,6 @@ def near_dup_pairs_lsh(df: DataFrame, vec_col: str = "embedding",
     return cands.join(va, "a").join(vb, "b").filter(sim >= threshold).select("a", "b")
 
 
-def near_dup_pairs_blocked(df: DataFrame, vec_col: str = "embedding",
-                           id_col: str = "vec_id", block_col: str = "label",
-                           threshold: float = 0.99) -> DataFrame:
-    """Embedding-cosine near-dup pairs inside EXPLICIT semantic blocks
-    (use when pairs are only meaningful within a key, e.g. same URL
-    domain). Block sizes grow O(N/num_blocks), so pair work is
-    O(N²/num_blocks) — for open-ended near-dup detection prefer
-    `near_dup_pairs_lsh`, whose buckets stay collision-sized. Norms are
-    precomputed once per row (not per pair) before the self-join."""
-    normed = df.select(
-        F.col(block_col).alias("__blk"),
-        F.col(id_col),
-        F.col(vec_col),
-        l2_norm(f"`{vec_col}`").alias("__norm"),
-    )
-    a = normed.select(
-        F.col("__blk"), F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("__va"), F.col("__norm").alias("__na"),
-    )
-    b = normed.select(
-        F.col("__blk"), F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("__vb"), F.col("__norm").alias("__nb"),
-    )
-    sim = dot("__va", "__vb") / F.nullif(F.col("__na") * F.col("__nb"), F.lit(0.0))
-    return (
-        a.join(b, "__blk")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(sim >= threshold)
-        .select(F.col("__blk").alias(block_col), "a_id", "b_id")
-    )
-
-
 # ---------------------------------------------------- pooled MAXSIM index
 
 
@@ -1110,6 +1018,32 @@ class PooledMaxsimIndex:
     #: see IVFIndex.loaded / n_rows_est (row-group-pruned rerank gate)
     loaded: bool = False
     n_rows_est: int | None = None
+
+    def save(self, path: str, mode: str = "overwrite") -> None:
+        """Persist the pooled-vector prefilter table + meta.json
+        (mode="append": pool ONLY the new rows, then save). The source
+        matrices are NOT copied — at load time the rerank stage
+        rebinds to the live dataset relation (index stores derived
+        data only, like the reference's PooledQuantized stored index,
+        types.pyi:604-615)."""
+        from deeplake_spark.operators.indexes import write_side_table
+
+        write_side_table(self.pooled, path, "pooled", "meta.json",
+                         {"matrix_col": self.matrix_col,
+                          "id_col": self.id_col}, mode)
+
+    @classmethod
+    def load(cls, spark, path: str, source: DataFrame) -> "PooledMaxsimIndex":
+        """`source` is the relation holding the matrix column (the
+        dataset's current snapshot) — rerank joins it against
+        pooled-prefilter hits."""
+        from deeplake_spark.operators.indexes import read_side_table
+
+        pooled, meta = read_side_table(spark, path, "pooled", "meta.json")
+        return cls(pooled=pooled,
+                   source=source.select(meta["id_col"], meta["matrix_col"]),
+                   id_col=meta["id_col"], matrix_col=meta["matrix_col"],
+                   loaded=True, n_rows_est=meta.get("n"))
 
 
 def build_pooled_maxsim(df: DataFrame, matrix_col: str, id_col: str) -> PooledMaxsimIndex:
@@ -1132,46 +1066,6 @@ def build_pooled_maxsim(df: DataFrame, matrix_col: str, id_col: str) -> PooledMa
         source=df.select(id_col, matrix_col),
         id_col=id_col,
         matrix_col=matrix_col,
-    )
-
-
-def save_pooled_maxsim(index: PooledMaxsimIndex, path: str) -> None:
-    """Persist the pooled-vector prefilter table + metadata. The source
-    matrices are NOT copied — at load time the rerank stage rebinds to
-    the live dataset relation (index stores derived data only, like the
-    reference's PooledQuantized stored index, types.pyi:604-615)."""
-    from deeplake_spark.storage import put_json
-
-    index.pooled.write.mode("overwrite").parquet(os.path.join(path, "pooled"))
-    n = int(index.pooled.sparkSession.read.parquet(
-        os.path.join(path, "pooled")).count())
-    put_json(os.path.join(path, "meta.json"),
-             {"matrix_col": index.matrix_col, "id_col": index.id_col,
-              "n": n})
-
-
-def append_pooled_delta(new_df: DataFrame, matrix_col: str, id_col: str,
-                        path: str) -> None:
-    """Delta maintenance: pool ONLY the new rows' matrices and append —
-    prior pooled files untouched."""
-    delta = build_pooled_maxsim(new_df, matrix_col=matrix_col, id_col=id_col)
-    delta.pooled.write.mode("append").parquet(os.path.join(path, "pooled"))
-    _bump_meta_n(new_df.sparkSession, path, "pooled", "meta.json")
-
-
-def load_pooled_maxsim(spark, path: str, source: DataFrame) -> PooledMaxsimIndex:
-    """`source` is the relation holding the matrix column (the dataset's
-    current snapshot) — rerank joins it against pooled-prefilter hits."""
-    from deeplake_spark.storage import get_json
-
-    meta = get_json(os.path.join(path, "meta.json"))
-    return PooledMaxsimIndex(
-        pooled=spark.read.parquet(os.path.join(path, "pooled")),
-        source=source.select(meta["id_col"], meta["matrix_col"]),
-        id_col=meta["id_col"],
-        matrix_col=meta["matrix_col"],
-        loaded=True,
-        n_rows_est=meta.get("n"),
     )
 
 

@@ -157,10 +157,6 @@ def register_path(spark: SparkSession, table_path: str, column: str,
                               str(index_path), id_col)
 
 
-def unregister_path(spark: SparkSession, table_path: str) -> None:
-    _registry(spark).unregister(str(table_path))
-
-
 def clear(spark: SparkSession) -> None:
     _registry(spark).clear()
 

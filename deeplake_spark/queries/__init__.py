@@ -49,6 +49,37 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
     return deco
 
 
+#: saved side-index memo keyed by (session, sf_dir, name): the
+#: reference builds indexes at ingest (index_build_config), so an
+#: index-routed lane times the PROBE path over the saved side table,
+#: not the build (t13's plan provably contains no corpus tokenize —
+#: tests/test_plans.py)
+_INDEX_CACHE: dict = {}
+
+
+def saved_index(spark: SparkSession, sf_dir: str, name: str, kind: str,
+                source, column: str, id_col: str, **options):
+    """The `kind` index over `column` of the relation `source()` (a
+    zero-arg callable, called on a miss only), built and saved once per
+    session and table through indexes.INDEX_KINDS under
+    <tmp>/dls_<name>_<sf_dir hash>, then loaded back — the
+    build-at-ingest, probe-per-query protocol."""
+    import os
+    import tempfile
+
+    from deeplake_spark.io import session_key
+    from deeplake_spark.operators.indexes import INDEX_KINDS
+
+    key = (session_key(spark), sf_dir, name)
+    if key not in _INDEX_CACHE:
+        spec, df = INDEX_KINDS[kind], source()
+        path = os.path.join(tempfile.gettempdir(),
+                            f"dls_{name}_{abs(hash(sf_dir))}")
+        spec.save(spec.build(df, column, id_col, options), path)
+        _INDEX_CACHE[key] = spec.load(spark, path, df)
+    return _INDEX_CACHE[key]
+
+
 def load_all() -> dict[str, Query]:
     """Import every query module (side effect: fills REGISTRY)."""
     from deeplake_spark.queries import (  # noqa: F401

@@ -26,7 +26,7 @@ from deeplake_spark.functions.text import (
     tokenize,
 )
 from deeplake_spark.io import load_table, session_key
-from deeplake_spark.queries import query
+from deeplake_spark.queries import query, saved_index
 
 #: DuckDB tokenizer mirroring functions.text.tokenize
 _DUCK_TOKS = "list_filter(string_split_regex(lower({c}), '\\s+'), t -> t <> '')"
@@ -348,28 +348,10 @@ def t08(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: persisted inverted-index memo keyed by (session, sf_dir): the
-#: reference builds text indexes at ingest (index_build_config), so t13
-#: times the PROBE path (parquet posting scan), not the build — and the
-#: plan provably contains no corpus tokenize (tests/test_plans.py)
-_INV_CACHE: dict = {}
-
-
 def _inv_index(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    from deeplake_spark.operators.indexes import InvertedIndex, build_inverted_index
-
-    key = (session_key(spark), sf_dir)
-    if key not in _INV_CACHE:
-        d = load_table(spark, sf_dir, "documents")
-        idx = build_inverted_index(d, text_col="text", id_col="doc_id")
-        path = os.path.join(
-            tempfile.gettempdir(), f"dls_inv_{abs(hash(sf_dir))}")
-        idx.save(path)
-        _INV_CACHE[key] = InvertedIndex.load(spark, path)
-    return _INV_CACHE[key]
+    return saved_index(spark, sf_dir, "inv", "inverted",
+                       lambda: load_table(spark, sf_dir, "documents"),
+                       "text", "doc_id")
 
 
 @query(

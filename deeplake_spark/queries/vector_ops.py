@@ -32,7 +32,7 @@ from deeplake_spark.functions.vector import (
     sign_bits,
 )
 from deeplake_spark.io import load_table, session_key
-from deeplake_spark.queries import query
+from deeplake_spark.queries import query, saved_index
 
 #: DuckDB expression mirroring our double-cast dot product.
 _DUCK_COS = (
@@ -59,49 +59,16 @@ def _ivf8(spark: SparkSession, sf_dir: str):
     return _IVF_CACHE[key]
 
 
-#: persisted sign-bit index memo (build-at-ingest, probe-per-query —
-#: same protocol as _ivf8)
-_QUANT_CACHE: dict = {}
-
-
 def _quantized_index(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    from deeplake_spark.operators.similarity import (
-        build_quantized,
-        load_quantized,
-        save_quantized,
-    )
-
-    key = (session_key(spark), sf_dir)
-    if key not in _QUANT_CACHE:
-        e = load_table(spark, sf_dir, "embeddings")
-        path = os.path.join(tempfile.gettempdir(), f"dls_quant_{abs(hash(sf_dir))}")
-        save_quantized(build_quantized(e, vec_col="embedding", id_col="vec_id"), path)
-        _QUANT_CACHE[key] = load_quantized(spark, path, source=e)
-    return _QUANT_CACHE[key]
-
-
-#: persisted product-quantization index memo (build-at-ingest,
-#: probe-per-query — same protocol as _ivf8/_quantized_index)
-_PQ_CACHE: dict = {}
+    return saved_index(spark, sf_dir, "quant", "clustered_quantized",
+                       lambda: load_table(spark, sf_dir, "embeddings"),
+                       "embedding", "vec_id")
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    from deeplake_spark.operators.similarity import build_pq, load_pq, save_pq
-
-    key = (session_key(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        e = load_table(spark, sf_dir, "embeddings")
-        path = os.path.join(tempfile.gettempdir(), f"dls_pq_{abs(hash(sf_dir))}")
-        save_pq(build_pq(e, vec_col="embedding", id_col="vec_id",
-                         m=8, nbits=4, seed=42), path)
-        _PQ_CACHE[key] = load_pq(spark, path, source=e)
-    return _PQ_CACHE[key]
+    return saved_index(spark, sf_dir, "pq", "pq",
+                       lambda: load_table(spark, sf_dir, "embeddings"),
+                       "embedding", "vec_id", m=8, nbits=4, seed=42)
 
 
 #: (session, sf_dir, vec_id, source fingerprint) -> embedding values.
@@ -640,29 +607,10 @@ def v15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: persisted pooled-MAXSIM index memo (build-at-ingest, probe-per-query
-#: — same protocol as _ivf8/_inv_index)
-_POOLED_CACHE: dict = {}
-
-
 def _pooled_index(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    from deeplake_spark.operators.similarity import (
-        build_pooled_maxsim,
-        load_pooled_maxsim,
-        save_pooled_maxsim,
-    )
-
-    key = (session_key(spark), sf_dir)
-    if key not in _POOLED_CACHE:
-        docs = _doc_matrices(spark, sf_dir)
-        path = os.path.join(tempfile.gettempdir(), f"dls_pooled_{abs(hash(sf_dir))}")
-        save_pooled_maxsim(
-            build_pooled_maxsim(docs, matrix_col="doc_matrix", id_col="doc_id"), path)
-        _POOLED_CACHE[key] = load_pooled_maxsim(spark, path, source=docs)
-    return _POOLED_CACHE[key]
+    return saved_index(spark, sf_dir, "pooled", "pooled",
+                       lambda: _doc_matrices(spark, sf_dir),
+                       "doc_matrix", "doc_id")
 
 
 @query(

@@ -4,7 +4,7 @@ rebuilds/refreshes indexes on batch commits only; a live ingestion
 path wants the index to trail the stream by one micro-batch).
 
 Shape: `foreachBatch` + the SAME delta-append path batch commits use
-(`InvertedIndex.append_to` — new posting/doclen files next to the old
+(`InvertedIndex.save(mode="append")` — new posting/doclen files next to the old
 ones, union-on-read, prior files untouched). Each micro-batch is one
 bounded batch index build over just the new rows, so maintenance work
 is O(new data) per trigger — identical to the batch incremental-
@@ -12,14 +12,14 @@ refresh guarantee, delivered continuously.
 
 Exactly-once is earned with an EPOCH LEDGER, not assumed from
 foreachBatch (r15 streaming review: foreachBatch side-effects are
-at-least-once — a crash AFTER append_to lands its delta files but
+at-least-once — a crash AFTER the append lands its delta files but
 BEFORE the checkpoint commits the epoch replays the batch on restart
 and double-counted every posting/doclen/df in it): with a
 ``checkpoint_dir``, each appended epoch writes a marker sidecar under
 ``{index_path}/_epochs/`` scoped by the checkpoint identity (the
 dataset.ingest_stream sid convention), and a replayed epoch that
 finds its marker skips the append. The one remaining edge — crash
-BETWEEN append_to and the marker write — duplicates that single
+BETWEEN the append and the marker write — duplicates that single
 epoch's delta (at-least-once for exactly one batch); closing it needs
 a transactional rename the side-table layout doesn't have, and the
 window is one small file write.
@@ -55,7 +55,7 @@ def _index_sink(index_path: str, text_col: str, id_col: str, sid: str):
             return  # checkpoint replay of an already-appended epoch
         idx = build_inverted_index(batch_df, text_col=text_col,
                                    id_col=id_col)
-        idx.append_to(index_path)
+        idx.save(index_path, mode="append")
         store.put_bytes(marker, b"1")
 
     return sink

@@ -353,9 +353,9 @@ def stream_bits_near_dup(hashed, bits_col: str, id_col: str,
     if index_path is None:
         return within
     from deeplake_spark.functions.vector import hamming_distance
-    from deeplake_spark.operators.multimodal import load_fingerprint_index
+    from deeplake_spark.operators.multimodal import FingerprintIndex
 
-    idx = load_fingerprint_index(hashed.sparkSession, index_path)
+    idx = FingerprintIndex.load(hashed.sparkSession, index_path)
     if idx.nbits != nbits:
         raise ValueError(
             f"index at {index_path} holds {idx.nbits}-bit signatures, "

@@ -36,7 +36,7 @@ INDEX SNAPSHOT SEMANTICS (test-pinned,
 test_stream_ann_index_append_mid_stream): a stream-static join
 re-executes the static side each micro-batch, but the parquet
 relation's FILE LISTING is captured when the index is loaded — an
-`append_ivf_delta` landing mid-stream is invisible to later
+IVF delta append landing mid-stream is invisible to later
 micro-batches of a running `stream_ann_search` (and its centroid
 literals are baked at plan time regardless). Restart the query to
 pick up deltas, or use `stream_ann_foreach_batch(index_path=...)`,
@@ -135,16 +135,16 @@ def stream_ann_foreach_batch(queries: DataFrame, index, sink,
 
     Index refresh: with `index_path` set, the index is RE-LOADED at
     the start of every micro-batch (one sidecar read + a parquet
-    re-list, ~100ms), so `append_ivf_delta`s that land mid-stream are
+    re-list, ~100ms), so IVF delta appends that land mid-stream are
     searched by subsequent batches. Without it, `index` is a snapshot
     — same staleness contract as the declarative lane (see
     test_stream_ann_index_append_mid_stream)."""
-    from deeplake_spark.operators.similarity import ivf_search_batch, load_ivf
+    from deeplake_spark.operators.similarity import IVFIndex, ivf_search_batch
 
     def fb(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        idx = load_ivf(batch_df.sparkSession, index_path) \
+        idx = IVFIndex.load(batch_df.sparkSession, index_path) \
             if index_path else index
         sink(ivf_search_batch(idx, batch_df, qvec_col=qvec_col,
                               qid_col=qid_col, k=k, config=config),

@@ -161,7 +161,7 @@ def test_filtered_ann_widens_probe_for_selective_filters(spark, tmp_path):
     import numpy as np
 
     import deeplake_spark as dl
-    from deeplake_spark.operators.similarity import ivf_search, load_ivf
+    from deeplake_spark.operators.similarity import IVFIndex, ivf_search
 
     rng = np.random.default_rng(11)
     rows = []
@@ -189,7 +189,7 @@ def test_filtered_ann_widens_probe_for_selective_filters(spark, tmp_path):
                          id_col="_row_id").collect()]
     assert len(exact) == 5
 
-    idx = load_ivf(spark, f"{ds.path}/_indexes/embedding_clustered")
+    idx = IVFIndex.load(spark, f"{ds.path}/_indexes/embedding_clustered")
     cand = filtered.select("_row_id")
     # UNWIDENED: the 4 default cells are all +A cells; ∩ filter = ∅
     unwidened = ivf_search(idx, qv, k=5, candidates=cand)
@@ -288,7 +288,7 @@ def test_inverted_termstats_sidecar_and_merge(spark, tmp_path):
     delta = spark.createDataFrame(
         [(100 + i, "common extra") for i in range(10)],
         "doc_id long, text string")
-    build_inverted_index(delta, "text", "doc_id").append_to(p)
+    build_inverted_index(delta, "text", "doc_id").save(p, mode="append")
     merged = InvertedIndex.load(spark, p)
     assert merged.n_docs_est == 30
     assert merged.est_selectivity("common") == 1.0
@@ -315,7 +315,7 @@ def test_numeric_bucket_counts_sidecar_and_merge(spark, tmp_path):
 
     delta = spark.createDataFrame([(1000 + i, 1e6) for i in range(100)],
                                   "row long, v double")
-    build_numeric_index(delta, "v", id_col="row").append_to(p)
+    build_numeric_index(delta, "v", id_col="row").save(p, mode="append")
     merged = NumericIndex.load(spark, p)
     assert merged.n_rows == 200
     # the delta clamped into the top bucket: full-range still 1.0,
@@ -387,7 +387,7 @@ def test_exact_and_json_gate_stats(spark, tmp_path):
     delta = spark.createDataFrame(
         [(1000 + i, "boiler", '{"type": "like"}') for i in range(100)],
         "row_id long, text string, meta string")
-    build_exact_index(delta, "text", id_col="row_id").append_to(epath)
+    build_exact_index(delta, "text", id_col="row_id").save(epath, mode="append")
     merged = ExactTextIndex.load(spark, epath)
     assert merged.n_rows_est == 1100
     assert abs(merged.est_selectivity("boiler") - 600 / 1100) < 0.01
@@ -505,18 +505,21 @@ def test_ivf_save_load_partition_pruning(spark, sf_dir):
     import tempfile
 
     from deeplake_spark.operators.similarity import (
-        SearchConfig, build_ivf, ivf_search, load_ivf, save_ivf,
+        IVFIndex,
+        SearchConfig,
+        build_ivf,
+        ivf_search,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     q = list(e.filter(F.col("vec_id") == 0).head().embedding)
     idx = build_ivf(e, n_clusters=8, seed=42)
     with tempfile.TemporaryDirectory() as d:
-        save_ivf(idx, d + "/ivf")
+        idx.save(d + "/ivf")
         assert any(
             f.startswith("cluster=") for f in os.listdir(d + "/ivf/assignments")
         )
-        loaded = load_ivf(spark, d + "/ivf")
+        loaded = IVFIndex.load(spark, d + "/ivf")
         a = [r.vec_id for r in ivf_search(loaded, q, k=10, config=SearchConfig.balanced()).collect()]
         b = [r.vec_id for r in ivf_search(idx, q, k=10, config=SearchConfig.balanced()).collect()]
         assert a == b
@@ -739,10 +742,9 @@ def test_tql_maxsim_routing(spark, sf_dir, tmp_path):
     from deeplake_spark import tql
     from deeplake_spark.functions.vector import maxsim_pandas
     from deeplake_spark.operators.similarity import (
+        PooledMaxsimIndex,
         SearchConfig,
         build_pooled_maxsim,
-        load_pooled_maxsim,
-        save_pooled_maxsim,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -760,8 +762,8 @@ def test_tql_maxsim_routing(spark, sf_dir, tmp_path):
           for r in e.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()]
 
     p = str(tmp_path / "pooled")
-    save_pooled_maxsim(build_pooled_maxsim(docs, "mat", "doc_id"), p)
-    idx = load_pooled_maxsim(spark, p, source=docs)
+    build_pooled_maxsim(docs, "mat", "doc_id").save(p)
+    idx = PooledMaxsimIndex.load(spark, p, source=docs)
 
     routed = tql.query(
         "SELECT doc_id, MAXSIM(mat, ?) AS score ORDER BY score DESC LIMIT 5",
@@ -899,16 +901,14 @@ def test_ivf_and_pooled_delta_append(spark, sf_dir, tmp_path):
     """IVF delta: new rows join their nearest EXISTING centroid, old
     assignment files untouched; pooled delta likewise."""
     from deeplake_spark.operators.similarity import (
-        append_ivf_delta,
+        IVFIndex,
         build_ivf,
-        load_ivf,
-        save_ivf,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     idx_path = str(tmp_path / "ivf")
-    save_ivf(build_ivf(e, n_clusters=4, seed=7), idx_path)
-    idx = load_ivf(spark, idx_path)
+    build_ivf(e, n_clusters=4, seed=7).save(idx_path)
+    idx = IVFIndex.load(spark, idx_path)
     before = _tree_state(idx_path + "/assignments")
 
     # new row = exact copy of centroid 2 -> must land in cluster 2
@@ -918,14 +918,14 @@ def test_ivf_and_pooled_delta_append(spark, sf_dir, tmp_path):
     new = spark.createDataFrame(
         [(10_000_000, [float(x) for x in c2])],
         "vec_id long, embedding array<float>")
-    append_ivf_delta(idx, new, idx_path)
+    idx.delta(new).save(idx_path, mode="append")
 
     after = _tree_state(idx_path + "/assignments")
     for p, sig in before.items():
         assert after.get(p) == sig
     assert len(after) > len(before)
 
-    idx2 = load_ivf(spark, idx_path)
+    idx2 = IVFIndex.load(spark, idx_path)
     got = idx2.assignments.filter(F.col("vec_id") == 10_000_000).head()
     assert got["cluster"] == 2
     # the persisted corpus size follows the append — a stale undercount
@@ -939,10 +939,8 @@ def test_ivf_and_pooled_delta_append(spark, sf_dir, tmp_path):
 
     # pooled delta: same untouched-files + visible-new-row contract
     from deeplake_spark.operators.similarity import (
-        append_pooled_delta,
+        PooledMaxsimIndex,
         build_pooled_maxsim,
-        load_pooled_maxsim,
-        save_pooled_maxsim,
     )
 
     docs = (
@@ -952,17 +950,17 @@ def test_ivf_and_pooled_delta_append(spark, sf_dir, tmp_path):
         .agg(F.collect_list("embedding").alias("mat"))
     )
     pp = str(tmp_path / "pooled")
-    save_pooled_maxsim(build_pooled_maxsim(docs, "mat", "doc_id"), pp)
+    build_pooled_maxsim(docs, "mat", "doc_id").save(pp)
     pbefore = _tree_state(pp + "/pooled")
     new_doc = spark.createDataFrame(
         [(77_777, [[float(x) for x in c2]])],
         "doc_id long, mat array<array<double>>")
-    append_pooled_delta(new_doc, "mat", "doc_id", pp)
+    build_pooled_maxsim(new_doc, "mat", "doc_id").save(pp, mode="append")
     pafter = _tree_state(pp + "/pooled")
     for p, sig in pbefore.items():
         assert pafter.get(p) == sig
     assert len(pafter) > len(pbefore)
-    loaded = load_pooled_maxsim(spark, pp, source=docs.unionByName(new_doc))
+    loaded = PooledMaxsimIndex.load(spark, pp, source=docs.unionByName(new_doc))
     assert loaded.pooled.filter(F.col("doc_id") == 77_777).count() == 1
     assert loaded.n_rows_est == docs.count() + 1
 
@@ -973,19 +971,17 @@ def test_quantized_index_roundtrip_and_tql_route(spark, sf_dir, tmp_path):
     and delta appends leave old bits files untouched."""
     from deeplake_spark import tql
     from deeplake_spark.operators.similarity import (
+        QuantizedIndex,
         SearchConfig,
-        append_quantized_delta,
         build_quantized,
-        load_quantized,
         quantized_index_search,
-        save_quantized,
         topk_cosine,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "quant")
-    save_quantized(build_quantized(e, "embedding", "vec_id"), p)
-    idx = load_quantized(spark, p, source=e)
+    build_quantized(e, "embedding", "vec_id").save(p)
+    idx = QuantizedIndex.load(spark, p, source=e)
 
     q = list(e.filter(F.col("vec_id") == 0).select("embedding").head()[0])
     approx = {r.vec_id for r in quantized_index_search(
@@ -1022,12 +1018,12 @@ def test_quantized_index_roundtrip_and_tql_route(spark, sf_dir, tmp_path):
     before = _tree_state(p + "/bits")
     new = spark.createDataFrame([(20_000_000, [float(x) for x in q])],
                                 "vec_id long, embedding array<float>")
-    append_quantized_delta(new, "embedding", "vec_id", p)
+    build_quantized(new, "embedding", "vec_id").save(p, mode="append")
     after = _tree_state(p + "/bits")
     for f, sig in before.items():
         assert after.get(f) == sig
     assert len(after) > len(before)
-    idx2 = load_quantized(
+    idx2 = QuantizedIndex.load(
         spark, p, source=e.select("vec_id", "embedding").unionByName(new))
     hits = {r.vec_id for r in quantized_index_search(
         idx2, q, k=5, config=SearchConfig.high_accuracy()).collect()}
@@ -1061,19 +1057,17 @@ def test_pq_index_roundtrip_and_tql_route(spark, sf_dir, tmp_path):
     scans the codes table — never the vector column."""
     from deeplake_spark import tql
     from deeplake_spark.operators.similarity import (
+        PQIndex,
         SearchConfig,
-        append_pq_delta,
         build_pq,
-        load_pq,
         pq_search,
-        save_pq,
         topk_cosine,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "pq")
-    save_pq(build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42), p)
-    idx = load_pq(spark, p, source=e)
+    build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42).save(p)
+    idx = PQIndex.load(spark, p, source=e)
     assert len(idx.codebooks) == 8 and len(idx.codebooks[0]) == 16
 
     # codes are valid and complete
@@ -1117,12 +1111,12 @@ def test_pq_index_roundtrip_and_tql_route(spark, sf_dir, tmp_path):
     before = _tree_state(p + "/codes")
     new = spark.createDataFrame([(20_000_000, [float(x) for x in q])],
                                 "vec_id long, embedding array<float>")
-    append_pq_delta(idx, new, p)
+    idx.delta(new).save(p, mode="append")
     after = _tree_state(p + "/codes")
     for f, sig in before.items():
         assert after.get(f) == sig
     assert len(after) > len(before)
-    idx2 = load_pq(spark, p,
+    idx2 = PQIndex.load(spark, p,
                    source=e.select("vec_id", "embedding").unionByName(new))
     hits = {r.vec_id for r in pq_search(
         idx2, q, k=10, config=SearchConfig.high_accuracy()).collect()}
@@ -1141,20 +1135,18 @@ def test_ivf_pq_cluster_prune(spark, sf_dir, tmp_path):
     the exact rerank; delta appends route new rows to their coarse
     cluster without touching existing files."""
     from deeplake_spark.operators.similarity import (
+        PQIndex,
         SearchConfig,
-        append_pq_delta,
         build_pq,
-        load_pq,
         pq_search,
-        save_pq,
         topk_cosine,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "ivfpq")
-    save_pq(build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42,
-                     n_clusters=4), p)
-    idx = load_pq(spark, p, source=e)
+    build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42,
+             n_clusters=4).save(p)
+    idx = PQIndex.load(spark, p, source=e)
     assert idx.centroids is not None and len(idx.centroids) == 4
     import os
 
@@ -1181,12 +1173,12 @@ def test_ivf_pq_cluster_prune(spark, sf_dir, tmp_path):
     before = _tree_state(p + "/codes")
     new = spark.createDataFrame([(30_000_000, [float(x) for x in q])],
                                 "vec_id long, embedding array<float>")
-    append_pq_delta(idx, new, p)
+    idx.delta(new).save(p, mode="append")
     after = _tree_state(p + "/codes")
     for f, sig in before.items():
         assert after.get(f) == sig
     assert len(after) > len(before)
-    idx2 = load_pq(spark, p,
+    idx2 = PQIndex.load(spark, p,
                    source=e.select("vec_id", "embedding").unionByName(new))
     hits = {r.vec_id for r in pq_search(
         idx2, q, k=10, config=SearchConfig.high_accuracy()).collect()}
@@ -1250,18 +1242,17 @@ def test_pq_l2_metric_and_route(spark, sf_dir, tmp_path):
     a registered pq index too."""
     from deeplake_spark import tql
     from deeplake_spark.operators.similarity import (
+        PQIndex,
         SearchConfig,
         build_pq,
-        load_pq,
         pq_search,
-        save_pq,
         topk_l2,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "pq")
-    save_pq(build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42), p)
-    idx = load_pq(spark, p, source=e)
+    build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42).save(p)
+    idx = PQIndex.load(spark, p, source=e)
     q = list(e.filter(F.col("vec_id") == 10).select("embedding").head()[0])
     exact = [r.vec_id for r in topk_l2(e, "embedding", q, k=10,
                                        id_col="vec_id").collect()]
@@ -1587,7 +1578,7 @@ def test_termstats_merge_recaps_heavy_map(spark, tmp_path, monkeypatch):
     delta = spark.createDataFrame(
         [(100 + i, "epsilon zeta eta theta") for i in range(8)],
         "doc_id long, text string")
-    build_inverted_index(delta, "text", "doc_id").append_to(p)
+    build_inverted_index(delta, "text", "doc_id").save(p, mode="append")
     from deeplake_spark.storage import get_json
 
     ts = get_json(f"{p}/termstats.json")
@@ -1621,7 +1612,7 @@ def test_termstats_merge_counts_subfloor_delta_df(spark, tmp_path,
         [(100, "hot other"), (101, "cold other"),
          (102, "cold other"), (103, "cold other")],
         "doc_id long, text string")
-    build_inverted_index(delta, "text", "doc_id").append_to(p)
+    build_inverted_index(delta, "text", "doc_id").save(p, mode="append")
 
     merged = ix.InvertedIndex.load(spark, p)
     # exact merged df: 4 (base) + 1 (sub-floor delta) over 8 docs
@@ -1649,7 +1640,7 @@ def test_termstats_merge_exact_past_heavy_cap_cut(spark, tmp_path,
         [(100, "aaa bbb ccc hot"), (101, "aaa bbb ccc"),
          (102, "aaa bbb"), (103, "mmm")],
         "doc_id long, text string")
-    build_inverted_index(delta, "text", "doc_id").append_to(p)
+    build_inverted_index(delta, "text", "doc_id").save(p, mode="append")
     merged = ix.InvertedIndex.load(spark, p)
     # exact: 4 (base) + 1 (sub-floor, below the cap cut) over 8 docs
     assert merged.est_selectivity("hot") == pytest.approx(5 / 8)
@@ -1849,9 +1840,8 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path,
 
     from deeplake_spark import tql
     from deeplake_spark.operators.similarity import (
+        PQIndex,
         build_pq,
-        load_pq,
-        save_pq,
         topk_cosine,
     )
 
@@ -1867,8 +1857,8 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path,
      .write.option("parquet.block.size", 128 * 1024).parquet(path))
     d = spark.read.parquet(path)
     ip = str(tmp_path / "pqidx")
-    save_pq(build_pq(d, "embedding", "vec_id", m=4, nbits=4), ip)
-    idx = load_pq(spark, ip, source=d)
+    build_pq(d, "embedding", "vec_id", m=4, nbits=4).save(ip)
+    idx = PQIndex.load(spark, ip, source=d)
     assert idx.loaded and idx.n_rows_est == n
     q = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
     tql_q = ("SELECT vec_id, COSINE_SIMILARITY(embedding, ?) AS score "
@@ -2130,13 +2120,14 @@ def test_tql_topk_ceiling_confs_decline_route(spark, sf_dir, tmp_path):
 
     from deeplake_spark import tql
     from deeplake_spark.operators.similarity import (
-        build_ivf, load_ivf, save_ivf,
+        IVFIndex,
+        build_ivf,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "ivf")
-    save_ivf(build_ivf(e, "embedding", "vec_id", n_clusters=8), p)
-    idx = load_ivf(spark, p)
+    build_ivf(e, "embedding", "vec_id", n_clusters=8).save(p)
+    idx = IVFIndex.load(spark, p)
     assert idx.n_rows_est
     qv = [float(x) for x in
           e.filter(F.col("vec_id") == 0).head().embedding]
@@ -2190,8 +2181,8 @@ def test_dataset_fingerprint_index_lifecycle(spark):
     from deeplake_spark import dataset as dl
     from deeplake_spark import types as dt
     from deeplake_spark.operators.multimodal import (
+        FingerprintIndex,
         image_near_dup_pairs,
-        load_fingerprint_index,
     )
 
     def ppm(pix):
@@ -2494,7 +2485,7 @@ def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
 
     path = str(tmp_path / "inv_app")
     build_inverted_index(corpus(0, 40)).save(path)
-    build_inverted_index(corpus(400, 440)).append_to(path)
+    build_inverted_index(corpus(400, 440)).save(path, mode="append")
     idx = InvertedIndex.load(spark, path)
     assert idx.granules is not None
     ids = idx.probe(["needle"])
@@ -2520,7 +2511,7 @@ def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
     ts.pop("range_granule", None)
     put_json(sc, ts)
     assert InvertedIndex.load(spark, pre).granules is None
-    build_inverted_index(corpus(400, 440)).append_to(pre)
+    build_inverted_index(corpus(400, 440)).save(pre, mode="append")
     after = InvertedIndex.load(spark, pre)
     assert after.granules is None and after.granule_size is None
     assert not os.path.isdir(os.path.join(pre, "granules"))
@@ -2573,3 +2564,224 @@ def test_granule_overwrite_crash_window_is_sound(spark, tmp_path,
     assert calls["n"] == 1
     loaded = InvertedIndex.load(spark, path)
     assert loaded.granules is None and loaded.granule_size is None
+
+
+def test_granule_overwrite_strip_failure_raises(spark, tmp_path,
+                                                monkeypatch):
+    """A failing overwrite-mode sidecar strip aborts the save before any
+    data write: save raises, the old index still loads WITH its granule
+    table, and CONTAINS probes return the same rows as before."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    import deeplake_spark.storage as storage
+    from deeplake_spark.operators.indexes import (
+        DEFAULT_RANGE_GRANULE,
+        InvertedIndex,
+        build_inverted_index,
+        contains_via_index,
+    )
+
+    src = (spark.range(50)
+           .select((F.col("id") * 6000).alias("doc_id"),
+                   F.when(F.col("id") % 5 == 0, F.lit("alpha needle"))
+                   .otherwise(F.lit("alpha beta")).alias("text")))
+    path = str(tmp_path / "inv_strip")
+    build_inverted_index(src).save(path)
+
+    def probe():
+        idx = InvertedIndex.load(spark, path)
+        return sorted(r.doc_id for r in
+                      contains_via_index(src, idx, "needle").collect())
+
+    before = probe()
+    assert len(before) == 10
+    files = _tree_state(path)
+
+    # only the strip (the save's first sidecar write) fails; the
+    # re-save indexes a different corpus, so any data it wrote would
+    # change the probe
+    real_put, calls = storage.put_json, []
+
+    def failing_strip(p, obj):
+        calls.append(p)
+        if len(calls) == 1:
+            raise OSError("simulated sidecar write failure")
+        real_put(p, obj)
+
+    other = src.withColumn("text", F.lit("alpha needle"))
+    monkeypatch.setattr(storage, "put_json", failing_strip)
+    with pytest.raises(OSError, match="simulated sidecar"):
+        build_inverted_index(other).save(path)
+    monkeypatch.undo()
+    assert calls == [os.path.join(path, "termstats.json")]
+    assert _tree_state(path) == files
+
+    loaded = InvertedIndex.load(spark, path)
+    assert loaded.granules is not None
+    assert loaded.granule_size == DEFAULT_RANGE_GRANULE
+    assert probe() == before
+
+
+def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
+    """save(mode="append") onto a path with no postings and no sidecar
+    is a fresh save: it records range_granule, and the granule-table
+    ranges equal the posting-row summary."""
+    from pyspark.sql import functions as F
+
+    from deeplake_spark.operators import indexes as ix
+    from deeplake_spark.operators.indexes import (
+        DEFAULT_RANGE_GRANULE,
+        InvertedIndex,
+        build_inverted_index,
+        routed_scan_ranges,
+    )
+
+    src = (spark.range(60)
+           .select((F.col("id") * 6000).alias("doc_id"),
+                   F.when(F.col("id") < 20, F.lit("alpha needle"))
+                   .otherwise(F.lit("alpha beta")).alias("text")))
+    path = str(tmp_path / "inv_empty_append")
+    build_inverted_index(src).save(path, mode="append")
+    idx = InvertedIndex.load(spark, path)
+    assert idx.granule_size == DEFAULT_RANGE_GRANULE
+    assert idx.granules is not None
+    ids = idx.probe(["needle"])
+    ix._RANGE_CACHE.clear()
+    posting = routed_scan_ranges(ids, None)
+    ix._RANGE_CACHE.clear()
+    granular = routed_scan_ranges(ids, None,
+                                  granules=idx.probe_granules(["needle"]),
+                                  granule_size=idx.granule_size)
+    assert posting == granular and posting, posting
+
+
+# ------------------------------------------------ every kind, end to end
+
+#: per kind: (column, create_index options, side table — also the loaded
+#: index's attribute holding it —, sidecar, sidecar row-count key, sorted
+#: top-level names, partition column per table, sidecar keys in written
+#: order): the on-disk layout the JVM routing rule and older datasets read
+_KIND_LAYOUTS = {
+    "inverted": ("text", {}, "doclens", "termstats.json", "n_docs",
+                 ["doclens", "granules", "postings", "stats",
+                  "termstats.json"],
+                 {"granules": "bucket", "postings": "bucket"},
+                 ["n_docs", "floor_frac", "heavy", "range_granule"]),
+    "numeric": ("n", {}, "values", "meta.json", "n",
+                ["meta.json", "values"], {"values": "bucket"},
+                ["vmin", "width", "bucket_counts", "n"]),
+    "json": ("meta", {"paths": ["type"]}, "entries", "valstats.json",
+             "n_docs", ["entries", "valstats.json"], {"entries": "path"},
+             ["n_docs", "floor_frac", "heavy"]),
+    "exact": ("title", {}, "digests", "digeststats.json", "n_docs",
+              ["digests", "digeststats.json"], {"digests": "bucket"},
+              ["n_docs", "floor_frac", "heavy"]),
+    "clustered": ("emb", {"n_clusters": 4}, "assignments",
+                  "centroids.json", "n", ["assignments", "centroids.json"],
+                  {"assignments": "cluster"},
+                  ["centroids", "vec_col", "id_col", "n"]),
+    "pooled": ("mat", {}, "pooled", "meta.json", "n",
+               ["meta.json", "pooled"], {},
+               ["matrix_col", "id_col", "n"]),
+    "clustered_quantized": ("emb", {}, "bits", "meta.json", "n",
+                            ["bits", "meta.json"], {},
+                            ["vec_col", "id_col", "n"]),
+    "pq": ("emb", {"m": 4, "nbits": 2, "n_clusters": 2}, "codes",
+           "codebooks.json", "n", ["codebooks.json", "codes"],
+           {"codes": "cluster"},
+           ["codebooks", "vec_col", "id_col", "centroids", "n"]),
+    "fingerprint": ("image", {"modality": "image", "compression": "ppm",
+                              "strict": True},
+                    "signatures", "meta.json", "n",
+                    ["meta.json", "signatures"], {},
+                    ["modality", "id_col", "params", "nbits", "n"]),
+}
+
+
+def _kind_row(i: int) -> dict:
+    import numpy as np
+
+    from tests.test_multimodal import _ppm
+
+    rng = np.random.default_rng(i)
+    emb = [float(x) for x in rng.normal(size=8)]
+    return {"doc_id": i, "text": f"alpha w{i % 7} common",
+            "title": f"title {i % 5}", "n": i,
+            "meta": '{"type": "t%d"}' % (i % 3), "emb": emb,
+            "mat": [emb, [float(x) for x in rng.normal(size=8)]],
+            "image": bytes(_ppm(rng.integers(0, 256, (16, 16, 3))))}
+
+
+@pytest.fixture(scope="module")
+def kinds_source(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("kinds") / "src.parquet")
+    spark.createDataFrame(
+        [_kind_row(i) for i in range(40)],
+        "doc_id long, text string, title string, n long, meta string, "
+        "emb array<float>, mat array<array<float>>, image binary",
+    ).coalesce(1).write.parquet(path)
+    return path
+
+
+def _file_bytes(root):
+    import hashlib
+    import os as _os
+
+    out = {}
+    for dirpath, _dirs, files in _os.walk(root):
+        for fn in files:
+            if fn.startswith((".", "_")) or fn.endswith(".json"):
+                continue
+            p = _os.path.join(dirpath, fn)
+            with open(p, "rb") as f:
+                out[_os.path.relpath(p, root)] = hashlib.md5(
+                    f.read()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("kind", sorted(_KIND_LAYOUTS))
+def test_every_index_kind_round_trip(spark, kinds_source, tmp_path, kind):
+    """Every registered kind through Dataset: create_index, an
+    append-only commit under automatic indexing (delta append), then a
+    reload through _load_indexes. Existing side-table files stay
+    byte-identical, the sidecar n equals the side table's row count,
+    the appended row is in the reloaded side table, and file names and
+    sidecar keys match the pinned layout."""
+    import os
+
+    from deeplake_spark import dataset as dl
+    from deeplake_spark.storage import get_json
+
+    (column, options, table, sidecar, n_key, names, parts,
+     keys) = _KIND_LAYOUTS[kind]
+    ds = dl.from_parquet(kinds_source, str(tmp_path / "ds"), spark)
+    assert ds.indexing_mode == "automatic"
+    ds.create_index(column, kind, **options)
+    idx_dir = os.path.join(ds.path, "_indexes", f"{column}_{kind}")
+    before = _file_bytes(idx_dir)
+    assert before
+
+    ds.append([_kind_row(1000)])
+    ds.commit("append one row")
+    after = _file_bytes(idx_dir)
+    for p, digest in before.items():
+        assert after.get(p) == digest, f"existing file rewritten: {p}"
+    assert len(after) > len(before), "no delta files appended"
+
+    kind_out, idx, id_col = ds._load_indexes()[column]
+    assert (kind_out, id_col) == (kind, "_row_id")
+    new_id = ds.to_df().filter(F.col("doc_id") == 1000).head()["_row_id"]
+    frame = getattr(idx, table)  # the loaded side table
+    fid = "row_id" if "row_id" in frame.columns else "_row_id"
+    assert frame.filter(F.col(fid) == new_id).count() >= 1
+    meta = get_json(os.path.join(idx_dir, sidecar))
+    assert meta[n_key] == frame.count() == 41
+
+    assert sorted(os.listdir(idx_dir)) == names
+    for sub, col in parts.items():
+        dirs = [d for d in os.listdir(os.path.join(idx_dir, sub))
+                if not d.startswith((".", "_"))]
+        assert dirs and all(d.startswith(col + "=") for d in dirs), dirs
+    assert list(meta) == keys

@@ -1913,11 +1913,10 @@ def test_fingerprint_index_persisted_equals_decode_lane(spark, tmp_path):
     import numpy as np
 
     from deeplake_spark.operators.multimodal import (
+        FingerprintIndex,
         audio_near_dup_pairs,
         build_fingerprint_index,
         image_near_dup_pairs,
-        load_fingerprint_index,
-        save_fingerprint_index,
     )
 
     rng = np.random.default_rng(17)
@@ -1934,11 +1933,9 @@ def test_fingerprint_index_persisted_equals_decode_lane(spark, tmp_path):
         df, "image", "img_id", compression="ppm", strict=True,
         max_hamming=6).collect()}
     idx_path = str(tmp_path / "img_fp")
-    save_fingerprint_index(
-        build_fingerprint_index(df, "image", "img_id", "image",
-                                compression="ppm", strict=True),
-        idx_path)
-    idx = load_fingerprint_index(spark, idx_path)
+    build_fingerprint_index(df, "image", "img_id", "image",
+                            compression="ppm", strict=True).save(idx_path)
+    idx = FingerprintIndex.load(spark, idx_path)
     assert idx.modality == "image" and idx.id_col == "img_id"
     assert idx.params == {"compression": "ppm", "strict": True}
     assert idx.n_rows_est == len(rows)
@@ -1963,10 +1960,8 @@ def test_fingerprint_index_persisted_equals_decode_lane(spark, tmp_path):
         adf, "audio", "clip_id", compression="wav", strict=True,
         max_hamming=6).collect()}
     apath = str(tmp_path / "aud_fp")
-    save_fingerprint_index(
-        build_fingerprint_index(adf, "audio", "clip_id", "audio",
-                                compression="wav", strict=True),
-        apath)
+    build_fingerprint_index(adf, "audio", "clip_id", "audio",
+                            compression="wav", strict=True).save(apath)
     apers = {(r.a, r.b): r.hamming for r in audio_near_dup_pairs(
         adf, max_hamming=6, index_path=apath).collect()}
     assert apers == adecode and len(adecode) >= 2
@@ -1979,11 +1974,9 @@ def test_fingerprint_index_incremental_append(spark, tmp_path):
     import numpy as np
 
     from deeplake_spark.operators.multimodal import (
-        append_fingerprint_delta,
+        FingerprintIndex,
         build_fingerprint_index,
         image_near_dup_pairs,
-        load_fingerprint_index,
-        save_fingerprint_index,
     )
 
     rng = np.random.default_rng(23)
@@ -2000,12 +1993,11 @@ def test_fingerprint_index_incremental_append(spark, tmp_path):
     first = full.filter(F.col("img_id") < half)
     second = full.filter(F.col("img_id") >= half)
     idx_path = str(tmp_path / "inc_fp")
-    save_fingerprint_index(
-        build_fingerprint_index(first, "image", "img_id", "image",
-                                compression="ppm", strict=True),
-        idx_path)
-    append_fingerprint_delta(second, "image", idx_path)
-    assert load_fingerprint_index(spark, idx_path).n_rows_est == len(rows)
+    build_fingerprint_index(first, "image", "img_id", "image",
+                            compression="ppm", strict=True).save(idx_path)
+    FingerprintIndex.load(spark, idx_path).delta(second, "image").save(
+        idx_path, mode="append")
+    assert FingerprintIndex.load(spark, idx_path).n_rows_est == len(rows)
     maintained = {(r.a, r.b): r.hamming for r in image_near_dup_pairs(
         full, max_hamming=6, index_path=idx_path).collect()}
     fresh = {(r.a, r.b): r.hamming for r in image_near_dup_pairs(
@@ -2025,11 +2017,10 @@ def test_fingerprint_index_nbits_follows_hash_size(spark, tmp_path):
     import numpy as np
 
     from deeplake_spark.operators.multimodal import (
+        FingerprintIndex,
         build_fingerprint_index,
         fingerprint_index_near_dup_pairs,
-        load_fingerprint_index,
         phash_images,
-        save_fingerprint_index,
     )
     from deeplake_spark.operators.similarity import bits_near_dup_pairs
 
@@ -2049,8 +2040,8 @@ def test_fingerprint_index_nbits_follows_hash_size(spark, tmp_path):
                                   hash_size=4)
     assert idx.nbits == 16
     path = str(tmp_path / "fp16")
-    save_fingerprint_index(idx, path)
-    loaded = load_fingerprint_index(spark, path)
+    idx.save(path)
+    loaded = FingerprintIndex.load(spark, path)
     assert loaded.nbits == 16
     assert all(len(r.bits) == 16 for r in loaded.signatures.collect())
 

@@ -378,9 +378,9 @@ def test_sql_topk_ann_routes_every_spelling(spark, ann_ds):
     spark.conf.set("spark.sql.deeplake.routing.ann.accuracyFactor", "10")
 
     # parity with the Python entry path: same cells, same candidates
-    from deeplake_spark.operators.similarity import ivf_search, load_ivf
+    from deeplake_spark.operators.similarity import IVFIndex, ivf_search
 
-    idx = load_ivf(spark, f"{ds.path}/_indexes/embedding_clustered")
+    idx = IVFIndex.load(spark, f"{ds.path}/_indexes/embedding_clustered")
     via_py = set(r[idx.id_col] for r in ivf_search(idx, qv, k=10).collect())
     via_sql = set(
         r.vec_id for r in spark.sql(sqls["cosine_desc"]).collect())
@@ -822,7 +822,7 @@ def test_sql_topk_nulls_first_stays_stock_and_exact(spark, sf_dir,
     approximation. The same query spelled ASC NULLS LAST routes."""
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
-    from deeplake_spark.operators.similarity import build_ivf, save_ivf
+    from deeplake_spark.operators.similarity import build_ivf
 
     base = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = len(base.head().embedding)
@@ -835,9 +835,9 @@ def test_sql_topk_nulls_first_stays_stock_and_exact(spark, sf_dir,
     # index covers the non-null vectors (the reference's contract: a
     # vector index never holds null embeddings)
     idx_path = str(tmp_path / "null_ivf")
-    save_ivf(build_ivf(spark.read.parquet(src).filter(
+    build_ivf(spark.read.parquet(src).filter(
         F.col("embedding").isNotNull()), "embedding", "vec_id",
-        n_clusters=8), idx_path)
+        n_clusters=8).save(idx_path)
     spark.read.parquet(src).createOrReplaceTempView("null_emb")
     qv = [float(x) for x in base.head().embedding]
     assert len(qv) == dim
@@ -1223,7 +1223,7 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
     persisted corpus size; rows stay the exact top-k."""
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
-    from deeplake_spark.operators.similarity import build_ivf, save_ivf
+    from deeplake_spark.operators.similarity import build_ivf
 
     n, g = 16_000, 2_000  # 8 contiguous id groups, one direction each
     e = (spark.range(n).withColumnRenamed("id", "vec_id")
@@ -1237,8 +1237,8 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
      .write.option("parquet.block.size", 128 * 1024).parquet(path))
     d = spark.read.parquet(path)
     ip = str(tmp_path / "clustivf")
-    save_ivf(build_ivf(d, vec_col="embedding", id_col="vec_id",
-                       n_clusters=8, seed=7), ip)
+    build_ivf(d, vec_col="embedding", id_col="vec_id",
+              n_clusters=8, seed=7).save(ip)
     d.createOrReplaceTempView("clust_emb")
     rt.register_path(spark, path, "embedding", "clustered", ip, "vec_id")
     qv = [1.0] + [0.0] * 7
@@ -1268,11 +1268,11 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
     # the pq (IVFADC) kind prunes through its codes table identically —
     # this exercises annN's codebooks.json sidecar branch, which the
     # clustered lane (centroids.json) can't
-    from deeplake_spark.operators.similarity import build_pq, save_pq
+    from deeplake_spark.operators.similarity import build_pq
 
     pp = str(tmp_path / "clustpq")
-    save_pq(build_pq(d, "embedding", "vec_id", m=4, nbits=4,
-                     n_clusters=8, seed=7), pp)
+    build_pq(d, "embedding", "vec_id", m=4, nbits=4,
+             n_clusters=8, seed=7).save(pp)
     d.createOrReplaceTempView("clust_emb_pq")
     rt.register_path(spark, path, "embedding", "pq", pp, "vec_id")
     rt.enable(spark)
@@ -1475,7 +1475,7 @@ def test_sql_fetchback_execute_routed(spark, tmp_path):
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
     from deeplake_spark.operators.indexes import build_inverted_index
-    from deeplake_spark.operators.similarity import build_ivf, save_ivf
+    from deeplake_spark.operators.similarity import build_ivf
 
     n = 400
     rows = []
@@ -1496,8 +1496,7 @@ def test_sql_fetchback_execute_routed(spark, tmp_path):
     build_inverted_index(corpus, "text", "doc_id").save(idx_path)
     rt.register_index_views(spark, "fr_docs", idx_path)
     ivf_path = str(tmp_path / "fr_ivf")
-    save_ivf(build_ivf(corpus, "embedding", "doc_id", n_clusters=4),
-             ivf_path)
+    build_ivf(corpus, "embedding", "doc_id", n_clusters=4).save(ivf_path)
     qv = [1.0, 0.25, 0.0]
     text_of = {r.doc_id: r.text for r in corpus.collect()}
     kw = dict(k=5, n=20, vec_col="embedding", id_col="doc_id",
@@ -1588,7 +1587,7 @@ def test_sql_fetchback_build_mirror_is_exact_under_routing(spark, tmp_path):
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
     from deeplake_spark.operators.indexes import build_inverted_index
-    from deeplake_spark.operators.similarity import build_ivf, save_ivf
+    from deeplake_spark.operators.similarity import build_ivf
 
     n = 400
     rows = []
@@ -1607,8 +1606,8 @@ def test_sql_fetchback_build_mirror_is_exact_under_routing(spark, tmp_path):
     build_inverted_index(corpus, "text", "doc_id").save(
         str(tmp_path / "inv"))
     rt.register_index_views(spark, "mir_docs", str(tmp_path / "inv"))
-    save_ivf(build_ivf(corpus, "embedding", "doc_id", n_clusters=8),
-             str(tmp_path / "ivf"))
+    build_ivf(corpus, "embedding", "doc_id", n_clusters=8).save(
+        str(tmp_path / "ivf"))
     qv = [1.0, 0.25, 0.0]
     kw = dict(k=5, n=20, vec_col="embedding", id_col="doc_id",
               text_weight=0.1, vec_weight=0.9,
@@ -1723,7 +1722,7 @@ def test_sql_fetchback_rebuild_after_append_sees_new_docs(spark,
             [(300, "totally new needlezz document")],
             "doc_id long, text string")
         new.write.mode("append").parquet(corpus_path)
-        build_inverted_index(new, "text", "doc_id").append_to(idx_path)
+        build_inverted_index(new, "text", "doc_id").save(idx_path, mode="append")
         spark.read.parquet(corpus_path).createOrReplaceTempView(
             "snap_docs")
         rt.register_index_views(spark, "snap_docs", idx_path)

@@ -519,12 +519,10 @@ def test_stream_ann_index_append_mid_stream(spark, tmp_path):
     import os
 
     from deeplake_spark.operators.similarity import (
+        IVFIndex,
         SearchConfig,
-        append_ivf_delta,
         build_ivf,
         ivf_search,
-        load_ivf,
-        save_ivf,
     )
     from deeplake_spark.streaming.vectors import (
         stream_ann_foreach_batch,
@@ -537,8 +535,8 @@ def test_stream_ann_index_append_mid_stream(spark, tmp_path):
     df_a = spark.createDataFrame(rows_a,
                                  "vec_id long, embedding array<double>")
     idx_path = str(tmp_path / "ivf")
-    save_ivf(build_ivf(df_a, n_clusters=4, seed=1), idx_path)
-    idx = load_ivf(spark, idx_path)
+    build_ivf(df_a, n_clusters=4, seed=1).save(idx_path)
+    idx = IVFIndex.load(spark, idx_path)
 
     qv = [10.0, 0.0, 0.0, 0.0]
     t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
@@ -559,7 +557,7 @@ def test_stream_ann_index_append_mid_stream(spark, tmp_path):
         df_b = spark.createDataFrame(
             [(1000 + i, qv) for i in range(5)],
             "vec_id long, embedding array<double>")
-        append_ivf_delta(idx, df_b, idx_path)
+        idx.delta(df_b).save(idx_path, mode="append")
         # window-2 query (after the append), then a flush row
         for h, qid in ((1, 2), (2, 3)):
             spark.createDataFrame(
@@ -575,7 +573,7 @@ def test_stream_ann_index_append_mid_stream(spark, tmp_path):
     assert by_qid[1] == by_qid[2]
     assert not any(v >= 1000 for v in by_qid[2])
     # a restart (fresh load) DOES search the delta
-    fresh = load_ivf(spark, idx_path)
+    fresh = IVFIndex.load(spark, idx_path)
     assert {r.vec_id for r in
             ivf_search(fresh, qv, k=5,
                        config=SearchConfig.high_accuracy()).collect()} \
@@ -814,8 +812,7 @@ def test_stream_bits_near_dup_probes_persisted_index(spark, tmp_path):
     stateful lane."""
     import numpy as np
 
-    from deeplake_spark.operators.multimodal import (
-        FingerprintIndex, save_fingerprint_index)
+    from deeplake_spark.operators.multimodal import FingerprintIndex
     from deeplake_spark.operators.similarity import bits_near_dup_pairs
     from deeplake_spark.streaming.neardup import stream_bits_near_dup
 
@@ -837,8 +834,7 @@ def test_stream_bits_near_dup_probes_persisted_index(spark, tmp_path):
         [(i, sigs[i], 0) for i in corpus_ids],
         "clip_id long, bits array<int>, packed long")
     idx_path = str(tmp_path / "fp_idx")
-    save_fingerprint_index(
-        FingerprintIndex(side, "image", "clip_id", {}), idx_path)
+    FingerprintIndex(side, "image", "clip_id", {}).save(idx_path)
 
     stream_dir = str(tmp_path / "stream_in")
     (spark.createDataFrame([(i, sigs[i]) for i in stream_ids],
@@ -872,15 +868,13 @@ def test_stream_bits_near_dup_rejects_non_integral_index_ids(spark,
     stream side (round-12 advice): a fingerprint index built over a
     string id would cast to null __cid and the cross lane would
     silently emit zero pairs — it must raise instead."""
-    from deeplake_spark.operators.multimodal import (
-        FingerprintIndex, save_fingerprint_index)
+    from deeplake_spark.operators.multimodal import FingerprintIndex
     from deeplake_spark.streaming.neardup import stream_bits_near_dup
 
     side = spark.createDataFrame(
         [("c0", [1] * 64, 0)], "clip string, bits array<int>, packed long")
     path = str(tmp_path / "bad_idx")
-    save_fingerprint_index(FingerprintIndex(side, "image", "clip", {}),
-                           path)
+    FingerprintIndex(side, "image", "clip", {}).save(path)
     df = spark.createDataFrame([(1, [1] * 64)],
                                "clip_id long, bits array<int>")
     with pytest.raises(TypeError, match="non-integral id"):
@@ -898,8 +892,7 @@ def test_stream_bits_near_dup_skip_ids_in_index(spark, tmp_path):
     failure mode: the replayed id's corpus-neighbor pair leaks."""
     import numpy as np
 
-    from deeplake_spark.operators.multimodal import (
-        FingerprintIndex, save_fingerprint_index)
+    from deeplake_spark.operators.multimodal import FingerprintIndex
     from deeplake_spark.streaming.neardup import stream_bits_near_dup
 
     rng = np.random.default_rng(41)
@@ -918,8 +911,7 @@ def test_stream_bits_near_dup_skip_ids_in_index(spark, tmp_path):
         [(i, sigs[i], 0) for i in corpus_ids],
         "clip_id long, bits array<int>, packed long")
     idx_path = str(tmp_path / "fp_overlap_idx")
-    save_fingerprint_index(
-        FingerprintIndex(side, "image", "clip_id", {}), idx_path)
+    FingerprintIndex(side, "image", "clip_id", {}).save(idx_path)
 
     # the stream delivers id 0 AGAIN (replay of ingested history) plus
     # new ids 6-11

@@ -23,3 +23,35 @@ def test_heap_gb_parses_spark_memory_spellings():
     assert _heap_gb("1t") == 1024.0
     assert _heap_gb("oops") is None
     assert _heap_gb("") is None
+
+
+def test_tools_package_imports_resolve():
+    """Every `from deeplake_spark... import name` in tools/*.py —
+    including the lazy ones inside functions — names something the
+    package has: the probe scripts run rarely, so a renamed or deleted
+    function would otherwise break them silently."""
+    import ast
+    import glob
+    import importlib
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen, missing = 0, []
+    for path in sorted(glob.glob(os.path.join(root, "tools", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[0] == "deeplake_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                seen += 1
+                if hasattr(mod, alias.name):
+                    continue
+                try:  # `from package import submodule`
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    missing.append(f"{os.path.basename(path)}:"
+                                   f"{node.lineno} {node.module}."
+                                   f"{alias.name}")
+    assert seen > 0 and not missing, missing

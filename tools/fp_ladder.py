@@ -56,7 +56,6 @@ def main():
     from deeplake_spark.operators.multimodal import (
         build_fingerprint_index,
         image_near_dup_pairs,
-        save_fingerprint_index,
     )
 
     src = os.path.join(WORK, "images.parquet")
@@ -81,9 +80,8 @@ def main():
 
     idx_path = os.path.join(WORK, "fp_idx")
     t0 = time.perf_counter()
-    save_fingerprint_index(
-        build_fingerprint_index(df, "image", "img_id", "image",
-                                compression="ppm", strict=True), idx_path)
+    build_fingerprint_index(df, "image", "img_id", "image",
+                            compression="ppm", strict=True).save(idx_path)
     build_once = round(time.perf_counter() - t0, 3)
 
     index = timed(lambda: image_near_dup_pairs(

@@ -477,7 +477,7 @@ def ann_section(spark):
     scan + join setup ≈ the whole exact scan), which measures the
     wrong regime — the regime the route exists for is the one where
     the corpus scan dominates."""
-    from deeplake_spark.operators.similarity import build_ivf, save_ivf
+    from deeplake_spark.operators.similarity import build_ivf
     from deeplake_spark.plans import sqlrouting as rt
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -545,8 +545,8 @@ def ann_section(spark):
         KMeans(k=n_clusters, seed=42, maxIter=5,
                featuresCol="__features").fit(feats_full)
         build_fullfit_s = round(time.perf_counter() - t0, 3)
-        save_ivf(build_ivf(d, "embedding", "vec_id",
-                           n_clusters=n_clusters, max_iter=5), idx_path)
+        build_ivf(d, "embedding", "vec_id",
+                  n_clusters=n_clusters, max_iter=5).save(idx_path)
         d.createOrReplaceTempView("ann_docs")
         qv = [float(x) for x in
               d.filter(F.col("vec_id") == 7).head().embedding]
