@@ -1,0 +1,165 @@
+"""One bounded memo and one content-key rule for every Python-side cache.
+
+Deep Lake datasets change in place: appends, commits and index
+refreshes rewrite data under the same paths (PAPER.md §1). A result
+memoized across queries is therefore sound only if its key changes
+when the data does. Every module-level cache of the package is a
+`Memo` instance below — one eviction policy (access-order LRU), one
+set of hit/miss/eviction counters — and every cache keyed by a query
+plan keys on `plan_key` (CLAUDE.md traps 19 and 29). Callers whose
+result depends on more than the plan append it to the plan key.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+from collections import OrderedDict
+from collections.abc import Callable, Hashable
+from typing import Any
+from urllib.parse import unquote, urlparse
+
+_MISSING = object()
+
+
+class Memo:
+    """Access-order LRU of at most `bound` entries. A hit moves its
+    entry to the most-recently-used end; an insert past the bound
+    evicts the single least-recently-used entry, never the whole memo,
+    so a long session keeps its hot entries. A `None` key bypasses the
+    memo: the value is built and nothing is stored (an unkeyable plan,
+    see `plan_key`). Stored values may themselves be None."""
+
+    def __init__(self, name: str, bound: int) -> None:
+        self.name = name
+        self.bound = bound
+        self.hits = self.misses = self.evictions = 0
+        self._entries: OrderedDict = OrderedDict()
+
+    def get(self, key: Hashable | None,
+            build: Callable[[], Any] | None = None) -> Any:
+        """The value under `key`. On a miss, `build()` is stored and
+        returned; with no `build`, a miss returns None and stores
+        nothing (a plain lookup)."""
+        if key is None:
+            return build() if build is not None else None
+        value = self._entries.get(key, _MISSING)
+        if value is not _MISSING:
+            self.hits += 1
+            self._entries.move_to_end(key)
+            return value
+        self.misses += 1
+        if build is None:
+            return None
+        value = build()
+        while len(self._entries) >= self.bound:
+            self._entries.popitem(last=False)
+            self.evictions += 1
+        self._entries[key] = value
+        return value
+
+    def clear(self) -> None:
+        self._entries.clear()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+def session_key(spark) -> str:
+    """Stable per-session cache key: the JVM sessionUUID (the JVM-side
+    probe caches' convention, IndexRoutingRule.java). NOT ``id(spark)``
+    — CPython reuses object addresses after GC, so an id-keyed memo
+    could serve one session's entries to a LATER session at the same
+    address (stale DataFrames/centroids with no error)."""
+    try:
+        return str(spark._jsparkSession.sessionUUID())
+    except Exception:  # pragma: no cover - no JVM session (mocks)
+        return f"pyid-{id(spark)}"
+
+
+def file_key(path: str) -> tuple[str, int, int] | None:
+    """(absolute path, mtime_ns, size) of a local path or `file:` URI
+    (the form `DataFrame.inputFiles()` returns), or None when it
+    cannot be stat'ed. An in-place rewrite changes it."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def plan_key(df) -> tuple[str, str, int] | None:
+    """Content key of `df`'s plan: (session, md5 of the canonicalized
+    optimized plan plus each sorted input file with its `file_key`,
+    `semanticHash()`). No single ingredient suffices (trap 19): the
+    canonical string normalizes expression ids, so re-translations of
+    one query share a key, but prints file relations without their
+    paths; the input files pin which data is read and their
+    fingerprints pin its content; `semanticHash()` is only 32 bits.
+
+    None — do not cache — when the plan holds rows the canonical
+    string does not print: `LocalRelation` (literal frames) and
+    `LogicalRDD` (`createDataFrame` from pandas or an RDD, trap 29),
+    alone or mixed with file scans; or when an input file cannot be
+    fingerprinted."""
+    canon = (df._jdf.queryExecution().optimizedPlan()
+             .canonicalized().toString())
+    if "LocalRelation" in canon or "LogicalRDD" in canon:
+        return None
+    files = []
+    for path in sorted(df.inputFiles()):
+        fp = file_key(path)
+        if fp is None:
+            return None
+        files.append(f"{path}#{fp[1]}:{fp[2]}")
+    digest = hashlib.md5(
+        f"{canon}||{','.join(files)}".encode()).hexdigest()
+    return (session_key(df.sparkSession), digest, df.semanticHash())
+
+
+# ------------------------------------------------- the package's memos
+#
+# Bounds are per process. The (session, sf_dir)-keyed memos take 64,
+# which one process never reaches.
+
+#: source file_key -> directory of its ingest-time multi-file rewrite
+#: (io.build_scan_cache fills it, io.load_table reads it).
+SCAN_CACHE = Memo("scan", 64)
+
+#: (session, resolved path, source file_key) -> DataFrame (io.load_table;
+#: spark.read.parquet re-lists files and re-reads the footer on every
+#: call, trap 13).
+TABLE_MEMO = Memo("table", 64)
+
+#: plan_key + shuffle-partition conf -> probed partition count
+#: (io.ensure_parallelism; the probe forces physical planning).
+PARTITION_PROBE_CACHE = Memo("partition_probe", 512)
+
+#: plan_key of the summarized probe + (granule, max_ranges) -> row-id
+#: ranges (indexes.routed_scan_ranges; the plan-time summary job must
+#: not repeat per query). Same bound as the JVM twin,
+#: IndexRoutingRule.RANGE_CACHE.
+RANGE_CACHE = Memo("range", 256)
+
+#: plan_key of the query side -> (query rows, scorer UDF, qmap) for
+#: similarity._exact_batch_cosine_scores (the bounded driver-side
+#: prefetch class, trap 8).
+QSIDE_CACHE = Memo("qside", 64)
+
+#: (session, sf_dir, name) -> saved side index (queries.saved_index).
+INDEX_CACHE = Memo("index", 64)
+
+#: (session, sf_dir) -> IVF build and v24 seed centroids (vector_ops).
+IVF_CACHE = Memo("ivf", 64)
+SEED_CACHE = Memo("seed", 64)
+
+#: (session, sf_dir, vec_id | max_vec_id, source file_key) -> prefetched
+#: query vector / matrix (vector_ops._query_vec/_query_mat; the DATA()
+#: prefetch exception of trap 8).
+QUERY_VEC_MEMO = Memo("query_vec", 64)
+QUERY_MAT_MEMO = Memo("query_mat", 64)
+
+#: (session, sf_dir) -> trained BPE merge list (text_ops t34).
+BPE_MERGE_MEMO = Memo("bpe_merge", 64)

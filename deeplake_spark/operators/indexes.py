@@ -28,8 +28,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deeplake_spark import memo
 from deeplake_spark.functions.text import tokenize
-from deeplake_spark.io import ensure_parallelism, session_key
+from deeplake_spark.io import ensure_parallelism
 from deeplake_spark.operators import multimodal as _mm
 from deeplake_spark.operators import similarity as _sim
 
@@ -188,20 +189,6 @@ def granule_probe_ranges(granules: DataFrame, mult: int,
     return [(int(r["lo"]), int(r["hi"])) for r in rows]
 
 
-#: bounded memo of computed range sets: the same probe is re-planned
-#: across queries (t09/t13 shapes) and the plan-time job must not
-#: repeat per query. Keyed by (session id, probe plan semanticHash,
-#: granule) — a delta append changes the loaded postings lineage and
-#: with it the hash. Access-order LRU (matches the JVM twin,
-#: IndexRoutingRule.RANGE_CACHE): crossing the bound evicts the
-#: single least-recently-used entry, not the whole memo — a long
-#: many-index session keeps its hot probes' plan-time work.
-import collections as _collections
-
-_RANGE_CACHE: "_collections.OrderedDict" = _collections.OrderedDict()
-_RANGE_CACHE_MAX = 256
-
-
 def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
                        granules: DataFrame | None = None,
                        granule_size: int | None = None
@@ -241,39 +228,20 @@ def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
             and granule % int(granule_size) == 0:
         src = granules
         mult = granule // int(granule_size)
-    try:
-        # content key: a cache hit serving ANOTHER probe's ranges would
-        # EXCLUDE true candidate rows from the corpus scan — wrong
-        # results, not just a bad plan. No single ingredient suffices:
-        # semanticHash alone is 32-bit (collidable across query
-        # vectors); the canonicalized plan string normalizes expr ids
-        # (so re-translations still hit the memo) but PRINTS relations
-        # without their file paths (identical-shape probes over
-        # different datasets would collide); inputFiles pins the scanned
-        # files but not in-memory data. md5(canon + files) +
-        # semanticHash together cover all three.
-        import hashlib
+    # content key (memo.plan_key): a hit serving ANOTHER probe's ranges
+    # would EXCLUDE true candidate rows from the corpus scan — wrong
+    # results, not just a bad plan
+    key = memo.plan_key(src)
+    if key is not None:
+        key += (granule, max_ranges)
 
-        canon = (src._jdf.queryExecution().optimizedPlan()
-                 .canonicalized().toString())
-        files = ",".join(sorted(src.inputFiles()))
-        key = (session_key(spark),
-               hashlib.md5(f"{canon}||{files}".encode()).hexdigest(),
-               src.semanticHash(), granule, max_ranges)
-    except Exception:  # pragma: no cover - plan string unavailable
-        key = None
-    if key is not None and key in _RANGE_CACHE:
-        _RANGE_CACHE.move_to_end(key)
-        hit = _RANGE_CACHE[key]
-    else:
+    def summarize():
         chunks = (granule_probe_ranges(src, mult) if mult
                   else probe_id_ranges(ids, granule))
-        hit = (coalesce_id_ranges(chunks, max_ranges)
-               if chunks is not None else None)
-        if key is not None:
-            while len(_RANGE_CACHE) >= _RANGE_CACHE_MAX:
-                _RANGE_CACHE.popitem(last=False)
-            _RANGE_CACHE[key] = hit
+        return (coalesce_id_ranges(chunks, max_ranges)
+                if chunks is not None else None)
+
+    hit = memo.RANGE_CACHE.get(key, summarize)
     if not hit:
         return None
     if n_rows_est:

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import math
 import os
-from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from deeplake_spark import memo
 from deeplake_spark.functions.vector import cosine_similarity, dot, l2_norm, sign_bits
 
 
@@ -1584,66 +1584,33 @@ def _exact_batch_cosine_scores(labeled: DataFrame, queries: DataFrame,
     to the HOF spelling when the query side is empty or ragged.
 
     The collect + scorer-UDF pickling + qmap local relation are
-    memoized per (session, query-plan fingerprint) — the bounded
+    memoized per `memo.plan_key` of the query side — the bounded
     driver-side prefetch class (trap 8; `_query_vec` and DATA()
-    precedent) with trap-19 content keying (canon digest + inputFiles
-    + semanticHash). Re-running the lane in one session (the bench's
-    warm passes; any iterative caller) then pays ZERO driver jobs at
-    construction: r15 measured 1.9-3.2 s of per-execution construction
-    (collect job + 400-row createDataFrame + cloudpickle of the matrix
-    closure), the latency-bound driver chain that made v25 degrade
-    4-8x in-bench under host contention while CPU-bound lanes scaled
-    ~2x."""
+    precedent) with trap-19 content keying. Re-running the lane in one
+    session (the bench's warm passes; any iterative caller) then pays
+    ZERO driver jobs at construction: r15 measured 1.9-3.2 s of
+    per-execution construction (collect job + 400-row createDataFrame
+    + cloudpickle of the matrix closure), the latency-bound driver
+    chain that made v25 degrade 4-8x in-bench under host contention
+    while CPU-bound lanes scaled ~2x."""
     spark = labeled.sparkSession
-    key = None
-    try:
-        import hashlib
-
-        from deeplake_spark.io import session_key
-
-        from deeplake_spark.io import _source_fingerprint
-
-        canon = (queries._jdf.queryExecution().optimizedPlan()
-                 .canonicalized().toString())
-        # fingerprint CONTENT, not just paths: an in-session overwrite
-        # of the same part-files must miss (the _query_vec/load_table
-        # convention — r15 ADVICE #1). inputFiles() returns URIs
-        # (file:/...): strip the scheme so os.stat can fingerprint.
-        def _local(p: str) -> str:
-            return p[5:] if p.startswith("file:") else p
-
-        files = ",".join(
-            f"{p}#{_source_fingerprint(_local(p))}"
-            for p in sorted(queries.inputFiles()))
-        # no files -> LocalRelation lineage, whose canon string HIDES
-        # the data (trap 19): two different literal query sets would
-        # collide. A MIXED plan (file scan joined/unioned with a
-        # LocalRelation of literals — or a LogicalRDD, createDataFrame's
-        # lineage, which equally hides its rows) has files but the same
-        # hidden-data hazard — skip whenever such a node is present
-        # (r15 ADVICE #2; semanticHash alone is 32-bit-collidable).
-        key = (session_key(spark),
-               hashlib.md5(f"{canon}||{files}".encode()).hexdigest(),
-               queries.semanticHash()) \
-            if files and "LocalRelation" not in canon \
-            and "LogicalRDD" not in canon else None
-    except Exception:  # pragma: no cover - plan string unavailable
-        key = None
-    if key is not None and key in _QSIDE_CACHE:
-        _QSIDE_CACHE.move_to_end(key)
-        qrows, scorer, qmap = _QSIDE_CACHE[key]
-        if scorer is not None:
-            return _scored_relation(labeled, scorer, qmap,
-                                    vec_col, id_col, label_col)
+    qrows, scorer, qmap = memo.QSIDE_CACHE.get(
+        memo.plan_key(queries),
+        lambda: _collect_query_side(spark, queries))
+    if scorer is None:
         return _hof_scored_relation(labeled, qrows, queries,
                                     vec_col, id_col, label_col)
+    return _scored_relation(labeled, scorer, qmap, vec_col, id_col, label_col)
+
+
+def _collect_query_side(spark, queries: DataFrame):
+    """(query rows, scorer UDF, qmap) for `_exact_batch_cosine_scores`;
+    scorer and qmap are None for degenerate (empty/ragged) query sets,
+    which re-enter the HOF fallback without re-collecting."""
     qrows = queries.collect()
     dims = {len(r[1]) for r in qrows if r[1] is not None}
     if not qrows or len(dims) != 1 or any(r[1] is None for r in qrows):
-        if key is not None:
-            _qside_store(key, (qrows, None, None))
-        return _hof_scored_relation(labeled, qrows, queries,
-                                    vec_col, id_col, label_col)
+        return qrows, None, None
     import numpy as np
 
     d = dims.pop()
@@ -1710,24 +1677,7 @@ def _exact_batch_cosine_scores(labeled: DataFrame, queries: DataFrame,
         T.StructType([
             T.StructField("__qpos", T.IntegerType()),
             T.StructField("__qid", queries.schema["__qid"].dataType)]))
-    if key is not None:
-        _qside_store(key, (qrows, scorer, qmap))
-    return _scored_relation(labeled, scorer, qmap, vec_col, id_col, label_col)
-
-
-#: (session, query-plan fingerprint) -> (qrows, scorer udf, qmap) for
-#: `_exact_batch_cosine_scores` — the bounded driver-side prefetch memo
-#: (trap 8 exception class; trap-19 content keying). scorer/qmap are
-#: None for degenerate (empty/ragged) query sets, which re-enter the
-#: HOF fallback without re-collecting.
-_QSIDE_CACHE: "OrderedDict" = OrderedDict()
-_QSIDE_CACHE_MAX = 64
-
-
-def _qside_store(key, value) -> None:
-    while len(_QSIDE_CACHE) >= _QSIDE_CACHE_MAX:
-        _QSIDE_CACHE.popitem(last=False)
-    _QSIDE_CACHE[key] = value
+    return qrows, scorer, qmap
 
 
 def _hof_scored_relation(labeled: DataFrame, qrows, queries: DataFrame,

@@ -49,14 +49,6 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
     return deco
 
 
-#: saved side-index memo keyed by (session, sf_dir, name): the
-#: reference builds indexes at ingest (index_build_config), so an
-#: index-routed lane times the PROBE path over the saved side table,
-#: not the build (t13's plan provably contains no corpus tokenize —
-#: tests/test_plans.py)
-_INDEX_CACHE: dict = {}
-
-
 def saved_index(spark: SparkSession, sf_dir: str, name: str, kind: str,
                 source, column: str, id_col: str, **options):
     """The `kind` index over `column` of the relation `source()` (a
@@ -67,17 +59,18 @@ def saved_index(spark: SparkSession, sf_dir: str, name: str, kind: str,
     import os
     import tempfile
 
-    from deeplake_spark.io import session_key
+    from deeplake_spark import memo
     from deeplake_spark.operators.indexes import INDEX_KINDS
 
-    key = (session_key(spark), sf_dir, name)
-    if key not in _INDEX_CACHE:
+    def build():
         spec, df = INDEX_KINDS[kind], source()
         path = os.path.join(tempfile.gettempdir(),
                             f"dls_{name}_{abs(hash(sf_dir))}")
         spec.save(spec.build(df, column, id_col, options), path)
-        _INDEX_CACHE[key] = spec.load(spark, path, df)
-    return _INDEX_CACHE[key]
+        return spec.load(spark, path, df)
+
+    return memo.INDEX_CACHE.get((memo.session_key(spark), sf_dir, name),
+                                build)
 
 
 def load_all() -> dict[str, Query]:

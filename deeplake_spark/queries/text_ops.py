@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deeplake_spark import memo
 from deeplake_spark.functions.text import (
     contains_keyword,
     fingerprint,
@@ -25,7 +26,7 @@ from deeplake_spark.functions.text import (
     quality_score,
     tokenize,
 )
-from deeplake_spark.io import load_table, session_key
+from deeplake_spark.io import load_table
 from deeplake_spark.queries import query, saved_index
 
 #: DuckDB tokenizer mirroring functions.text.tokenize
@@ -1880,12 +1881,6 @@ def t33(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdc_shared_passages(base).orderBy("a", "b")
 
 
-#: trained merge lists per (sessionUUID, sf_dir) — training is one
-#: corpus pass + a driver-side fit (trap 10's bounded-collect protocol);
-#: warm bench re-runs must not pay it again
-_BPE_MERGE_MEMO: dict = {}
-
-
 @query(
     "t34_bpe_token_counts",
     # No oracle BY DESIGN: the BPE encode loop is per-word iterative
@@ -1912,11 +1907,12 @@ def t34(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deeplake_spark.operators.bpe import bpe_token_count, train_bpe
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    key = (session_key(spark), sf_dir)
-    merges = _BPE_MERGE_MEMO.get(key)
-    if merges is None:
-        merges = train_bpe(d, num_merges=200, max_word_types=5_000)
-        _BPE_MERGE_MEMO[key] = merges
+    # trained merge lists per (session, sf_dir) — training is one corpus
+    # pass + a driver-side fit (trap 10's bounded-collect protocol);
+    # warm bench re-runs must not pay it again
+    merges = memo.BPE_MERGE_MEMO.get(
+        (memo.session_key(spark), sf_dir),
+        lambda: train_bpe(d, num_merges=200, max_word_types=5_000))
     out = bpe_token_count(d, merges, "text", "n_bpe_tokens")
     return out.select(
         "doc_id",

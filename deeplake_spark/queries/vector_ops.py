@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from deeplake_spark import memo
 from deeplake_spark.functions.vector import (
     cosine_similarity,
     dot,
@@ -31,7 +32,8 @@ from deeplake_spark.functions.vector import (
     linf_norm,
     sign_bits,
 )
-from deeplake_spark.io import load_table, session_key
+from deeplake_spark.io import load_table
+from deeplake_spark.memo import file_key, session_key
 from deeplake_spark.queries import query, saved_index
 
 #: DuckDB expression mirroring our double-cast dot product.
@@ -42,21 +44,17 @@ _DUCK_COS = (
 )
 
 
-#: IVF build memo keyed by (session, sf_dir): the reference builds
-#: clustered indexes at ingest as a batch job (index_build_config), not
-#: per query — so v10/v15 share ONE build and their timings measure the
-#: probe path after the first call.
-_IVF_CACHE: dict = {}
-
-
 def _ivf8(spark: SparkSession, sf_dir: str):
+    """The IVF build over `embeddings`, once per (session, sf_dir): the
+    reference builds clustered indexes at ingest as a batch job
+    (index_build_config), not per query — so v10/v15 share ONE build
+    and their timings measure the probe path after the first call."""
     from deeplake_spark.operators.similarity import build_ivf
 
-    key = (session_key(spark), sf_dir)
-    if key not in _IVF_CACHE:
-        e = load_table(spark, sf_dir, "embeddings")
-        _IVF_CACHE[key] = build_ivf(e, n_clusters=8, seed=42)
-    return _IVF_CACHE[key]
+    return memo.IVF_CACHE.get(
+        (session_key(spark), sf_dir),
+        lambda: build_ivf(load_table(spark, sf_dir, "embeddings"),
+                          n_clusters=8, seed=42))
 
 
 def _quantized_index(spark: SparkSession, sf_dir: str):
@@ -71,52 +69,35 @@ def _pq_index(spark: SparkSession, sf_dir: str):
                        "embedding", "vec_id", m=8, nbits=4, seed=42)
 
 
-#: (session, sf_dir, vec_id, source fingerprint) -> embedding values.
-#: The DATA(col, i) prefetch convention (CLAUDE.md trap 8's documented
-#: bounded+memoized exception): ~20 v-lanes each paid a 1-row head()
-#: job per CONSTRUCTION; the fingerprint keys out driver-regenerated
-#: testdata exactly like io.load_table's memo.
-_QUERY_VEC_MEMO: dict = {}
-
-
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
-    """Prefetch one embedding as a literal array column (DATA() semantics)."""
-    from deeplake_spark.io import _source_fingerprint, session_key
+    """Prefetch one embedding as a literal array column (DATA() semantics).
 
-    key = (session_key(spark), sf_dir, vec_id,
-           _source_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    vals = _QUERY_VEC_MEMO.get(key)
-    if vals is None:
+    The DATA(col, i) prefetch convention (CLAUDE.md trap 8's documented
+    bounded+memoized exception): ~20 v-lanes each paid a 1-row head()
+    job per CONSTRUCTION; the source file_key keys out
+    driver-regenerated testdata exactly like io.load_table's memo."""
+    def fetch():
         row = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == vec_id)
             .select("embedding")
             .head()
         )
-        vals = [float(v) for v in row[0]]
-        if len(_QUERY_VEC_MEMO) > 64:
-            _QUERY_VEC_MEMO.clear()
-        _QUERY_VEC_MEMO[key] = vals
-    return vals
+        return [float(v) for v in row[0]]
 
-
-#: (session, sf_dir, max_vec_id, source fingerprint) -> query MATRIX
-#: (first max_vec_id embeddings in vec_id order). Same prefetch memo
-#: as _query_vec for the multi-vector lanes (v09/v18), which each paid
-#: a per-construction collect job (§18's latency-bound driver-chain
-#: class). Row order is pinned by the explicit orderBy + collect —
-#: v09's MAXSIM sum folds query rows in this order, so the memo must
-#: be (and is) deterministic in it.
-_QUERY_MAT_MEMO: dict = {}
+    return memo.QUERY_VEC_MEMO.get(
+        (session_key(spark), sf_dir, vec_id,
+         file_key(f"{sf_dir}/embeddings.parquet")), fetch)
 
 
 def _query_mat(spark: SparkSession, sf_dir: str, max_vec_id: int = 4):
-    from deeplake_spark.io import _source_fingerprint, session_key
-
-    key = (session_key(spark), sf_dir, max_vec_id,
-           _source_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    vals = _QUERY_MAT_MEMO.get(key)
-    if vals is None:
+    """The first `max_vec_id` embeddings in vec_id order as a query
+    MATRIX — `_query_vec`'s prefetch memo for the multi-vector lanes
+    (v09/v18), which each paid a per-construction collect job (§18's
+    latency-bound driver-chain class). Row order is pinned by the
+    explicit orderBy + collect — v09's MAXSIM sum folds query rows in
+    this order, so the memo must be (and is) deterministic in it."""
+    def fetch():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < max_vec_id)
@@ -124,11 +105,11 @@ def _query_mat(spark: SparkSession, sf_dir: str, max_vec_id: int = 4):
             .select("embedding")
             .collect()
         )
-        vals = [[float(v) for v in r[0]] for r in rows]
-        if len(_QUERY_MAT_MEMO) > 64:
-            _QUERY_MAT_MEMO.clear()
-        _QUERY_MAT_MEMO[key] = vals
-    return vals
+        return [[float(v) for v in r[0]] for r in rows]
+
+    return memo.QUERY_MAT_MEMO.get(
+        (session_key(spark), sf_dir, max_vec_id,
+         file_key(f"{sf_dir}/embeddings.parquet")), fetch)
 
 
 def _query_vec_sql(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> str:
@@ -939,10 +920,6 @@ def v23(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_search_batch(idx, queries, k=5).orderBy("qid", F.desc("score"),
                                                        "vec_id")
 
-#: seed-centroid memo for v24 (build-at-ingest protocol, like _IVF_CACHE)
-_SEED_CACHE: dict = {}
-
-
 @query(
     "v24_semantic_dedup",
     oracle=f"""
@@ -1012,9 +989,8 @@ def v24(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(planted)
     # centroid seeding is a build-at-ingest step (the _ivf8 protocol):
     # memoize the k-row collect per (session, sf_dir)
-    if key not in _SEED_CACHE:
-        _SEED_CACHE[key] = seed_centroids(e, k=8)
-    sd = semantic_dedup(e, centroids=_SEED_CACHE[key], tau=0.95)
+    centroids = memo.SEED_CACHE.get(key, lambda: seed_centroids(e, k=8))
+    sd = semantic_dedup(e, centroids=centroids, tau=0.95)
     return (
         sd.groupBy(F.col("cluster").alias("cluster_id"))
         .agg(

@@ -2077,6 +2077,7 @@ def test_range_cache_lru_evicts_one_not_all(spark, monkeypatch):
     many-index session never re-pays its plan-time summary job. (The
     round-9 version cleared the whole memo at the bound.)"""
     import deeplake_spark.operators.indexes as ix
+    from deeplake_spark import memo
 
     calls = {"n": 0}
     real = ix.probe_id_ranges
@@ -2086,8 +2087,8 @@ def test_range_cache_lru_evicts_one_not_all(spark, monkeypatch):
         return real(ids, granule, max_chunks)
 
     monkeypatch.setattr(ix, "probe_id_ranges", counting)
-    monkeypatch.setattr(ix, "_RANGE_CACHE_MAX", 3)
-    ix._RANGE_CACHE.clear()
+    monkeypatch.setattr(memo.RANGE_CACHE, "bound", 3)
+    memo.RANGE_CACHE.clear()
 
     def probe(n):
         return spark.range(n).withColumnRenamed("id", "row_id")
@@ -2106,7 +2107,39 @@ def test_range_cache_lru_evicts_one_not_all(spark, monkeypatch):
     assert calls["n"] == 4, "a and c must have survived the eviction"
     assert ix.routed_scan_ranges(b, None)
     assert calls["n"] == 5, "b was the LRU and must have been evicted"
-    ix._RANGE_CACHE.clear()
+    memo.RANGE_CACHE.clear()
+
+
+def test_range_memo_misses_after_probe_file_rewrite(spark, tmp_path):
+    """The range memo keys on memo.plan_key, which fingerprints every
+    input file: a probe file rewritten in place (new ids, new mtime)
+    must re-run the summary job. Serving the old file's ranges would
+    prune the corpus scan to rows the new probe never names, and the
+    semijoin would return nothing."""
+    import os
+
+    import pandas as pd
+
+    from deeplake_spark.operators.indexes import routed_semijoin
+
+    corpus = spark.range(60_000).withColumnRenamed("id", "doc_id")
+    probe = str(tmp_path / "probe.parquet")
+
+    def write(lo):
+        pd.DataFrame({"row_id": list(range(lo, lo + 10))}).to_parquet(probe)
+
+    def routed():
+        return sorted(r.doc_id for r in routed_semijoin(
+            corpus, spark.read.parquet(probe), "doc_id").collect())
+
+    write(0)
+    assert routed() == list(range(10))
+    # same path, new rows; bump mtime explicitly (same-second rewrites
+    # on coarse-mtime filesystems)
+    st = os.stat(probe)
+    write(50_000)
+    os.utime(probe, (st.st_atime, st.st_mtime + 2))
+    assert routed() == list(range(50_000, 50_010))
 
 
 def test_tql_topk_ceiling_confs_decline_route(spark, sf_dir, tmp_path):
@@ -2395,6 +2428,7 @@ def test_granule_sidetable_ranges_match_posting_job(spark, tmp_path):
     granules so the equality is non-trivial."""
     from pyspark.sql import functions as F
 
+    from deeplake_spark import memo
     from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
         DEFAULT_RANGE_GRANULE,
@@ -2422,9 +2456,9 @@ def test_granule_sidetable_ranges_match_posting_job(spark, tmp_path):
         spark.conf.set(ix.RANGE_GRANULE_KEY, str(granule))
         try:
             ids = idx.probe(terms)
-            ix._RANGE_CACHE.clear()
+            memo.RANGE_CACHE.clear()
             posting = routed_scan_ranges(ids, None)
-            ix._RANGE_CACHE.clear()
+            memo.RANGE_CACHE.clear()
             granular = routed_scan_ranges(
                 ids, None, granules=idx.probe_granules(terms),
                 granule_size=idx.granule_size)
@@ -2470,6 +2504,7 @@ def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from deeplake_spark import memo
     from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
         InvertedIndex,
@@ -2489,9 +2524,9 @@ def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
     idx = InvertedIndex.load(spark, path)
     assert idx.granules is not None
     ids = idx.probe(["needle"])
-    ix._RANGE_CACHE.clear()
+    memo.RANGE_CACHE.clear()
     posting = routed_scan_ranges(ids, None)
-    ix._RANGE_CACHE.clear()
+    memo.RANGE_CACHE.clear()
     granular = routed_scan_ranges(ids, None,
                                   granules=idx.probe_granules(["needle"]),
                                   granule_size=idx.granule_size)
@@ -2630,6 +2665,7 @@ def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
     ranges equal the posting-row summary."""
     from pyspark.sql import functions as F
 
+    from deeplake_spark import memo
     from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
         DEFAULT_RANGE_GRANULE,
@@ -2648,9 +2684,9 @@ def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
     assert idx.granule_size == DEFAULT_RANGE_GRANULE
     assert idx.granules is not None
     ids = idx.probe(["needle"])
-    ix._RANGE_CACHE.clear()
+    memo.RANGE_CACHE.clear()
     posting = routed_scan_ranges(ids, None)
-    ix._RANGE_CACHE.clear()
+    memo.RANGE_CACHE.clear()
     granular = routed_scan_ranges(ids, None,
                                   granules=idx.probe_granules(["needle"]),
                                   granule_size=idx.granule_size)

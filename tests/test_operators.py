@@ -584,15 +584,14 @@ def test_cross_near_dup_lsh_finds_planted_pairs(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_ensure_parallelism_probe_cached_and_gated(spark):
-    """The plan→RDD partition probe memoizes per logical plan and the
-    helper is conf-gated off entirely."""
-    from deeplake_spark import io
+def test_ensure_parallelism_probe_cached(spark):
+    """The plan→RDD partition probe memoizes per plan."""
+    from deeplake_spark import io, memo
 
     df = spark.range(100)
-    io._PARTITION_PROBE_CACHE.clear()
+    memo.PARTITION_PROBE_CACHE.clear()
     out1 = io.ensure_parallelism(df)
-    assert len(io._PARTITION_PROBE_CACHE) == 1
+    assert len(memo.PARTITION_PROBE_CACHE) == 1
     # second call with an equivalent plan must hit the cache — proven by
     # monkeypatching the RDD conversion out entirely
     import pyspark.sql.dataframe as _pdf
@@ -606,13 +605,6 @@ def test_ensure_parallelism_probe_cached_and_gated(spark):
         _pdf.DataFrame.rdd = real_rdd
     assert out1.schema == out2.schema
 
-    spark.conf.set("spark.deeplake_spark.ensureParallelism", "false")
-    try:
-        single = spark.range(10).coalesce(1)
-        assert io.ensure_parallelism(single) is single
-    finally:
-        spark.conf.unset("spark.deeplake_spark.ensureParallelism")
-
 
 def test_ensure_parallelism_cache_not_shared_across_datasets(spark, tmp_path):
     """r15 io.py review (trap 19): the probe cache key must include the
@@ -623,19 +615,19 @@ def test_ensure_parallelism_cache_not_shared_across_datasets(spark, tmp_path):
     n=1 and repartition pointlessly, or worse an under-split B would
     inherit A's big count and SKIP the repartition this helper exists
     to add."""
-    from deeplake_spark import io
+    from deeplake_spark import io, memo
 
     one = str(tmp_path / "one")
     many = str(tmp_path / "many")
     spark.range(1000).coalesce(1).write.parquet(one)
     spark.range(1000).repartition(20).write.parquet(many)
-    io._PARTITION_PROBE_CACHE.clear()
+    memo.PARTITION_PROBE_CACHE.clear()
     a = io.ensure_parallelism(spark.read.parquet(one))
     assert a.rdd.getNumPartitions() > 1          # under-split: boosted
     b_df = spark.read.parquet(many)
     b = io.ensure_parallelism(b_df)
     assert b is b_df                              # well-split: untouched
-    assert len(io._PARTITION_PROBE_CACHE) == 2    # distinct keys
+    assert len(memo.PARTITION_PROBE_CACHE) == 2    # distinct keys
 
 
 def test_with_row_id_namespaced_temps(spark):
@@ -2314,6 +2306,7 @@ def test_exact_batch_scores_query_side_memo(spark, tmp_path, monkeypatch):
     import pyspark.sql.dataframe as D
     from pyspark.sql import functions as F
 
+    from deeplake_spark import memo
     from deeplake_spark.operators import similarity as S
 
     def vec(seed, dim=8):
@@ -2330,11 +2323,11 @@ def test_exact_batch_scores_query_side_memo(spark, tmp_path, monkeypatch):
     queries = base.filter(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("__qid"), F.col("embedding").alias("__qv"))
 
-    S._QSIDE_CACHE.clear()
+    memo.QSIDE_CACHE.clear()
     first = sorted(
         tuple(r) for r in S._exact_batch_cosine_scores(
             labeled, queries, "embedding", "vec_id", "label").collect())
-    assert len(S._QSIDE_CACHE) == 1
+    assert len(memo.QSIDE_CACHE) == 1
 
     def boom(self, *a, **kw):
         raise AssertionError("driver action on memoized re-construction")
@@ -2351,13 +2344,13 @@ def test_exact_batch_scores_query_side_memo(spark, tmp_path, monkeypatch):
     assert sorted(tuple(r) for r in rel.collect()) == first
 
     # LocalRelation query side: scored correctly but never cached
-    S._QSIDE_CACHE.clear()
+    memo.QSIDE_CACHE.clear()
     local_q = spark.createDataFrame(
         [(100, vec(100))], "__qid long, __qv array<double>")
     out = S._exact_batch_cosine_scores(
         labeled, local_q, "embedding", "vec_id", "label")
     assert out.count() == labeled.count()
-    assert len(S._QSIDE_CACHE) == 0
+    assert len(memo.QSIDE_CACHE) == 0
 
     # MIXED plan (file scan unioned with a LocalRelation of literals):
     # the canon string hides the literal rows exactly like the pure
@@ -2366,7 +2359,7 @@ def test_exact_batch_scores_query_side_memo(spark, tmp_path, monkeypatch):
     out2 = S._exact_batch_cosine_scores(
         labeled, mixed_q, "embedding", "vec_id", "label")
     assert out2.select("__qid").distinct().count() == 7
-    assert len(S._QSIDE_CACHE) == 0
+    assert len(memo.QSIDE_CACHE) == 0
 
 
 def test_exact_batch_scores_memo_keys_on_file_content(spark, tmp_path):
@@ -2380,6 +2373,7 @@ def test_exact_batch_scores_memo_keys_on_file_content(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from deeplake_spark import memo
     from deeplake_spark.operators import similarity as S
 
     def vec(seed, dim=8):
@@ -2392,12 +2386,12 @@ def test_exact_batch_scores_memo_keys_on_file_content(spark, tmp_path):
         [(i, i % 3, vec(i)) for i in range(10)],
         "vec_id long, label int, embedding array<double>")
 
-    S._QSIDE_CACHE.clear()
+    memo.QSIDE_CACHE.clear()
     first = S._exact_batch_cosine_scores(
         labeled, spark.read.parquet(qfile), "embedding", "vec_id",
         "label").select("__qid").distinct().collect()
     assert {r["__qid"] for r in first} == {100}
-    assert len(S._QSIDE_CACHE) == 1
+    assert len(memo.QSIDE_CACHE) == 1
 
     # overwrite the SAME path with a different query set; bump mtime
     # explicitly (same-second rewrites on coarse-mtime filesystems)

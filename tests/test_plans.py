@@ -7,6 +7,7 @@ stay correct."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from deeplake_spark.io import load_table
@@ -494,7 +495,7 @@ def test_aqe_skew_split_engages_on_hot_key(spark, sf_dir):
 
 
 def test_session_key_is_uuid_not_address(spark):
-    """Every Python-side per-session memo keys on io.session_key — the
+    """Every Python-side per-session memo keys on memo.session_key — the
     JVM sessionUUID (the JVM probe caches' convention) — never
     id(spark): CPython reuses object addresses after GC, so an
     id-keyed memo could silently serve one session's DataFrames or
@@ -502,7 +503,7 @@ def test_session_key_is_uuid_not_address(spark):
     package so no new id(spark) cache key sneaks back in."""
     import glob
 
-    from deeplake_spark.io import session_key
+    from deeplake_spark.memo import session_key
 
     k = session_key(spark)
     assert k == session_key(spark), "must be stable per session"
@@ -520,3 +521,69 @@ def test_session_key_is_uuid_not_address(spark):
                     and not line.lstrip().startswith("#"):
                 offenders.append(f"{path}:{i}: {line.strip()}")
     assert offenders == [], offenders
+
+
+def _plan_key_case(spark, tmp_path, case):
+    """(expectation, plan_keys) for one row of the plan_key rule."""
+    import os
+
+    import pandas as pd
+
+    from deeplake_spark.memo import plan_key
+
+    def write(name, lo):
+        path = str(tmp_path / name)
+        pd.DataFrame({"id": list(range(lo, lo + 10))}).to_parquet(path)
+        return path
+
+    def scan(path):
+        return spark.read.parquet(path).filter(F.col("id") >= 0)
+
+    a = write("a.parquet", 0)
+    literal = spark.createDataFrame([(1,)], "id long")
+    if case == "local_relation":
+        return "none", [plan_key(literal)]
+    if case == "pandas_frame":
+        return "none", [plan_key(spark.createDataFrame(
+            pd.DataFrame({"id": [1, 2]})))]
+    if case == "rdd_frame":
+        return "none", [plan_key(spark.createDataFrame(
+            spark.sparkContext.parallelize([(1,), (2,)]), "id long"))]
+    if case == "scan_union_literal":
+        return "none", [plan_key(scan(a).unionByName(literal))]
+    if case == "other_directory":
+        return "differ", [plan_key(scan(a)),
+                          plan_key(scan(write("b.parquet", 0)))]
+    if case == "rewritten_file":
+        before = plan_key(scan(a))
+        st = os.stat(a)
+        write("a.parquet", 50_000)
+        os.utime(a, (st.st_atime, st.st_mtime + 2))
+        return "differ", [before, plan_key(scan(a))]
+    if case == "same_scan":
+        return "equal", [plan_key(scan(a)), plan_key(scan(a))]
+    if case == "same_range":
+        return "equal", [plan_key(spark.range(100).filter("id > 3")),
+                         plan_key(spark.range(100).filter("id > 3"))]
+    assert case == "other_range"
+    return "differ", [plan_key(spark.range(100)), plan_key(spark.range(101))]
+
+
+@pytest.mark.parametrize("case", [
+    "local_relation", "pandas_frame", "rdd_frame", "scan_union_literal",
+    "other_directory", "rewritten_file", "same_scan", "same_range",
+    "other_range"])
+def test_plan_key_content_rule(spark, tmp_path, case):
+    """memo.plan_key is the one key every plan-keyed memo uses (traps
+    19/29). No key when the plan holds rows its canonical string does
+    not print (LocalRelation, LogicalRDD — alone or mixed with a file
+    scan); different keys for same-shape scans over different files or
+    over one file rewritten in place; equal keys for fresh DataFrame
+    objects over the same plan, including a Range, whose canonical
+    string prints its bounds."""
+    expect, keys = _plan_key_case(spark, tmp_path, case)
+    if expect == "none":
+        assert keys == [None]
+        return
+    assert None not in keys, keys
+    assert (keys[0] == keys[1]) == (expect == "equal"), keys

@@ -55,3 +55,51 @@ def test_tools_package_imports_resolve():
                                    f"{node.lineno} {node.module}."
                                    f"{alias.name}")
     assert seen > 0 and not missing, missing
+
+
+def test_caches_live_in_memo_module():
+    """Every module-level cache is a memo.Memo instance defined in
+    deeplake_spark/memo.py: no other package module binds a
+    module-level name containing CACHE or MEMO. One memo class, one
+    eviction policy and one plan-key rule stay in one place."""
+    import ast
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "deeplake_spark")
+
+    def module_bindings(stmts):
+        for st in stmts:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+                continue
+            if isinstance(st, ast.Assign):
+                targets = st.targets
+            elif isinstance(st, (ast.AnnAssign, ast.AugAssign)):
+                targets = [st.target]
+            elif isinstance(st, (ast.Import, ast.ImportFrom)):
+                for alias in st.names:
+                    yield st.lineno, (alias.asname or alias.name)
+                continue
+            else:
+                targets = []
+                for field in ("body", "orelse", "finalbody", "handlers"):
+                    yield from module_bindings(getattr(st, field, []))
+            for t in targets:
+                for node in ast.walk(t):
+                    if isinstance(node, ast.Name):
+                        yield st.lineno, node.id
+
+    seen, offenders = 0, []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"),
+                                 recursive=True)):
+        if os.path.relpath(path, pkg) == "memo.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for lineno, name in module_bindings(tree.body):
+            seen += 1
+            if "CACHE" in name or "MEMO" in name:
+                offenders.append(
+                    f"{os.path.relpath(path, root)}:{lineno} {name}")
+    assert seen > 0 and not offenders, offenders
