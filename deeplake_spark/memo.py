@@ -8,6 +8,9 @@ when the data does. Every module-level cache of the package is a
 set of hit/miss/eviction counters — and every cache keyed by a query
 plan keys on `plan_key` (CLAUDE.md traps 19 and 29). Callers whose
 result depends on more than the plan append it to the plan key.
+Files key on `file_key` (mtime and size); directories of index and
+sketch side tables key on `tree_key` (every file under them), and are
+read only through `side_table`.
 """
 
 from __future__ import annotations
@@ -77,17 +80,75 @@ def session_key(spark) -> str:
         return f"pyid-{id(spark)}"
 
 
+def _local_path(path: str) -> str:
+    """The filesystem path of a `file:` URI; other paths unchanged."""
+    if path.startswith("file:"):
+        return unquote(urlparse(path).path)
+    return path
+
+
 def file_key(path: str) -> tuple[str, int, int] | None:
     """(absolute path, mtime_ns, size) of a local path or `file:` URI
     (the form `DataFrame.inputFiles()` returns), or None when it
     cannot be stat'ed. An in-place rewrite changes it."""
-    if path.startswith("file:"):
-        path = unquote(urlparse(path).path)
+    path = _local_path(path)
     try:
         st = os.stat(path)
     except OSError:
         return None
     return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def tree_key(path: str) -> str | None:
+    """md5 of the sorted (relpath, mtime_ns, size) of every file under a
+    local directory (or `file:` URI), or None when the path is not a
+    local directory or one of its files cannot be stat'ed. Recursive,
+    not the top directory's mtime: a delta append adds files inside
+    partition subdirectories (`bucket=N/`), and a writer need not touch
+    the top directory to do so."""
+    path = _local_path(path)
+    if not os.path.isdir(path):
+        return None
+    entries = []
+    try:
+        for root, _dirs, names in os.walk(path, onerror=_raise):
+            for name in names:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                entries.append(f"{os.path.relpath(full, path)}#"
+                               f"{st.st_mtime_ns}:{st.st_size}")
+    except OSError:
+        return None
+    return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def side_table(spark, path: str):
+    """`spark.read.parquet(path)` for an index or sketch side table,
+    memoized in SIDE_TABLE_MEMO under (session, absolute path,
+    `tree_key`), so a query re-reading an unchanged index pays one
+    local stat per file instead of Spark's re-listing and footer-schema
+    job (trap 13). A path with no tree key (`mem://`, Hadoop, missing)
+    is read without storing."""
+    tk = tree_key(path)
+    key = None if tk is None else (
+        session_key(spark), os.path.abspath(_local_path(path)), tk)
+    return SIDE_TABLE_MEMO.get(key, lambda: spark.read.parquet(path))
+
+
+def input_files(df) -> list[str]:
+    """`df.inputFiles()` in a constant number of Py4J round trips.
+    PySpark's own version walks the returned Java array one element
+    per round trip; this joins it on the JVM side instead (Py4J cannot
+    pass a String[] where Java's joins take Object[] or CharSequence[],
+    so the array is wrapped as a Scala sequence first)."""
+    jvm = df.sparkSession._jvm
+    joined = jvm.scala.Predef.genericWrapArray(
+        df._jdf.inputFiles()).mkString("\x00")
+    return joined.split("\x00") if joined else []
 
 
 def plan_key(df) -> tuple[str, str, int] | None:
@@ -109,7 +170,7 @@ def plan_key(df) -> tuple[str, str, int] | None:
     if "LocalRelation" in canon or "LogicalRDD" in canon:
         return None
     files = []
-    for path in sorted(df.inputFiles()):
+    for path in sorted(input_files(df)):
         fp = file_key(path)
         if fp is None:
             return None
@@ -147,6 +208,11 @@ RANGE_CACHE = Memo("range", 256)
 #: similarity._exact_batch_cosine_scores (the bounded driver-side
 #: prefetch class, trap 8).
 QSIDE_CACHE = Memo("qside", 64)
+
+#: (session, absolute path, tree_key) -> DataFrame of one index or
+#: sketch side table (side_table; every side-table load reads through
+#: it, so an unchanged index is read once per session, trap 13).
+SIDE_TABLE_MEMO = Memo("side_table", 256)
 
 #: (session, sf_dir, name) -> saved side index (queries.saved_index).
 INDEX_CACHE = Memo("index", 64)

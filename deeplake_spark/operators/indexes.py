@@ -619,7 +619,7 @@ class InvertedIndex:
              source: DataFrame | None = None) -> "InvertedIndex":
         # stats may hold one row per appended delta: merge with a
         # doc-count-weighted average (tiny relation — rows == deltas)
-        raw = spark.read.parquet(os.path.join(path, "stats"))
+        raw = memo.side_table(spark, os.path.join(path, "stats"))
         stats = raw.agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum(F.col("n_docs") * F.col("avgdl")) / F.sum("n_docs")).alias("avgdl"),
@@ -637,17 +637,17 @@ class InvertedIndex:
         granules = None
         if gsize:
             try:
-                granules = spark.read.parquet(
-                    os.path.join(path, "granules"))
+                granules = memo.side_table(
+                    spark, os.path.join(path, "granules"))
             except Exception:
                 granules, gsize = None, None
         return cls(
             # keep `bucket`: probes prune the term-hash partition with it
             # (_term_hit) — dropping it here made every probe scan all 64
             # posting partitions
-            postings=spark.read.parquet(os.path.join(path, "postings")),
+            postings=memo.side_table(spark, os.path.join(path, "postings")),
             stats=stats,
-            doclens=spark.read.parquet(os.path.join(path, "doclens")),
+            doclens=memo.side_table(spark, os.path.join(path, "doclens")),
             heavy=ts.get("heavy"),
             n_docs_est=ts.get("n_rows_est"),
             floor_frac=ts.get("floor_frac", _HEAVY_FRAC),
@@ -917,7 +917,7 @@ class NumericIndex:
                 # loads stats-less (never gated), not a crash
                 vmin = width = counts = n = None
         return cls(
-            values=spark.read.parquet(os.path.join(path, "values")),
+            values=memo.side_table(spark, os.path.join(path, "values")),
             vmin=vmin, width=width, bucket_counts=counts, n_rows=n,
         )
 
@@ -1016,7 +1016,8 @@ class JsonIndex:
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "JsonIndex":
         ts = _load_stats_sidecar(os.path.join(path, "valstats.json"))
-        return cls(entries=spark.read.parquet(os.path.join(path, "entries")),
+        return cls(entries=memo.side_table(spark,
+                                           os.path.join(path, "entries")),
                    loaded=True, heavy=ts.get("heavy"),
                    n_rows_est=ts.get("n_rows_est"),
                    floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
@@ -1109,7 +1110,8 @@ class ExactTextIndex:
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "ExactTextIndex":
         ts = _load_stats_sidecar(os.path.join(path, "digeststats.json"))
-        return cls(digests=spark.read.parquet(os.path.join(path, "digests")),
+        return cls(digests=memo.side_table(spark,
+                                           os.path.join(path, "digests")),
                    heavy=ts.get("heavy"), n_rows_est=ts.get("n_rows_est"),
                    floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
 
@@ -1142,14 +1144,17 @@ def write_side_table(df: DataFrame, path: str, table: str, sidecar: str,
     after the write — the corpus size the range-coverage gate reads (a
     stale undercount would decline pruning on exactly the
     append-maintained indexes it targets). n is counted from the files
-    just written: parquet-metadata-cheap, no recompute of the plan."""
+    just written: parquet-metadata-cheap, no recompute of the plan. The
+    count reads through `memo.side_table`, so the first load after the
+    save reuses that read."""
     from deeplake_spark.storage import put_json
 
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(os.path.join(path, table))
-    n = int(df.sparkSession.read.parquet(os.path.join(path, table)).count())
+    n = int(memo.side_table(df.sparkSession,
+                            os.path.join(path, table)).count())
     put_json(os.path.join(path, sidecar), {**meta, "n": n})
 
 
@@ -1159,7 +1164,7 @@ def read_side_table(spark: SparkSession, path: str, table: str,
     from deeplake_spark.storage import get_json
 
     meta = get_json(os.path.join(path, sidecar))
-    return spark.read.parquet(os.path.join(path, table)), meta
+    return memo.side_table(spark, os.path.join(path, table)), meta
 
 
 @dataclass(frozen=True)

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from deeplake_spark import memo
+
 #: hash domain: md5-int60 values normalized by 2^60 into [0, 1)
 _DOM = float(1 << 60)
 
@@ -278,7 +280,7 @@ def _load_side_table(spark, path: str) -> DataFrame:
     GC-deleted, but its logical delta still needs a re-merge."""
     gen = _served_gen(spark, path)
     base = path.rstrip("/")
-    return spark.read.parquet(f"{base}/{gen}" if gen else base)
+    return memo.side_table(spark, f"{base}/{gen}" if gen else base)
 
 
 def _served_gen(spark, path: str) -> str | None:

@@ -404,7 +404,12 @@ def _ann_route_possible(spark: SparkSession, view: str) -> bool:
     try:
         if not is_available(spark) or _registry(spark).isEmpty():
             return False
-        files = list(spark.table(view).inputFiles())
+        # the file list stays on the JVM: listing it into Python and
+        # back costs two Py4J round trips per file
+        jvm = spark._jvm
+        files = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            jvm.scala.Predef.genericWrapArray(
+                spark.table(view)._jdf.inputFiles()))
         kinds = _registry(spark).kindsForPaths(files)
         # rsplit: the protocol is "column=kind" and a column NAME may
         # itself contain '=' — a LEFT split would misread the kind and

@@ -2142,6 +2142,123 @@ def test_range_memo_misses_after_probe_file_rewrite(spark, tmp_path):
     assert routed() == list(range(50_000, 50_010))
 
 
+def test_tree_key_sees_files_added_to_subdirectories(tmp_path):
+    """memo.tree_key covers every file under the directory: a file
+    added inside a partition subdirectory changes the key, although
+    the top directory's own mtime does not move. None for a path that
+    is not a local directory."""
+    import os
+
+    from deeplake_spark.memo import tree_key
+
+    top = tmp_path / "postings"
+    (top / "bucket=3").mkdir(parents=True)
+    (top / "bucket=3" / "part-0.parquet").write_bytes(b"a")
+    before, top_mtime = tree_key(str(top)), os.stat(top).st_mtime_ns
+    assert before and tree_key(f"file://{top}") == before
+    (top / "bucket=3" / "part-1.parquet").write_bytes(b"b")
+    assert os.stat(top).st_mtime_ns == top_mtime
+    assert tree_key(str(top)) != before
+    assert tree_key(str(top / "bucket=3" / "part-0.parquet")) is None
+    assert tree_key(str(tmp_path / "absent")) is None
+    assert tree_key("mem://postings") is None
+
+
+@pytest.mark.parametrize("change", ["append_delta", "rebuild",
+                                    "drop_recreate"])
+def test_side_table_memo_misses_after_index_rewrite(spark, sf_dir,
+                                                    tmp_path, change):
+    """memo.SIDE_TABLE_MEMO keeps a loaded side table across queries,
+    keyed on the tree of files under it. After each way an index's
+    files change — an append-commit writing an inverted delta into the
+    existing bucket=N/ directories, create_index(_rebuild=True), and
+    drop_index followed by a re-create — the next routed ds.query must
+    see the new rows, not the memoized listing of the old files."""
+    import os
+
+    from deeplake_spark import dataset as dl
+    from deeplake_spark.plans.explain import explain_query
+
+    ds = dl.from_parquet(f"{sf_dir}/documents.parquet",
+                         str(tmp_path / "ds"), spark)
+    ds.create_index("text", "inverted")
+    postings = os.path.join(ds.path, "_indexes", "text_inverted",
+                            "postings")
+    buckets = sorted(os.listdir(postings))
+    # a fresh term whose term-hash bucket directory already exists, so
+    # the delta adds files only inside existing bucket=N/ directories
+    terms = [f"zzzstale{i}" for i in range(64)]
+    hashed = spark.range(1).select(
+        *[F.abs(F.hash(F.lit(t))) % 64 for t in terms]).head()
+    term = next(t for t, b in zip(terms, hashed)
+                if f"bucket={b}" in buckets)
+    q = f"SELECT doc_id WHERE CONTAINS(text, '{term}')"
+    assert ds.query(q).collect() == []  # memoizes the side tables
+    top = os.stat(postings)
+    if change != "append_delta":
+        ds.indexing_mode = "manual"  # the commit leaves the index alone
+    row = ds[0].asDict()
+    row.pop("_row_id", None)
+    row.update({"doc_id": 999_999, "text": term, "n_chars": len(term)})
+    ds.append([row])
+    ds.commit("append one row")
+    if change == "append_delta":
+        assert sorted(os.listdir(postings)) == buckets
+        # Spark's file committer also moves the top directory's mtime
+        # (its _temporary directory comes and goes there); a committer
+        # need not. Put it back: the key must not rely on it.
+        os.utime(postings, ns=(top.st_atime_ns, top.st_mtime_ns))
+    elif change == "rebuild":
+        ds.create_index("text", "inverted", _rebuild=True)
+    else:
+        ds.drop_index("text")
+        ds.create_index("text", "inverted")
+    view = ds.query(q)
+    assert "Join" in explain_query(view).text  # routed through the index
+    assert [r.doc_id for r in view.collect()] == [999_999]
+
+
+def test_second_query_reads_no_index_side_table(spark, kinds_source,
+                                                tmp_path, monkeypatch):
+    """Construction budget: once a dataset's indexes are loaded, a
+    second ds.query on the unchanged dataset calls
+    DataFrameReader.parquet on nothing under _indexes/, and
+    _load_indexes starts no Spark job (each side-table read used to
+    pay a file listing and a footer-schema job per query)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from deeplake_spark import dataset as dl
+
+    ds = dl.from_parquet(kinds_source, str(tmp_path / "ds"), spark)
+    ds.create_index("text", "inverted")
+    ds.create_index("n", "numeric")
+    ds.create_index("emb", "clustered", n_clusters=4)
+    q = "SELECT doc_id WHERE CONTAINS(text, 'w3') AND n BETWEEN 3 AND 30"
+    first = sorted(r.doc_id for r in ds.query(q).collect())
+    assert first == [3, 10, 17, 24]
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        reads.extend(p for p in paths if "_indexes" in str(p))
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        return sc.statusStore().jobsList(None).size()
+
+    before = jobs()
+    loaded = ds._load_indexes()
+    assert jobs() == before, "_load_indexes started a Spark job"
+    assert set(loaded) == {"text", "n", "emb"}
+    assert sorted(r.doc_id for r in ds.query(q).collect()) == first
+    assert reads == []
+
+
 def test_tql_topk_ceiling_confs_decline_route(spark, sf_dir, tmp_path):
     """Conf'd k ceiling in the TQL lane (round-10 review): by default
     an explicitly created index serves any LIMIT (reference parity —

@@ -587,3 +587,88 @@ def test_plan_key_content_rule(spark, tmp_path, case):
         return
     assert None not in keys, keys
     assert (keys[0] == keys[1]) == (expect == "equal"), keys
+
+
+def _scan_of(spark, root, n_files):
+    """A filtered scan over a directory of `n_files` one-row files."""
+    import pandas as pd
+
+    root.mkdir()
+    for i in range(n_files):
+        pd.DataFrame({"id": [i]}).to_parquet(root / f"part-{i}.parquet")
+    return spark.read.parquet(str(root)).filter(F.col("id") >= 0)
+
+
+class _CountedGateway:
+    """Counts Py4J round trips by wrapping the gateway client's
+    send_command (the way perfbench/trace.py counts them)."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.calls = 0
+
+    def __enter__(self):
+        self.send = send = self.client.send_command
+
+        def counted(*args, **kwargs):
+            self.calls += 1
+            return send(*args, **kwargs)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc):
+        self.client.send_command = self.send
+
+
+def test_plan_key_lists_files_in_constant_round_trips(spark, tmp_path,
+                                                     monkeypatch):
+    """memo.plan_key fetches the plan's input files in one joined
+    string, not one Py4J round trip per file (PySpark's
+    DataFrame.inputFiles walks the Java array element by element): a
+    scan of 40 files costs the same gateway calls as a scan of 1, and
+    the key equals the one built from PySpark's own file list."""
+    from deeplake_spark import memo
+
+    scans = [_scan_of(spark, tmp_path / f"d{n}", n) for n in (1, 40)]
+    calls, keys = [], []
+    for df in scans:
+        memo.plan_key(df)  # warm the analyzed plan and Py4J class lookups
+        with _CountedGateway(spark) as gw:
+            keys.append(memo.plan_key(df))
+        calls.append(gw.calls)
+    assert calls[0] == calls[1], calls
+    assert len(memo.input_files(scans[1])) == 40
+    monkeypatch.setattr(memo, "input_files", lambda df: df.inputFiles())
+    assert keys == [memo.plan_key(df) for df in scans]
+
+
+def test_ann_route_possible_keeps_file_list_on_jvm(spark, tmp_path):
+    """sqlrouting._ann_route_possible hands the view's input files to
+    IndexRegistry.kindsForPaths without listing them into Python and
+    back: the same gateway calls for 1 and 40 files, and the answer
+    still follows the registration covering them."""
+    from deeplake_spark.plans import sqlrouting as rt
+
+    if not rt.is_available(spark):
+        pytest.skip("extension jar not on driver classpath")
+    reg = rt._registry(spark)
+    reg.clear()
+    try:
+        calls = []
+        for n in (1, 40):
+            root = tmp_path / f"v{n}"
+            _scan_of(spark, root, n).createOrReplaceTempView(f"rt_files_{n}")
+            reg.register(str(root), "emb", "clustered",
+                         str(root / "_idx"), "id")
+            rt._ann_route_possible(spark, f"rt_files_{n}")  # warm
+            with _CountedGateway(spark) as gw:
+                assert rt._ann_route_possible(spark, f"rt_files_{n}")
+            calls.append(gw.calls)
+        assert calls[0] == calls[1], calls
+        reg.clear()
+        reg.register(str(tmp_path / "v40"), "text", "inverted",
+                     str(tmp_path / "v40" / "_idx"), "id")
+        assert not rt._ann_route_possible(spark, "rt_files_40")
+    finally:
+        reg.clear()

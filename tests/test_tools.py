@@ -103,3 +103,25 @@ def test_caches_live_in_memo_module():
                 offenders.append(
                     f"{os.path.relpath(path, root)}:{lineno} {name}")
     assert seen > 0 and not offenders, offenders
+
+
+def test_side_tables_read_only_through_memo():
+    """Index and sketch side tables are read only through
+    memo.side_table (content-keyed, so an unchanged index is read once
+    per session): no `read...parquet(` call in the index, similarity,
+    multimodal and sketch operators. write_side_table's post-write row
+    count reads through the helper too, so there is no exception."""
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops = os.path.join(root, "deeplake_spark", "operators")
+    reader = re.compile(r"\.read(\s*\.\s*\w+\([^()]*\))*\s*\.\s*parquet\(")
+    offenders = []
+    for name in ("indexes", "similarity", "multimodal", "sketches"):
+        with open(os.path.join(ops, f"{name}.py")) as f:
+            src = f.read()
+        offenders += [f"{name}.py:{src.count(chr(10), 0, m.start()) + 1}"
+                      for m in reader.finditer(src)]
+    assert offenders == [], offenders
+    with open(os.path.join(root, "deeplake_spark", "memo.py")) as f:
+        assert reader.search(f.read()), "memo.side_table must read"
