@@ -851,7 +851,12 @@ class Dataset:
         posting-semijoin rewrite automatically (use_index behavior,
         cpp/tql/options.hpp) and stay live across chained view queries.
         `options` (tql.Options) gates features / forces the linear
-        plan (`use_index=False`) / validates only (`parsing_only`)."""
+        plan (`use_index=False`) / validates only (`parsing_only`).
+
+        SNAPSHOT CONTRACT: a top-k routed through a saved index (BM25,
+        COSINE, L2, MAXSIM) runs its search here and the view holds
+        the ≤k hits as data — re-run the query after a commit to see
+        the new snapshot's winners."""
         from deeplake_spark.tql import query as tql_query
         from deeplake_spark.views import DatasetView
 

@@ -169,7 +169,9 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     target = spark.sparkContext.defaultParallelism * factor
     key = memo.plan_key(df)
     if key is not None:
-        key += (spark.conf.get("spark.sql.shuffle.partitions", ""),)
+        # no fallback argument: Spark 4 type-checks it against the
+        # conf's int type, which raised on a session left at defaults
+        key += (spark.conf.get("spark.sql.shuffle.partitions"),)
     n = memo.PARTITION_PROBE_CACHE.get(
         key, lambda: df.rdd.getNumPartitions())
     if n < max(2, target // 2):

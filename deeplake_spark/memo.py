@@ -133,10 +133,20 @@ def side_table(spark, path: str):
     local stat per file instead of Spark's re-listing and footer-schema
     job (trap 13). A path with no tree key (`mem://`, Hadoop, missing)
     is read without storing."""
+    return side_table_value(spark, path, "table",
+                            lambda: spark.read.parquet(path))
+
+
+def side_table_value(spark, path: str, name: str,
+                     build: Callable[[], Any]) -> Any:
+    """`build()` — a value derived from the side table at `path`, e.g.
+    an aggregate collected from it — memoized in SIDE_TABLE_MEMO next to
+    the table under the same (session, absolute path, `tree_key`) key
+    plus `name`, so any file the table gains or loses recomputes it."""
     tk = tree_key(path)
     key = None if tk is None else (
-        session_key(spark), os.path.abspath(_local_path(path)), tk)
-    return SIDE_TABLE_MEMO.get(key, lambda: spark.read.parquet(path))
+        session_key(spark), os.path.abspath(_local_path(path)), tk, name)
+    return SIDE_TABLE_MEMO.get(key, build)
 
 
 def input_files(df) -> list[str]:
@@ -209,9 +219,10 @@ RANGE_CACHE = Memo("range", 256)
 #: prefetch class, trap 8).
 QSIDE_CACHE = Memo("qside", 64)
 
-#: (session, absolute path, tree_key) -> DataFrame of one index or
-#: sketch side table (side_table; every side-table load reads through
-#: it, so an unchanged index is read once per session, trap 13).
+#: (session, absolute path, tree_key, name) -> DataFrame of one index
+#: or sketch side table (side_table; every side-table load reads
+#: through it, so an unchanged index is read once per session, trap 13)
+#: or a value collected from it (side_table_value).
 SIDE_TABLE_MEMO = Memo("side_table", 256)
 
 #: (session, sf_dir, name) -> saved side index (queries.saved_index).

@@ -189,21 +189,10 @@ def granule_probe_ranges(granules: DataFrame, mult: int,
     return [(int(r["lo"]), int(r["hi"])) for r in rows]
 
 
-def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
-                       granules: DataFrame | None = None,
-                       granule_size: int | None = None
-                       ) -> list[tuple[int, int]] | None:
-    """[lo, hi] row-id ranges for the corpus scan filter, or None when
-    pruning is off / too scattered / covers ~everything.
-
-    `granules` (with its build `granule_size`) is an optional
-    build-time (g, lo, hi) summary of the SAME probe (e.g.
-    InvertedIndex.probe_granules): when the session granule is a
-    positive multiple of the build granule, the summary job runs over
-    it instead of the probe rows — identical ranges (exact regroup,
-    see granule_probe_ranges), plan-time cost O(granules) instead of
-    O(probe rows). Any mismatch falls back to summarizing `ids`."""
-    spark = ids.sparkSession
+def _range_gates(spark) -> tuple[int, int, float] | None:
+    """(granule, max_ranges, max_coverage) from the session conf, or
+    None when range pruning is off or the conf is malformed — the ONE
+    gate every routed lane's range pruning reads."""
     try:
         # enabled iff "true" (case-insensitive) — the JVM rule parses the
         # same way, so the kill switch can't half-work across lanes
@@ -219,6 +208,41 @@ def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
         return None
     if granule <= 0 or max_ranges <= 0:
         return None
+    return granule, max_ranges, coverage
+
+
+def _coverage_gate(ranges: list[tuple[int, int]] | None,
+                   n_rows_est: int | None, coverage: float
+                   ) -> list[tuple[int, int]] | None:
+    """`ranges`, or None when empty or spanning ~the corpus (nothing for
+    parquet stats to skip; the per-row OR would be pure overhead).
+    Unknown corpus size keeps them."""
+    if not ranges:
+        return None
+    if n_rows_est and sum(hi - lo + 1 for lo, hi in ranges) \
+            >= coverage * n_rows_est:
+        return None
+    return ranges
+
+
+def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
+                       granules: DataFrame | None = None,
+                       granule_size: int | None = None
+                       ) -> list[tuple[int, int]] | None:
+    """[lo, hi] row-id ranges for the corpus scan filter, or None when
+    pruning is off / too scattered / covers ~everything.
+
+    `granules` (with its build `granule_size`) is an optional
+    build-time (g, lo, hi) summary of the SAME probe (e.g.
+    InvertedIndex.probe_granules): when the session granule is a
+    positive multiple of the build granule, the summary job runs over
+    it instead of the probe rows — identical ranges (exact regroup,
+    see granule_probe_ranges), plan-time cost O(granules) instead of
+    O(probe rows). Any mismatch falls back to summarizing `ids`."""
+    gates = _range_gates(ids.sparkSession)
+    if gates is None:
+        return None
+    granule, max_ranges, coverage = gates
     # prefer the build-time granule summary when the session granule
     # aligns (equal, or a multiple — an exact regroup); the cache key
     # below is computed from whichever relation is actually summarized
@@ -241,14 +265,27 @@ def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
         return (coalesce_id_ranges(chunks, max_ranges)
                 if chunks is not None else None)
 
-    hit = memo.RANGE_CACHE.get(key, summarize)
-    if not hit:
+    return _coverage_gate(memo.RANGE_CACHE.get(key, summarize),
+                          n_rows_est, coverage)
+
+
+def collected_id_ranges(spark, ids: list[int], n_rows_est: int | None
+                        ) -> list[tuple[int, int]] | None:
+    """`routed_scan_ranges` for row ids already on the driver (a
+    top-k's collected hits): the same conf gates and coalescing, with
+    the granule min/max summary done in Python — no job, no memo."""
+    gates = _range_gates(spark)
+    if gates is None:
         return None
-    if n_rows_est:
-        covered = sum(hi - lo + 1 for lo, hi in hit)
-        if covered >= coverage * n_rows_est:
-            return None         # ranges span ~the corpus: nothing to skip
-    return hit
+    granule, max_ranges, coverage = gates
+    chunks: dict[int, tuple[int, int]] = {}
+    for i in ids:
+        g = i // granule
+        lo, hi = chunks.get(g, (i, i))
+        chunks[g] = (min(lo, i), max(hi, i))
+    return _coverage_gate(coalesce_id_ranges(list(chunks.values()),
+                                             max_ranges),
+                          n_rows_est, coverage)
 
 
 def ranges_predicate(id_col: str, ranges: list[tuple[int, int]]) -> Column:
@@ -263,19 +300,15 @@ def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
                       n_rows_est: int | None = None,
                       prune: bool = True,
                       ids_col: str | None = None,
-                      ranges_out: dict | None = None,
                       granules: DataFrame | None = None,
                       granule_size: int | None = None) -> DataFrame:
     """`df` with the probe's row-id ranges pushed as a scan filter —
-    THE shared prune block for every routed lane (filter semijoins,
-    ANN rerank scans, top-k fetch-back joins), so the dtype gate,
-    conf/scatter/coverage gates (routed_scan_ranges) and predicate
-    spelling live in exactly one place. The caller's join on top keeps
-    results exact: ranges are always a superset of the probe ids.
-    `ids_col` names the id column in `ids` (default: its first
-    column); `ranges_out`, when given, receives the computed ranges
-    under "ranges" so a later stage can reuse them without re-running
-    the summary job (the fetch-back join reuses the rerank's)."""
+    THE shared prune block for every lazily routed lane (filter
+    semijoins, ANN rerank scans), so the dtype gate, conf/scatter/
+    coverage gates (routed_scan_ranges) and predicate spelling live in
+    exactly one place. The caller's join on top keeps results exact:
+    ranges are always a superset of the probe ids. `ids_col` names the
+    id column in `ids` (default: its first column)."""
     if prune and dict(df.dtypes).get(id_col) in ("bigint", "int"):
         c = ids_col or ids.columns[0]
         probe = ids.select(F.col(c).alias("row_id")) \
@@ -284,8 +317,6 @@ def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
                                     granules=granules,
                                     granule_size=granule_size)
         if ranges:
-            if ranges_out is not None:
-                ranges_out["ranges"] = ranges
             df = df.filter(ranges_predicate(id_col, ranges))
     return df
 
@@ -441,6 +472,10 @@ class InvertedIndex:
     #: pre-granule indexes (probe paths fall back to the posting job).
     granules: DataFrame | None = None
     granule_size: int | None = None
+    #: (n_docs, avgdl) of the merged `stats` row, collected once per
+    #: stats-table content at load so BM25 probes take them as
+    #: literals. None on a fresh index (probes cross-join `stats`).
+    corpus: tuple[int, float | None] | None = None
 
     def est_selectivity(self, term: str) -> float | None:
         """Estimated df(term)/n from the persisted heavy-term sidecar;
@@ -619,11 +654,15 @@ class InvertedIndex:
              source: DataFrame | None = None) -> "InvertedIndex":
         # stats may hold one row per appended delta: merge with a
         # doc-count-weighted average (tiny relation — rows == deltas)
-        raw = memo.side_table(spark, os.path.join(path, "stats"))
-        stats = raw.agg(
+        stats_path = os.path.join(path, "stats")
+        stats = memo.side_table(spark, stats_path).agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum(F.col("n_docs") * F.col("avgdl")) / F.sum("n_docs")).alias("avgdl"),
         )
+        # one small job per stats content: a delta append adds a stats
+        # file, so its tree key — and this value — changes with it
+        corpus = memo.side_table_value(
+            spark, stats_path, "corpus", lambda: tuple(stats.head()))
         # stats are ADVISORY: a corrupt/half-written sidecar (crashed
         # append) must not brick index loading — load stats-less
         # (est_selectivity None => never gated), the same fail-open
@@ -654,6 +693,7 @@ class InvertedIndex:
             loaded=True,
             granules=granules,
             granule_size=gsize,
+            corpus=corpus,
         )
 
 
@@ -723,20 +763,30 @@ def bm25_via_index(index: InvertedIndex, terms: list[str], k: int = 10,
 
     `candidates` (a row_id relation) restricts which documents are
     scored (the reference's filter+search, index_holder.hpp:30-36) —
-    IDF/corpus stats stay GLOBAL, matching search-then-filter scores."""
+    IDF/corpus stats stay GLOBAL, matching search-then-filter scores.
+    A loaded index supplies them as literals (`InvertedIndex.corpus`);
+    a fresh one cross-joins its 1-row `stats` relation."""
     tf = _term_hit(index.postings, [t.lower() for t in terms])
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if candidates is not None:
         cand = candidates.toDF("row_id") if candidates.columns != ["row_id"] else candidates
         tf = tf.join(cand, "row_id", "left_semi")
-    idf = df_.crossJoin(F.broadcast(index.stats)).select(
+    if index.corpus is not None:
+        lits = dict(zip(("n_docs", "avgdl"), index.corpus))
+
+        def with_stat(rel: DataFrame, name: str) -> DataFrame:
+            return rel.withColumn(name, F.lit(lits[name]).cast(
+                "long" if name == "n_docs" else "double"))
+    else:
+        def with_stat(rel: DataFrame, name: str) -> DataFrame:
+            return rel.crossJoin(F.broadcast(index.stats.select(name)))
+    idf = with_stat(df_, "n_docs").select(
         "term",
         F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0).alias("idf"),
     )
     return (
-        tf.join(F.broadcast(idf), "term")
-        .join(index.doclens, "row_id")
-        .crossJoin(F.broadcast(index.stats.select("avgdl")))
+        with_stat(tf.join(F.broadcast(idf), "term")
+                  .join(index.doclens, "row_id"), "avgdl")
         .select(
             "row_id",
             (

@@ -541,8 +541,7 @@ def build_quantized(df: DataFrame, vec_col: str = "embedding",
     )
 
 
-def _rerank_scan(index, cand: DataFrame, prune: bool = True,
-                 ranges_out: dict | None = None) -> DataFrame:
+def _rerank_scan(index, cand: DataFrame, prune: bool = True) -> DataFrame:
     """The rerank stage's corpus relation, row-group-pruned to the
     candidates' id ranges when that's sound and cheap: the candidate
     set is k*accuracy_factor ids from the NARROW side table, so
@@ -553,9 +552,7 @@ def _rerank_scan(index, cand: DataFrame, prune: bool = True,
     corpus size only (a fresh build's candidate lineage re-derives the
     corpus, and without n the coverage gate can't tell there's nothing
     to skip — same rule as the JVM lane); the semijoin on top keeps
-    the rerank exact either way. `ranges_out` surfaces the computed
-    ranges so the TQL fetch-back can reuse them (hits ⊆ candidates,
-    so they're a sound superset) without re-running the search."""
+    the rerank exact either way."""
     from deeplake_spark.operators.indexes import prune_scan_to_ids
 
     if index.source is None:
@@ -568,7 +565,7 @@ def _rerank_scan(index, cand: DataFrame, prune: bool = True,
     return prune_scan_to_ids(
         index.source, cand, index.id_col, index.n_rows_est,
         prune=prune and index.loaded and index.n_rows_est is not None,
-        ids_col=index.id_col, ranges_out=ranges_out)
+        ids_col=index.id_col)
 
 
 def _cand_ids(candidates: DataFrame, id_col: str) -> DataFrame:
@@ -592,8 +589,7 @@ def _cand_ids(candidates: DataFrame, id_col: str) -> DataFrame:
 
 def quantized_index_search(index: QuantizedIndex, query_vec, k: int = 10,
                            config: SearchConfig | None = None,
-                           candidates: DataFrame | None = None,
-                           ranges_out: dict | None = None) -> DataFrame:
+                           candidates: DataFrame | None = None) -> DataFrame:
     """Probe the STORED sign bits: Hamming prefilter to
     k*accuracy_factor over the narrow bits table (integer ops, no
     corpus re-quantize), exact cosine rerank on the candidates only."""
@@ -615,8 +611,7 @@ def quantized_index_search(index: QuantizedIndex, query_vec, k: int = 10,
         .limit(k * config.accuracy_factor)
         .select(index.id_col)
     )
-    rerank = _rerank_scan(index, cand, prune=candidates is None,
-                          ranges_out=ranges_out).join(
+    rerank = _rerank_scan(index, cand, prune=candidates is None).join(
         F.broadcast(cand), index.id_col, "left_semi")
     return topk_cosine(rerank, index.vec_col, query_vec, k=k, id_col=index.id_col)
 
@@ -828,8 +823,7 @@ def pq_search(index: PQIndex, query_vec, k: int = 10,
               config: SearchConfig | None = None,
               candidates: DataFrame | None = None,
               metric: str = "cosine",
-              candidate_selectivity: float | None = None,
-              ranges_out: dict | None = None) -> DataFrame:
+              candidate_selectivity: float | None = None) -> DataFrame:
     """Asymmetric-distance probe: the query builds an m x 2^nbits dot
     lookup table driver-side (index metadata arithmetic, like the IVF
     centroid ranking); the scan scores each row as
@@ -891,8 +885,7 @@ def pq_search(index: PQIndex, query_vec, k: int = 10,
     )
     if index.source is None:
         return cand
-    rerank = _rerank_scan(index, cand, prune=candidates is None,
-                          ranges_out=ranges_out).join(
+    rerank = _rerank_scan(index, cand, prune=candidates is None).join(
         F.broadcast(cand), index.id_col, "left_semi")
     if metric == "l2":
         return topk_l2(rerank, index.vec_col, query_vec, k=k,
@@ -1071,8 +1064,7 @@ def build_pooled_maxsim(df: DataFrame, matrix_col: str, id_col: str) -> PooledMa
 
 def maxsim_search(index: PooledMaxsimIndex, query_matrix: list, k: int = 10,
                   config: SearchConfig | None = None,
-                  candidates: DataFrame | None = None,
-                  ranges_out: dict | None = None) -> DataFrame:
+                  candidates: DataFrame | None = None) -> DataFrame:
     """Two-stage MAXSIM: pooled-cosine prefilter to k*accuracy_factor,
     exact late-interaction rerank (pandas UDF) on candidates only.
 
@@ -1098,8 +1090,7 @@ def maxsim_search(index: PooledMaxsimIndex, query_matrix: list, k: int = 10,
     )
     maxsim = maxsim_pandas_const(qm)
     return (
-        _rerank_scan(index, cands, prune=candidates is None,
-                     ranges_out=ranges_out)
+        _rerank_scan(index, cands, prune=candidates is None)
         .join(cands, index.id_col, "left_semi")
         .select(
             index.id_col,

@@ -368,7 +368,7 @@ def bm25_topk_sql(view: str, terms, k: int = 10,
     fetch-back corpus scan is prefiltered to the TERM PROBE's
     coalesced row-id ranges, computed at statement-build time from the
     ``{view}__postings`` view (one bounded, memoized job — the same
-    plan-time protocol as the TQL lane's _hits_fetchback): every BM25
+    plan-time protocol as the routed-filter lanes): every BM25
     winner matches ≥1 query term, so winners ⊆ probe ids and the
     ranges are a sound superset; parquet row-group stats then skip the
     corpus payload I/O outside them on the id-sorted ingest layout.

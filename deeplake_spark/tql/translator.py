@@ -797,20 +797,12 @@ class Translator:
             cand_sel = self._estimate_where_selectivity(sel.where)
             if self._filtered_widening_capped(idx, cand_sel):
                 return None  # stock exact beats an over-widened probe
-        ro: dict = {}
-        if kind == "clustered":
-            hits = ivf_search(idx, qvec, k=fetch, config=self.search_config,
-                              candidates=candidates, metric="l2",
-                              candidate_selectivity=cand_sel)
-        else:
-            hits = pq_search(idx, qvec, k=fetch, config=self.search_config,
-                             candidates=candidates, metric="l2",
-                             candidate_selectivity=cand_sel, ranges_out=ro)
+        search = ivf_search if kind == "clustered" else pq_search
+        hits = search(idx, qvec, k=fetch, config=self.search_config,
+                      candidates=candidates, metric="l2",
+                      candidate_selectivity=cand_sel)
         hits = hits.select(F.col(idx.id_col).alias(id_col))
-        return self._hits_fetchback(df, hits, id_col, idx,
-                                    prune=candidates is None,
-                                    how="left_semi",
-                                    ranges=ro.get("ranges"))
+        return self._hits_fetchback(df, hits, id_col, idx, how="left_semi")
 
     def _matrix_literal(self, node: ast.Node) -> list[list[float]] | None:
         """Resolve a query-matrix expression (nested ARRAY literal or a
@@ -922,14 +914,12 @@ class Translator:
             qvec = self._vec_literal(q_arg)
             if qvec is None:
                 return None
-            ro: dict = {}
             if kind == "clustered_quantized":
                 hits = quantized_index_search(
                     idx, qvec, k=fetch, config=self.search_config,
                     candidates=candidates.withColumnRenamed(
                         candidates.columns[0], idx.id_col)
                     if candidates is not None else None,
-                    ranges_out=ro,
                 ).select(F.col(idx.id_col).alias(id_col))
             elif kind == "pq":
                 from deeplake_spark.operators.similarity import pq_search
@@ -937,7 +927,6 @@ class Translator:
                 hits = pq_search(
                     idx, qvec, k=fetch, config=self.search_config,
                     candidates=candidates, candidate_selectivity=cand_sel,
-                    ranges_out=ro,
                 ).select(F.col(idx.id_col).alias(id_col))
             else:
                 hits = ivf_search(idx, qvec, k=fetch, config=self.search_config,
@@ -946,11 +935,8 @@ class Translator:
             # k rows — always broadcastable; score recomputed exactly
             # on ≤k rows by the normal path
             return self._hits_fetchback(df, hits, id_col, idx,
-                                        prune=candidates is None,
-                                        how="left_semi",
-                                        ranges=ro.get("ranges"))
+                                        how="left_semi")
 
-        ro = {}
         if fname == "BM25_SIMILARITY":
             from deeplake_spark.operators.indexes import bm25_via_index
 
@@ -973,51 +959,47 @@ class Translator:
             if qm is None:
                 return None
             hits = maxsim_search(idx, qm, k=fetch, config=self.search_config,
-                                 candidates=candidates,
-                                 ranges_out=ro).select(
+                                 candidates=candidates).select(
                 F.col(idx.id_col).alias(id_col),
                 F.col("maxsim_score").alias("__tql_score"),
             )
         self._routed_score = e  # _call resolves this exact call shape
         # inner join: ≤k hit rows (broadcastable) carry the index score
-        return self._hits_fetchback(df, hits, id_col, idx,
-                                    prune=candidates is None, how="inner",
-                                    ranges=ro.get("ranges"))
+        return self._hits_fetchback(df, hits, id_col, idx, how="inner")
 
     def _hits_fetchback(self, df: DataFrame, hits: DataFrame, id_col: str,
-                        idx, prune: bool, how: str,
-                        ranges: list | None = None) -> DataFrame:
-        """Fetch the winners' full rows with the corpus scan row-group-
-        pruned to their id ranges: the search's output is ≤k ids, so
-        the pushed ranges let parquet min/max skip essentially the
-        whole corpus — the reference never full-scans to materialize
-        results either (bitmap→chunk reads, index_holder.hpp:37-40).
-        When the search already summarized its rerank candidates
-        (`ranges` from its ranges_out — hits ⊆ candidates, so they're
-        a sound superset), reuse them for FREE; otherwise summarize
-        `hits`, which for a LOADED index with a persisted corpus size
-        executes the search once at plan time (memoized by probe
-        lineage — warm re-plans are free; a bounded side-table job for
-        ivf/bm25 whose hits never scan the corpus). Skipped for fresh
-        builds, missing n (no sound coverage gate — JVM-lane rule),
-        and WHERE prefilters (their candidate lineage scans the
-        corpus — summarizing it would cost what it saves). The join on
-        top keeps the result exact either way."""
+                        idx, how: str) -> DataFrame:
+        """Fetch the winners' full rows: `df` joined with the broadcast
+        ≤k `hits`. For a LOADED index the search runs once, here: its
+        ≤k hit rows are collected on the JVM and re-enter the plan as
+        a LocalRelation (the rows never pass through Python), and their
+        ids — summarized in Python under the routed lanes' range gates
+        (collected_id_ranges) — push row-id ranges onto the corpus
+        scan, so parquet min/max skip essentially the whole corpus (the
+        reference runs the search once and reads the winners' chunks,
+        top_k_search_info.hpp:17-66, index_holder.hpp:37-40). The
+        executed plan then holds no search. A FRESH (unsaved) index
+        stays lazy and unpruned: its search lineage re-derives the
+        corpus at collect.
+
+        SNAPSHOT CONTRACT: a loaded-index top-k holds its hits as data,
+        fixed at translation — re-run the query after a commit."""
         from deeplake_spark.operators.indexes import (
-            prune_scan_to_ids,
+            collected_id_ranges,
             ranges_predicate,
         )
 
-        if ranges and dict(df.dtypes).get(id_col) in ("bigint", "int"):
-            df = df.filter(ranges_predicate(id_col, ranges))
-        elif ranges is None:
-            n_est = (getattr(idx, "n_rows_est", None)
-                     or getattr(idx, "n_docs_est", None))
-            df = prune_scan_to_ids(
-                df, hits, id_col, n_est,
-                prune=(prune and getattr(idx, "loaded", False)
-                       and n_est is not None),
-                ids_col=id_col)
+        if getattr(idx, "loaded", False):
+            spark = hits.sparkSession
+            hits = DataFrame(spark._jsparkSession.createDataFrame(
+                hits._jdf.collectAsList(), hits._jdf.schema()), spark)
+            if dict(df.dtypes).get(id_col) in ("bigint", "int"):
+                ranges = collected_id_ranges(
+                    spark, [r[0] for r in hits.select(id_col).collect()],
+                    getattr(idx, "n_rows_est", None)
+                    or getattr(idx, "n_docs_est", None))
+                if ranges:
+                    df = df.filter(ranges_predicate(id_col, ranges))
         return df.join(F.broadcast(hits), id_col, how)
 
     def _param_str(self, node: ast.Node) -> str | None:

@@ -211,7 +211,8 @@ def test_filtered_ann_widens_probe_for_selective_filters(spark, tmp_path):
     assert len(set(got) & {id_map[i] for i in exact}) / 5 >= 0.6
 
 
-def test_filtered_ann_widening_cap_falls_back_to_exact(spark, tmp_path):
+def test_filtered_ann_widening_cap_falls_back_to_exact(spark, tmp_path,
+                                                      monkeypatch):
     """Widening cost ceiling (SearchConfig.max_widen_factor): a
     very-low-selectivity filter would turn the recall compensation
     into a (near-)full-index probe — paying most of a corpus scan AND
@@ -252,16 +253,30 @@ def test_filtered_ann_widening_cap_falls_back_to_exact(spark, tmp_path):
                          k=5, id_col="vec_id").collect()}
     assert len(exact) == 5
 
+    # the route probes the index through ivf_search (a loaded index
+    # runs it at translation, so its scan is not in the final plan)
+    import deeplake_spark.operators.similarity as sim
+
+    probes = []
+    real_search = sim.ivf_search
+
+    def spy(*a, **kw):
+        probes.append(a)
+        return real_search(*a, **kw)
+
+    monkeypatch.setattr(sim, "ivf_search", spy)
     q = ("SELECT vec_id WHERE grp BETWEEN 1 AND 1 "
          "ORDER BY COSINE_SIMILARITY(embedding, ?) DESC LIMIT 5")
     ds.query_config = SearchConfig.fast()
     capped = ds.query(q, params=[qv])
-    assert "cluster#" not in capped._jdf.queryExecution().toString()
+    assert probes == []
     assert {r.vec_id for r in capped.collect()} == exact
     # default preset: base 32 cells, need 64 <= 8x32 -> still routes
     ds.query_config = SearchConfig()
     routed = ds.query(q, params=[qv])
-    assert "cluster#" in routed._jdf.queryExecution().toString()
+    assert len(probes) == 1
+    assert {r.vec_id for r in routed.collect()} <= {
+        r.vec_id for r in ds.to_df().filter("grp = 1").collect()}
 
 
 def test_inverted_termstats_sidecar_and_merge(spark, tmp_path):
@@ -726,6 +741,12 @@ def test_tql_bm25_routing(spark, sf_dir, tmp_path):
         if r.doc_id in full:
             assert abs(r.score - full[r.doc_id]) < 1e-9
 
+    # terms with no postings: an empty top-k, not an error
+    assert tql.query(
+        "SELECT doc_id, BM25_SIMILARITY(text, 'zzznosuchterm qqqnone') "
+        "AS s ORDER BY s DESC LIMIT 5", default=d,
+        indexes=indexes).collect() == []
+
     # without an index the function is a clear error, not a wrong answer
     import pytest as _pytest
 
@@ -846,6 +867,15 @@ def _tree_state(root):
     return state
 
 
+def _exact_bm25(d, terms: list[str]) -> dict:
+    """doc_id -> corpus-wide BM25 (rounded like the index route) of
+    every document matching a term, computed from the corpus itself."""
+    from deeplake_spark.queries.text_ops import bm25_scores
+
+    return {r.doc_id: float(r.bm25) for r in bm25_scores(d, terms)
+            .select("doc_id", F.round("bm25", 6).alias("bm25")).collect()}
+
+
 def test_incremental_index_refresh_on_append(spark, sf_dir):
     """Append-only commit with indexing_mode='automatic' appends a DELTA
     to each registered index (old files byte-identical, untouched) and
@@ -862,6 +892,12 @@ def test_incremental_index_refresh_on_append(spark, sf_dir):
         num_dir = d + "/ds/_indexes/n_chars_numeric"
         before = {**_tree_state(inv_dir + "/postings"),
                   **_tree_state(num_dir + "/values")}
+        bm25_terms = ["spark", "zzzincrementalterm"]
+        bm25_q = ("SELECT doc_id, BM25_SIMILARITY(text, "
+                  f"'{' '.join(bm25_terms)}') AS s "
+                  "ORDER BY s DESC LIMIT 100000")
+        assert {r.doc_id: r.s for r in ds.query(bm25_q).collect()} \
+            == _exact_bm25(ds.to_df(), bm25_terms)
 
         row = ds[0].asDict()
         row.pop("_row_id", None)
@@ -888,6 +924,14 @@ def test_incremental_index_refresh_on_append(spark, sf_dir):
         idx = InvertedIndex.load(spark, inv_dir)
         n_docs = idx.stats.head()["n_docs"]
         assert n_docs == ds.to_df().count()
+        assert idx.corpus == tuple(idx.stats.head())
+
+        # routed BM25 after the delta scores with the UNION's corpus
+        # stats: the (n_docs, avgdl) memoized by the pre-append query
+        # must miss once the stats table gained a file
+        got = {r.doc_id: r.s for r in ds.query(bm25_q).collect()}
+        assert 999_999 in got
+        assert got == _exact_bm25(ds.to_df(), bm25_terms)
 
         # an update commit falls back to a full rebuild (correct, not
         # stale): the patched text is searchable
@@ -1928,9 +1972,14 @@ def test_range_cache_distinguishes_same_shape_probes(spark, tmp_path):
 def test_range_prune_conf_polarity(spark):
     """The kill switch parses identically in both lanes — enabled iff
     'true' case-insensitively, so 'False'/'0'/'off' disable here just
-    as they do in the JVM rule's equalsIgnoreCase('true')."""
+    as they do in the JVM rule's equalsIgnoreCase('true'). Ranges
+    computed from ids already on the driver (a top-k's collected hits)
+    pass the same gates and equal the summary job's."""
     from deeplake_spark.operators.indexes import (
+        MAX_RANGES_KEY,
+        RANGE_GRANULE_KEY,
         RANGE_PRUNE_KEY,
+        collected_id_ranges,
         routed_scan_ranges,
     )
 
@@ -1939,10 +1988,24 @@ def test_range_prune_conf_polarity(spark):
         for v in ("False", "0", "off", "false"):
             spark.conf.set(RANGE_PRUNE_KEY, v)
             assert routed_scan_ranges(ids, None) is None, v
+            assert collected_id_ranges(spark, list(range(50)), None) \
+                is None, v
         spark.conf.set(RANGE_PRUNE_KEY, "TRUE")
         assert routed_scan_ranges(ids, None) == [(0, 49)]
+        assert collected_id_ranges(spark, list(range(50)), None) == \
+            [(0, 49)]
+        spark.conf.set(RANGE_GRANULE_KEY, "8")
+        spark.conf.set(MAX_RANGES_KEY, "2")
+        hits = [3, 1, 41, 40, 7, 1000, 18]
+        probe = spark.createDataFrame([(i,) for i in hits], "row_id long")
+        for n in (None, 2000, 50):  # the last: covered >= 0.8 * n
+            want = routed_scan_ranges(probe, n)
+            assert collected_id_ranges(spark, hits, n) == want, n
+        assert want is None and routed_scan_ranges(probe, None) == \
+            [(1, 41), (1000, 1000)]
     finally:
-        spark.conf.unset(RANGE_PRUNE_KEY)
+        for key in (RANGE_PRUNE_KEY, RANGE_GRANULE_KEY, MAX_RANGES_KEY):
+            spark.conf.unset(key)
 
 
 def test_exact_and_json_routes_coverage_gate_uniform_ranges(spark, tmp_path):
@@ -2218,13 +2281,24 @@ def test_side_table_memo_misses_after_index_rewrite(spark, sf_dir,
     assert [r.doc_id for r in view.collect()] == [999_999]
 
 
+#: Spark jobs a second routed top-k read on a loaded index may start,
+#: construction plus collect, as measured on the fixture below: BM25
+#: 5 + 2, ANN 1 + 2. When the search re-ran at collect these were
+#: BM25 0 + 10 and ANN 0 + 2 (warm range memo), with the index
+#: scanned again at collect.
+_TOPK_READ_JOBS = {"bm25": 7, "ann": 3}
+
+
 def test_second_query_reads_no_index_side_table(spark, kinds_source,
                                                 tmp_path, monkeypatch):
     """Construction budget: once a dataset's indexes are loaded, a
     second ds.query on the unchanged dataset calls
     DataFrameReader.parquet on nothing under _indexes/, and
     _load_indexes starts no Spark job (each side-table read used to
-    pay a file listing and a footer-schema job per query)."""
+    pay a file listing and a footer-schema job per query). A routed
+    top-k (BM25, ANN) runs its search once, at construction: the
+    collected DataFrame scans no index file, and construction plus
+    collect stay within the pinned job budget."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from deeplake_spark import dataset as dl
@@ -2257,6 +2331,22 @@ def test_second_query_reads_no_index_side_table(spark, kinds_source,
     assert set(loaded) == {"text", "n", "emb"}
     assert sorted(r.doc_id for r in ds.query(q).collect()) == first
     assert reads == []
+
+    topk = {
+        "bm25": ("SELECT doc_id, BM25_SIMILARITY(text, 'w3 alpha') AS s "
+                 "ORDER BY s DESC LIMIT 3", None),
+        "ann": ("SELECT doc_id, COSINE_SIMILARITY(emb, ?) AS s "
+                "ORDER BY s DESC LIMIT 3", [_kind_row(5)["emb"]]),
+    }
+    for kind, (text, params) in topk.items():
+        want = [tuple(r) for r in ds.query(text, params=params).collect()]
+        assert len(want) == 3
+        before = jobs()
+        df = ds.query(text, params=params).df
+        assert [tuple(r) for r in df.collect()] == want
+        assert jobs() - before <= _TOPK_READ_JOBS[kind], kind
+        assert not [f for f in df.inputFiles() if "/_indexes/" in f], kind
+    assert want[0][0] == 5  # the ANN query vector is row 5's own
 
 
 def test_tql_topk_ceiling_confs_decline_route(spark, sf_dir, tmp_path):

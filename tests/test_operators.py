@@ -604,6 +604,15 @@ def test_ensure_parallelism_probe_cached(spark):
     finally:
         _pdf.DataFrame.rdd = real_rdd
     assert out1.schema == out2.schema
+    # a session left at Spark's default shuffle-partition count (a
+    # fresh default session sets no conf) keys the probe too
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert io.ensure_parallelism(spark.range(7)).count() == 7
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_ensure_parallelism_cache_not_shared_across_datasets(spark, tmp_path):

@@ -85,12 +85,14 @@ COMMENTARY = {
     "t13_tql_bm25_topk": (
         "TQL-routed BM25 (round 3): the translator recognizes ORDER BY "
         "BM25_SIMILARITY LIMIT k and probes the PERSISTED inverted index — "
-        "the plan scans posting parquet filtered to the 3 query terms "
-        "(term-bucket partition pruning), joins broadcast corpus stats, and "
-        "TakeOrders k hit rows back against the base relation. The corpus "
-        "text column is never tokenized at query time (pinned by "
-        "tests/test_plans.py); work is O(matching postings) at any corpus "
-        "size."
+        "posting parquet filtered to the 3 query terms (term-bucket "
+        "partition pruning), corpus stats as literals, TakeOrdered to k. "
+        "The search runs once, at translation: its k hit rows come back "
+        "as a LocalRelation, so the plan below is only the broadcast join "
+        "of those rows to the base relation, whose scan carries the hits' "
+        "row-id ranges. The corpus text column is never tokenized at "
+        "query time (pinned by tests/test_plans.py); work is O(matching "
+        "postings) at any corpus size."
     ),
     "d06_dup_ngram_windows": (
         "Duplicated token-window detection (round 3): one guarded "
@@ -123,7 +125,9 @@ COMMENTARY = {
         "k x accuracy_factor candidate ids, broadcast semijoin back to the "
         "matrix relation, exact late-interaction rerank (Arrow pandas UDF) "
         "on candidates only. The corpus-wide pass is a narrow pooled-vector "
-        "scan; the expensive UDF touches k x accuracy_factor rows."
+        "scan; the expensive UDF touches k x accuracy_factor rows. That "
+        "search runs once, at translation; the plan below joins its k "
+        "collected hit rows (a LocalRelation) back to the base relation."
     ),
     "v19_pq_search": (
         "Product-quantized ANN (round 4): the probe scans the persisted "
