@@ -46,13 +46,16 @@ _TRACKED_CAP = 32
 
 
 def _track(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _TRACKED.append(df)
-    while len(_TRACKED) > _TRACKED_CAP:
+    # Evict before persisting: Spark shares one cache entry between
+    # equal plans, so unpersisting an evicted older twin after this
+    # persist would drop the entry this plan just joined.
+    while len(_TRACKED) >= _TRACKED_CAP:
         try:
             _TRACKED.pop(0).unpersist()
         except Exception:
             pass
+    df = df.persist()
+    _TRACKED.append(df)
     return df
 
 

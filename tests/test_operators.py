@@ -1776,6 +1776,26 @@ def test_cached_scope_survives_cap_eviction(spark):
         dd.release_cached()
 
 
+def test_track_survives_cap_eviction_of_an_equal_plan(spark):
+    """Spark shares one cache entry between equal plans. A persist whose
+    older twin the FIFO cap evicts must still read from memory (the
+    t42 lane lost its persist this way when the tracker was full)."""
+    from deeplake_spark.operators import dedup as dd
+
+    dd.release_cached()
+    old_cap = dd._TRACKED_CAP
+    try:
+        dd._TRACKED_CAP = 2
+        dd._track(spark.range(7).selectExpr("id * 3 AS v"))
+        dd._track(spark.range(8))
+        again = dd._track(spark.range(7).selectExpr("id * 3 AS v"))
+        plan = again._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+    finally:
+        dd._TRACKED_CAP = old_cap
+        dd.release_cached()
+
+
 def test_hard_negative_mining_lanes_agree(spark, sf_dir):
     """The IVF lane of hard_negative_mining at FULL probe must return
     the exact lane's negatives (same ids, ranks, scores)."""

@@ -193,17 +193,12 @@ def test_column_handles(ds):
 
 
 def test_reference_export_surface_complete():
-    """Every public name in the reference's package __all__
-    (/root/reference/python/deeplake/__init__.pyi) resolves on
-    deeplake_spark — handles, errors, config objects, submodules."""
-    import re
+    """Every public name in the reference's package __all__ (frozen in
+    tests/reference_surface.py) resolves on deeplake_spark — handles,
+    errors, config objects, submodules."""
+    from tests.reference_surface import names
 
-    pyi = __import__("pathlib").Path(
-        "/root/reference/python/deeplake/__init__.pyi").read_text()
-    ref_all = set(re.findall(
-        r'"(\w+)"', re.search(r"__all__ = \[(.*?)\]", pyi, re.S).group(1)))
-    missing = sorted(n for n in ref_all
-                     if not n.startswith("_") and not hasattr(dl, n))
+    missing = sorted(n for n in names("package_all") if not hasattr(dl, n))
     assert missing == [], f"reference exports missing: {missing}"
 
 

@@ -204,19 +204,14 @@ def test_tql_from_parquet_url(spark, sf_dir):
 
 
 def test_types_module_reference_surface():
-    """Every public name in the reference types.pyi resolves on our
-    types module, and the constants carry engine-comparable values."""
-    import re
-    from pathlib import Path
+    """Every public name in the reference types.pyi (frozen in
+    tests/reference_surface.py) resolves on our types module, and the
+    constants carry engine-comparable values."""
+    from tests.reference_surface import names
 
     from deeplake_spark import types as t
 
-    pyi = Path("/root/reference/python/deeplake/types.pyi").read_text()
-    names = {a or b for a, b in
-             re.findall(r"^def (\w+)|^class (\w+)", pyi, re.M)}
-    names |= set(re.findall(r"^(\w+): ", pyi, re.M))
-    missing = sorted(n for n in names
-                     if not n.startswith("_") and not hasattr(t, n))
+    missing = sorted(n for n in names("types") if not hasattr(t, n))
     assert missing == [], f"types surface missing: {missing}"
 
     # constants are the strings the engine's registries store
