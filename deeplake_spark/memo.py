@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import weakref
 from collections import OrderedDict
 from collections.abc import Callable, Hashable
 from typing import Any
@@ -132,9 +133,15 @@ def side_table(spark, path: str):
     `tree_key`), so a query re-reading an unchanged index pays one
     local stat per file instead of Spark's re-listing and footer-schema
     job (trap 13). A path with no tree key (`mem://`, Hadoop, missing)
-    is read without storing."""
-    return side_table_value(spark, path, "table",
-                            lambda: spark.read.parquet(path))
+    is read without storing. Every frame read is recorded in
+    SIDE_TABLES."""
+
+    def read():
+        df = spark.read.parquet(path)
+        SIDE_TABLES.add(df)
+        return df
+
+    return side_table_value(spark, path, "table", read)
 
 
 def side_table_value(spark, path: str, name: str,
@@ -225,11 +232,14 @@ QSIDE_CACHE = Memo("qside", 64)
 #: or a value collected from it (side_table_value).
 SIDE_TABLE_MEMO = Memo("side_table", 256)
 
+#: every DataFrame side_table has read, weakly held: an index that
+#: holds one was read back from its side tables (indexes.require_saved).
+SIDE_TABLES: weakref.WeakSet = weakref.WeakSet()
+
 #: (session, sf_dir, name) -> saved side index (queries.saved_index).
 INDEX_CACHE = Memo("index", 64)
 
-#: (session, sf_dir) -> IVF build and v24 seed centroids (vector_ops).
-IVF_CACHE = Memo("ivf", 64)
+#: (session, sf_dir) -> v24 seed centroids (vector_ops).
 SEED_CACHE = Memo("seed", 64)
 
 #: (session, sf_dir, vec_id | max_vec_id, source file_key) -> prefetched

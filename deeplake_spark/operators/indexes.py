@@ -298,7 +298,6 @@ def ranges_predicate(id_col: str, ranges: list[tuple[int, int]]) -> Column:
 
 def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
                       n_rows_est: int | None = None,
-                      prune: bool = True,
                       ids_col: str | None = None,
                       granules: DataFrame | None = None,
                       granule_size: int | None = None) -> DataFrame:
@@ -309,7 +308,7 @@ def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
     exactly one place. The caller's join on top keeps results exact:
     ranges are always a superset of the probe ids. `ids_col` names the
     id column in `ids` (default: its first column)."""
-    if prune and dict(df.dtypes).get(id_col) in ("bigint", "int"):
+    if dict(df.dtypes).get(id_col) in ("bigint", "int"):
         c = ids_col or ids.columns[0]
         probe = ids.select(F.col(c).alias("row_id")) \
             if c != "row_id" or len(ids.columns) > 1 else ids
@@ -323,17 +322,16 @@ def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
 
 def routed_semijoin(df: DataFrame, ids: DataFrame, id_col: str,
                     n_rows_est: int | None = None,
-                    prune: bool = True,
                     granules: DataFrame | None = None,
                     granule_size: int | None = None) -> DataFrame:
     """The routed-filter shape: corpus LeftSemi probe — with the probe's
     row-id ranges pushed onto the corpus scan first, so parquet min/max
     stats skip row groups outside them (the reference's chunk-granular
-    index read). `prune=False` (freshly-built index whose probe lineage
-    is a full corpus tokenize) keeps the plain semijoin. `granules` /
-    `granule_size`: the index's build-time probe summary, when it has
-    one (routed_scan_ranges docstring)."""
-    df = prune_scan_to_ids(df, ids, id_col, n_rows_est, prune,
+    index read). `ids` is the probe of a saved-and-loaded index, whose
+    lineage is a pruned side-table scan, cheap to summarize at plan
+    time. `granules` / `granule_size`: the index's build-time probe
+    summary, when it has one (routed_scan_ranges docstring)."""
+    df = prune_scan_to_ids(df, ids, id_col, n_rows_est,
                            ids_col="row_id", granules=granules,
                            granule_size=granule_size)
     return df.join(ids.withColumnRenamed("row_id", id_col), id_col,
@@ -441,6 +439,20 @@ def _load_stats_sidecar(path: str) -> dict:
         return {}
 
 
+def require_saved(index) -> None:
+    """Raise unless `index` was read back from its saved side tables.
+    Probes read persisted side tables only — the reference builds its
+    indexes at ingest and probes what it saved (PAPER.md §1.2) — and a
+    `build_*` result holds no frame `memo.side_table` read. The one
+    check that tells a saved index from an unsaved build."""
+    if not any(v in memo.SIDE_TABLES for v in vars(index).values()):
+        raise ValueError(
+            f"{type(index).__name__} is an unsaved build: indexes are "
+            "probed only after a save and a load — call "
+            "INDEX_KINDS[kind].save(index, path) and probe "
+            "INDEX_KINDS[kind].load(spark, path, source)")
+
+
 # ----------------------------------------------------------- inverted (text)
 
 
@@ -455,26 +467,23 @@ class InvertedIndex:
     postings: DataFrame  # term, row_id, tf
     stats: DataFrame  # n_docs, avgdl
     doclens: DataFrame  # row_id, dl
-    #: routing-gate stats (termstats.json sidecar, loaded): heavy-term
-    #: df map + corpus size. None on a freshly built (unsaved) index —
-    #: est_selectivity then returns None and routes stay ungated.
+    #: routing-gate stats (termstats.json sidecar): heavy-term df map
+    #: + corpus size. None without a readable sidecar — est_selectivity
+    #: then returns None and routes stay ungated.
     heavy: dict | None = None
     n_docs_est: int | None = None
     floor_frac: float = _HEAVY_FRAC
-    #: True when read back from a persisted index — probe lineage is a
-    #: pruned side-table scan, safe to summarize at plan time
-    loaded: bool = False
     #: build-time per-(term, granule) row-id min/max side table
     #: (g, lo, hi + bucket partition), written by save() at
     #: DEFAULT_RANGE_GRANULE and recorded in the termstats sidecar
     #: (range_granule) — the plan-time range summary aggregates THIS
-    #: instead of the posting rows (VERDICT r15 #8). None on fresh or
+    #: instead of the posting rows (VERDICT r15 #8). None on
     #: pre-granule indexes (probe paths fall back to the posting job).
     granules: DataFrame | None = None
     granule_size: int | None = None
     #: (n_docs, avgdl) of the merged `stats` row, collected once per
     #: stats-table content at load so BM25 probes take them as
-    #: literals. None on a fresh index (probes cross-join `stats`).
+    #: literals. None on a build until it is saved and loaded.
     corpus: tuple[int, float | None] | None = None
 
     def est_selectivity(self, term: str) -> float | None:
@@ -493,6 +502,7 @@ class InvertedIndex:
         """terms → row_id relation (the roaring bitmap analog).
         mode='any' (OR) unions postings; mode='all' (AND) intersects
         via group-count."""
+        require_saved(self)
         # dedupe AFTER lowercasing: the AND count below compares the
         # DISTINCT matched-term count, so duplicate or case-variant
         # inputs (['Cat','cat']) must collapse to one required term or
@@ -535,15 +545,13 @@ class InvertedIndex:
         per delta; load() merges them."""
         from deeplake_spark.storage import get_json, json_exists, put_json
 
-        # A fresh (unloaded) index's frames share one corpus-tokenize
-        # lineage, and the four actions below would each re-run it
-        # (r14 review: ~5 full corpus passes per ingest). Persist the
-        # two corpus-sized frames for the duration of the save — one
-        # lineage fill each — and release before returning.
-        fresh = not self.loaded
-        if fresh:
-            self.postings.persist()
-            self.doclens.persist()
+        # A build's frames share one corpus-tokenize lineage, and the
+        # four actions below would each re-run it (r14 review: ~5 full
+        # corpus passes per ingest). Persist the two corpus-sized
+        # frames for the duration of the save — one lineage fill each
+        # — and release before returning.
+        self.postings.persist()
+        self.doclens.persist()
         try:
             # Build-time granule summary (VERDICT r15 #8): one
             # (g, lo, hi) row per (term, DEFAULT_RANGE_GRANULE block),
@@ -616,9 +624,8 @@ class InvertedIndex:
                                   old if mode == "append" else None,
                                   granule=granule_meta)
         finally:
-            if fresh:
-                self.postings.unpersist()
-                self.doclens.unpersist()
+            self.postings.unpersist()
+            self.doclens.unpersist()
 
     def _write_termstats(self, sidecar: str, old: dict | None,
                          granule: int | None = None) -> None:
@@ -690,7 +697,6 @@ class InvertedIndex:
             heavy=ts.get("heavy"),
             n_docs_est=ts.get("n_rows_est"),
             floor_frac=ts.get("floor_frac", _HEAVY_FRAC),
-            loaded=True,
             granules=granules,
             granule_size=gsize,
             corpus=corpus,
@@ -698,20 +704,17 @@ class InvertedIndex:
 
 
 def _term_hit(postings: DataFrame, terms: list[str]) -> DataFrame:
-    """Posting rows for `terms`, PARTITION-PRUNED when the postings carry
-    their save-time term-hash bucket: the probe filters on
+    """Posting (or granule) rows for `terms`, PARTITION-PRUNED on their
+    save-time term-hash bucket: the probe filters on
     `bucket == abs(hash('term')) % 64` — Catalyst constant-folds the
     literal hash, so the parquet scan reads only the matching term
-    buckets (|terms| of 64 partitions) instead of every posting file.
-    A loaded index keeps `bucket`; a freshly-built one (pre-save) has no
-    bucket column and scans its in-memory lineage as before."""
-    if "bucket" in postings.columns:
-        pred = None
-        for t in terms:
-            c = F.col("bucket") == (F.abs(F.hash(F.lit(t))) % 64)
-            pred = c if pred is None else (pred | c)
-        if pred is not None:
-            postings = postings.filter(pred)
+    buckets (|terms| of 64 partitions) instead of every posting file."""
+    pred = None
+    for t in terms:
+        c = F.col("bucket") == (F.abs(F.hash(F.lit(t))) % 64)
+        pred = c if pred is None else (pred | c)
+    if pred is not None:
+        postings = postings.filter(pred)
     return postings.filter(F.col("term").isin(terms))
 
 
@@ -744,12 +747,10 @@ def contains_via_index(df: DataFrame, index: InvertedIndex, term: str,
     row-id ranges are pushed onto the corpus scan (row-group skip, the
     reference's bitmap→chunk reads, icm/roaring.hpp) and the posting
     row_ids semijoined — no corpus tokenize at query time (the
-    is_filter fast path, tql.hpp:153). Range pruning engages only for
-    a LOADED index (a freshly-built probe's lineage is itself a corpus
-    tokenize — summarizing it would cost what it saves)."""
+    is_filter fast path, tql.hpp:153). `index` is a saved-and-loaded
+    index (require_saved)."""
     ids = index.probe([term])
     return routed_semijoin(df, ids, id_col, n_rows_est=index.n_docs_est,
-                           prune="bucket" in index.postings.columns,
                            granules=index.probe_granules([term]),
                            granule_size=index.granule_size)
 
@@ -764,34 +765,28 @@ def bm25_via_index(index: InvertedIndex, terms: list[str], k: int = 10,
     `candidates` (a row_id relation) restricts which documents are
     scored (the reference's filter+search, index_holder.hpp:30-36) —
     IDF/corpus stats stay GLOBAL, matching search-then-filter scores.
-    A loaded index supplies them as literals (`InvertedIndex.corpus`);
-    a fresh one cross-joins its 1-row `stats` relation."""
+    `index` is a saved-and-loaded index (require_saved): it supplies
+    them as literals (`InvertedIndex.corpus`)."""
+    require_saved(index)
+    n_docs = F.lit(index.corpus[0]).cast("long")
+    avgdl = F.lit(index.corpus[1]).cast("double")
     tf = _term_hit(index.postings, [t.lower() for t in terms])
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if candidates is not None:
         cand = candidates.toDF("row_id") if candidates.columns != ["row_id"] else candidates
         tf = tf.join(cand, "row_id", "left_semi")
-    if index.corpus is not None:
-        lits = dict(zip(("n_docs", "avgdl"), index.corpus))
-
-        def with_stat(rel: DataFrame, name: str) -> DataFrame:
-            return rel.withColumn(name, F.lit(lits[name]).cast(
-                "long" if name == "n_docs" else "double"))
-    else:
-        def with_stat(rel: DataFrame, name: str) -> DataFrame:
-            return rel.crossJoin(F.broadcast(index.stats.select(name)))
-    idf = with_stat(df_, "n_docs").select(
+    idf = df_.select(
         "term",
-        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0).alias("idf"),
+        F.log((n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0).alias("idf"),
     )
     return (
-        with_stat(tf.join(F.broadcast(idf), "term")
-                  .join(index.doclens, "row_id"), "avgdl")
+        tf.join(F.broadcast(idf), "term")
+        .join(index.doclens, "row_id")
         .select(
             "row_id",
             (
                 F.col("idf") * (F.col("tf") * (k1 + 1))
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
             ).alias("s"),
         )
         .groupBy("row_id")
@@ -887,8 +882,9 @@ class NumericIndex:
         return min(1.0, tot / self.n_rows)
 
     def probe_between(self, lo, hi) -> DataFrame:
+        require_saved(self)
         out = self.values
-        if "bucket" in out.columns and self.vmin is not None:
+        if self.vmin is not None:
             out = out.filter(
                 F.col("bucket").between(self._bucket_of(lo), self._bucket_of(hi)))
         # no distinct: one (value, row_id) row per corpus row, and the
@@ -896,8 +892,9 @@ class NumericIndex:
         return out.filter(F.col("value").between(lo, hi)).select("row_id")
 
     def probe_in(self, items: list) -> DataFrame:
+        require_saved(self)
         out = self.values
-        if "bucket" in out.columns and self.vmin is not None:
+        if self.vmin is not None:
             out = out.filter(
                 F.col("bucket").isin(sorted({self._bucket_of(v) for v in items})))
         return out.filter(F.col("value").isin(items)).select("row_id")
@@ -1018,10 +1015,6 @@ class JsonIndex:
     for the keys extracted at build time (bluesky-style workloads)."""
 
     entries: DataFrame  # path, value, row_id
-    #: True when read back from parquet — a loaded probe's lineage is a
-    #: pruned side-table scan, safe to summarize at plan time (range
-    #: pruning); a freshly-built one's lineage re-extracts the corpus.
-    loaded: bool = False
     #: routing-gate stats (valstats.json sidecar): heavy (path,value) df
     #: map — a hot value ('type':'like' in a bluesky-style stream) is
     #: the same frequent-term hazard the inverted gate exists for.
@@ -1045,6 +1038,7 @@ class JsonIndex:
         return min(1.0, df / self.n_rows_est)
 
     def probe(self, path: str, value) -> DataFrame:
+        require_saved(self)
         # no distinct: one entry row per (path, corpus row)
         return (
             self.entries.filter((F.col("path") == path)
@@ -1068,7 +1062,7 @@ class JsonIndex:
         ts = _load_stats_sidecar(os.path.join(path, "valstats.json"))
         return cls(entries=memo.side_table(spark,
                                            os.path.join(path, "entries")),
-                   loaded=True, heavy=ts.get("heavy"),
+                   heavy=ts.get("heavy"),
                    n_rows_est=ts.get("n_rows_est"),
                    floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
 
@@ -1124,24 +1118,24 @@ class ExactTextIndex:
     def probe(self, value: str) -> DataFrame:
         import hashlib
 
+        require_saved(self)
         h = hashlib.md5(value.encode()).hexdigest()
         out = self.digests
-        if "bucket" in out.columns:
-            # Partition-prune to the probe's digest-prefix directory.
-            # Type-adaptive literal (r14 review, confirmed live): when
-            # every stored prefix happens to be all-digits, Spark's
-            # partition-type inference loads `bucket` as INT, and a
-            # string comparison would ANSI-cast an alpha prefix like
-            # 'aa' to BIGINT and CRASH instead of returning empty.
-            dt = {f.name: f.dataType.simpleString()
-                  for f in out.schema.fields}["bucket"]
-            b = h[:2]
-            if dt == "string":
-                out = out.filter(F.col("bucket") == b)
-            elif b.isdigit():
-                out = out.filter(F.col("bucket") == int(b))
-            else:  # alpha prefix cannot exist among numeric partitions
-                return (out.filter(F.lit(False)).select("row_id"))
+        # Partition-prune to the probe's digest-prefix directory.
+        # Type-adaptive literal (r14 review, confirmed live): when
+        # every stored prefix happens to be all-digits, Spark's
+        # partition-type inference loads `bucket` as INT, and a
+        # string comparison would ANSI-cast an alpha prefix like
+        # 'aa' to BIGINT and CRASH instead of returning empty.
+        dt = {f.name: f.dataType.simpleString()
+              for f in out.schema.fields}["bucket"]
+        b = h[:2]
+        if dt == "string":
+            out = out.filter(F.col("bucket") == b)
+        elif b.isdigit():
+            out = out.filter(F.col("bucket") == int(b))
+        else:  # alpha prefix cannot exist among numeric partitions
+            return (out.filter(F.lit(False)).select("row_id"))
         return out.filter(F.col("digest") == h).select("row_id")
 
     def save(self, path: str, mode: str = "overwrite") -> None:

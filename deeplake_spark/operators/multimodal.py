@@ -2046,14 +2046,13 @@ class FingerprintIndex:
     probe consume."""
 
     def __init__(self, signatures: DataFrame, modality: str, id_col: str,
-                 params: dict, nbits: int = 64, loaded: bool = False,
+                 params: dict, nbits: int = 64,
                  n_rows_est: int | None = None):
         self.signatures = signatures
         self.modality = modality
         self.id_col = id_col
         self.params = dict(params)
         self.nbits = int(nbits)
-        self.loaded = loaded
         self.n_rows_est = n_rows_est
 
     def save(self, path: str, mode: str = "overwrite") -> None:
@@ -2081,7 +2080,7 @@ class FingerprintIndex:
         sigs, meta = read_side_table(spark, path, "signatures", "meta.json")
         return cls(signatures=sigs, modality=meta["modality"],
                    id_col=meta["id_col"], params=meta.get("params", {}),
-                   nbits=int(meta.get("nbits", 64)), loaded=True,
+                   nbits=int(meta.get("nbits", 64)),
                    n_rows_est=meta.get("n"))
 
     def delta(self, new_df: DataFrame, column: str) -> "FingerprintIndex":

@@ -117,10 +117,6 @@ class IVFIndex:
     centroids: list  # [(cluster_id, [float, ...])]
     vec_col: str
     id_col: str
-    #: True when read back from a persisted index: probe lineage is a
-    #: pruned side-table scan, safe to summarize at plan time for
-    #: row-group pruning (a fresh build's lineage re-derives the corpus)
-    loaded: bool = False
     #: corpus size from the persisted meta (range-coverage gate)
     n_rows_est: int | None = None
 
@@ -145,7 +141,7 @@ class IVFIndex:
         return cls(assignments=assignments,
                    centroids=[(int(c), v) for c, v in meta["centroids"]],
                    vec_col=meta["vec_col"], id_col=meta["id_col"],
-                   loaded=True, n_rows_est=meta.get("n"))
+                   n_rows_est=meta.get("n"))
 
     def delta(self, new_df: DataFrame) -> "IVFIndex":
         """Delta maintenance: NEW rows assigned to the existing
@@ -338,6 +334,9 @@ def ivf_search(index: IVFIndex, query_vec, k: int = 10,
     """
     import numpy as np
 
+    from deeplake_spark.operators.indexes import require_saved
+
+    require_saved(index)
     config = config or SearchConfig()
     q = np.asarray(list(query_vec), dtype=np.float64)
     dists = [
@@ -451,6 +450,9 @@ def ivf_search_batch(index: IVFIndex, queries: DataFrame,
     queries probe it — and a per-qid window takes the top k. Returns
     (qid, id, score) with score = exact cosine, ranked per query.
     """
+    from deeplake_spark.operators.indexes import require_saved
+
+    require_saved(index)
     config = config or SearchConfig()
     n_clusters = len(index.centroids)
     # single source of truth for probe sizing (r14 review: an inline
@@ -507,8 +509,7 @@ class QuantizedIndex:
     source: DataFrame  # id_col, vec_col — live relation for exact rerank
     vec_col: str
     id_col: str
-    #: see IVFIndex.loaded / n_rows_est (row-group-pruned rerank gate)
-    loaded: bool = False
+    #: see IVFIndex.n_rows_est (row-group-pruned rerank gate)
     n_rows_est: int | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> None:
@@ -528,7 +529,7 @@ class QuantizedIndex:
         return cls(bits=bits,
                    source=source.select(meta["id_col"], meta["vec_col"]),
                    vec_col=meta["vec_col"], id_col=meta["id_col"],
-                   loaded=True, n_rows_est=meta.get("n"))
+                   n_rows_est=meta.get("n"))
 
 
 def build_quantized(df: DataFrame, vec_col: str = "embedding",
@@ -548,13 +549,17 @@ def _rerank_scan(index, cand: DataFrame, prune: bool = True) -> DataFrame:
     summarizing it at plan time is one bounded job, and the pushed
     ranges let parquet min/max skip the corpus row groups the rerank
     will never read — the reference's bitmap→chunk-read applied to its
-    rerank (index_holder.hpp:37-40). LOADED indexes with a persisted
-    corpus size only (a fresh build's candidate lineage re-derives the
-    corpus, and without n the coverage gate can't tell there's nothing
-    to skip — same rule as the JVM lane); the semijoin on top keeps
-    the rerank exact either way."""
-    from deeplake_spark.operators.indexes import prune_scan_to_ids
+    rerank (index_holder.hpp:37-40). Only with a persisted corpus size
+    (without n the coverage gate can't tell there's nothing to skip —
+    same rule as the JVM lane); the semijoin on top keeps the rerank
+    exact either way. Every rerank probe (quantized, PQ, MAXSIM) passes
+    here, so this is where an unsaved build is refused."""
+    from deeplake_spark.operators.indexes import (
+        prune_scan_to_ids,
+        require_saved,
+    )
 
+    require_saved(index)
     if index.source is None:
         # fail HERE with the reason, not at the caller's .join on None
         # (r14 review: the old `return index.source` was a disguised
@@ -562,10 +567,10 @@ def _rerank_scan(index, cand: DataFrame, prune: bool = True) -> DataFrame:
         raise ValueError(
             "index has no source relation bound — load it against the "
             "live dataset (rebind at load time) before searching")
-    return prune_scan_to_ids(
-        index.source, cand, index.id_col, index.n_rows_est,
-        prune=prune and index.loaded and index.n_rows_est is not None,
-        ids_col=index.id_col)
+    if not prune or index.n_rows_est is None:
+        return index.source
+    return prune_scan_to_ids(index.source, cand, index.id_col,
+                             index.n_rows_est, ids_col=index.id_col)
 
 
 def _cand_ids(candidates: DataFrame, id_col: str) -> DataFrame:
@@ -666,8 +671,7 @@ class PQIndex:
     vec_col: str
     id_col: str
     centroids: list | None = None  # coarse quantizer → IVF-PQ cluster prune
-    #: see IVFIndex.loaded / n_rows_est (row-group-pruned rerank gate)
-    loaded: bool = False
+    #: see IVFIndex.n_rows_est (row-group-pruned rerank gate)
     n_rows_est: int | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> None:
@@ -698,7 +702,6 @@ class PQIndex:
             vec_col=meta["vec_col"],
             id_col=meta["id_col"],
             centroids=[(int(c), v) for c, v in cents] if cents else None,
-            loaded=True,
             n_rows_est=meta.get("n"),
         )
 
@@ -1008,8 +1011,7 @@ class PooledMaxsimIndex:
     source: DataFrame  # id_col, matrix_col
     id_col: str
     matrix_col: str
-    #: see IVFIndex.loaded / n_rows_est (row-group-pruned rerank gate)
-    loaded: bool = False
+    #: see IVFIndex.n_rows_est (row-group-pruned rerank gate)
     n_rows_est: int | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> None:
@@ -1036,7 +1038,7 @@ class PooledMaxsimIndex:
         return cls(pooled=pooled,
                    source=source.select(meta["id_col"], meta["matrix_col"]),
                    id_col=meta["id_col"], matrix_col=meta["matrix_col"],
-                   loaded=True, n_rows_est=meta.get("n"))
+                   n_rows_est=meta.get("n"))
 
 
 def build_pooled_maxsim(df: DataFrame, matrix_col: str, id_col: str) -> PooledMaxsimIndex:

@@ -30,7 +30,8 @@ def prepare(text: str, spark=None, tables=None, default=None, indexes=None,
     python/deeplake/__init__.pyi:612-641). The returned callable also
     exposes `.run_batch(param_sets)`. `options` (tql::options) gates
     features/index use per run; `parsing_only` makes run() validate
-    and return None."""
+    and return None. `indexes` takes saved-and-loaded indexes only, as
+    in `query`."""
     node = parse_query(text)
     return Executor(text, node, spark=spark, tables=tables, default=default,
                     indexes=indexes, options=options)

@@ -142,6 +142,8 @@ class Translator:
         options: Options | None = None,
         functions: Mapping[str, object] | None = None,
     ):
+        from deeplake_spark.operators.indexes import require_saved
+
         self.spark = spark
         self.tables = dict(tables or {})
         self.default = default
@@ -157,8 +159,11 @@ class Translator:
             search_config = self.options.search_config
         #: column name → (kind, index, id_col) [legacy 2-tuple = inverted]:
         #: enables the §4.3 rewrites (CONTAINS/BETWEEN/IN/JSON semijoins,
-        #: ORDER BY cosine LIMIT k → IVF probe)
+        #: ORDER BY cosine LIMIT k → IVF probe). Saved-and-loaded
+        #: indexes only.
         self.indexes = dict(indexes or {})
+        for meta in self.indexes.values():
+            require_saved(meta[-2])
         #: SearchConfig recall/latency knobs for the ANN fast path
         self.search_config = search_config
         #: FuncCall routed by _try_ann_route whose score is carried as
@@ -461,12 +466,11 @@ class Translator:
         entry = self._index_entry
         spark = df.sparkSession
 
-        def semijoin(ids, id_col, n_est=None, prune=True):
+        def semijoin(ids, id_col, n_est=None):
             # probe row-id ranges pushed onto the corpus scan first
             # (row-group skip — the reference's bitmap→chunk reads);
             # the LeftSemi on top keeps the rewrite exact
-            return routed_semijoin(df, ids, id_col, n_rows_est=n_est,
-                                   prune=prune)
+            return routed_semijoin(df, ids, id_col, n_rows_est=n_est)
 
         def gate_ok(est) -> bool:
             """Selectivity cost gate (the reference's pg_costestimate,
@@ -511,7 +515,6 @@ class Translator:
                 return semijoin(
                     m[0].probe(c.args[1].value), m[1],
                     n_est=m[0].n_rows_est,
-                    prune="bucket" in m[0].digests.columns,
                 ).filter(
                     F.col(c.args[0].name) == F.lit(c.args[1].value)
                 )
@@ -528,8 +531,7 @@ class Translator:
             if m and corpus_floor_ok(spark, m[0].n_rows) and gate_ok(
                     m[0].est_range_selectivity(c.low.value, c.high.value)):
                 return semijoin(m[0].probe_between(c.low.value, c.high.value),
-                                m[1], n_est=m[0].n_rows,
-                                prune="bucket" in m[0].values.columns)
+                                m[1], n_est=m[0].n_rows)
         # col IN (v1, v2, ...) → numeric membership probe
         if (
             isinstance(c, ast.InOp)
@@ -541,8 +543,7 @@ class Translator:
             if m and corpus_floor_ok(spark, m[0].n_rows) and gate_ok(
                     m[0].est_in_selectivity([i.value for i in c.items])):
                 return semijoin(m[0].probe_in([i.value for i in c.items]),
-                                m[1], n_est=m[0].n_rows,
-                                prune="bucket" in m[0].values.columns)
+                                m[1], n_est=m[0].n_rows)
         # json_col['path'] == lit → JSON path-value probe
         if (
             isinstance(c, ast.BinaryOp)
@@ -564,8 +565,7 @@ class Translator:
             if m and gate_ok(m[0].est_selectivity(c.left.index.value,
                                                   c.right.value)):
                 return semijoin(m[0].probe(c.left.index.value, c.right.value),
-                                m[1], n_est=m[0].n_rows_est,
-                                prune=m[0].loaded)
+                                m[1], n_est=m[0].n_rows_est)
         return None
 
     def _estimate_where_selectivity(self, where: ast.Node) -> float | None:
@@ -970,36 +970,34 @@ class Translator:
     def _hits_fetchback(self, df: DataFrame, hits: DataFrame, id_col: str,
                         idx, how: str) -> DataFrame:
         """Fetch the winners' full rows: `df` joined with the broadcast
-        ≤k `hits`. For a LOADED index the search runs once, here: its
-        ≤k hit rows are collected on the JVM and re-enter the plan as
-        a LocalRelation (the rows never pass through Python), and their
-        ids — summarized in Python under the routed lanes' range gates
-        (collected_id_ranges) — push row-id ranges onto the corpus
-        scan, so parquet min/max skip essentially the whole corpus (the
-        reference runs the search once and reads the winners' chunks,
-        top_k_search_info.hpp:17-66, index_holder.hpp:37-40). The
-        executed plan then holds no search. A FRESH (unsaved) index
-        stays lazy and unpruned: its search lineage re-derives the
-        corpus at collect.
+        ≤k `hits` of the saved-and-loaded index `idx`. The search runs
+        once, here: its ≤k hit rows are collected on the JVM and
+        re-enter the plan as a LocalRelation (the rows never pass
+        through Python), and their ids — summarized in Python under the
+        routed lanes' range gates (collected_id_ranges) — push row-id
+        ranges onto the corpus scan, so parquet min/max skip
+        essentially the whole corpus (the reference runs the search
+        once and reads the winners' chunks, top_k_search_info.hpp:17-66,
+        index_holder.hpp:37-40). The executed plan then holds no
+        search.
 
-        SNAPSHOT CONTRACT: a loaded-index top-k holds its hits as data,
-        fixed at translation — re-run the query after a commit."""
+        SNAPSHOT CONTRACT: a top-k holds its hits as data, fixed at
+        translation — re-run the query after a commit."""
         from deeplake_spark.operators.indexes import (
             collected_id_ranges,
             ranges_predicate,
         )
 
-        if getattr(idx, "loaded", False):
-            spark = hits.sparkSession
-            hits = DataFrame(spark._jsparkSession.createDataFrame(
-                hits._jdf.collectAsList(), hits._jdf.schema()), spark)
-            if dict(df.dtypes).get(id_col) in ("bigint", "int"):
-                ranges = collected_id_ranges(
-                    spark, [r[0] for r in hits.select(id_col).collect()],
-                    getattr(idx, "n_rows_est", None)
-                    or getattr(idx, "n_docs_est", None))
-                if ranges:
-                    df = df.filter(ranges_predicate(id_col, ranges))
+        spark = hits.sparkSession
+        hits = DataFrame(spark._jsparkSession.createDataFrame(
+            hits._jdf.collectAsList(), hits._jdf.schema()), spark)
+        if dict(df.dtypes).get(id_col) in ("bigint", "int"):
+            ranges = collected_id_ranges(
+                spark, [r[0] for r in hits.select(id_col).collect()],
+                getattr(idx, "n_rows_est", None)
+                or getattr(idx, "n_docs_est", None))
+            if ranges:
+                df = df.filter(ranges_predicate(id_col, ranges))
         return df.join(F.broadcast(hits), id_col, how)
 
     def _param_str(self, node: ast.Node) -> str | None:
@@ -1604,7 +1602,9 @@ def tql_query(
     cpp/tql/options.hpp:7-30); with `parsing_only=True` the text is
     parsed/validated and None is returned without translating.
     `functions` is a dataset-scoped UDF registry resolved before the
-    global one (cpp/tql/functions_registry.hpp:17-35)."""
+    global one (cpp/tql/functions_registry.hpp:17-35). `indexes` maps a
+    column to (kind, index, id_col) of an index saved and loaded back
+    through `indexes.INDEX_KINDS`; an unsaved build raises ValueError."""
     node = parse_query(query)
     if options is not None and options.parsing_only:
         return None

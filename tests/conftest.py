@@ -37,3 +37,26 @@ def sf_dir():
 def spark_global(spark):
     """Alias usable inside hypothesis-driven tests (session reuse)."""
     return spark
+
+
+@pytest.fixture(scope="session")
+def round_trip(spark, tmp_path_factory):
+    """`round_trip(index, source=None)`: the unsaved build `index`
+    saved under a fresh temporary directory through
+    INDEX_KINDS[kind].save and loaded back through
+    INDEX_KINDS[kind].load — probes take saved-and-loaded indexes only.
+    `source` binds the rerank kinds' live relation and defaults to the
+    one the build carries."""
+    from deeplake_spark.operators.indexes import INDEX_KINDS
+
+    def save_and_load(index, source=None):
+        kind = next(k for k, spec in INDEX_KINDS.items()
+                    if type(index) is spec.cls)
+        spec = INDEX_KINDS[kind]
+        path = str(tmp_path_factory.mktemp(f"round_trip_{kind}"))
+        spec.save(index, path)
+        if source is None:
+            source = getattr(index, "source", None)
+        return spec.load(spark, path, source)
+
+    return save_and_load

@@ -28,8 +28,8 @@ def docs(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def inv(docs):
-    return build_inverted_index(docs)
+def inv(docs, round_trip):
+    return round_trip(build_inverted_index(docs))
 
 
 def test_contains_probe_matches_scan(spark, docs, inv):
@@ -69,7 +69,7 @@ def test_inverted_save_load(spark, docs, inv):
     from deeplake_spark.operators.indexes import InvertedIndex
 
     with tempfile.TemporaryDirectory() as d:
-        inv.save(d)
+        build_inverted_index(docs).save(d)
         loaded = InvertedIndex.load(spark, d)
         a = sorted(r.row_id for r in loaded.probe(["spark"]).collect())
         b = sorted(r.row_id for r in inv.probe(["spark"]).collect())
@@ -80,16 +80,16 @@ def test_inverted_save_load(spark, docs, inv):
         assert any(f.startswith("bucket=") for f in os.listdir(os.path.join(d, "postings")))
 
 
-def test_numeric_index(spark, docs):
-    idx = build_numeric_index(docs, "n_chars")
+def test_numeric_index(spark, docs, round_trip):
+    idx = round_trip(build_numeric_index(docs, "n_chars"))
     got = sorted(r.row_id for r in idx.probe_between(100, 200).collect())
     exp = sorted(r.doc_id for r in docs.filter(F.col("n_chars").between(100, 200)).collect())
     assert got == exp
 
 
-def test_json_index(spark, sf_dir):
+def test_json_index(spark, sf_dir, round_trip):
     ev = load_table(spark, sf_dir, "events")
-    idx = build_json_index(ev, "props", ["k"])
+    idx = round_trip(build_json_index(ev, "props", ["k"]))
     got = sorted(r.row_id for r in idx.probe("k", 7).collect())
     exp = sorted(
         r.event_id
@@ -98,9 +98,9 @@ def test_json_index(spark, sf_dir):
     assert got == exp
 
 
-def test_exact_index(spark, docs):
+def test_exact_index(spark, docs, round_trip):
     some_text = docs.filter(F.col("doc_id") == 3).head().text
-    idx = build_exact_index(docs, "text")
+    idx = round_trip(build_exact_index(docs, "text"))
     got = {r.row_id for r in idx.probe(some_text).collect()}
     exp = {r.doc_id for r in docs.filter(F.col("text") == some_text).collect()}
     assert got == exp and 3 in got
@@ -296,9 +296,6 @@ def test_inverted_termstats_sidecar_and_merge(spark, tmp_path):
     assert idx.est_selectivity("rareword") == pytest.approx(0.05)
     # unknown terms: bounded by the recording floor (always routable)
     assert idx.est_selectivity("neverseen") <= 1.0 / 64
-    # freshly built (unsaved) index: no stats, never gated
-    assert build_inverted_index(df, "text", "doc_id") \
-        .est_selectivity("common") is None
 
     delta = spark.createDataFrame(
         [(100 + i, "common extra") for i in range(10)],
@@ -392,12 +389,6 @@ def test_exact_and_json_gate_stats(spark, tmp_path):
         assert ("Join" in explain_query(out).text) == should_route, q
         assert sorted(r.row_id for r in out.collect()) == sorted(
             r.row_id for r in scan.collect()), q
-    # freshly-built (unsaved) indexes have no stats: route ungated
-    fresh = {"text": ("exact", build_exact_index(df, "text",
-                                                 id_col="row_id"), "row_id")}
-    out = tql.query("SELECT row_id WHERE EQUALS(text, 'boiler')",
-                    default=df, indexes=fresh)
-    assert "Join" in explain_query(out).text
     # delta append merges the sidecars by summing
     delta = spark.createDataFrame(
         [(1000 + i, "boiler", '{"type": "like"}') for i in range(100)],
@@ -448,7 +439,7 @@ def test_dataset_create_index_and_tql_rewrite(spark, sf_dir):
         assert {r.doc_id for r in ds.query(q_rare).collect()} == scan_rare
 
 
-def test_numeric_and_json_index_rewrites(spark, sf_dir):
+def test_numeric_and_json_index_rewrites(spark, sf_dir, round_trip):
     """Translator routes BETWEEN/IN through a numeric index and
     json_col['path'] == lit through a JSON index; results must equal
     the scan path."""
@@ -457,8 +448,8 @@ def test_numeric_and_json_index_rewrites(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     ev = load_table(spark, sf_dir, "events")
-    nidx = build_numeric_index(docs, "n_chars", id_col="doc_id")
-    jidx = build_json_index(ev, "props", ["k"], id_col="event_id")
+    nidx = round_trip(build_numeric_index(docs, "n_chars", id_col="doc_id"))
+    jidx = round_trip(build_json_index(ev, "props", ["k"], id_col="event_id"))
     indexes = {
         "n_chars": ("numeric", nidx, "doc_id"),
         "props": ("json", jidx, "event_id"),
@@ -506,8 +497,9 @@ def test_numeric_and_json_index_rewrites(spark, sf_dir):
     mixed = spark.createDataFrame(
         [(1, '{"n": 5}'), (2, '{"n": 5.0}')], "event_id long, props string")
     from deeplake_spark.operators.indexes import build_json_index as bji
-    midx = {"props": ("json", bji(mixed, "props", ["n"],
-                                  id_col="event_id"), "event_id")}
+    midx = {"props": ("json", round_trip(bji(mixed, "props", ["n"],
+                                             id_col="event_id")),
+                      "event_id")}
     got = tql.query("SELECT event_id WHERE props['n'] == 5.0",
                     default=mixed, indexes=midx)
     assert sorted(r.event_id for r in got.collect()) == [1, 2]
@@ -536,8 +528,10 @@ def test_ivf_save_load_partition_pruning(spark, sf_dir):
         )
         loaded = IVFIndex.load(spark, d + "/ivf")
         a = [r.vec_id for r in ivf_search(loaded, q, k=10, config=SearchConfig.balanced()).collect()]
-        b = [r.vec_id for r in ivf_search(idx, q, k=10, config=SearchConfig.balanced()).collect()]
-        assert a == b
+        assert len(a) == 10 and a[0] == 0
+        # the round trip keeps every row's cluster assignment
+        assert sorted(loaded.assignments.select("vec_id", "cluster").collect()) \
+            == sorted(idx.assignments.select("vec_id", "cluster").collect())
         # partition pruning: the pruned scan's PartitionFilters hit `cluster`
         from deeplake_spark.plans.explain import explain_query
 
@@ -598,24 +592,31 @@ def test_numeric_json_exact_save_load_roundtrip(spark, sf_dir):
         assert got == want and len(got) > 0
 
 
-def test_equals_exact_index_rewrite(spark, sf_dir):
-    """EQUALS(col, 'lit') routes through a registered exact index."""
+def test_equals_exact_index_rewrite(spark, sf_dir, round_trip):
+    """EQUALS(col, 'lit') routes through a registered exact index. 'en'
+    is a hot value, so the selectivity gate is opened for the route."""
     from deeplake_spark import tql
+    from deeplake_spark.operators.indexes import MAX_SELECTIVITY_KEY
     from deeplake_spark.plans.explain import explain_query
 
     docs = load_table(spark, sf_dir, "documents")
-    eidx = build_exact_index(docs, "lang", id_col="doc_id")
-    out = tql.query(
-        "SELECT doc_id WHERE EQUALS(lang, 'en')",
-        default=docs,
-        indexes={"lang": ("exact", eidx, "doc_id")},
-    )
-    scan = docs.filter(F.col("lang") == "en")
-    assert sorted(r.doc_id for r in out.collect()) == sorted(r.doc_id for r in scan.collect())
-    assert "Join" in explain_query(out).text
+    eidx = round_trip(build_exact_index(docs, "lang", id_col="doc_id"))
+    spark.conf.set(MAX_SELECTIVITY_KEY, "1.0")
+    try:
+        out = tql.query(
+            "SELECT doc_id WHERE EQUALS(lang, 'en')",
+            spark=spark,
+            default=docs,
+            indexes={"lang": ("exact", eidx, "doc_id")},
+        )
+        scan = docs.filter(F.col("lang") == "en")
+        assert sorted(r.doc_id for r in out.collect()) == sorted(r.doc_id for r in scan.collect())
+        assert "Join" in explain_query(out).text
+    finally:
+        spark.conf.unset(MAX_SELECTIVITY_KEY)
 
 
-def test_tql_ann_routing(spark, sf_dir):
+def test_tql_ann_routing(spark, sf_dir, round_trip):
     """TQL `ORDER BY COSINE_SIMILARITY(...) DESC LIMIT k` on an indexed
     column routes through the IVF probe (no corpus-wide sort in the
     plan) with recall >= 0.9 vs the exact scan; WHERE becomes the
@@ -625,7 +626,7 @@ def test_tql_ann_routing(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     q = list(e.filter(F.col("vec_id") == 0).select("embedding").head()[0])
-    idx = build_ivf(e, n_clusters=8, seed=42)
+    idx = round_trip(build_ivf(e, n_clusters=8, seed=42))
     indexes = {"embedding": ("clustered", idx, "vec_id")}
 
     routed = tql.query(
@@ -974,7 +975,7 @@ def test_ivf_and_pooled_delta_append(spark, sf_dir, tmp_path):
     assert got["cluster"] == 2
     # the persisted corpus size follows the append — a stale undercount
     # would make the range-coverage gate decline pruning as it grows
-    assert idx2.loaded and idx2.n_rows_est == e.count() + 1
+    assert idx2.n_rows_est == e.count() + 1
     # the probe path surfaces the new row for a query at that centroid
     from deeplake_spark.operators.similarity import SearchConfig, ivf_search
 
@@ -1229,7 +1230,7 @@ def test_ivf_pq_cluster_prune(spark, sf_dir, tmp_path):
     assert 30_000_000 in hits
 
 
-def test_tql_l2_distance_routing(spark, sf_dir):
+def test_tql_l2_distance_routing(spark, sf_dir, round_trip):
     """`ORDER BY L2_NORM(col - <vec>) ASC LIMIT k` (the tql.md Array
     Operations pattern, incl. the DATA(col, i) form) routes through the
     clustered index with an L2 rerank; recall >= 0.7 vs the exact
@@ -1242,7 +1243,7 @@ def test_tql_l2_distance_routing(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    idx = build_ivf(e, n_clusters=8, seed=42)
+    idx = round_trip(build_ivf(e, n_clusters=8, seed=42))
     q = list(e.filter(F.col("vec_id") == 10).select("embedding").head()[0])
     exact = [r.vec_id for r in topk_l2(e, "embedding", q, k=10,
                                        id_col="vec_id").collect()]
@@ -1316,7 +1317,7 @@ def test_pq_l2_metric_and_route(spark, sf_dir, tmp_path):
     assert got[0] == 10 and len(set(got) & set(exact)) / 10 >= 0.7
 
 
-def test_index_build_config_scales_effort(spark, sf_dir):
+def test_index_build_config_scales_effort(spark, sf_dir, round_trip):
     """IndexBuildConfig is functional, not decorative: build_multiplier
     scales the k-means refinement passes and the PQ training sample,
     and a fast()-built index still searches correctly."""
@@ -1337,17 +1338,18 @@ def test_index_build_config_scales_effort(spark, sf_dir):
     assert fast.build_multiplier == 0.5 and hi.build_multiplier == 2.0
     assert dl.IndexBuildConfig.default_config() == dl.IndexBuildConfig(1.0)
 
-    idx = build_ivf(e, n_clusters=4, max_iter=4, config=fast)
+    idx = round_trip(build_ivf(e, n_clusters=4, max_iter=4, config=fast))
     got = ivf_search(idx, q, k=3)
     assert got.count() == 3  # fast build still serves probes
 
-    pq = build_pq(e, m=8, nbits=4, train_limit=400, config=fast)
+    pq = round_trip(build_pq(e, m=8, nbits=4, train_limit=400, config=fast))
     assert pq_search(pq, q, k=3).count() == 3
     # fast() halves the sample; the floor keeps it >= ksub
     assert len(pq.codebooks) == 8 and len(pq.codebooks[0]) == 16
 
 
-def test_ivf_search_batch_recall_and_single_query_consistency(spark, sf_dir):
+def test_ivf_search_batch_recall_and_single_query_consistency(spark, sf_dir,
+                                                             round_trip):
     """Batched IVF kNN: one pruned corpus pass for the whole query set.
     Per-query results must match the single-query ivf_search exactly
     (same index, same nprobe), and recall vs brute force stays high."""
@@ -1363,7 +1365,7 @@ def test_ivf_search_batch_recall_and_single_query_consistency(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    idx = build_ivf(e, n_clusters=8)
+    idx = round_trip(build_ivf(e, n_clusters=8))
     cfg = SearchConfig(accuracy_factor=10, nprobe=4)
 
     queries = (e.filter(F.col("vec_id") < 6)
@@ -1394,7 +1396,7 @@ def test_ivf_search_batch_recall_and_single_query_consistency(spark, sf_dir):
     assert hits_total / (5 * len(brute_sets)) >= 0.8
 
 
-def test_ivf_search_batch_broadcast_autogate(spark, sf_dir):
+def test_ivf_search_batch_broadcast_autogate(spark, sf_dir, round_trip):
     """r14 verdict #3: with broadcast_queries unset, the routed-join
     strategy derives from a plan-time size bound vs the session's
     autoBroadcastJoinThreshold — a query BATCH broadcasts
@@ -1409,7 +1411,7 @@ def test_ivf_search_batch_broadcast_autogate(spark, sf_dir):
         SearchConfig, build_ivf, ivf_search_batch)
 
     e = load_table(spark, sf_dir, "embeddings")
-    idx = build_ivf(e, n_clusters=8)
+    idx = round_trip(build_ivf(e, n_clusters=8))
     cfg = SearchConfig(nprobe=4)
     queries = (e.filter(F.col("vec_id") < 6)
                .select(F.col("vec_id").alias("qid"),
@@ -1439,7 +1441,7 @@ def test_ivf_search_batch_broadcast_autogate(spark, sf_dir):
         spark.conf.set(key, old)
 
 
-def test_ann_recall_monotone_across_presets(spark, sf_dir):
+def test_ann_recall_monotone_across_presets(spark, sf_dir, round_trip):
     """Reference knob semantics (cpp/query_core/search_config.hpp:31-96;
     quality-test style py_tests/test_embedding_quality.py): raising the
     SearchConfig preset fast -> balanced -> default -> high_accuracy
@@ -1470,9 +1472,9 @@ def test_ann_recall_monotone_across_presets(spark, sf_dir):
                    .collect()]
              for qid, q in queries.items()}
 
-    ivf = build_ivf(e, n_clusters=8, seed=42)
-    quant = build_quantized(e, "embedding", "vec_id")
-    pq = build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42)
+    ivf = round_trip(build_ivf(e, n_clusters=8, seed=42))
+    quant = round_trip(build_quantized(e, "embedding", "vec_id"))
+    pq = round_trip(build_pq(e, "embedding", "vec_id", m=8, nbits=4, seed=42))
 
     searchers = {
         "ivf": lambda q, c: ivf_search(ivf, q, k=10, config=c),
@@ -1495,7 +1497,7 @@ def test_ann_recall_monotone_across_presets(spark, sf_dir):
         assert curve[-1] >= curve[0], f"{kind} flat-at-zero curve {curve}"
 
 
-def test_maxsim_recall_monotone_across_presets(spark, sf_dir):
+def test_maxsim_recall_monotone_across_presets(spark, sf_dir, round_trip):
     """Same preset-monotonicity contract for the pooled MAXSIM index
     (the prefilter width is k*accuracy_factor, so candidate prefixes
     are nested across presets)."""
@@ -1517,7 +1519,7 @@ def test_maxsim_recall_monotone_across_presets(spark, sf_dir):
     ).cache()
     qm = [list(r.embedding)
           for r in e.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()]
-    idx = build_pooled_maxsim(docs, "mat", "doc_id")
+    idx = round_trip(build_pooled_maxsim(docs, "mat", "doc_id"))
 
     maxsim = maxsim_pandas()
     qm_lit = F.array(*[F.array(*[F.lit(float(v)) for v in row]) for row in qm])
@@ -1546,7 +1548,6 @@ def test_inverted_probe_prunes_term_buckets(spark, sf_dir, tmp_path):
 
     from deeplake_spark.operators.indexes import (
         InvertedIndex,
-        bm25_via_index,
         build_inverted_index,
     )
 
@@ -1565,15 +1566,6 @@ def test_inverted_probe_prunes_term_buckets(spark, sf_dir, tmp_path):
         F.array_contains(F.split(F.lower("text"), r"\s+"), "spark"))
         .collect()}
     assert {r.row_id for r in probe.collect()} == want and want
-
-    # BM25 goes through the same pruned path and ranks identically to a
-    # fresh (unsaved, bucketless) index
-    fresh = build_inverted_index(docs)
-    got = [(r.row_id, r.bm25) for r in
-           bm25_via_index(idx, ["spark", "fast"], k=10).collect()]
-    ref = [(r.row_id, r.bm25) for r in
-           bm25_via_index(fresh, ["spark", "fast"], k=10).collect()]
-    assert got == ref
 
 
 def test_corrupt_stats_sidecars_load_stats_less(spark, tmp_path):
@@ -1799,23 +1791,36 @@ def test_contains_route_skips_ranges_when_coverage_high(spark,
         spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
 
 
-def test_fresh_index_route_runs_no_plan_time_job(spark, monkeypatch):
-    """A FRESHLY BUILT (unsaved) index's probe lineage is a corpus
-    tokenize: summarizing it at plan time would cost what it saves.
-    contains_via_index must not trigger the range job there."""
-    import deeplake_spark.operators.indexes as ix
+def test_unsaved_build_is_refused_by_tql_and_probes(spark, round_trip):
+    """Indexes are probed only after a save and a load (the reference
+    builds at ingest and probes what it persisted): an unsaved build
+    handed to tql.query(indexes=) or to a probe function raises one
+    ValueError naming the INDEX_KINDS save/load fix, instead of
+    probing the build's corpus lineage. The same builds, saved and
+    loaded back, answer."""
+    from deeplake_spark import tql
+    from deeplake_spark.operators.similarity import build_pq, pq_search
 
     df = spark.createDataFrame(
         [(i, "alpha beta" + (" rare" if i == 3 else "")) for i in range(30)],
         "doc_id long, text string")
-    idx = build_inverted_index(df, "text", "doc_id")
+    q = "SELECT doc_id WHERE CONTAINS(text, 'rare')"
+    inv = build_inverted_index(df, "text", "doc_id")
+    with pytest.raises(ValueError, match="INDEX_KINDS"):
+        tql.query(q, default=df, indexes={"text": ("inverted", inv, "doc_id")})
 
-    def boom(*a, **kw):
-        raise AssertionError("plan-time range job on a fresh index")
+    e = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    qv = [1.0, 1.0, 0.0, 0.5]
+    pq = build_pq(e, "embedding", "vec_id", m=2, nbits=2)
+    with pytest.raises(ValueError, match="INDEX_KINDS"):
+        pq_search(pq, qv, k=3)
 
-    monkeypatch.setattr(ix, "probe_id_ranges", boom)
-    out = ix.contains_via_index(df, idx, "rare")
-    assert [r.doc_id for r in out.collect()] == [3]
+    routed = tql.query(q, default=df, indexes={
+        "text": ("inverted", round_trip(inv), "doc_id")})
+    assert [r.doc_id for r in routed.collect()] == [3]
+    assert pq_search(round_trip(pq), qv, k=3).count() == 3
 
 
 def test_range_prune_conf_disables(spark, clustered_docs):
@@ -1872,14 +1877,12 @@ def test_numeric_between_route_pushes_probe_ranges(spark, tmp_path):
         spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
 
 
-def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path,
-                                                    monkeypatch):
+def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path):
     """A LOADED vector index's exact-rerank scan and the TQL top-k
     fetch-back join both carry pushed row-id range filters when the
     winners cluster in id space (content drift: similar vectors were
     ingested together) — the reference applies its bitmap→chunk reads
-    to ANN probes too (index_holder.hpp:37-40). A FRESH (unsaved)
-    index must run no plan-time range job at all."""
+    to ANN probes too (index_holder.hpp:37-40)."""
     from pyspark.sql import functions as F
 
     from deeplake_spark import tql
@@ -1903,7 +1906,7 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path,
     ip = str(tmp_path / "pqidx")
     build_pq(d, "embedding", "vec_id", m=4, nbits=4).save(ip)
     idx = PQIndex.load(spark, ip, source=d)
-    assert idx.loaded and idx.n_rows_est == n
+    assert idx.n_rows_est == n
     q = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
     tql_q = ("SELECT vec_id, COSINE_SIMILARITY(embedding, ?) AS score "
              "ORDER BY score DESC LIMIT 10")
@@ -1918,22 +1921,6 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path,
             d, "embedding", q, k=10, id_col="vec_id").collect()}
         assert got == exact
         assert all(lo <= v < hi for v in got)
-
-        # fresh (unsaved) index: the candidate lineage re-derives the
-        # corpus — no plan-time range job may run
-        import deeplake_spark.operators.indexes as ix
-
-        fresh = build_pq(d, "embedding", "vec_id", m=4, nbits=4)
-        assert not fresh.loaded
-
-        def boom(*a, **kw):
-            raise AssertionError("plan-time range job on a fresh index")
-
-        monkeypatch.setattr(ix, "probe_id_ranges", boom)
-        out2 = tql.query(tql_q, default=d, params=[q],
-                         indexes={"embedding": ("pq", fresh, "vec_id")})
-        assert {r.vec_id for r in out2.collect()} == exact
-        monkeypatch.undo()
 
         # the L2 spelling prunes identically (review follow-up: the
         # lane initially missed the fetch-back conversion)
@@ -2515,7 +2502,7 @@ def test_route_clusters_pandas_null_query_routes_nowhere(spark):
     assert rows == {0: [0], 1: []}
 
 
-def test_r14_similarity_review_guards(spark):
+def test_r14_similarity_review_guards(spark, round_trip):
     """r14 similarity.py review regressions: candidates with ANY column
     name work on the quantized/pooled lanes (the ivf_search contract);
     bands > dim raises a clear error instead of an executor ANSI crash;
@@ -2532,7 +2519,7 @@ def test_r14_similarity_review_guards(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = [1.0, 0.5, -0.25, 0.0, 0.75, -1.0, 0.25, 0.5]
 
-    qidx = build_quantized(df, vec_col="embedding", id_col="vec_id")
+    qidx = round_trip(build_quantized(df, vec_col="embedding", id_col="vec_id"))
     cand = df.filter(F.col("vec_id") < 15).select(
         F.col("vec_id").alias("my_ids"))  # deliberately odd name
     got = quantized_index_search(qidx, q, k=5, candidates=cand).collect()
@@ -2543,7 +2530,8 @@ def test_r14_similarity_review_guards(spark):
               for j in range(3)]) for i in range(10)]
         + [(99, [])],  # empty matrix must not fail the build
         "doc_id long, mat array<array<double>>")
-    pidx = build_pooled_maxsim(mats, matrix_col="mat", id_col="doc_id")
+    pidx = round_trip(build_pooled_maxsim(mats, matrix_col="mat",
+                                          id_col="doc_id"))
     assert pidx.pooled.count() == 10  # the empty-matrix doc stays out
     qm = [[1.0, 0.0, -1.0, 0.5]]
     got = maxsim_search(pidx, qm, k=3,
@@ -2562,7 +2550,7 @@ def test_r14_similarity_review_guards(spark):
     assert sorted(r.vec_id for r in out.collect()) == [0, 1]  # no NULL row
 
 
-def test_candidates_multicolumn_carrying_id_col(spark):
+def test_candidates_multicolumn_carrying_id_col(spark, round_trip):
     """r14 advice #4: a MULTI-column candidates relation that carries
     the index id col in a non-first position must prune correctly
     (select the id col — renaming the first column would raise a
@@ -2578,8 +2566,8 @@ def test_candidates_multicolumn_carrying_id_col(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, tag string")
     q = [1.0, 0.5, -0.25, 0.0, 0.75, -1.0, 0.25, 0.5]
-    qidx = build_quantized(df.select("vec_id", "embedding"),
-                           vec_col="embedding", id_col="vec_id")
+    qidx = round_trip(build_quantized(df.select("vec_id", "embedding"),
+                                      vec_col="embedding", id_col="vec_id"))
     # id col in NON-first position, extra columns around it
     wide = df.filter(F.col("vec_id") < 12).select("tag", "vec_id",
                                                   "embedding")

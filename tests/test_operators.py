@@ -42,7 +42,7 @@ def test_ivf_build_plan_scales_with_corpus():
     assert _ivf_build_plan(30_000, 16) == (16, 20_000)
 
 
-def test_ivf_auto_nlist_build_and_search(spark, sf_dir):
+def test_ivf_auto_nlist_build_and_search(spark, sf_dir, round_trip):
     """n_clusters=0 auto-sizes from the corpus and the sampled fit
     still yields a searchable index (exact hit present at full probe)."""
     from deeplake_spark.operators.similarity import (
@@ -50,7 +50,7 @@ def test_ivf_auto_nlist_build_and_search(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
-    index = build_ivf(e, n_clusters=0, seed=42)
+    index = round_trip(build_ivf(e, n_clusters=0, seed=42))
     assert len(index.centroids) == _ivf_build_plan(n, 0)[0]
     q = e.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     exact = set(_exact_topk(spark, sf_dir, k=10))
@@ -60,13 +60,13 @@ def test_ivf_auto_nlist_build_and_search(spark, sf_dir):
     assert len(exact & approx) == 10  # full probe == exact
 
 
-def test_ivf_recall(spark, sf_dir):
+def test_ivf_recall(spark, sf_dir, round_trip):
     from deeplake_spark.operators.similarity import SearchConfig, build_ivf, ivf_search
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     exact = set(_exact_topk(spark, sf_dir, k=10))
-    index = build_ivf(e, n_clusters=8, seed=42)
+    index = round_trip(build_ivf(e, n_clusters=8, seed=42))
     approx = {r.vec_id for r in ivf_search(index, list(q), k=10, config=SearchConfig.high_accuracy()).collect()}
     recall = len(exact & approx) / 10
     assert recall >= 0.9, f"IVF recall {recall} < 0.9"
@@ -260,7 +260,7 @@ def test_simhash_near_dup_property(spark):
     assert ham(got[0], got[1]) <= 16
 
 
-def test_pooled_maxsim_recall(spark, sf_dir):
+def test_pooled_maxsim_recall(spark, sf_dir, round_trip):
     """Pooled-prefilter MAXSIM must recover the exact-MAXSIM top-k
     (reference PooledQuantized two-stage plan)."""
     from deeplake_spark.operators.similarity import (
@@ -282,7 +282,7 @@ def test_pooled_maxsim_recall(spark, sf_dir):
     qrows = e.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
     qm = [list(r.embedding) for r in qrows]
 
-    idx = build_pooled_maxsim(docs, "mat", "doc_id")
+    idx = round_trip(build_pooled_maxsim(docs, "mat", "doc_id"))
     approx = [r.doc_id for r in maxsim_search(idx, qm, k=5, config=SearchConfig.high_accuracy()).collect()]
 
     maxsim = maxsim_pandas()
@@ -942,7 +942,7 @@ def test_dsir_select_enriches_target_like_docs(spark):
     assert other != ids
 
 
-def test_knn_label_propagation_lanes_agree(spark, sf_dir):
+def test_knn_label_propagation_lanes_agree(spark, sf_dir, round_trip):
     """The IVF lane of knn_label_propagation at FULL probe must predict
     the same labels as the exact lane (index built over the labeled
     subset only, so neighbor sets coincide)."""
@@ -958,7 +958,8 @@ def test_knn_label_propagation_lanes_agree(spark, sf_dir):
     exact = {r.vec_id: (r.pred_label, r.votes)
              for r in knn_label_propagation(masked, k=5).collect()}
     labeled = masked.filter(F.col("label").isNotNull())
-    idx = build_ivf(labeled, "embedding", "vec_id", n_clusters=8, seed=42)
+    idx = round_trip(build_ivf(labeled, "embedding", "vec_id", n_clusters=8,
+                               seed=42))
     routed = {r.vec_id: (r.pred_label, r.votes)
               for r in knn_label_propagation(
                   masked, k=5, index=idx,
@@ -1796,7 +1797,7 @@ def test_track_survives_cap_eviction_of_an_equal_plan(spark):
         dd.release_cached()
 
 
-def test_hard_negative_mining_lanes_agree(spark, sf_dir):
+def test_hard_negative_mining_lanes_agree(spark, sf_dir, round_trip):
     """The IVF lane of hard_negative_mining at FULL probe must return
     the exact lane's negatives (same ids, ranks, scores)."""
     from pyspark.sql import functions as F2
@@ -1811,7 +1812,7 @@ def test_hard_negative_mining_lanes_agree(spark, sf_dir):
         F2.col("label").alias("qlabel"))
     exact = {(r.qid, r.rank): (r.vec_id, r.score)
              for r in hard_negative_mining(e, q, k=4).collect()}
-    idx = build_ivf(e, n_clusters=4, seed=7)
+    idx = round_trip(build_ivf(e, n_clusters=4, seed=7))
     full = SearchConfig(accuracy_factor=20, nprobe=4)  # probes all
     routed = {(r.qid, r.rank): (r.vec_id, r.score)
               for r in hard_negative_mining(e, q, k=4, index=idx,
@@ -1931,7 +1932,7 @@ def test_mmr_select_diversifies_planted_near_dups(spark):
     assert abs(out[0].rel - round(cos(rows[0][1], q), 6)) < 2e-6
 
 
-def test_mmr_select_index_routed_pool(spark, sf_dir):
+def test_mmr_select_index_routed_pool(spark, sf_dir, round_trip):
     """r14 verdict #6: mmr_select(index=) rides ivf_search for the
     top-pool cut (nprobe-pruned cluster scan instead of a corpus
     TakeOrdered — the v26/v30 funnel). At FULL probe the index pool
@@ -1949,7 +1950,7 @@ def test_mmr_select_index_routed_pool(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     qv = [float(v) for v in
           e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    idx = build_ivf(e, n_clusters=8)
+    idx = round_trip(build_ivf(e, n_clusters=8))
     exact = mmr_select(e, "embedding", qv, k=6, pool=20).collect()
     full = SearchConfig(nprobe=8, accuracy_factor=100)
     routed = mmr_select(e, "embedding", qv, k=6, pool=20,

@@ -634,18 +634,25 @@ def _scan_of(spark, root, n_files):
 
 class _CountedGateway:
     """Counts Py4J round trips by wrapping the gateway client's
-    send_command (the way perfbench/trace.py counts them)."""
+    send_command (the way perfbench/trace.py counts them). Detach
+    commands are not counted: JavaObject finalizers send one per
+    collected object whenever Python's GC runs inside the window, so
+    they measure the GC's timing, not the code under test."""
 
     def __init__(self, spark):
         self.client = spark.sparkContext._gateway._gateway_client
         self.calls = 0
 
     def __enter__(self):
-        self.send = send = self.client.send_command
+        from py4j import protocol as proto
 
-        def counted(*args, **kwargs):
-            self.calls += 1
-            return send(*args, **kwargs)
+        self.send = send = self.client.send_command
+        detach = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+        def counted(command, *args, **kwargs):
+            if not command.startswith(detach):
+                self.calls += 1
+            return send(command, *args, **kwargs)
 
         self.client.send_command = counted
         return self

@@ -194,7 +194,8 @@ def test_stream_near_dup_matches_batch_banding(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_streaming_inverted_index_matches_batch_build(spark, sf_dir, tmp_path):
+def test_streaming_inverted_index_matches_batch_build(spark, sf_dir, tmp_path,
+                                                     round_trip):
     """foreachBatch index maintenance: after streaming a corpus in
     micro-batches, the accumulated delta index must probe and BM25-rank
     exactly like one batch-built index over the full corpus (merged
@@ -223,7 +224,7 @@ def test_streaming_inverted_index_matches_batch_build(spark, sf_dir, tmp_path):
     q.awaitTermination()
 
     streamed = InvertedIndex.load(spark, str(tmp_path / "idx"))
-    batch = build_inverted_index(spark.read.parquet(corpus_dir))
+    batch = round_trip(build_inverted_index(spark.read.parquet(corpus_dir)))
 
     # same corpus stats after the weighted merge of per-delta rows
     s_got, s_want = streamed.stats.head(), batch.stats.head()
@@ -423,7 +424,7 @@ def test_stream_near_dup_unique_pairs_and_exact_verify(spark, sf_dir, tmp_path):
     assert {p for p, j in verified.items() if j >= 0.9 + 5e-7} <= thr_pairs
 
 
-def test_stream_ann_search_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_ann_search_matches_batch(spark, sf_dir, tmp_path, round_trip):
     """Streaming ANN (both lanes) must return exactly what the batch
     index probe returns for the same queries: the declarative lane
     (stream-static cluster join + mapInPandas partial top-k +
@@ -451,7 +452,7 @@ def test_stream_ann_search_matches_batch(spark, sf_dir, tmp_path):
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    index = build_ivf(e, n_clusters=8, seed=42)
+    index = round_trip(build_ivf(e, n_clusters=8, seed=42))
     index.assignments.cache()
     cfg = SearchConfig.balanced()
     qvecs = {r.vec_id: list(r.embedding)
@@ -602,7 +603,7 @@ def test_stream_ann_index_append_mid_stream(spark, tmp_path):
     assert os.path.isdir(idx_path)
 
 
-def test_stream_ann_output_keyed_per_window(spark, sf_dir):
+def test_stream_ann_output_keyed_per_window(spark, sf_dir, round_trip):
     """A qid queried in TWO different windows emits two top-k sets;
     `win_start` in the output schema is what keeps them apart — without
     it the sets collide rank-for-rank indistinguishably (round-8
@@ -616,7 +617,7 @@ def test_stream_ann_output_keyed_per_window(spark, sf_dir):
     from deeplake_spark.streaming.vectors import stream_ann_search
 
     e = load_table(spark, sf_dir, "embeddings")
-    index = build_ivf(e, n_clusters=4, seed=42)
+    index = round_trip(build_ivf(e, n_clusters=4, seed=42))
     qv = [float(x) for x in e.limit(1).head().embedding]
     t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
     queries = spark.createDataFrame(

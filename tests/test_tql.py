@@ -525,25 +525,33 @@ def test_tql_options_feature_gates(spark, tables):
         tql.query("SELECT FROM WHERE", default=d, options=po)
 
 
-def test_tql_options_use_index_forces_linear_plan(spark, sf_dir):
+def test_tql_options_use_index_forces_linear_plan(spark, sf_dir, round_trip):
     """use_index=False produces the non-routed plan: same rows, no
-    index-probe join in the physical plan."""
-    from deeplake_spark.operators.indexes import build_numeric_index
+    index-probe join in the physical plan. The range is not selective,
+    so the selectivity gate is opened for the routed side."""
+    from deeplake_spark.operators.indexes import (
+        MAX_SELECTIVITY_KEY,
+        build_numeric_index,
+    )
     from deeplake_spark.plans.explain import explain_query
     from deeplake_spark.tql import Options
 
     docs = load_table(spark, sf_dir, "documents")
-    nidx = build_numeric_index(docs, "n_chars", id_col="doc_id")
+    nidx = round_trip(build_numeric_index(docs, "n_chars", id_col="doc_id"))
     indexes = {"n_chars": ("numeric", nidx, "doc_id")}
     q = "SELECT doc_id WHERE n_chars BETWEEN 100 AND 200"
 
-    routed = tql.query(q, default=docs, indexes=indexes)
-    linear = tql.query(q, default=docs, indexes=indexes,
-                       options=Options(allow_selection_list=True,
-                                       use_index=False))
-    assert ids(routed, "doc_id") == ids(linear, "doc_id")
-    assert "Join" in explain_query(routed).text
-    assert "Join" not in explain_query(linear).text
+    spark.conf.set(MAX_SELECTIVITY_KEY, "1.0")
+    try:
+        routed = tql.query(q, spark=spark, default=docs, indexes=indexes)
+        linear = tql.query(q, spark=spark, default=docs, indexes=indexes,
+                           options=Options(allow_selection_list=True,
+                                           use_index=False))
+        assert ids(routed, "doc_id") == ids(linear, "doc_id")
+        assert "Join" in explain_query(routed).text
+        assert "Join" not in explain_query(linear).text
+    finally:
+        spark.conf.unset(MAX_SELECTIVITY_KEY)
 
 
 def test_is_valid_malformed_int_tokens():
@@ -577,7 +585,8 @@ def test_row_number_is_shared_source_offset(spark, tables):
     assert sorted(r.rn for r in lo) == [0, 1, 2]
 
 
-def test_row_number_with_routed_where_matches_linear(spark, sf_dir):
+def test_row_number_with_routed_where_matches_linear(spark, sf_dir,
+                                                    round_trip):
     """r15 review: an index-routed WHERE conjunct must not change
     ROW_NUMBER results — numbering happens over the PRE-ROUTING
     source, so routed and linear plans agree row-for-row (the
@@ -586,7 +595,7 @@ def test_row_number_with_routed_where_matches_linear(spark, sf_dir):
     from deeplake_spark.tql import Options
 
     docs = load_table(spark, sf_dir, "documents")
-    nidx = build_numeric_index(docs, "n_chars", id_col="doc_id")
+    nidx = round_trip(build_numeric_index(docs, "n_chars", id_col="doc_id"))
     indexes = {"n_chars": ("numeric", nidx, "doc_id")}
     q = ("SELECT doc_id, ROW_NUMBER() AS rn "
          "WHERE n_chars BETWEEN 100 AND 200 AND ROW_NUMBER() > 10")

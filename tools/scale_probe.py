@@ -697,6 +697,18 @@ def _noised_embeddings(spark, kk: int) -> str:
     return path
 
 
+def _saved_ivf(spark, asg, cents, name: str):
+    """The hash-assigned IVF index (`asg` carries `cluster`) saved under
+    WORK/name and loaded back — probes take saved indexes only."""
+    from deeplake_spark.operators.indexes import INDEX_KINDS
+    from deeplake_spark.operators.similarity import IVFIndex
+
+    spec, path = INDEX_KINDS["clustered"], os.path.join(WORK, name)
+    spec.save(IVFIndex(assignments=asg, centroids=cents,
+                       vec_col="embedding", id_col="vec_id"), path)
+    return spec.load(spark, path)
+
+
 def knn_section(spark):
     """knn_label_propagation IVF-lane ladder (round-12 VERDICT #5):
     the registered v25 query is the EXACT oracle arm — broadcast NLJ,
@@ -719,7 +731,7 @@ def knn_section(spark):
     Fixed nprobe as nlist grows is how IVF runs at scale; the preset
     widening is a RECALL knob for small indexes, not a scale default."""
     from deeplake_spark.operators.similarity import (
-        IVFIndex, SearchConfig, knn_label_propagation)
+        SearchConfig, knn_label_propagation)
 
     base = spark.read.parquet(os.path.join(TESTDATA, "embeddings.parquet"))
     base_n = base.count()
@@ -744,8 +756,7 @@ def knn_section(spark):
             .limit(nlist).collect())]
         asg = rep.withColumn(
             "cluster", F.pmod(F.hash("vec_id"), F.lit(nlist)).cast("int"))
-        idx = IVFIndex(assignments=asg, centroids=cents,
-                       vec_col="embedding", id_col="vec_id")
+        idx = _saved_ivf(spark, asg, cents, f"knn_ivf_x{kk}")
         best = None
         for _ in range(2):
             t0 = time.perf_counter()
@@ -774,7 +785,7 @@ def hnm_section(spark):
     cluster_size x over-fetch (all bounded), so wall time should stay
     far below the corpus factor K."""
     from deeplake_spark.operators.similarity import (
-        IVFIndex, SearchConfig, hard_negative_mining)
+        SearchConfig, hard_negative_mining)
 
     base = spark.read.parquet(os.path.join(TESTDATA, "embeddings.parquet"))
     base_n = base.count()
@@ -797,8 +808,7 @@ def hnm_section(spark):
             .limit(nlist).collect())]
         asg = corpus.withColumn(
             "cluster", F.pmod(F.hash("vec_id"), F.lit(nlist)).cast("int"))
-        idx = IVFIndex(assignments=asg, centroids=cents,
-                       vec_col="embedding", id_col="vec_id")
+        idx = _saved_ivf(spark, asg, cents, f"hnm_ivf_x{kk}")
         best = None
         for _ in range(2):
             t0 = time.perf_counter()
@@ -1007,7 +1017,7 @@ def v30_section(spark):
     with the cap hit, the probe is ~the full corpus pass (the honest
     ceiling — same as the reference's full-index roaring prefilter)."""
     from deeplake_spark.operators.similarity import (
-        IVFIndex, SearchConfig, _widened_nprobe, ivf_search)
+        SearchConfig, _widened_nprobe, ivf_search)
 
     kk = 64
     path = _noised_embeddings(spark, kk)
@@ -1018,8 +1028,7 @@ def v30_section(spark):
         rep.orderBy("vec_id").select("embedding").limit(nlist).collect())]
     asg = rep.select("vec_id", "embedding").withColumn(
         "cluster", F.pmod(F.hash("vec_id"), F.lit(nlist)).cast("int"))
-    idx = IVFIndex(assignments=asg, centroids=cents,
-                   vec_col="embedding", id_col="vec_id")
+    idx = _saved_ivf(spark, asg, cents, "v30_ivf")
     qv = [float(v) for v in rep.filter(F.col("vec_id") == 0)
           .head()["embedding"]]
     cfg = SearchConfig(accuracy_factor=0, nprobe=8)
