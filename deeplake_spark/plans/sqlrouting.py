@@ -316,25 +316,18 @@ def _term_probe_ranges(spark: SparkSession, view: str, terms):
 
 def _coverage_gated(spark: SparkSession, ranges, view: str):
     """Drop ranges that span ~the corpus (nothing for parquet stats to
-    skip; the per-row OR would be pure overhead) — same conf'd gate as
-    the routed lanes. Corpus size from the ``{view}__stats`` sidecar
-    view; unknown size keeps the ranges (scatter already bounded)."""
-    from deeplake_spark.operators.indexes import (
-        DEFAULT_MAX_RANGE_COVERAGE,
-        MAX_RANGE_COVERAGE_KEY,
-    )
+    skip; the per-row OR would be pure overhead) — the routed lanes'
+    own coverage gate (indexes._coverage_gate) under the same conf.
+    Corpus size from the ``{view}__stats`` sidecar view, which
+    register_index_views registers with the postings the ranges came
+    from."""
+    from deeplake_spark.operators.indexes import _coverage_gate, _range_gates
 
-    if not ranges:
+    gates = _range_gates(spark)
+    if not ranges or gates is None:
         return None
-    try:
-        n = int(spark.table(f"{view}__stats").head()["n_docs"])
-        cov = float(spark.conf.get(MAX_RANGE_COVERAGE_KEY,
-                                   str(DEFAULT_MAX_RANGE_COVERAGE)))
-    except Exception:
-        return ranges
-    if n > 0 and sum(hi - lo + 1 for lo, hi in ranges) >= cov * n:
-        return None
-    return ranges
+    n = spark.table(f"{view}__stats").head()["n_docs"]
+    return _coverage_gate(ranges, n, gates[2])
 
 
 def _fetchback_clause(view: str, fetch_cols, id_col: str,
@@ -436,8 +429,7 @@ def _hybrid_fetch_ranges(spark: SparkSession, view: str, terms,
     (the BM25 term-probe side alone is unsound for vector-lane
     winners). test_sql_fetchback_execute_routed pins the parity."""
     from deeplake_spark.operators.indexes import (
-        DEFAULT_MAX_RANGES,
-        MAX_RANGES_KEY,
+        _range_gates,
         coalesce_id_ranges,
         routed_scan_ranges,
     )
@@ -475,15 +467,11 @@ def _hybrid_fetch_ranges(spark: SparkSession, view: str, terms,
                 spark.conf.set(ENABLED_KEY, prev)
     except Exception:
         return None
-    if not vec_rs:
+    gates = _range_gates(spark)
+    if not vec_rs or gates is None:
         return None
-    try:
-        max_ranges = int(spark.conf.get(MAX_RANGES_KEY,
-                                        str(DEFAULT_MAX_RANGES)))
-    except Exception:
-        max_ranges = DEFAULT_MAX_RANGES
     return _coverage_gated(
-        spark, coalesce_id_ranges(probe_rs + vec_rs, max_ranges), view)
+        spark, coalesce_id_ranges(probe_rs + vec_rs, gates[1]), view)
 
 
 def hybrid_search_sql(view: str, terms, vec, *, k: int = 10,

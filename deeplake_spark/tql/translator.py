@@ -21,7 +21,7 @@ Dialect lowering highlights (SURVEY §4.3.5):
 
 from __future__ import annotations
 
-from typing import Mapping
+from typing import Callable, Mapping, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,6 +115,30 @@ _ND_REDUCERS = frozenset(
 )
 
 
+def _conjuncts(where: ast.Node) -> list[ast.Node]:
+    """The AND-separated conjuncts of a WHERE tree, left to right."""
+    if isinstance(where, ast.BinaryOp) and where.op == "AND":
+        return _conjuncts(where.left) + _conjuncts(where.right)
+    return [where]
+
+
+class _Route(NamedTuple):
+    """One WHERE conjunct a registered index serves
+    (Translator._match_route)."""
+
+    kind: str
+    index: object
+    id_col: str
+    #: estimated fraction of rows the conjunct keeps; None = no stats
+    #: (the selectivity gate never declines it)
+    est: float | None
+    #: corpus rows the corpus floor checks; None for the floor-exempt
+    #: CONTAINS and JSON shapes (and for an index without stats)
+    corpus: int | None
+    #: the semijoin rewrite of a frame
+    apply: Callable[[DataFrame], DataFrame]
+
+
 def _uses_rownum(node) -> bool:
     """True when the AST subtree contains a ROW_NUMBER() call — used to
     precompute it as a partition-offset column before expression
@@ -157,13 +181,13 @@ class Translator:
         self.options = options if options is not None else Options.allow_everything()
         if self.options.search_config is not None:
             search_config = self.options.search_config
-        #: column name → (kind, index, id_col) [legacy 2-tuple = inverted]:
-        #: enables the §4.3 rewrites (CONTAINS/BETWEEN/IN/JSON semijoins,
-        #: ORDER BY cosine LIMIT k → IVF probe). Saved-and-loaded
-        #: indexes only.
+        #: column name → (kind, index, id_col), kind an INDEX_KINDS
+        #: name: enables the §4.3 rewrites (CONTAINS/EQUALS/BETWEEN/IN/
+        #: JSON semijoins, ORDER BY score LIMIT k → index probe).
+        #: Saved-and-loaded indexes only.
         self.indexes = dict(indexes or {})
-        for meta in self.indexes.values():
-            require_saved(meta[-2])
+        for _, idx, _ in self.indexes.values():
+            require_saved(idx)
         #: SearchConfig recall/latency knobs for the ANN fast path
         self.search_config = search_config
         #: FuncCall routed by _try_ann_route whose score is carried as
@@ -377,22 +401,11 @@ class Translator:
         return projected
 
     def _apply_where(self, where: ast.Node, df: DataFrame) -> DataFrame:
-        """WHERE with index fast paths: CONTAINS(col, 'kw') conjuncts on
-        indexed columns become posting-table semijoins (the reference's
-        index_holder routing, query_core/index_holder.hpp:18-43 /
-        SURVEY §4.3.1); everything else stays a Catalyst filter."""
-        from deeplake_spark.operators.indexes import contains_via_index
-
-        conjuncts: list[ast.Node] = []
-
-        def split(n: ast.Node):
-            if isinstance(n, ast.BinaryOp) and n.op == "AND":
-                split(n.left)
-                split(n.right)
-            else:
-                conjuncts.append(n)
-
-        split(where)
+        """WHERE with index fast paths: conjuncts a registered index
+        serves (_match_route) become side-table semijoins (the
+        reference's index_holder routing, query_core/index_holder.hpp:
+        18-43 / SURVEY §4.3.1); everything else stays a Catalyst
+        filter."""
         # ROW_NUMBER in WHERE numbers the PRE-ROUTING source: routed
         # semijoins drop rows, and numbering the survivors would
         # diverge from the stock plan (r15 review — the use_index
@@ -401,7 +414,7 @@ class Translator:
         if not had_rownum_entry and _uses_rownum(where):
             df = self._with_rownum(df)
         residual: list[ast.Node] = []
-        for c in conjuncts:
+        for c in _conjuncts(where):
             handled = (
                 self._try_index_rewrite(c, df) if self.options.use_index else None
             )
@@ -437,122 +450,58 @@ class Translator:
         order = "_row_id" if "_row_id" in df.columns else None
         return with_row_id(df, order_by=order, col_name="__tql_rownum")
 
-    def _index_entry(self, col: str, kind: str):
-        """Registry decode shared by the route rewrite AND the
-        selectivity estimator (they must never diverge on which index
-        serves a predicate shape). Returns (index, id_col) or None."""
-        meta = self.indexes.get(col)
-        if meta is None:
-            return None
-        # legacy 2-tuple = inverted; 3-tuple = (kind, index, id_col)
-        if len(meta) == 2:
-            return (meta[0], meta[1]) if kind == "inverted" else None
-        k, idx, id_col = meta
-        return (idx, id_col) if k == kind else None
-
-    def _try_index_rewrite(self, c: ast.Node, df: DataFrame) -> DataFrame | None:
-        """Route one WHERE conjunct through a registered index if its
-        shape matches (the reference's probe extraction: CONTAINS /
+    def _match_route(self, c: ast.Node) -> _Route | None:
+        """The one matcher of the WHERE shapes a registered index
+        serves (the reference's probe extraction: CONTAINS / EQUALS /
         BETWEEN / IN / JSON-path equality —
         inverted_index_search_info.hpp:19-44,
-        duckdb_deeplake_scan.cpp:209-279). Returns the semijoined
-        DataFrame, or None when no index applies."""
+        duckdb_deeplake_scan.cpp:209-279, index_search.cpp:172-199).
+        The route rewrite and the selectivity estimator both read its
+        record, so they cannot diverge on which index serves a shape.
+        None when the conjunct has no such shape or its column has no
+        index of the matching kind."""
         from deeplake_spark.operators.indexes import (
             contains_via_index,
-            corpus_floor_ok,
             routed_semijoin,
         )
 
-        entry = self._index_entry
-        spark = df.sparkSession
-
-        def semijoin(ids, id_col, n_est=None):
-            # probe row-id ranges pushed onto the corpus scan first
-            # (row-group skip — the reference's bitmap→chunk reads);
-            # the LeftSemi on top keeps the rewrite exact
-            return routed_semijoin(df, ids, id_col, n_rows_est=n_est)
-
-        def gate_ok(est) -> bool:
-            """Selectivity cost gate (the reference's pg_costestimate,
-            index_search.cpp:316-420): when the index's persisted stats
-            estimate the predicate to keep MORE than the conf'd
-            fraction of rows, the posting/value semijoin would shuffle
-            ~the corpus to avoid a filter Parquet evaluates in place —
-            leave the plan stock. est None = no stats, never gate."""
-            if est is None:
-                return True
-            return est <= self._route_gate()
-
-        # CONTAINS(col, 'kw') → inverted probe
+        lit = ast.Literal
         if (
             isinstance(c, ast.FuncCall)
-            and c.name.upper() == "CONTAINS"
+            and c.name.upper() in ("CONTAINS", "EQUALS")
             and len(c.args) == 2
             and isinstance(c.args[0], ast.ColumnRef)
-            and isinstance(c.args[1], ast.Literal)
+            and isinstance(c.args[1], lit)
         ):
-            m = entry(c.args[0].name, "inverted")
-            if m and gate_ok(m[0].est_selectivity(str(c.args[1].value))):
-                return contains_via_index(df, m[0], str(c.args[1].value), id_col=m[1])
-        # EQUALS(col, 'lit') → exact digest probe (index_search.cpp:172-199)
-        if (
-            isinstance(c, ast.FuncCall)
-            and c.name.upper() == "EQUALS"
-            and len(c.args) == 2
-            and isinstance(c.args[0], ast.ColumnRef)
-            and isinstance(c.args[1], ast.Literal)
-            and isinstance(c.args[1].value, str)
-        ):
-            m = entry(c.args[0].name, "exact")
-            # corpus floor: stock string equality is a cheap in-place
-            # parquet compare — below the floor the route's fixed costs
-            # exceed the whole stock scan (MIN_CORPUS_ROWS_KEY comment)
-            if m and corpus_floor_ok(spark, m[0].n_rows_est) \
-                    and gate_ok(m[0].est_selectivity(c.args[1].value)):
-                # digest semijoin prunes; re-check the equality on the
-                # surviving handful of rows so an md5 collision can never
-                # admit a wrong row (exactness is ~free post-semijoin)
-                return semijoin(
-                    m[0].probe(c.args[1].value), m[1],
-                    n_est=m[0].n_rows_est,
-                ).filter(
-                    F.col(c.args[0].name) == F.lit(c.args[1].value)
-                )
-        # col BETWEEN a AND b → numeric range probe
-        if (
+            col, value = c.args[0].name, c.args[1].value
+            shape = "inverted" if c.name.upper() == "CONTAINS" else "exact"
+            # EQUALS: string literals only (the index holds text digests)
+            if shape == "exact" and not isinstance(value, str):
+                return None
+        elif (
             isinstance(c, ast.BetweenOp)
             and isinstance(c.operand, ast.ColumnRef)
-            and isinstance(c.low, ast.Literal)
-            and isinstance(c.high, ast.Literal)
+            and isinstance(c.low, lit)
+            and isinstance(c.high, lit)
         ):
-            m = entry(c.operand.name, "numeric")
-            # corpus floor: stock BETWEEN is a cheap per-row double
-            # compare — measured 2x routed LOSS at 5k rows (SCALING.md)
-            if m and corpus_floor_ok(spark, m[0].n_rows) and gate_ok(
-                    m[0].est_range_selectivity(c.low.value, c.high.value)):
-                return semijoin(m[0].probe_between(c.low.value, c.high.value),
-                                m[1], n_est=m[0].n_rows)
-        # col IN (v1, v2, ...) → numeric membership probe
-        if (
+            shape, col, value = ("between", c.operand.name,
+                                 (c.low.value, c.high.value))
+        elif (
             isinstance(c, ast.InOp)
             and not c.negated
             and isinstance(c.operand, ast.ColumnRef)
-            and all(isinstance(i, ast.Literal) for i in c.items)
+            and all(isinstance(i, lit) for i in c.items)
         ):
-            m = entry(c.operand.name, "numeric")
-            if m and corpus_floor_ok(spark, m[0].n_rows) and gate_ok(
-                    m[0].est_in_selectivity([i.value for i in c.items])):
-                return semijoin(m[0].probe_in([i.value for i in c.items]),
-                                m[1], n_est=m[0].n_rows)
-        # json_col['path'] == lit → JSON path-value probe
-        if (
+            shape, col, value = ("in", c.operand.name,
+                                 [i.value for i in c.items])
+        elif (
             isinstance(c, ast.BinaryOp)
             and c.op == "=="
             and isinstance(c.left, ast.Index)
             and isinstance(c.left.operand, ast.ColumnRef)
-            and isinstance(c.left.index, ast.Literal)
+            and isinstance(c.left.index, lit)
             and isinstance(c.left.index.value, str)
-            and isinstance(c.right, ast.Literal)
+            and isinstance(c.right, lit)
             # STRING literals only (the exact-text gate's rule): the
             # index stores raw JSON strings, but a stock numeric
             # comparison coerces — get_json_object(j,'$.n') == 5.0
@@ -561,100 +510,91 @@ class Translator:
             # so non-string literals stay on the stock path
             and isinstance(c.right.value, str)
         ):
-            m = entry(c.left.operand.name, "json")
-            if m and gate_ok(m[0].est_selectivity(c.left.index.value,
-                                                  c.right.value)):
-                return semijoin(m[0].probe(c.left.index.value, c.right.value),
-                                m[1], n_est=m[0].n_rows_est)
-        return None
+            shape, col, value = ("json", c.left.operand.name,
+                                 (c.left.index.value, c.right.value))
+        else:
+            return None
+        kind = "numeric" if shape in ("between", "in") else shape
+        meta = self.indexes.get(col)
+        if meta is None or meta[0] != kind:
+            return None
+        _, idx, id_col = meta
+
+        def semijoin(probe, n_est):
+            # probe row-id ranges pushed onto the corpus scan first
+            # (row-group skip — the reference's bitmap→chunk reads);
+            # the LeftSemi on top keeps the rewrite exact
+            return lambda df: routed_semijoin(df, probe(), id_col,
+                                              n_rows_est=n_est)
+
+        # the corpus floor guards the CHEAP-stock shapes (an in-place
+        # string or double compare): below it the route's fixed costs
+        # exceed the whole stock scan — measured 2x routed LOSS for
+        # BETWEEN at 5k rows (SCALING.md). Token CONTAINS (stock pays
+        # a per-row tokenize) and JSON are exempt.
+        if shape == "inverted":
+            term = str(value)
+            return _Route(kind, idx, id_col, idx.est_selectivity(term), None,
+                          lambda df: contains_via_index(df, idx, term,
+                                                        id_col=id_col))
+        if shape == "exact":
+            route = semijoin(lambda: idx.probe(value), idx.n_rows_est)
+            # the digest semijoin prunes; re-checking the equality on
+            # the surviving handful of rows means an md5 collision can
+            # never admit a wrong row (exactness is ~free post-semijoin)
+            return _Route(kind, idx, id_col, idx.est_selectivity(value),
+                          idx.n_rows_est, lambda df: route(df).filter(
+                              F.col(col) == F.lit(value)))
+        if shape == "between":
+            return _Route(kind, idx, id_col,
+                          idx.est_range_selectivity(*value), idx.n_rows,
+                          semijoin(lambda: idx.probe_between(*value),
+                                   idx.n_rows))
+        if shape == "in":
+            return _Route(kind, idx, id_col, idx.est_in_selectivity(value),
+                          idx.n_rows,
+                          semijoin(lambda: idx.probe_in(value), idx.n_rows))
+        return _Route(kind, idx, id_col, idx.est_selectivity(*value), None,
+                      semijoin(lambda: idx.probe(*value), idx.n_rows_est))
+
+    def _try_index_rewrite(self, c: ast.Node, df: DataFrame) -> DataFrame | None:
+        """Route one WHERE conjunct through the index _match_route
+        finds for it, unless a cost gate declines: the corpus floor
+        (`routing.minCorpusRows`, for the cheap-stock shapes) or the
+        selectivity gate (the reference's pg_costestimate,
+        index_search.cpp:316-420 — when the index's persisted stats
+        estimate the predicate keeps MORE than `routing.maxSelectivity`
+        of the rows, the semijoin would shuffle ~the corpus to avoid a
+        filter Parquet evaluates in place; no stats never declines).
+        Both read the conf of `df`'s session. Returns the semijoined
+        DataFrame, or None to leave the conjunct a stock filter."""
+        from deeplake_spark.operators.indexes import (
+            corpus_floor_ok,
+            route_max_selectivity,
+        )
+
+        route = self._match_route(c)
+        if route is None:
+            return None
+        spark = df.sparkSession
+        if not corpus_floor_ok(spark, route.corpus):
+            return None
+        if route.est is not None and route.est > route_max_selectivity(spark):
+            return None
+        return route.apply(df)
 
     def _estimate_where_selectivity(self, where: ast.Node) -> float | None:
         """Estimated fraction of rows the WHERE keeps, from the index
-        stats sidecars (same shapes _try_index_rewrite matches). AND
+        stats sidecars of the conjuncts _match_route matches. AND
         semantics: the minimum over conjuncts with a known estimate;
         None when no conjunct is estimable. Feeds the filtered-ANN
         probe widening (the reference runs top_k with a roaring
         prefilter over the FULL index — index_holder.hpp:35-36 — so
         its filtered recall never degrades; we compensate by widening
         eff-nprobe by 1/selectivity)."""
-        conjuncts: list[ast.Node] = []
-
-        def split(n: ast.Node):
-            if isinstance(n, ast.BinaryOp) and n.op == "AND":
-                split(n.left)
-                split(n.right)
-            else:
-                conjuncts.append(n)
-
-        split(where)
-        best = None
-        for c in conjuncts:
-            est = None
-            if (
-                isinstance(c, ast.FuncCall)
-                and c.name.upper() == "CONTAINS"
-                and len(c.args) == 2
-                and isinstance(c.args[0], ast.ColumnRef)
-                and isinstance(c.args[1], ast.Literal)
-            ):
-                en = self._index_entry(c.args[0].name, "inverted")
-                if en is not None:
-                    est = en[0].est_selectivity(str(c.args[1].value))
-            elif (
-                isinstance(c, ast.BetweenOp)
-                and isinstance(c.operand, ast.ColumnRef)
-                and isinstance(c.low, ast.Literal)
-                and isinstance(c.high, ast.Literal)
-            ):
-                en = self._index_entry(c.operand.name, "numeric")
-                if en is not None:
-                    est = en[0].est_range_selectivity(c.low.value,
-                                                      c.high.value)
-            elif (
-                isinstance(c, ast.InOp)
-                and not c.negated
-                and isinstance(c.operand, ast.ColumnRef)
-                and all(isinstance(i, ast.Literal) for i in c.items)
-            ):
-                en = self._index_entry(c.operand.name, "numeric")
-                if en is not None:
-                    est = en[0].est_in_selectivity(
-                        [i.value for i in c.items])
-            elif (
-                isinstance(c, ast.FuncCall)
-                and c.name.upper() == "EQUALS"
-                and len(c.args) == 2
-                and isinstance(c.args[0], ast.ColumnRef)
-                and isinstance(c.args[1], ast.Literal)
-                and isinstance(c.args[1].value, str)
-            ):
-                # exact-index equality — _try_index_rewrite routes it,
-                # so the estimator must see it too (the "never
-                # diverge" invariant; r15 review: an EQUALS prefilter
-                # left cand_sel None and the filtered-ANN probe ran
-                # UNWIDENED, silently degrading recall)
-                en = self._index_entry(c.args[0].name, "exact")
-                if en is not None:
-                    est = en[0].est_selectivity(c.args[1].value)
-            elif (
-                isinstance(c, ast.BinaryOp)
-                and c.op == "=="
-                and isinstance(c.left, ast.Index)
-                and isinstance(c.left.operand, ast.ColumnRef)
-                and isinstance(c.left.index, ast.Literal)
-                and isinstance(c.left.index.value, str)
-                and isinstance(c.right, ast.Literal)
-                and isinstance(c.right.value, str)
-            ):
-                # JSON path equality (string literals only — the route
-                # gate's rule)
-                en = self._index_entry(c.left.operand.name, "json")
-                if en is not None:
-                    est = en[0].est_selectivity(c.left.index.value,
-                                                c.right.value)
-            if est is not None:
-                best = est if best is None else min(best, est)
-        return best
+        ests = [r.est for r in map(self._match_route, _conjuncts(where))
+                if r is not None and r.est is not None]
+        return min(ests, default=None)
 
     def _filtered_widening_capped(self, idx, cand_sel: float | None) -> bool:
         """True when the filtered-ANN recall compensation for `idx`
@@ -684,14 +624,9 @@ class Translator:
         (IVF recall@k decays with k on a fixed-fraction probe —
         SCALING.md decay curve — and one knob should govern every
         lane), declining to the stock exact plan."""
-        try:
-            spark = df.sparkSession
-            maxk = spark.conf.get("spark.sql.deeplake.routing.ann.maxK",
-                                  None)
-            frac = spark.conf.get(
-                "spark.sql.deeplake.routing.ann.maxKFrac", None)
-        except Exception:
-            return False
+        spark = df.sparkSession
+        maxk = spark.conf.get("spark.sql.deeplake.routing.ann.maxK", None)
+        frac = spark.conf.get("spark.sql.deeplake.routing.ann.maxKFrac", None)
         if maxk is not None:
             try:
                 if fetch > int(maxk):
@@ -707,19 +642,6 @@ class Translator:
             if f > 0 and n and fetch > max(1, int(f * n)):
                 return True
         return False
-
-    def _route_gate(self) -> float:
-        """Max estimated selectivity a predicate may have and still
-        route through an index (conf `spark.sql.deeplake.routing.
-        maxSelectivity`, shared with the Catalyst rule)."""
-        from deeplake_spark.operators.indexes import (
-            DEFAULT_MAX_SELECTIVITY,
-            route_max_selectivity,
-        )
-
-        if self.spark is None:
-            return DEFAULT_MAX_SELECTIVITY
-        return route_max_selectivity(self.spark)
 
     def _vec_literal(self, node: ast.Node) -> list[float] | None:
         """Resolve a query-vector expression to a Python float list
@@ -761,49 +683,6 @@ class Translator:
                 return [float(x) for x in row[0]]
         return None
 
-    def _try_l2_route(self, sel: ast.Select, e: ast.Node) -> DataFrame | None:
-        """`ORDER BY L2_NORM(col - <vec>) ASC LIMIT k` with a clustered
-        index on col → cluster-pruned L2 top-k (ivf_search metric=l2);
-        the normal path re-evaluates the exact distance on ≤ k rows."""
-        if not (
-            isinstance(e, ast.FuncCall)
-            and e.name.upper() == "L2_NORM"
-            and len(e.args) == 1
-            and isinstance(e.args[0], ast.BinaryOp)
-            and e.args[0].op == "-"
-        ):
-            return None
-        col_arg, q_arg = e.args[0].left, e.args[0].right
-        if not isinstance(col_arg, ast.ColumnRef):
-            col_arg, q_arg = q_arg, col_arg  # (vec - col): same distance
-        if not isinstance(col_arg, ast.ColumnRef) or col_arg.table is not None:
-            return None
-        meta = self.indexes.get(col_arg.name)
-        if meta is None or len(meta) != 3 or meta[0] not in ("clustered", "pq"):
-            return None
-        kind, idx, id_col = meta
-        from deeplake_spark.operators.similarity import ivf_search, pq_search
-
-        df = self._resolve_source(None)
-        qvec = self._vec_constant(q_arg, df)
-        if qvec is None:
-            return None
-        fetch = sel.limit.n + (sel.limit.offset or 0)
-        if self._topk_ceiling_declines(df, idx, fetch):
-            return None  # conf'd k ceiling: stock exact instead
-        candidates = cand_sel = None
-        if sel.where is not None:
-            candidates = self._apply_where(sel.where, df).select(id_col)
-            cand_sel = self._estimate_where_selectivity(sel.where)
-            if self._filtered_widening_capped(idx, cand_sel):
-                return None  # stock exact beats an over-widened probe
-        search = ivf_search if kind == "clustered" else pq_search
-        hits = search(idx, qvec, k=fetch, config=self.search_config,
-                      candidates=candidates, metric="l2",
-                      candidate_selectivity=cand_sel)
-        hits = hits.select(F.col(idx.id_col).alias(id_col))
-        return self._hits_fetchback(df, hits, id_col, idx, how="left_semi")
-
     def _matrix_literal(self, node: ast.Node) -> list[list[float]] | None:
         """Resolve a query-matrix expression (nested ARRAY literal or a
         `?` param carrying a list of lists) to Python floats."""
@@ -829,23 +708,32 @@ class Translator:
         "BM25_SIMILARITY": ("inverted",),
         "MAXSIM": ("pooled",),
     }
+    #: the cell-probed kinds (ivf_search / pq_search): they also serve
+    #: `ORDER BY L2_NORM(col - <vec>) ASC LIMIT k` — k-means cells are
+    #: euclidean, so the same cluster prune serves the L2 rerank — and
+    #: widen their probe under a WHERE
+    _IVF_KINDS = ("clustered", "pq")
 
     def _try_ann_route(self, sel: ast.Select) -> DataFrame | None:
-        """`ORDER BY <score_fn>(col, <query>) DESC LIMIT k` over the
-        bound dataset with a matching registered index → index probe
-        (the reference's top-k fast path, cpp/tql/tql.hpp:171 +
+        """`ORDER BY <score_fn>(col, <query>) DESC LIMIT k` — or the
+        distance ordering `ORDER BY L2_NORM(col - <vec>) ASC LIMIT k`
+        (tql.md Array Operations) — over the bound dataset with a
+        matching registered index → index probe (the reference's top-k
+        fast path, cpp/tql/tql.hpp:171 +
         query_core/top_k_search_info.hpp:17-66; BM25/MAXSIM index exec:
         deeplake_pg/index_search.cpp:135-170, nd/norm.hpp:42-56,
         docs tql.md:114-176). WHERE conjuncts become the candidate row
         set handed to the probe (filter+search, index_holder.hpp:30-36)
         — including any text/numeric/JSON index rewrites the WHERE
-        itself triggers.
+        itself triggers. The query side is a literal or a `?` param;
+        the L2 vector may also be `DATA(col, i)`.
 
         Returns the index-pruned base relation (row-id semijoin against
-        the top-k hits; BM25/MAXSIM also carry the index-computed score
+        the top-k hits, whose exact scores the normal path recomputes
+        on ≤k rows; BM25/MAXSIM instead carry the index-computed score
         as `__tql_score`, resolved by _call so corpus-global stats are
         never recomputed on the pruned subset), or None when the shape
-        doesn't match."""
+        doesn't match or a gate declines."""
         if (
             sel.source is not None  # indexes describe the bound dataset only
             or sel.group is not None
@@ -867,102 +755,95 @@ class Translator:
                 if it.alias == e.name:
                     e = it.expr
                     break
-        if not o.desc:
-            # ASC = distance ordering: `ORDER BY L2_NORM(col - <vec>)
-            # ASC LIMIT k` (tql.md Array Operations) probes the
-            # clustered index — k-means cells are euclidean, so the
-            # same cluster prune serves the L2 rerank
-            return self._try_l2_route(sel, e)
-        if not (
-            isinstance(e, ast.FuncCall)
-            and e.name.upper() in self._TOPK_ROUTES
-            and len(e.args) == 2
-        ):
+        if not isinstance(e, ast.FuncCall):
             return None
         fname = e.name.upper()
-        col_arg, q_arg = e.args
+        if o.desc and fname in self._TOPK_ROUTES and len(e.args) == 2:
+            col_arg, q_arg = e.args
+            kinds = self._TOPK_ROUTES[fname]
+        elif (
+            not o.desc
+            and fname == "L2_NORM"
+            and len(e.args) == 1
+            and isinstance(e.args[0], ast.BinaryOp)
+            and e.args[0].op == "-"
+        ):
+            col_arg, q_arg = e.args[0].left, e.args[0].right
+            kinds = self._IVF_KINDS
+        else:
+            return None
         if not isinstance(col_arg, ast.ColumnRef):
-            col_arg, q_arg = q_arg, col_arg
+            col_arg, q_arg = q_arg, col_arg  # (vec - col): same distance
         if not isinstance(col_arg, ast.ColumnRef) or col_arg.table is not None:
             return None
         meta = self.indexes.get(col_arg.name)
-        if meta is None or len(meta) != 3:
+        if meta is None or meta[0] not in kinds:
             return None
         kind, idx, id_col = meta
-        if kind not in self._TOPK_ROUTES[fname]:
-            return None
 
         df = self._resolve_source(None)
+        if fname == "BM25_SIMILARITY":
+            text = (q_arg.value if isinstance(q_arg, ast.Literal)
+                    and isinstance(q_arg.value, str)
+                    else self._param_str(q_arg))
+            query = text.lower().split() if text is not None else None
+        elif fname == "MAXSIM":
+            query = self._matrix_literal(q_arg)
+        elif fname == "L2_NORM":
+            query = self._vec_constant(q_arg, df)
+        else:
+            query = self._vec_literal(q_arg)
+        if query is None:
+            return None
         fetch = sel.limit.n + (sel.limit.offset or 0)
         if kind != "inverted" and self._topk_ceiling_declines(
                 df, idx, fetch):
             return None  # conf'd k ceiling: stock exact instead
         candidates = cand_sel = None
         if sel.where is not None:
-            candidates = self._apply_where(sel.where, df).select(id_col)
             cand_sel = self._estimate_where_selectivity(sel.where)
-            if kind in ("clustered", "pq") and \
-                    self._filtered_widening_capped(meta[1], cand_sel):
+            if kind in self._IVF_KINDS and \
+                    self._filtered_widening_capped(idx, cand_sel):
                 return None  # stock exact beats an over-widened probe
+            candidates = self._apply_where(sel.where, df).select(id_col)
 
-        if fname == "COSINE_SIMILARITY":
-            from deeplake_spark.operators.similarity import (
-                ivf_search,
-                quantized_index_search,
-            )
-
-            qvec = self._vec_literal(q_arg)
-            if qvec is None:
-                return None
-            if kind == "clustered_quantized":
-                hits = quantized_index_search(
-                    idx, qvec, k=fetch, config=self.search_config,
-                    candidates=candidates.withColumnRenamed(
-                        candidates.columns[0], idx.id_col)
-                    if candidates is not None else None,
-                ).select(F.col(idx.id_col).alias(id_col))
-            elif kind == "pq":
-                from deeplake_spark.operators.similarity import pq_search
-
-                hits = pq_search(
-                    idx, qvec, k=fetch, config=self.search_config,
-                    candidates=candidates, candidate_selectivity=cand_sel,
-                ).select(F.col(idx.id_col).alias(id_col))
-            else:
-                hits = ivf_search(idx, qvec, k=fetch, config=self.search_config,
-                                  candidates=candidates,
-                                  candidate_selectivity=cand_sel).select(id_col)
-            # k rows — always broadcastable; score recomputed exactly
-            # on ≤k rows by the normal path
-            return self._hits_fetchback(df, hits, id_col, idx,
-                                        how="left_semi")
+        from deeplake_spark.operators import similarity
 
         if fname == "BM25_SIMILARITY":
             from deeplake_spark.operators.indexes import bm25_via_index
 
-            if not (isinstance(q_arg, ast.Literal) and isinstance(q_arg.value, str)):
-                q_arg_v = self._param_str(q_arg)
-                if q_arg_v is None:
-                    return None
-            else:
-                q_arg_v = q_arg.value
-            terms = q_arg_v.lower().split()
             hits = bm25_via_index(
-                idx, terms, k=fetch,
+                idx, query, k=fetch,
                 candidates=candidates.withColumnRenamed(id_col, "row_id")
                 if candidates is not None else None,
-            ).select(F.col("row_id").alias(id_col), F.col("bm25").alias("__tql_score"))
-        else:  # MAXSIM
-            from deeplake_spark.operators.similarity import maxsim_search
-
-            qm = self._matrix_literal(q_arg)
-            if qm is None:
-                return None
-            hits = maxsim_search(idx, qm, k=fetch, config=self.search_config,
-                                 candidates=candidates).select(
+            ).select(F.col("row_id").alias(id_col),
+                     F.col("bm25").alias("__tql_score"))
+        elif fname == "MAXSIM":
+            hits = similarity.maxsim_search(
+                idx, query, k=fetch, config=self.search_config,
+                candidates=candidates).select(
                 F.col(idx.id_col).alias(id_col),
                 F.col("maxsim_score").alias("__tql_score"),
             )
+        else:
+            if kind == "clustered_quantized":
+                hits = similarity.quantized_index_search(
+                    idx, query, k=fetch, config=self.search_config,
+                    candidates=candidates.withColumnRenamed(
+                        id_col, idx.id_col)
+                    if candidates is not None else None)
+            else:
+                search = (similarity.ivf_search if kind == "clustered"
+                          else similarity.pq_search)
+                hits = search(idx, query, k=fetch, config=self.search_config,
+                              candidates=candidates,
+                              metric="cosine" if o.desc else "l2",
+                              candidate_selectivity=cand_sel)
+            # k rows — always broadcastable; the score is recomputed
+            # exactly on ≤k rows by the normal path
+            hits = hits.select(F.col(idx.id_col).alias(id_col))
+            return self._hits_fetchback(df, hits, id_col, idx,
+                                        how="left_semi")
         self._routed_score = e  # _call resolves this exact call shape
         # inner join: ≤k hit rows (broadcastable) carry the index score
         return self._hits_fetchback(df, hits, id_col, idx, how="inner")

@@ -616,6 +616,35 @@ def test_equals_exact_index_rewrite(spark, sf_dir, round_trip):
         spark.conf.unset(MAX_SELECTIVITY_KEY)
 
 
+
+def test_route_gate_reads_the_bound_frames_session(spark, sf_dir,
+                                                   round_trip):
+    """tql.query with no spark= reads routing.maxSelectivity from the
+    bound frame's session, as the corpus floor does: a hot EQUALS that
+    the DEFAULT gate declines routes once the session opens the gate,
+    and returns the stock rows."""
+    from deeplake_spark import tql
+    from deeplake_spark.operators.indexes import (
+        DEFAULT_MAX_SELECTIVITY,
+        MAX_SELECTIVITY_KEY,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    eidx = round_trip(build_exact_index(docs, "lang", id_col="doc_id"))
+    assert eidx.est_selectivity("en") > DEFAULT_MAX_SELECTIVITY  # hot
+    q = "SELECT doc_id WHERE EQUALS(lang, 'en')"
+    indexes = {"lang": ("exact", eidx, "doc_id")}
+    spark.conf.set(MAX_SELECTIVITY_KEY, "1.0")
+    try:
+        out = tql.query(q, default=docs, indexes=indexes)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LeftSemi" in plan, plan[:400]
+        stock = tql.query(q, default=docs)
+        assert sorted(r.doc_id for r in out.collect()) == \
+            sorted(r.doc_id for r in stock.collect())
+    finally:
+        spark.conf.unset(MAX_SELECTIVITY_KEY)
+
 def test_tql_ann_routing(spark, sf_dir, round_trip):
     """TQL `ORDER BY COSINE_SIMILARITY(...) DESC LIMIT k` on an indexed
     column routes through the IVF probe (no corpus-wide sort in the
@@ -1758,7 +1787,7 @@ def test_contains_route_pushes_probe_ranges_to_scan(spark, clustered_docs,
     spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
     try:
         q = "SELECT doc_id WHERE CONTAINS(text, 'xclust')"
-        routed = tql.query(q, default=d, indexes={"text": (idx, "doc_id")})
+        routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
         phys = routed._jdf.queryExecution().executedPlan().toString()
         # (scan Location paths truncate in plan strings — match the
         # pushed tokens; only the corpus scan carries doc_id filters)
@@ -1783,7 +1812,7 @@ def test_contains_route_skips_ranges_when_coverage_high(spark,
     spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
     try:
         q = "SELECT doc_id WHERE CONTAINS(text, 'sparse')"
-        routed = tql.query(q, default=d, indexes={"text": (idx, "doc_id")})
+        routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
         phys = routed._jdf.queryExecution().executedPlan().toString()
         assert "GreaterThanOrEqual(doc_id" not in phys
         assert routed.count() == 10_000
@@ -1833,7 +1862,7 @@ def test_range_prune_conf_disables(spark, clustered_docs):
     spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
     try:
         q = "SELECT doc_id WHERE CONTAINS(text, 'xclust')"
-        routed = tql.query(q, default=d, indexes={"text": (idx, "doc_id")})
+        routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
         phys = routed._jdf.queryExecution().executedPlan().toString()
         assert "GreaterThanOrEqual(doc_id" not in phys
         assert routed.count() == 10_000
@@ -2078,7 +2107,7 @@ def test_corpus_floor_declines_cheap_routes_on_small_corpus(spark, sf_dir,
     indexes = {
         "n_chars": ("numeric", nidx, "doc_id"),
         "lang": ("exact", eidx, "doc_id"),
-        "text": (iidx, "doc_id"),  # legacy 2-tuple inverted form
+        "text": ("inverted", iidx, "doc_id"),
     }
     cases = [
         "SELECT doc_id WHERE n_chars BETWEEN 100 AND 200",

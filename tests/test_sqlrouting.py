@@ -56,6 +56,19 @@ def routed_ds(spark, sf_dir, tmp_path):
         spark.catalog.dropTempView("routed_docs")
 
 
+def _tql_decision(spark, ds, where: str) -> tuple[bool, list]:
+    """(routed, sorted doc ids) of `SELECT doc_id WHERE <where>` through
+    ``ds.query``, with the Catalyst rule disabled while the plan is
+    read and run, so only the TQL translator's decision shows."""
+    rt.disable(spark)
+    try:
+        df = ds.query(f"SELECT doc_id WHERE {where}").df
+        return ("LeftSemi" in _plan(df),
+                sorted(r.doc_id for r in df.collect()))
+    finally:
+        rt.enable(spark)
+
+
 def test_sql_routing_contains_and_numeric(spark, routed_ds):
     """Every routable WHERE shape: probe plan + identical rows."""
     cases = {
@@ -797,8 +810,11 @@ def test_selectivity_gate_keeps_frequent_predicates_stock(spark,
     narrow = ("SELECT doc_id FROM routed_docs "
               "WHERE n_chars BETWEEN 104 AND 112")
     try:
-        for q, should_route in ((freq, False), (rare, True),
-                                (broad, False), (narrow, True)):
+        for q, should_route, tql_q in (
+                (freq, False, "CONTAINS(text, 'spark')"),
+                (rare, True, "CONTAINS(text, 'dup')"),
+                (broad, False, "n_chars BETWEEN 50 AND 400"),
+                (narrow, True, "n_chars BETWEEN 104 AND 112")):
             df = spark.sql(q)
             routed = "LeftSemi" in _plan(df)
             assert routed == should_route, (q, _plan(df)[:400])
@@ -806,6 +822,9 @@ def test_selectivity_gate_keeps_frequent_predicates_stock(spark,
             want = sorted(r.doc_id for r in spark.sql(q).collect())
             rt.enable(spark)
             assert sorted(r.doc_id for r in df.collect()) == want
+            # the TQL front end takes the same decision, same rows
+            assert _tql_decision(spark, routed_ds, tql_q) == \
+                (should_route, want), tql_q
         # raising the threshold routes the frequent term again
         spark.conf.set(rt.MAX_SELECTIVITY_KEY, "1.0")
         assert "LeftSemi" in _plan(spark.sql(freq))
@@ -1342,21 +1361,33 @@ def test_sql_corpus_floor_declines_cheap_routes(spark, routed_ds):
                "WHERE n_chars BETWEEN 100 AND 200")
     equality = "SELECT doc_id FROM routed_docs WHERE n_chars = 150"
     contains = CONTAINS_SQL.format(v="routed_docs")
+    tql_between = "n_chars BETWEEN 100 AND 200"
+    tql_contains = "CONTAINS(text, 'spark')"
     try:
         spark.conf.set(rt.MIN_CORPUS_ROWS_KEY, "1000000")
         assert "LeftSemi" not in _plan(spark.sql(between))
         assert "LeftSemi" not in _plan(spark.sql(equality))
         assert "LeftSemi" in _plan(spark.sql(contains))   # floor-exempt
         stock = sorted(r.doc_id for r in spark.sql(between).collect())
+        # the TQL front end declines and routes the same way, same rows
+        assert _tql_decision(spark, routed_ds, tql_between) == \
+            (False, stock)
+        rows = sorted(r.doc_id for r in spark.sql(contains).collect())
+        assert _tql_decision(spark, routed_ds, tql_contains) == \
+            (True, rows)
 
         spark.conf.unset(rt.MIN_CORPUS_ROWS_KEY)          # default 200k
         assert "LeftSemi" not in _plan(spark.sql(between))
+        assert _tql_decision(spark, routed_ds, tql_between) == \
+            (False, stock)
 
         spark.conf.set(rt.MIN_CORPUS_ROWS_KEY, "1")
         routed = spark.sql(between)
         assert "LeftSemi" in _plan(routed)
         assert sorted(r.doc_id for r in routed.collect()) == stock
         assert stock, "fixture carries no signal"
+        assert _tql_decision(spark, routed_ds, tql_between) == \
+            (True, stock)
     finally:
         # the test session runs floor-less (conftest) — restore that
         spark.conf.set(rt.MIN_CORPUS_ROWS_KEY, "0")

@@ -690,23 +690,68 @@ def test_set_op_order_by_rownum_no_global_window(spark, tables):
     assert out.count() == 5
 
 
-def test_selectivity_estimator_covers_equals_shape(spark, sf_dir):
-    """r15 review: the filtered-ANN widening estimator must see every
-    shape _try_index_rewrite routes (the 'never diverge' invariant) —
-    an EQUALS prefilter used to leave cand_sel None and the probe ran
-    unwidened."""
+@pytest.fixture(scope="module")
+def shape_indexes(spark, sf_dir, round_trip):
+    """Saved-and-loaded indexes serving each of the five routable WHERE
+    shapes: table name → (frame, indexes= mapping)."""
     from deeplake_spark.operators.indexes import (
-        ExactTextIndex, build_exact_index)
-    from deeplake_spark.tql.parser import parse_query
-    from deeplake_spark.tql.translator import Translator
+        build_exact_index,
+        build_inverted_index,
+        build_json_index,
+        build_numeric_index,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    import tempfile
-    epath = tempfile.mkdtemp(prefix="tql_eidx_") + "/idx"
-    build_exact_index(docs, col="source", id_col="doc_id").save(epath)
-    eidx = ExactTextIndex.load(spark, epath)  # stats need the sidecar
-    tr = Translator(spark=spark, default=docs,
-                    indexes={"source": ("exact", eidx, "doc_id")})
-    sel = parse_query("SELECT doc_id WHERE EQUALS(source, 'src1')")
-    est = tr._estimate_where_selectivity(sel.where)
-    assert est is not None and 0 < est < 1
+    ev = load_table(spark, sf_dir, "events")
+    return {
+        "documents": (docs, {
+            "text": ("inverted", round_trip(build_inverted_index(docs)),
+                     "doc_id"),
+            "lang": ("exact", round_trip(build_exact_index(docs, "lang")),
+                     "doc_id"),
+            "n_chars": ("numeric",
+                        round_trip(build_numeric_index(docs, "n_chars")),
+                        "doc_id"),
+        }),
+        "events": (ev, {
+            "props": ("json", round_trip(build_json_index(
+                ev, "props", ["k"], id_col="event_id")), "event_id"),
+        }),
+    }
+
+
+@pytest.mark.parametrize("table,where", [
+    ("documents", "CONTAINS(text, 'spark')"),
+    ("documents", "EQUALS(lang, 'en')"),
+    ("documents", "n_chars BETWEEN 100 AND 200"),
+    ("documents", "n_chars IN (128, 200, 305)"),
+    ("events", "props['k'] == '7'"),
+], ids=["contains", "equals", "between", "in", "json"])
+def test_selectivity_estimator_covers_every_shape(spark, shape_indexes,
+                                                  table, where):
+    """The filtered-ANN widening estimator sees every shape the rewrite
+    routes, through the same estimate (r15 review: an EQUALS prefilter
+    used to leave it None and the probe ran unwidened). With the
+    selectivity gate just below the estimate the conjunct stays a
+    stock filter, just above it the conjunct routes — and either way
+    the rows are the stock rows."""
+    from deeplake_spark.operators.indexes import MAX_SELECTIVITY_KEY
+    from deeplake_spark.tql.translator import Translator
+
+    df, indexes = shape_indexes[table]
+    q = f"SELECT * WHERE {where}"
+    est = Translator(default=df, indexes=indexes) \
+        ._estimate_where_selectivity(parse_query(q).where)
+    assert est is not None and 1e-6 < est < 1, est
+    stock = tql.query(q, default=df)
+    want = sorted(map(tuple, stock.collect()))
+    assert want, "fixture carries no signal"
+    try:
+        for gate, should_route in ((est - 1e-9, False), (est + 1e-9, True)):
+            spark.conf.set(MAX_SELECTIVITY_KEY, repr(gate))
+            out = tql.query(q, default=df, indexes=indexes)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            assert ("LeftSemi" in plan) == should_route, (gate, plan[:400])
+            assert sorted(map(tuple, out.collect())) == want
+    finally:
+        spark.conf.unset(MAX_SELECTIVITY_KEY)
