@@ -973,28 +973,26 @@ class Dataset:
 
         by = options.get("by")
         if kind == "kmv":
-            sk.save_kmv(sk.kmv_sketch(
-                df, column, by=by, k=options.get("k", 64),
-                seed=options.get("seed", 0)), sk_path)
+            table = sk.kmv_sketch(df, column, by=by, k=options.get("k", 64),
+                                  seed=options.get("seed", 0))
         elif kind == "bloom":
-            sk.save_bloom(sk.bloom_sketch(
+            table = sk.bloom_sketch(
                 df, column, by=by, n_words=options.get("n_words", 256),
                 k_hashes=options.get("k_hashes", 5),
-                seed=options.get("seed", 0)), sk_path)
+                seed=options.get("seed", 0))
         elif kind == "sample":
-            sk.save_sample(sk.sample_sketch(
+            table = sk.sample_sketch(
                 df, column, id_col="_row_id", by=by,
-                k=options.get("k", 256), salt=options.get("salt", "q")),
-                sk_path)
+                k=options.get("k", 256), salt=options.get("salt", "q"))
         elif kind == "cm":
-            sk.save_cm(sk.cm_sketch(
+            table = sk.cm_sketch(
                 df, column, by=by, d=options.get("d", 4),
-                w=options.get("w", 1024), seed=options.get("seed", 0)),
-                sk_path)
+                w=options.get("w", 1024), seed=options.get("seed", 0))
         else:
             raise InvalidIndexCreationError(
                 f"unsupported sketch kind {kind!r} "
                 "(kmv | bloom | sample | cm)")
+        sk.save_sketch(table, sk_path)
 
     def drop_sketch(self, column: str, kind: str = "kmv") -> None:
         self._check_writable()
@@ -1014,7 +1012,7 @@ class Dataset:
         if meta is None:
             raise NotFoundError(
                 f"no {kind!r} sketch on column {column!r}")
-        return sk.load_kmv(self.spark, meta["path"])
+        return sk.load_sketch(self.spark, meta["path"])
 
     def _load_indexes(self) -> dict:
         """column → (kind, index, id_col) for every registered index —

@@ -8,9 +8,9 @@ when the data does. Every module-level cache of the package is a
 set of hit/miss/eviction counters — and every cache keyed by a query
 plan keys on `plan_key` (CLAUDE.md traps 19 and 29). Callers whose
 result depends on more than the plan append it to the plan key.
-Files key on `file_key` (mtime and size); directories of index and
-sketch side tables key on `tree_key` (every file under them), and are
-read only through `side_table`.
+Files key on `file_key` (mtime and size); index and sketch side
+tables key on the `file_key` of their newest manifest, and are read
+only through `side_table`.
 """
 
 from __future__ import annotations
@@ -24,6 +24,9 @@ from typing import Any
 from urllib.parse import unquote, urlparse
 
 _MISSING = object()
+
+#: directory of a side table's manifests (indexes.write_side_table)
+MANIFEST_DIR = "_log"
 
 
 class Memo:
@@ -100,60 +103,80 @@ def file_key(path: str) -> tuple[str, int, int] | None:
     return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
 
 
-def tree_key(path: str) -> str | None:
-    """md5 of the sorted (relpath, mtime_ns, size) of every file under a
-    local directory (or `file:` URI), or None when the path is not a
-    local directory or one of its files cannot be stat'ed. Recursive,
-    not the top directory's mtime: a delta append adds files inside
-    partition subdirectories (`bucket=N/`), and a writer need not touch
-    the top directory to do so."""
-    path = _local_path(path)
-    if not os.path.isdir(path):
+def manifest(path: str) -> tuple[tuple | None, dict] | None:
+    """(cache key, parsed manifest) of the side table at `path`: the
+    newest `_log/NNNNNNNN.json` its writer put (the snapshot protocol of
+    `indexes.write_side_table`), or None when it has none. The key is
+    the manifest's `file_key` (None off the local filesystem), not its
+    number, so a table dropped and re-created keys apart although its
+    numbering restarts. Parsed manifests are memoized under that key."""
+    from deeplake_spark.storage import get_json, metadata_store_for
+
+    log = os.path.join(path, MANIFEST_DIR)
+    names = [n for n in metadata_store_for(log).list(log)
+             if n.endswith(".json")]
+    if not names:
         return None
-    entries = []
-    try:
-        for root, _dirs, names in os.walk(path, onerror=_raise):
-            for name in names:
-                full = os.path.join(root, name)
-                st = os.stat(full)
-                entries.append(f"{os.path.relpath(full, path)}#"
-                               f"{st.st_mtime_ns}:{st.st_size}")
-    except OSError:
-        return None
-    return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
+    newest = os.path.join(log, max(names))
+    key = file_key(newest)
+    return key, SIDE_TABLE_MEMO.get(
+        None if key is None else ("manifest", key),
+        lambda: get_json(newest))
 
 
-def _raise(err: OSError) -> None:
-    raise err
-
-
-def side_table(spark, path: str):
-    """`spark.read.parquet(path)` for an index or sketch side table,
-    memoized in SIDE_TABLE_MEMO under (session, absolute path,
-    `tree_key`), so a query re-reading an unchanged index pays one
-    local stat per file instead of Spark's re-listing and footer-schema
-    job (trap 13). A path with no tree key (`mem://`, Hadoop, missing)
-    is read without storing. Every frame read is recorded in
-    SIDE_TABLES."""
+def side_table(spark, path: str, table: str):
+    """Table `table` of the side table at `path`, exactly the files its
+    newest manifest lists, memoized in SIDE_TABLE_MEMO under (session,
+    manifest key, table): a query re-reading an unchanged index pays a
+    `_log` listing instead of Spark's file listing and footer read
+    (trap 13). Every frame read is recorded in SIDE_TABLES."""
 
     def read():
-        df = spark.read.parquet(path)
+        spec = man["tables"][table]
+        df = read_files(spark, os.path.join(path, table), spec["schema"],
+                        spec["files"])
         SIDE_TABLES.add(df)
         return df
 
-    return side_table_value(spark, path, "table", read)
+    key, man = _require_manifest(path)
+    return SIDE_TABLE_MEMO.get(
+        None if key is None else (session_key(spark), key, table), read)
 
 
 def side_table_value(spark, path: str, name: str,
                      build: Callable[[], Any]) -> Any:
     """`build()` — a value derived from the side table at `path`, e.g.
     an aggregate collected from it — memoized in SIDE_TABLE_MEMO next to
-    the table under the same (session, absolute path, `tree_key`) key
-    plus `name`, so any file the table gains or loses recomputes it."""
-    tk = tree_key(path)
-    key = None if tk is None else (
-        session_key(spark), os.path.abspath(_local_path(path)), tk, name)
-    return SIDE_TABLE_MEMO.get(key, build)
+    its tables under the same (session, manifest key) plus `name`, so a
+    new manifest recomputes it."""
+    key, _man = _require_manifest(path)
+    return SIDE_TABLE_MEMO.get(
+        None if key is None else (session_key(spark), key, "value", name),
+        build)
+
+
+def read_files(spark, base: str, schema: str, files: list[str]):
+    """`files` (paths relative to the table directory `base`) read with
+    the JSON `schema`, partition columns parsed below `base`. The file
+    list reaches the JVM as one joined string — a constant number of
+    Py4J round trips (Py4J's list conversion costs one per element)."""
+    from pyspark.sql import DataFrame
+
+    jvm = spark._jvm
+    paths = jvm.org.apache.commons.lang3.StringUtils.split(
+        "\x00".join(os.path.join(base, f) for f in files), "\x00")
+    reader = spark._jsparkSession.read().schema(
+        jvm.org.apache.spark.sql.types.DataType.fromJson(schema))
+    if files:  # no files, no table directory for basePath to name
+        reader = reader.option("basePath", base)
+    return DataFrame(reader.parquet(paths), spark)
+
+
+def _require_manifest(path: str) -> tuple[tuple | None, dict]:
+    found = manifest(path)
+    if found is None:
+        raise FileNotFoundError(f"no side-table manifest under {path}")
+    return found
 
 
 def input_files(df) -> list[str]:
@@ -226,10 +249,12 @@ RANGE_CACHE = Memo("range", 256)
 #: prefetch class, trap 8).
 QSIDE_CACHE = Memo("qside", 64)
 
-#: (session, absolute path, tree_key, name) -> DataFrame of one index
-#: or sketch side table (side_table; every side-table load reads
-#: through it, so an unchanged index is read once per session, trap 13)
-#: or a value collected from it (side_table_value).
+#: (session, manifest file_key, table) -> DataFrame of one index or
+#: sketch side table (side_table; every side-table load reads through
+#: it, so an unchanged index is read once per session, trap 13);
+#: (session, manifest file_key, "value", name) -> a value collected
+#: from it (side_table_value); ("manifest", file_key) -> the parsed
+#: manifest (manifest).
 SIDE_TABLE_MEMO = Memo("side_table", 256)
 
 #: every DataFrame side_table has read, weakly held: an index that

@@ -71,7 +71,7 @@ DEFAULT_MAX_SELECTIVITY = 0.1
 # JSON path probes are EXEMPT — their stock scan pays a per-row
 # tokenize/JSON-parse that grows with corpus CPU, so routed is within
 # noise at x1 and wins 3-7x from x32 up (gate table). Corpus
-# size comes from the same persisted sidecars the selectivity gate
+# size comes from the same persisted manifest meta the selectivity gate
 # reads; unknown (no stats) fails open, like the selectivity gate.
 MIN_CORPUS_ROWS_KEY = "spark.sql.deeplake.routing.minCorpusRows"
 DEFAULT_MIN_CORPUS_ROWS = 200_000
@@ -338,7 +338,7 @@ def routed_semijoin(df: DataFrame, ids: DataFrame, id_col: str,
                    "left_semi")
 
 #: build-time heavy-hitter floor: terms with df >= n/64 (~1.6%) are
-#: recorded in the termstats sidecar. Any term ABSENT from the sidecar
+#: recorded in the index's manifest meta. Any term ABSENT from it
 #: therefore has selectivity < 1/64 — below any sane gate threshold —
 #: so unknown terms always route. The floor must stay <= the gate
 #: default for that invariant to hold.
@@ -358,7 +358,7 @@ def route_max_selectivity(spark) -> float:
 def corpus_floor_ok(spark, n_rows: int | None) -> bool:
     """Corpus-size cost floor for CHEAP-stock routes (see the
     MIN_CORPUS_ROWS_KEY comment): True = big enough to route. Unknown
-    size (no stats sidecar) fails open — same convention as the
+    size (no stats) fails open — same convention as the
     selectivity gate."""
     if not n_rows:
         return True
@@ -371,7 +371,7 @@ def corpus_floor_ok(spark, n_rows: int | None) -> bool:
 
 
 def _heavy_map(counts: DataFrame, n: int, old: dict | None) -> dict:
-    """The heavy-hitter sidecar algorithm shared by every gated index
+    """The heavy-hitter stats algorithm shared by every gated index
     (inverted terms, exact digests, json path-values): record df for
     every key with df >= _HEAVY_FRAC * n (bounded by a _HEAVY_CAP
     top-by-df cut that RAISES the recorded floor so absent keys keep a
@@ -418,25 +418,15 @@ def _heavy_map(counts: DataFrame, n: int, old: dict | None) -> dict:
     return {"n_docs": n, "floor_frac": floor, "heavy": heavy}
 
 
-def _load_stats_sidecar(path: str) -> dict:
-    """Read a heavy-hitter sidecar; corrupt or missing → {} (the
-    index loads stats-less and routes ungated — never fail the
-    index over its stats)."""
-    from deeplake_spark.storage import get_json, json_exists
-
-    try:
-        if not json_exists(path):
-            return {}
-        ts = get_json(path)
-        return {
-            "n_rows_est": int(ts.get("n_docs", 0)) or None,
-            "floor_frac": float(ts.get("floor_frac", _HEAVY_FRAC)),
-            "heavy": {k: int(v) for k, v in ts.get("heavy", {}).items()},
-            "range_granule": (int(ts["range_granule"])
-                              if ts.get("range_granule") else None),
-        }
-    except Exception:
-        return {}
+def _stats_meta(meta: dict) -> dict:
+    """The heavy-hitter stats of a manifest's meta (_heavy_map's
+    payload), typed for the index classes."""
+    return {
+        "n_rows_est": int(meta.get("n_docs", 0)) or None,
+        "floor_frac": float(meta.get("floor_frac", _HEAVY_FRAC)),
+        "heavy": {k: int(v) for k, v in meta.get("heavy", {}).items()},
+        "range_granule": meta.get("range_granule"),
+    }
 
 
 def require_saved(index) -> None:
@@ -467,18 +457,18 @@ class InvertedIndex:
     postings: DataFrame  # term, row_id, tf
     stats: DataFrame  # n_docs, avgdl
     doclens: DataFrame  # row_id, dl
-    #: routing-gate stats (termstats.json sidecar): heavy-term df map
-    #: + corpus size. None without a readable sidecar — est_selectivity
-    #: then returns None and routes stay ungated.
+    #: routing-gate stats (manifest meta): heavy-term df map + corpus
+    #: size. None on an unsaved build — est_selectivity then returns
+    #: None and routes stay ungated.
     heavy: dict | None = None
     n_docs_est: int | None = None
     floor_frac: float = _HEAVY_FRAC
     #: build-time per-(term, granule) row-id min/max side table
     #: (g, lo, hi + bucket partition), written by save() at
-    #: DEFAULT_RANGE_GRANULE and recorded in the termstats sidecar
+    #: DEFAULT_RANGE_GRANULE and recorded in the manifest meta
     #: (range_granule) — the plan-time range summary aggregates THIS
-    #: instead of the posting rows (VERDICT r15 #8). None on
-    #: pre-granule indexes (probe paths fall back to the posting job).
+    #: instead of the posting rows (VERDICT r15 #8). None on an unsaved
+    #: build (probe paths fall back to the posting job).
     granules: DataFrame | None = None
     granule_size: int | None = None
     #: (n_docs, avgdl) of the merged `stats` row, collected once per
@@ -487,8 +477,8 @@ class InvertedIndex:
     corpus: tuple[int, float | None] | None = None
 
     def est_selectivity(self, term: str) -> float | None:
-        """Estimated df(term)/n from the persisted heavy-term sidecar;
-        terms absent from the sidecar are guaranteed rarer than
+        """Estimated df(term)/n from the persisted heavy-term map;
+        terms absent from the map are guaranteed rarer than
         `floor_frac` (the build-time recording floor), which is the
         returned upper bound. None = no stats (never gate)."""
         if not self.n_docs_est:
@@ -525,81 +515,30 @@ class InvertedIndex:
             .select("row_id")
         )
 
-    def probe_granules(self, terms: list[str]) -> DataFrame | None:
+    def probe_granules(self, terms: list[str]) -> DataFrame:
         """Build-time (g, lo, hi) granule rows for `terms`' UNION probe
-        (bucket-pruned like the posting probe), or None when this index
-        carries no granule table. The union is exact for mode='any' /
-        single-term probes and a sound SUPERSET for 'all' (ranges are
-        only ever a scan prefilter under an exact join)."""
-        if self.granules is None:
-            return None
+        (bucket-pruned like the posting probe). The union is exact for
+        mode='any' / single-term probes and a sound SUPERSET for 'all'
+        (ranges are only ever a scan prefilter under an exact join)."""
         uniq = sorted({t.lower() for t in terms})
         return _term_hit(self.granules, uniq).select("g", "lo", "hi")
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        """Write the side tables and the termstats sidecar. mode=
-        "append" is delta maintenance: this (delta-built) index's
-        postings/doclens land as NEW files next to the existing ones —
+        """Write the side tables; the manifest meta carries the routing
+        stats. mode="append" is delta maintenance: this (delta-built)
+        index's tables are listed next to the existing ones —
         union-on-read, prior files untouched (reference IndexingMode
         automatic, __init__.pyi:2885-2926). Stats accumulate one row
         per delta; load() merges them."""
-        from deeplake_spark.storage import get_json, json_exists, put_json
-
         # A build's frames share one corpus-tokenize lineage, and the
-        # four actions below would each re-run it (r14 review: ~5 full
+        # actions below would each re-run it (r14 review: ~5 full
         # corpus passes per ingest). Persist the two corpus-sized
         # frames for the duration of the save — one lineage fill each
         # — and release before returning.
         self.postings.persist()
         self.doclens.persist()
+        bucket = F.abs(F.hash("term")) % 64
         try:
-            # Build-time granule summary (VERDICT r15 #8): one
-            # (g, lo, hi) row per (term, DEFAULT_RANGE_GRANULE block),
-            # bucketed/partitioned exactly like the postings so probes
-            # prune the same way. The plan-time range summary then
-            # aggregates O(granules) pre-reduced rows instead of O(df)
-            # posting rows (routed_scan_ranges). Written BEFORE the
-            # postings so an interrupted APPEND leaves granules ⊇
-            # postings — ranges stay a sound superset. On append, only
-            # when the existing sidecar records the SAME granule (a
-            # pre-granule or differently-granuled base would leave the
-            # table missing the base rows — load would serve ranges
-            # that EXCLUDE true candidates); otherwise the sidecar key
-            # is dropped and load falls back to the posting-row job.
-            # An append onto an empty path (no sidecar, no postings) is
-            # a fresh save and records its granule.
-            granule_meta: int | None = DEFAULT_RANGE_GRANULE
-            sidecar = os.path.join(path, "termstats.json")
-            old = get_json(sidecar) if json_exists(sidecar) else None
-            if mode == "append":
-                base = old is not None or json_exists(
-                    os.path.join(path, "postings"))
-                if base and (old or {}).get("range_granule") \
-                        != DEFAULT_RANGE_GRANULE:
-                    granule_meta = None
-            elif old is not None and old.pop("range_granule", None):
-                # OVERWRITE onto an existing index dir: strip the
-                # coverage key BEFORE any data write — a crash between
-                # the new granules and the new postings would otherwise
-                # leave a stale key vouching for a granule table that
-                # no longer matches the postings (ranges could then
-                # EXCLUDE true candidate rows). With the key gone,
-                # every partially-overwritten state loads granule-less
-                # (sound fallback); the final _write_termstats restores
-                # it only after all writes landed. A failing strip
-                # raises here, before anything is written.
-                put_json(sidecar, old)
-            if granule_meta:
-                (self.postings
-                 .groupBy("term",
-                          F.expr(f"row_id div {int(granule_meta)}")
-                          .alias("g"))
-                 .agg(F.min("row_id").alias("lo"),
-                      F.max("row_id").alias("hi"))
-                 .withColumn("bucket", F.abs(F.hash("term")) % 64)
-                 .repartitionByRange("bucket", "term")
-                 .write.mode(mode).partitionBy("bucket").parquet(
-                     os.path.join(path, "granules")))
             # bucket the term dimension: probes prune to matching
             # partitions. Range-repartition on (bucket, term) BEFORE
             # the partitionBy write: a partitionBy write emits one
@@ -612,93 +551,80 @@ class InvertedIndex:
             # slice, so each bucket directory receives ~1 file here
             # and files ∝ shuffle partitions at 100 TB — prunable
             # AND parallel at any scale.
-            self.postings.withColumn(
-                "bucket", F.abs(F.hash("term")) % 64) \
-                .repartitionByRange("bucket", "term") \
-                .write.mode(mode).partitionBy("bucket").parquet(
-                    os.path.join(path, "postings"))
-            self.stats.write.mode(mode).parquet(os.path.join(path, "stats"))
-            self.doclens.write.mode(mode).parquet(
-                os.path.join(path, "doclens"))
-            self._write_termstats(sidecar,
-                                  old if mode == "append" else None,
-                                  granule=granule_meta)
+            write_side_table(path, {
+                # Build-time granule summary (VERDICT r15 #8): one
+                # (g, lo, hi) row per (term, DEFAULT_RANGE_GRANULE
+                # block), bucketed like the postings so probes prune
+                # the same way. The plan-time range summary then
+                # aggregates O(granules) pre-reduced rows instead of
+                # O(df) posting rows (routed_scan_ranges). Every
+                # manifest lists granules and postings together, so
+                # its granule table covers its postings.
+                "granules": (
+                    self.postings
+                    .groupBy("term", F.expr(
+                        f"row_id div {DEFAULT_RANGE_GRANULE}").alias("g"))
+                    .agg(F.min("row_id").alias("lo"),
+                         F.max("row_id").alias("hi"))
+                    .withColumn("bucket", bucket)
+                    .repartitionByRange("bucket", "term"), "bucket"),
+                "postings": (self.postings.withColumn("bucket", bucket)
+                             .repartitionByRange("bucket", "term"),
+                             "bucket"),
+                "stats": (self.stats, None),
+                "doclens": (self.doclens, None),
+            }, lambda old, staged: self._termstats(old), mode)
         finally:
             self.postings.unpersist()
             self.doclens.unpersist()
 
-    def _write_termstats(self, sidecar: str, old: dict | None,
-                         granule: int | None = None) -> None:
-        """Persist the routing-gate sidecar: df for every HEAVY term
+    def _termstats(self, old: dict | None) -> dict:
+        """The routing-gate stats: df for every HEAVY term
         (df >= floor_frac * n) + corpus size — the stats the reference
         injects into its cost hook (column_statistics.cpp:278-356).
         Bounded: heavy terms number at most avgdl/floor_frac, and a
         _HEAVY_CAP top-by-df cut raises the recorded floor so unknown
         terms keep a sound upper bound. On delta append (`old` = the
-        base's sidecar) the maps merge by summing, and a term already
+        base's stats) the maps merge by summing, and a term already
         heavy in the OLD map gets its EXACT delta df (probed below the
         delta's own floor) so repeated appends cannot erode a frequent
         term's estimate below the gate; a term absent from BOTH maps
         has df < floor*n_i in each segment, hence < max(floor)*n
-        overall — the bound survives."""
-        from deeplake_spark.storage import put_json
-
+        overall — the bound survives. `range_granule` is the granule
+        the granules table summarizes at."""
         srow = self.stats.agg(
             F.sum("n_docs").cast("long").alias("n")).head()
         n = int(srow["n"] or 0)
         counts = self.postings.groupBy(
             F.col("term").alias("key")).agg(F.count(F.lit(1)).alias("df"))
-        payload = _heavy_map(counts, n, old)
-        # range_granule present ⟺ the granules side table covers ALL
-        # postings at that granule (save() writes/declines the table
-        # and this key together; see the granule_meta comment there)
-        if granule:
-            payload["range_granule"] = int(granule)
-        put_json(sidecar, payload)
+        return {**_heavy_map(counts, n, old),
+                "range_granule": DEFAULT_RANGE_GRANULE}
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "InvertedIndex":
         # stats may hold one row per appended delta: merge with a
         # doc-count-weighted average (tiny relation — rows == deltas)
-        stats_path = os.path.join(path, "stats")
-        stats = memo.side_table(spark, stats_path).agg(
+        stats = memo.side_table(spark, path, "stats").agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum(F.col("n_docs") * F.col("avgdl")) / F.sum("n_docs")).alias("avgdl"),
         )
-        # one small job per stats content: a delta append adds a stats
-        # file, so its tree key — and this value — changes with it
+        # one small job per manifest: a delta append lands a new one
         corpus = memo.side_table_value(
-            spark, stats_path, "corpus", lambda: tuple(stats.head()))
-        # stats are ADVISORY: a corrupt/half-written sidecar (crashed
-        # append) must not brick index loading — load stats-less
-        # (est_selectivity None => never gated), the same fail-open
-        # the JVM rule applies
-        ts = _load_stats_sidecar(os.path.join(path, "termstats.json"))
-        # granule side table: only trusted when the sidecar recorded
-        # its granule in the same save (the key ⟺ full-coverage
-        # invariant — see save()); a missing/unreadable table degrades
-        # to the posting-row summary, never an error
-        gsize = ts.get("range_granule")
-        granules = None
-        if gsize:
-            try:
-                granules = memo.side_table(
-                    spark, os.path.join(path, "granules"))
-            except Exception:
-                granules, gsize = None, None
+            spark, path, "corpus", lambda: tuple(stats.head()))
+        ts = _stats_meta(memo.manifest(path)[1]["meta"])
         return cls(
             # keep `bucket`: probes prune the term-hash partition with it
             # (_term_hit) — dropping it here made every probe scan all 64
             # posting partitions
-            postings=memo.side_table(spark, os.path.join(path, "postings")),
+            postings=memo.side_table(spark, path, "postings"),
             stats=stats,
-            doclens=memo.side_table(spark, os.path.join(path, "doclens")),
-            heavy=ts.get("heavy"),
-            n_docs_est=ts.get("n_rows_est"),
-            floor_frac=ts.get("floor_frac", _HEAVY_FRAC),
-            granules=granules,
-            granule_size=gsize,
+            doclens=memo.side_table(spark, path, "doclens"),
+            heavy=ts["heavy"],
+            n_docs_est=ts["n_rows_est"],
+            floor_frac=ts["floor_frac"],
+            granules=memo.side_table(spark, path, "granules"),
+            granule_size=int(ts["range_granule"]),
             corpus=corpus,
         )
 
@@ -843,17 +769,17 @@ class NumericIndex:
     RANGE buckets as the partition column — BETWEEN/IN probes filter the
     bucket range first, so parquet partition pruning actually fires (the
     zone-map analog made physical). Bucket bounds (vmin/width) persist
-    in a sidecar; delta appends reuse them (values outside the original
-    range clamp to the edge buckets — the value filter keeps probes
-    exact)."""
+    in the manifest meta; delta appends reuse them (values outside the
+    original range clamp to the edge buckets — the value filter keeps
+    probes exact)."""
 
     values: DataFrame  # value, row_id [, bucket]
     vmin: float | None = None
     width: float | None = None
-    #: routing-gate stats (meta.json): per-bucket row counts + total —
+    #: routing-gate stats (manifest meta): per-bucket row counts + total —
     #: the 64-cell histogram the range/IN gate estimates from (the
     #: zone-map twin of the reference's planner stats injection,
-    #: column_statistics.cpp:278-356). None on pre-stats indexes.
+    #: column_statistics.cpp:278-356). None on an unsaved build.
     bucket_counts: dict | None = None
     n_rows: int | None = None
 
@@ -900,15 +826,13 @@ class NumericIndex:
         return out.filter(F.col("value").isin(items)).select("row_id")
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        """Write the range-bucketed values and the meta.json sidecar
-        (bucket bounds + histogram). mode="append" is a delta append
+        """Write the range-bucketed values; the manifest meta carries
+        the bucket bounds + histogram. mode="append" is a delta append
         with the EXISTING bucket bounds — prior files untouched; the
         histogram merges by summing per-bucket counts."""
-        from deeplake_spark.storage import get_json, put_json
-
-        meta_path = os.path.join(path, "meta.json")
-        if mode == "append":
-            meta = get_json(meta_path)
+        found = memo.manifest(path) if mode == "append" else None
+        if found:
+            meta = dict(found[1]["meta"])
         else:
             bounds = self.values.agg(
                 F.min(F.col("value").cast("double")).alias("lo"),
@@ -926,47 +850,35 @@ class NumericIndex:
                         / meta["width"]).cast("int"),
             ),
         )
+
+        def histogram(old, staged):
+            # per-bucket row counts with the same bucket expression the
+            # writer partitions by — ≤64 rows collected, build-time only
+            rows = (self.values.groupBy(bucket.alias("b"))
+                    .agg(F.count(F.lit(1)).alias("c")).collect())
+            counts = dict(meta["bucket_counts"])
+            for r in rows:
+                b = str(int(r["b"]))
+                counts[b] = int(counts.get(b, 0)) + int(r["c"])
+            return {**meta, "bucket_counts": counts, "n": int(meta["n"])
+                    + sum(int(r["c"]) for r in rows)}
+
         # range-repartition before the partitionBy write (the
         # InvertedIndex.save layout rule): ~1 file per bucket dir at
         # small scale, files proportional to shuffle partitions at
         # 100 TB
-        self.values.withColumn("bucket", bucket) \
-            .repartitionByRange("bucket", "value") \
-            .write.mode(mode).partitionBy("bucket") \
-            .parquet(os.path.join(path, "values"))
-        # per-bucket row counts with the same bucket expression the
-        # writer partitions by — ≤64 rows collected, build-time only
-        rows = (self.values.groupBy(bucket.alias("b"))
-                .agg(F.count(F.lit(1)).alias("c")).collect())
-        counts = dict(meta.get("bucket_counts", {}))
-        for r in rows:
-            b = str(int(r["b"]))
-            counts[b] = int(counts.get(b, 0)) + int(r["c"])
-        meta.update(bucket_counts=counts, n=int(meta.get("n", 0))
-                    + sum(int(r["c"]) for r in rows))
-        put_json(meta_path, meta)
+        write_side_table(path, {"values": (
+            self.values.withColumn("bucket", bucket)
+            .repartitionByRange("bucket", "value"), "bucket")},
+            histogram, mode)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "NumericIndex":
-        from deeplake_spark.storage import get_json, json_exists
-
-        vmin = width = counts = n = None
-        meta_path = os.path.join(path, "meta.json")
-        if json_exists(meta_path):
-            try:
-                meta = get_json(meta_path)
-                vmin, width = meta["vmin"], meta["width"]
-                counts = meta.get("bucket_counts")
-                n = int(meta.get("n", 0)) or None
-            except Exception:
-                # histogram stats are advisory — a corrupt sidecar
-                # loads stats-less (never gated), not a crash
-                vmin = width = counts = n = None
-        return cls(
-            values=memo.side_table(spark, os.path.join(path, "values")),
-            vmin=vmin, width=width, bucket_counts=counts, n_rows=n,
-        )
+        values, meta = read_side_table(spark, path, "values")
+        return cls(values=values, vmin=meta["vmin"], width=meta["width"],
+                   bucket_counts=meta["bucket_counts"],
+                   n_rows=int(meta["n"]) or None)
 
 
 def build_numeric_index(df: DataFrame, col: str, id_col: str = "doc_id") -> NumericIndex:
@@ -978,34 +890,33 @@ def build_numeric_index(df: DataFrame, col: str, id_col: str = "doc_id") -> Nume
 
 def _save_heavy_keyed(frame: DataFrame, out: DataFrame, path: str,
                       mode: str, table: str, part: str, order: tuple,
-                      sidecar: str, key: Column, n_by: list) -> None:
+                      key: Column, n_by: list) -> None:
     """The json/exact save: `out` (frame + its partition column) is
     range-repartitioned on `order` (the InvertedIndex.save layout rule
     — a persisted upstream otherwise writes one file per task per
-    partition) and written partitioned by `part` under `table`; the
-    heavy-hitter sidecar counts `key`, with n = the largest `n_by`
-    group (the whole frame when `n_by` is empty). Three actions share
-    the frame's corpus lineage (json extraction / md5), so it is
-    persisted for the save."""
-    from deeplake_spark.storage import get_json, json_exists, put_json
+    partition) and written partitioned by `part` as `table`; the
+    manifest meta holds the heavy-hitter stats of `key`, with n = the
+    largest `n_by` group (the whole frame when `n_by` is empty). Three
+    actions share the frame's corpus lineage (json extraction / md5),
+    so it is persisted for the save."""
 
-    frame.persist()
-    try:
-        out.repartitionByRange(*order).write.mode(mode) \
-            .partitionBy(part).parquet(os.path.join(path, table))
-        sc = os.path.join(path, sidecar)
-        old = get_json(sc) if mode == "append" and json_exists(sc) else None
+    def stats(old, staged):
         n = frame.groupBy(*n_by).agg(F.count(F.lit(1)).alias("c")) \
             .agg(F.max("c")).head()[0]
         counts = frame.groupBy(key.alias("key")).agg(
             F.count(F.lit(1)).alias("df"))
-        put_json(sc, _heavy_map(counts, int(n or 0), old))
+        return _heavy_map(counts, int(n or 0), old)
+
+    frame.persist()
+    try:
+        write_side_table(path, {table: (out.repartitionByRange(*order),
+                                        part)}, stats, mode)
     finally:
         frame.unpersist()
 
 
 #: separator for the composite (path, value) key in the json-index
-#: stats sidecar — a unit-separator control char no json path contains
+#: stats — a unit-separator control char no json path contains
 _JSON_KEY_SEP = "\x1f"
 
 
@@ -1015,7 +926,7 @@ class JsonIndex:
     for the keys extracted at build time (bluesky-style workloads)."""
 
     entries: DataFrame  # path, value, row_id
-    #: routing-gate stats (valstats.json sidecar): heavy (path,value) df
+    #: routing-gate stats (manifest meta): heavy (path,value) df
     #: map — a hot value ('type':'like' in a bluesky-style stream) is
     #: the same frequent-term hazard the inverted gate exists for.
     heavy: dict | None = None
@@ -1023,7 +934,7 @@ class JsonIndex:
     floor_frac: float = _HEAVY_FRAC
 
     def est_selectivity(self, path: str, value) -> float | None:
-        """Estimated df(path==value)/n from the persisted sidecar;
+        """Estimated df(path==value)/n from the persisted stats;
         pairs absent from it are rarer than `floor_frac` (the recording
         floor), the returned upper bound. None = no stats, never gate.
         n is the densest path's entry count — a lower bound on the
@@ -1048,23 +959,21 @@ class JsonIndex:
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Entries partitioned by json path (a probe reads exactly one
-        directory) + the valstats.json heavy-value sidecar. mode=
+        directory) + the heavy-value stats in the manifest meta. mode=
         "append": new entries land in new files under each path
-        partition — prior files untouched; valstats merge by summing."""
+        partition — prior files untouched; the stats merge by summing."""
         _save_heavy_keyed(
             self.entries, self.entries, path, mode, "entries", "path",
-            ("path", "value"), "valstats.json",
+            ("path", "value"),
             F.concat_ws(_JSON_KEY_SEP, "path", "value"), ["path"])
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "JsonIndex":
-        ts = _load_stats_sidecar(os.path.join(path, "valstats.json"))
-        return cls(entries=memo.side_table(spark,
-                                           os.path.join(path, "entries")),
-                   heavy=ts.get("heavy"),
-                   n_rows_est=ts.get("n_rows_est"),
-                   floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
+        entries, meta = read_side_table(spark, path, "entries")
+        ts = _stats_meta(meta)
+        return cls(entries=entries, heavy=ts["heavy"],
+                   n_rows_est=ts["n_rows_est"], floor_frac=ts["floor_frac"])
 
 
 def build_json_index(df: DataFrame, json_col: str, paths: list[str],
@@ -1093,7 +1002,7 @@ class ExactTextIndex:
     digest → row_ids hash lookup."""
 
     digests: DataFrame  # digest, row_id [, bucket]
-    #: routing-gate stats (digeststats.json sidecar): heavy digest df
+    #: routing-gate stats (manifest meta): heavy digest df
     #: map — a hot exact value (the empty document, a boilerplate page)
     #: is the same frequent-term hazard the inverted gate exists for.
     heavy: dict | None = None
@@ -1101,7 +1010,7 @@ class ExactTextIndex:
     floor_frac: float = _HEAVY_FRAC
 
     def est_selectivity(self, value: str) -> float | None:
-        """Estimated df(value)/n from the persisted digest sidecar;
+        """Estimated df(value)/n from the persisted digest stats;
         digests absent from it are rarer than `floor_frac` (the
         recording floor), the returned upper bound. None = no stats,
         never gate."""
@@ -1120,44 +1029,31 @@ class ExactTextIndex:
 
         require_saved(self)
         h = hashlib.md5(value.encode()).hexdigest()
-        out = self.digests
-        # Partition-prune to the probe's digest-prefix directory.
-        # Type-adaptive literal (r14 review, confirmed live): when
-        # every stored prefix happens to be all-digits, Spark's
-        # partition-type inference loads `bucket` as INT, and a
-        # string comparison would ANSI-cast an alpha prefix like
-        # 'aa' to BIGINT and CRASH instead of returning empty.
-        dt = {f.name: f.dataType.simpleString()
-              for f in out.schema.fields}["bucket"]
-        b = h[:2]
-        if dt == "string":
-            out = out.filter(F.col("bucket") == b)
-        elif b.isdigit():
-            out = out.filter(F.col("bucket") == int(b))
-        else:  # alpha prefix cannot exist among numeric partitions
-            return (out.filter(F.lit(False)).select("row_id"))
-        return out.filter(F.col("digest") == h).select("row_id")
+        # partition-prune to the probe's digest-prefix directory; the
+        # manifest's recorded schema keeps `bucket` a string even when
+        # every stored prefix is all-digits
+        return (self.digests.filter(F.col("bucket") == h[:2])
+                .filter(F.col("digest") == h).select("row_id"))
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Digests in digest-prefix buckets (probe() filters the bucket
         column so an exact lookup prunes to one partition directory) +
-        the digeststats.json sidecar. mode="append": new digests land
-        in new files per bucket — prior files untouched; digeststats
-        merge by summing."""
+        the heavy-digest stats in the manifest meta. mode="append": new
+        digests land in new files per bucket — prior files untouched;
+        the stats merge by summing."""
         _save_heavy_keyed(
             self.digests,
             self.digests.withColumn("bucket", F.substring("digest", 1, 2)),
             path, mode, "digests", "bucket", ("bucket", "digest"),
-            "digeststats.json", F.col("digest"), [])
+            F.col("digest"), [])
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
              source: DataFrame | None = None) -> "ExactTextIndex":
-        ts = _load_stats_sidecar(os.path.join(path, "digeststats.json"))
-        return cls(digests=memo.side_table(spark,
-                                           os.path.join(path, "digests")),
-                   heavy=ts.get("heavy"), n_rows_est=ts.get("n_rows_est"),
-                   floor_frac=ts.get("floor_frac", _HEAVY_FRAC))
+        digests, meta = read_side_table(spark, path, "digests")
+        ts = _stats_meta(meta)
+        return cls(digests=digests, heavy=ts["heavy"],
+                   n_rows_est=ts["n_rows_est"], floor_frac=ts["floor_frac"])
 
 
 def build_exact_index(df: DataFrame, col: str, id_col: str = "doc_id") -> ExactTextIndex:
@@ -1173,42 +1069,103 @@ def build_exact_index(df: DataFrame, col: str, id_col: str = "doc_id") -> ExactT
 # __init__.pyi:2885-2926). INDEX_KINDS is the one place that says how
 # each kind is built, saved, delta-appended and loaded; Dataset, the
 # query-lane memo and the commit-time refresh all dispatch through it.
-# Each index class writes its own tables + sidecar in save(path, mode)
-# and reads them back in load(spark, path, source); the on-disk layout
-# (file names and sidecar keys) is read directly by the JVM routing
-# rule, so it must not drift.
+# Every index and sketch is a manifest-listed file set under its
+# directory: `_log/NNNNNNNN.json` manifests, each listing the parquet
+# files of every table (<dir>/<table>/[<part>=<v>/]part-*.parquet) plus
+# the kind's metadata (`meta`: bucket bounds, heavy-hitter stats,
+# centroids, `n`). write_side_table is the one write, memo.side_table
+# the one read; the JVM routing rule reads the same manifests, so
+# table names and meta keys must not drift.
+
+#: where a write stages its files before moving them into the table
+#: directories (`_`-prefixed: neither Spark's discovery nor the
+#: manifest readers look there)
+_STAGING = "_staging"
 
 
-def write_side_table(df: DataFrame, path: str, table: str, sidecar: str,
-                     meta: dict, mode: str = "overwrite",
-                     partition_by: str | None = None) -> None:
-    """The vector/fingerprint families' save: `df` written under
-    <path>/<table> (`mode` overwrite or append; optionally partitioned)
-    and the JSON `sidecar` = `meta` + `n`, the side table's row count
-    after the write — the corpus size the range-coverage gate reads (a
-    stale undercount would decline pruning on exactly the
-    append-maintained indexes it targets). n is counted from the files
-    just written: parquet-metadata-cheap, no recompute of the plan. The
-    count reads through `memo.side_table`, so the first load after the
-    save reuses that read."""
-    from deeplake_spark.storage import put_json
+def write_side_table(path: str,
+                     tables: dict[str, tuple[DataFrame, str | None]],
+                     meta: Callable[[dict | None, Callable], dict],
+                     mode: str = "overwrite") -> None:
+    """The one write of every index and sketch side table, kill-safe by
+    the dataset's own protocol (PAPER.md §1.2): each (frame, partition
+    column) in `tables` is written under `_staging/`, its files move
+    into <path>/<table>/ under their unique Spark names, and only then
+    does manifest n+1 land, in one atomic put. A reader takes the
+    newest manifest, so it sees the old state or the new one, never a
+    mix. mode="append" is delta maintenance: the new manifest lists the
+    previous files plus the delta's (an append onto a path with no
+    manifest is a fresh save). `meta(old, staged)` returns the new
+    manifest's `meta` from the previous one (None unless appending) and
+    `staged(table)`, the staged delta of a table as a DataFrame.
 
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(os.path.join(path, table))
-    n = int(memo.side_table(df.sparkSession,
-                            os.path.join(path, table)).count())
-    put_json(os.path.join(path, sidecar), {**meta, "n": n})
+    GC after the put: strays (staged leftovers, files of a crashed
+    write) and files that neither the new nor the previous manifest
+    lists are deleted, so a plan loaded before this write stays
+    executable across it but not across the next (single writer, the
+    Dataset convention)."""
+    import json
+    import uuid
+
+    from deeplake_spark.storage import metadata_store_for
+
+    store = metadata_store_for(path)
+    found = memo.manifest(path)
+    prev = found[1] if found else None
+    base = prev if mode == "append" else None
+    stage = os.path.join(path, _STAGING, uuid.uuid4().hex)
+    schemas = {}
+    for name, (df, part) in tables.items():
+        w = df.write.mode("overwrite")
+        (w.partitionBy(part) if part else w).parquet(
+            os.path.join(stage, name))
+        schemas[name] = df.schema.json()
+    spark = df.sparkSession
+    staged = {name: store.files(os.path.join(stage, name))
+              for name in tables}
+    new_meta = meta(base and base["meta"], lambda t: memo.read_files(
+        spark, os.path.join(stage, t), schemas[t], staged[t]))
+    for name, files in staged.items():
+        for f in files:
+            store.rename(os.path.join(stage, name, f),
+                         os.path.join(path, name, f))
+    version = (prev["version"] if prev else 0) + 1
+    new = {"version": version, "meta": new_meta, "tables": {
+        name: {"schema": schemas[name], "files": (
+            base["tables"][name]["files"] if base else []) + staged[name]}
+        for name in tables}}
+    log = os.path.join(path, memo.MANIFEST_DIR)
+    store.put_bytes(os.path.join(log, f"{version:08d}.json"),
+                    json.dumps(new).encode())
+    store.delete(os.path.join(path, _STAGING))
+    keep = {(t, f) for m in (new, prev) if m
+            for t, spec in m["tables"].items() for f in spec["files"]}
+    for t in {t for t, _f in keep} | set(tables):
+        for f in store.files(os.path.join(path, t)):
+            if (t, f) not in keep:
+                store.delete(os.path.join(path, t, f))
+    live = {f"{m['version']:08d}.json" for m in (new, prev) if m}
+    for name in store.list(log):
+        if name not in live:
+            store.delete(os.path.join(log, name))
 
 
-def read_side_table(spark: SparkSession, path: str, table: str,
-                    sidecar: str) -> tuple[DataFrame, dict]:
-    """(side table, sidecar dict) as written by write_side_table."""
-    from deeplake_spark.storage import get_json
+def counted(table: str, meta: dict) -> Callable[[dict | None, Callable], dict]:
+    """The `meta` callback of a single-table side table: `meta` plus
+    `n`, the table's row count after the write — the corpus size the
+    range-coverage gate reads (a stale undercount would decline pruning
+    on exactly the append-maintained indexes it targets). The delta is
+    counted from its staged files: parquet-metadata-cheap, no recompute
+    of the plan."""
+    return lambda old, staged: {
+        **meta, "n": int((old or {}).get("n", 0)) + staged(table).count()}
 
-    meta = get_json(os.path.join(path, sidecar))
-    return memo.side_table(spark, os.path.join(path, table)), meta
+
+def read_side_table(spark: SparkSession, path: str,
+                    table: str) -> tuple[DataFrame, dict]:
+    """(table, manifest meta) of a side table written by
+    write_side_table."""
+    return memo.side_table(spark, path, table), memo.manifest(path)[1]["meta"]
 
 
 @dataclass(frozen=True)

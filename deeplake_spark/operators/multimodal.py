@@ -2059,25 +2059,25 @@ class FingerprintIndex:
         """Persist: signatures range-partitioned + sorted by id
         (row-group min/max stats make later id probes prunable, the
         ingest layout convention; an append delta lands as written)
-        plus a meta.json sidecar carrying the decode params and
+        plus manifest meta carrying the decode params and
         corpus size."""
-        from deeplake_spark.operators.indexes import write_side_table
+        from deeplake_spark.operators.indexes import counted, write_side_table
 
         sigs = self.signatures
         if mode != "append":
             sigs = (sigs.repartitionByRange(F.col(self.id_col))
                     .sortWithinPartitions(self.id_col))
-        write_side_table(sigs, path, "signatures", "meta.json",
-                         {"modality": self.modality, "id_col": self.id_col,
-                          "params": self.params, "nbits": self.nbits},
-                         mode)
+        write_side_table(path, {"signatures": (sigs, None)}, counted(
+            "signatures", {"modality": self.modality, "id_col": self.id_col,
+                           "params": self.params, "nbits": self.nbits}),
+            mode)
 
     @classmethod
     def load(cls, spark, path: str,
              source: DataFrame | None = None) -> "FingerprintIndex":
         from deeplake_spark.operators.indexes import read_side_table
 
-        sigs, meta = read_side_table(spark, path, "signatures", "meta.json")
+        sigs, meta = read_side_table(spark, path, "signatures")
         return cls(signatures=sigs, modality=meta["modality"],
                    id_col=meta["id_col"], params=meta.get("params", {}),
                    nbits=int(meta.get("nbits", 64)),

@@ -123,21 +123,20 @@ class IVFIndex:
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Assignments written PARTITIONED BY cluster (a probe reads
         only nprobe directories — the physical cluster prune);
-        centroids in the centroids.json sidecar."""
-        from deeplake_spark.operators.indexes import write_side_table
+        centroids in the manifest meta."""
+        from deeplake_spark.operators.indexes import counted, write_side_table
 
-        write_side_table(self.assignments, path, "assignments",
-                         "centroids.json",
-                         {"centroids": self.centroids,
-                          "vec_col": self.vec_col, "id_col": self.id_col},
-                         mode, partition_by="cluster")
+        write_side_table(path, {"assignments": (self.assignments, "cluster")},
+                         counted("assignments", {
+                             "centroids": self.centroids,
+                             "vec_col": self.vec_col, "id_col": self.id_col}),
+                         mode)
 
     @classmethod
     def load(cls, spark, path: str, source: DataFrame | None = None) -> "IVFIndex":
         from deeplake_spark.operators.indexes import read_side_table
 
-        assignments, meta = read_side_table(spark, path, "assignments",
-                                            "centroids.json")
+        assignments, meta = read_side_table(spark, path, "assignments")
         return cls(assignments=assignments,
                    centroids=[(int(c), v) for c, v in meta["centroids"]],
                    vec_col=meta["vec_col"], id_col=meta["id_col"],
@@ -513,19 +512,18 @@ class QuantizedIndex:
     n_rows_est: int | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        """The bits table + meta.json; mode="append" adds a delta
+        """The bits table + manifest meta; mode="append" adds a delta
         (sign-quantize ONLY the new rows: build over them, then save)."""
-        from deeplake_spark.operators.indexes import write_side_table
+        from deeplake_spark.operators.indexes import counted, write_side_table
 
-        write_side_table(self.bits, path, "bits", "meta.json",
-                         {"vec_col": self.vec_col, "id_col": self.id_col},
-                         mode)
+        write_side_table(path, {"bits": (self.bits, None)}, counted(
+            "bits", {"vec_col": self.vec_col, "id_col": self.id_col}), mode)
 
     @classmethod
     def load(cls, spark, path: str, source: DataFrame) -> "QuantizedIndex":
         from deeplake_spark.operators.indexes import read_side_table
 
-        bits, meta = read_side_table(spark, path, "bits", "meta.json")
+        bits, meta = read_side_table(spark, path, "bits")
         return cls(bits=bits,
                    source=source.select(meta["id_col"], meta["vec_col"]),
                    vec_col=meta["vec_col"], id_col=meta["id_col"],
@@ -676,23 +674,21 @@ class PQIndex:
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """The codes table (PARTITIONED BY cluster for IVF-PQ) +
-        codebooks.json."""
-        from deeplake_spark.operators.indexes import write_side_table
+        the codebooks in the manifest meta."""
+        from deeplake_spark.operators.indexes import counted, write_side_table
 
-        write_side_table(self.codes, path, "codes", "codebooks.json",
-                         {"codebooks": self.codebooks,
-                          "vec_col": self.vec_col, "id_col": self.id_col,
-                          "centroids": self.centroids},
-                         mode, partition_by=(
-                             "cluster" if self.centroids is not None
-                             else None))
+        write_side_table(path, {"codes": (self.codes, (
+            "cluster" if self.centroids is not None else None))},
+            counted("codes", {"codebooks": self.codebooks,
+                              "vec_col": self.vec_col, "id_col": self.id_col,
+                              "centroids": self.centroids}), mode)
 
     @classmethod
     def load(cls, spark, path: str,
              source: DataFrame | None = None) -> "PQIndex":
         from deeplake_spark.operators.indexes import read_side_table
 
-        codes, meta = read_side_table(spark, path, "codes", "codebooks.json")
+        codes, meta = read_side_table(spark, path, "codes")
         cents = meta.get("centroids")
         return cls(
             codes=codes,
@@ -1015,17 +1011,17 @@ class PooledMaxsimIndex:
     n_rows_est: int | None = None
 
     def save(self, path: str, mode: str = "overwrite") -> None:
-        """Persist the pooled-vector prefilter table + meta.json
+        """Persist the pooled-vector prefilter table + manifest meta
         (mode="append": pool ONLY the new rows, then save). The source
         matrices are NOT copied — at load time the rerank stage
         rebinds to the live dataset relation (index stores derived
         data only, like the reference's PooledQuantized stored index,
         types.pyi:604-615)."""
-        from deeplake_spark.operators.indexes import write_side_table
+        from deeplake_spark.operators.indexes import counted, write_side_table
 
-        write_side_table(self.pooled, path, "pooled", "meta.json",
-                         {"matrix_col": self.matrix_col,
-                          "id_col": self.id_col}, mode)
+        write_side_table(path, {"pooled": (self.pooled, None)}, counted(
+            "pooled", {"matrix_col": self.matrix_col,
+                       "id_col": self.id_col}), mode)
 
     @classmethod
     def load(cls, spark, path: str, source: DataFrame) -> "PooledMaxsimIndex":
@@ -1034,7 +1030,7 @@ class PooledMaxsimIndex:
         pooled-prefilter hits."""
         from deeplake_spark.operators.indexes import read_side_table
 
-        pooled, meta = read_side_table(spark, path, "pooled", "meta.json")
+        pooled, meta = read_side_table(spark, path, "pooled")
         return cls(pooled=pooled,
                    source=source.select(meta["id_col"], meta["matrix_col"]),
                    id_col=meta["id_col"], matrix_col=meta["matrix_col"],

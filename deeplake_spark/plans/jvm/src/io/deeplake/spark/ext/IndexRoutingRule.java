@@ -100,7 +100,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  is NOT routed — its posting/value probe side would be
      *  near-corpus-size, and semijoining it shuffles ~the corpus to
      *  avoid a filter Parquet evaluates in place. Unknown stats (no
-     *  sidecar) route as before. Shared with the TQL routes. */
+     *  manifest meta) route as before. Shared with the TQL routes. */
     public static final String MAX_SELECTIVITY_KEY =
             "spark.sql.deeplake.routing.maxSelectivity";
     static final double DEFAULT_MAX_SELECTIVITY = 0.1;
@@ -118,7 +118,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  comparison, exact digest equality); token-CONTAINS is EXEMPT —
      *  its stock scan pays a per-row tokenize that grows with corpus
      *  CPU (routed is within noise at x1 and wins 3-7x from x32, gate
-     *  table). Corpus size comes from the same sidecars the
+     *  table). Corpus size comes from the same manifest meta the
      *  selectivity gate reads; unknown fails open. Shared conf name
      *  with the TQL routes (operators/indexes.py). */
     public static final String MIN_CORPUS_ROWS_KEY =
@@ -254,7 +254,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         List<Dataset<Row>> probes = new ArrayList<>();
         List<String> probeIdCols = new ArrayList<>();
         List<String> probeDescs = new ArrayList<>();   // range-cache keys
-        List<String> probeSigDirs = new ArrayList<>(); // data dirs to sign
+        List<String> probeIndexes = new ArrayList<>(); // their manifests key ranges
         List<Long> probeNEsts = new ArrayList<>();     // corpus-size ests
         Map<String, Range> ranges = new HashMap<>();
         double maxSel = confDouble(MAX_SELECTIVITY_KEY,
@@ -278,7 +278,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     probes.add(invertedProbe(en, tok[1]));
                     probeIdCols.add(en.idCol);
                     probeDescs.add("inv|" + en.indexPath + "|" + tok[1]);
-                    probeSigDirs.add(en.indexPath + "/postings");
+                    probeIndexes.add(en.indexPath);
                     probeNEsts.add(invertedNDocs(en));
                     continue;
                 }
@@ -294,7 +294,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     probes.add(exactProbe(en, eqs[1]));
                     probeIdCols.add(en.idCol);
                     probeDescs.add("ex|" + en.indexPath + "|" + eqs[1]);
-                    probeSigDirs.add(en.indexPath + "/digests");
+                    probeIndexes.add(en.indexPath);
                     probeNEsts.add(exactN(en));
                     // digest lookup prunes; the equality itself is KEPT
                     // as a residual so an md5 collision can never admit
@@ -323,7 +323,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     probes.add(inProbe(en, in.values));
                     probeIdCols.add(en.idCol);
                     probeDescs.add("in|" + en.indexPath + "|" + in.values);
-                    probeSigDirs.add(en.indexPath + "/values");
+                    probeIndexes.add(en.indexPath);
                     probeNEsts.add(numericN(en));
                     continue;
                 }
@@ -371,7 +371,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             probeIdCols.add(r.entry.idCol);
             probeDescs.add("rg|" + r.entry.indexPath + "|" + r.lo + "|"
                     + r.loStrict + "|" + r.hi + "|" + r.hiStrict);
-            probeSigDirs.add(r.entry.indexPath + "/values");
+            probeIndexes.add(r.entry.indexPath);
             probeNEsts.add(numericN(r.entry));
         }
         if (probes.isEmpty()) {
@@ -392,7 +392,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                 }
                 List<long[]> rs = cachedRanges(probes.get(i),
                         probeDescs.get(i), probeNEsts.get(i),
-                        probeSigDirs.get(i));
+                        probeIndexes.get(i));
                 if (rs == null || rs.isEmpty()) {
                     continue;
                 }
@@ -431,7 +431,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return new Filter(cond, joined);
     }
 
-    // ------------------------------------------- sidecar / filesystem I/O
+    // ------------------------------------------------- filesystem I/O
 
     /** Hadoop Configuration of the owning session (built lazily, once
      *  per rule instance): ALL probe-side metadata I/O goes through the
@@ -471,96 +471,89 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         }
     }
 
-    // ------------------------------------------------ selectivity stats
+    // ------------------------------------------------ side-table manifests
 
-    /** Parsed-sidecar LRU keyed by normalized path, invalidated by the
-     *  file's (mtime, len) signature — stats are consulted on EVERY
-     *  candidate route, so they must not cost a filesystem read per
-     *  planned query. */
-    private static final Map<String, Object[]> STATS_CACHE =
-            java.util.Collections.synchronizedMap(
-                    new java.util.LinkedHashMap<String, Object[]>(
+    /** Parsed-manifest LRU. A side table's state is its newest
+     *  `_log/NNNNNNNN.json` manifest (the Python writer's snapshot
+     *  protocol, indexes.write_side_table): it lists the table files
+     *  and carries the index meta. Manifests are never rewritten, so
+     *  (path, mtime, length) of the newest one keys everything read
+     *  from it — stats are consulted on EVERY candidate route, so they
+     *  cost one `_log` listing per planned query, not a read. */
+    private static final Map<String, com.fasterxml.jackson.databind.JsonNode>
+            MANIFESTS = java.util.Collections.synchronizedMap(
+                    new java.util.LinkedHashMap<String,
+                            com.fasterxml.jackson.databind.JsonNode>(
                             32, 0.75f, true) {
                         @Override
-                        protected boolean removeEldestEntry(
-                                Map.Entry<String, Object[]> eldest) {
+                        protected boolean removeEldestEntry(Map.Entry<String,
+                                com.fasterxml.jackson.databind.JsonNode> e) {
                             return size() > 128;
                         }
                     });
 
-    /** Missing sidecars are cached NEGATIVELY for this long: without
-     *  it every planned query against a stats-less (pre-round-8) index
-     *  pays a failed getFileStatus (an object-store HEAD) per gated
-     *  conjunct — the per-plan filesystem cost this cache exists to
-     *  avoid. A sidecar written later is noticed within the TTL;
-     *  routing merely stays stats-less (fail-open) until then. */
-    private static final long NEG_TTL_NANOS = 60L * 1_000_000_000L;
-
-    private com.fasterxml.jackson.databind.JsonNode cachedJson(
-            String pathStr) {
-        String norm = IndexRegistry.normalize(pathStr);
-        Object[] hit = STATS_CACHE.get(norm);
-        if (hit != null && hit[1] == null) {        // negative entry
-            if (System.nanoTime() < ((Long) hit[0]).longValue()) {
-                return null;
-            }
-            STATS_CACHE.remove(norm);
-        }
-        org.apache.hadoop.fs.FileStatus st;
-        org.apache.hadoop.fs.FileSystem fs;
-        org.apache.hadoop.fs.Path p =
-                new org.apache.hadoop.fs.Path(pathStr);
+    /** Cache key of the index's newest manifest, or null when it has
+     *  none or `_log` cannot be listed (routing then stays stock). */
+    private String manifestKey(String indexPath) {
         try {
-            fs = p.getFileSystem(hconf());
-            st = fs.getFileStatus(p);
+            org.apache.hadoop.fs.Path log =
+                    new org.apache.hadoop.fs.Path(indexPath, "_log");
+            org.apache.hadoop.fs.FileStatus newest = null;
+            for (org.apache.hadoop.fs.FileStatus st
+                    : log.getFileSystem(hconf()).listStatus(log)) {
+                String name = st.getPath().getName();
+                if (name.endsWith(".json") && (newest == null || name
+                        .compareTo(newest.getPath().getName()) > 0)) {
+                    newest = st;
+                }
+            }
+            return newest == null ? null : newest.getPath() + "|"
+                    + newest.getModificationTime() + "|" + newest.getLen();
         } catch (Exception e) {
-            // A TRANSIENT stat failure must not evict still-valid
-            // cached stats (stats are advisory: slightly stale beats
-            // none) — serve the existing positive entry; only a path
-            // with no known-good stats gets the negative entry.
-            if (hit != null && hit[1] != null) {
-                return (com.fasterxml.jackson.databind.JsonNode) hit[1];
-            }
-            STATS_CACHE.put(norm, new Object[]{
-                    System.nanoTime() + NEG_TTL_NANOS, null});
-            return null;
-        }
-        long sig = st.getModificationTime() * 31 + st.getLen();
-        if (hit != null && hit[1] != null
-                && ((Long) hit[0]).longValue() == sig) {
-            return (com.fasterxml.jackson.databind.JsonNode) hit[1];
-        }
-        try {
-            if (st.getLen() > 256L * 1024 * 1024) {
-                // oversize/corrupt sidecars get the SAME negative
-                // caching as missing ones — otherwise every planned
-                // query repays the read+parse attempt forever
-                STATS_CACHE.put(norm, new Object[]{
-                        System.nanoTime() + NEG_TTL_NANOS, null});
-                return null;
-            }
-            byte[] raw = new byte[(int) st.getLen()];
-            try (org.apache.hadoop.fs.FSDataInputStream in = fs.open(p)) {
-                in.readFully(0, raw);
-            }
-            com.fasterxml.jackson.databind.JsonNode node =
-                    new com.fasterxml.jackson.databind.ObjectMapper()
-                            .readTree(raw);
-            STATS_CACHE.put(norm, new Object[]{sig, node});
-            return node;
-        } catch (Exception e) {
-            STATS_CACHE.put(norm, new Object[]{
-                    System.nanoTime() + NEG_TTL_NANOS, null});
             return null;
         }
     }
 
+    /** The index's newest manifest, or null (no manifest, unreadable). */
+    private com.fasterxml.jackson.databind.JsonNode manifest(String indexPath) {
+        return parsed(manifestKey(indexPath));
+    }
+
+    /** The manifest under a `manifestKey`, parsed once per key. */
+    private com.fasterxml.jackson.databind.JsonNode parsed(String key) {
+        if (key == null) {
+            return null;
+        }
+        com.fasterxml.jackson.databind.JsonNode hit = MANIFESTS.get(key);
+        if (hit != null) {
+            return hit;
+        }
+        org.apache.hadoop.fs.Path p = new org.apache.hadoop.fs.Path(
+                key.substring(0, key.indexOf('|')));
+        try (org.apache.hadoop.fs.FSDataInputStream in =
+                     p.getFileSystem(hconf()).open(p)) {
+            hit = new com.fasterxml.jackson.databind.ObjectMapper()
+                    .readTree(in);
+        } catch (Exception e) {
+            return null;
+        }
+        MANIFESTS.put(key, hit);
+        return hit;
+    }
+
+    /** The index meta of its newest manifest (heavy-hitter stats,
+     *  bucket bounds, centroids, n), or null. */
+    private com.fasterxml.jackson.databind.JsonNode meta(String indexPath) {
+        com.fasterxml.jackson.databind.JsonNode m = manifest(indexPath);
+        return m == null ? null : m.get("meta");
+    }
+
     /** Estimated df(term)/n from the inverted index's heavy-term
-     *  sidecar; terms absent from it are rarer than the recorded
+     *  map; terms absent from it are rarer than the recorded
      *  floor (the build-time invariant). -1 = no stats, never gate. */
     private double invertedSelectivity(IndexRegistry.Entry en, String kw) {
         com.fasterxml.jackson.databind.JsonNode ts =
-                cachedJson(en.indexPath + "/termstats.json");
+                meta(en.indexPath);
         if (ts == null) {
             return -1;
         }
@@ -575,14 +568,14 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return Math.min(1.0, ts.path("floor_frac").asDouble(1.0 / 64));
     }
 
-    /** Estimated df(value)/n from the exact index's digeststats
-     *  sidecar (md5-hex keyed); digests absent from it are rarer than
+    /** Estimated df(value)/n from the exact index's heavy-digest
+     *  map (md5-hex keyed); digests absent from it are rarer than
      *  the recorded floor. -1 = no stats, never gate. A hot exact
      *  value (empty document, boilerplate page) is the same
      *  frequent-term hazard the inverted gate covers. */
     private double exactSelectivity(IndexRegistry.Entry en, String value) {
         com.fasterxml.jackson.databind.JsonNode ts =
-                cachedJson(en.indexPath + "/digeststats.json");
+                meta(en.indexPath);
         if (ts == null) {
             return -1;
         }
@@ -627,11 +620,11 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return false;
     }
 
-    /** Corpus size from the inverted index's termstats sidecar; -1 when
+    /** Corpus size from the inverted index's manifest meta; -1 when
      *  absent (range pruning then skips only on scatter, not coverage). */
     private long invertedNDocs(IndexRegistry.Entry en) {
         com.fasterxml.jackson.databind.JsonNode ts =
-                cachedJson(en.indexPath + "/termstats.json");
+                meta(en.indexPath);
         return ts == null ? -1 : ts.path("n_docs").asLong(-1);
     }
 
@@ -640,11 +633,11 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return nm == null || nm.counts == null ? -1 : nm.n;
     }
 
-    /** Corpus size from the exact index's digeststats sidecar; -1 when
+    /** Corpus size from the exact index's manifest meta; -1 when
      *  absent (range pruning then skips only on scatter, not coverage). */
     private long exactN(IndexRegistry.Entry en) {
         com.fasterxml.jackson.databind.JsonNode ts =
-                cachedJson(en.indexPath + "/digeststats.json");
+                meta(en.indexPath);
         return ts == null ? -1 : ts.path("n_docs").asLong(-1);
     }
 
@@ -674,7 +667,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  per-granule min/max, coalesced driver-side. */
     @SuppressWarnings("unchecked")
     private List<long[]> cachedRanges(Dataset<Row> probe, String desc,
-                                      long nEst, String sigDir) {
+                                      long nEst, String indexPath) {
         long granule = confLong(RANGE_GRANULE_KEY, DEFAULT_RANGE_GRANULE);
         int maxRanges = confInt(MAX_RANGES_KEY, DEFAULT_MAX_RANGES);
         double coverage = confDouble(MAX_RANGE_COVERAGE_KEY,
@@ -682,18 +675,12 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         if (granule <= 0 || maxRanges <= 0) {
             return null;
         }
-        // The invalidation signature lists the DATA subdirectory the
-        // probe actually reads (postings/digests/values/assignments/
-        // codes) — the same dir readCached signs — NOT the index root:
-        // on object stores an in-place delta append changes only the
-        // data dir's listing (new part files + _SUCCESS) while the
-        // root's pseudo-dir entries stay byte-identical, and a memo
-        // keyed on the root would keep serving PRE-append [lo,hi]
-        // ranges whose corpus filter excludes the newly indexed rows
-        // before the semijoin — wrong rows, not just lost pruning
-        // (r15 review).
+        // keyed on the index's newest manifest: a delta append lands
+        // a new one, so pre-append [lo,hi] ranges — whose corpus
+        // filter would exclude the newly indexed rows before the
+        // semijoin — are never served after it
         String key = ((org.apache.spark.sql.classic.SparkSession) session)
-                .sessionUUID() + "|" + desc + "|" + dirSignature(sigDir)
+                .sessionUUID() + "|" + desc + "|" + manifestKey(indexPath)
                 + "|" + granule + "|" + maxRanges + "|" + coverage;
         Object hit = RANGE_CACHE.get(key);
         if (hit != null) {
@@ -835,23 +822,22 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
 
     // ----------------------------------------------------- probe builders
 
-    /** Per-(session, path) scan cache keyed by a directory mtime/size
-     *  signature: every probe otherwise pays a fresh file listing +
-     *  parquet footer read PER PLANNED QUERY (~120-145 ms on the
-     *  Python side, same cost here). Delta appends touch the partition
-     *  directory mtimes, so the signature invalidates exactly when the
-     *  index content changes. Keys use the session UUID (identity
-     *  hashes are reusable across GC'd sessions) and the map is a
-     *  bounded LRU, so dead sessions' entries age out instead of
-     *  pinning Datasets for the JVM lifetime. */
+    /** Per-(session, manifest, table) scan cache: every probe otherwise
+     *  pays a fresh file listing + parquet footer read PER PLANNED
+     *  QUERY (~120-145 ms on the Python side, same cost here). A write
+     *  lands a new manifest, so the key changes exactly when the index
+     *  content does. Keys use the session UUID (identity hashes are
+     *  reusable across GC'd sessions) and the map is a bounded LRU, so
+     *  dead sessions' entries age out instead of pinning Datasets for
+     *  the JVM lifetime. */
     private static final int SCAN_CACHE_CAP = 256;
-    private static final Map<String, Object[]> SCAN_CACHE =
+    private static final Map<String, Dataset<Row>> SCAN_CACHE =
             java.util.Collections.synchronizedMap(
-                    new java.util.LinkedHashMap<String, Object[]>(
+                    new java.util.LinkedHashMap<String, Dataset<Row>>(
                             64, 0.75f, true) {
                         @Override
                         protected boolean removeEldestEntry(
-                                Map.Entry<String, Object[]> eldest) {
+                                Map.Entry<String, Dataset<Row>> eldest) {
                             return size() > SCAN_CACHE_CAP;
                         }
                     });
@@ -866,51 +852,43 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return SCAN_CACHE_CAP;
     }
 
-    private Dataset<Row> readCached(String path) {
-        String norm = IndexRegistry.normalize(path);
-        String key = ((org.apache.spark.sql.classic.SparkSession) session)
-                .sessionUUID() + "|" + norm;
-        long sig = dirSignature(path);
-        Object[] hit = SCAN_CACHE.get(key);
-        if (hit != null && ((Long) hit[0]).longValue() == sig) {
-            @SuppressWarnings("unchecked")
-            Dataset<Row> cached = (Dataset<Row>) hit[1];
-            return cached;
+    /** Table `table` of the index: exactly the files its newest
+     *  manifest lists, read with the recorded schema and partition
+     *  columns parsed below the table directory. Throws when the index
+     *  has no manifest (the caller's route then stays stock). */
+    private Dataset<Row> readCached(String indexPath, String table) {
+        String key = manifestKey(indexPath);
+        com.fasterxml.jackson.databind.JsonNode spec = parsed(key);
+        if (spec == null) {
+            throw new IllegalStateException("no manifest under " + indexPath);
         }
-        Dataset<Row> d = session.read().parquet(path);
-        SCAN_CACHE.put(key, new Object[]{sig, d});
+        key = ((org.apache.spark.sql.classic.SparkSession) session)
+                .sessionUUID() + "|" + key + "|" + table;
+        Dataset<Row> hit = SCAN_CACHE.get(key);
+        if (hit != null) {
+            return hit;
+        }
+        spec = spec.path("tables").path(table);
+        String base = indexPath + "/" + table;
+        String[] files = new String[spec.path("files").size()];
+        for (int i = 0; i < files.length; i++) {
+            files[i] = base + "/" + spec.path("files").get(i).asText();
+        }
+        org.apache.spark.sql.DataFrameReader reader = session.read()
+                .schema((org.apache.spark.sql.types.StructType)
+                        org.apache.spark.sql.types.DataType.fromJson(
+                                spec.path("schema").asText()));
+        // no files, no table directory for basePath to name
+        Dataset<Row> d = (files.length == 0 ? reader
+                : reader.option("basePath", base)).parquet(files);
+        SCAN_CACHE.put(key, d);
         return d;
-    }
-
-    private static final java.util.concurrent.atomic.AtomicLong NO_SIG =
-            new java.util.concurrent.atomic.AtomicLong(-2);
-
-    private long dirSignature(String dir) {
-        try {
-            org.apache.hadoop.fs.Path p = new org.apache.hadoop.fs.Path(dir);
-            org.apache.hadoop.fs.FileSystem fs = p.getFileSystem(hconf());
-            org.apache.hadoop.fs.FileStatus root = fs.getFileStatus(p);
-            long sig = root.getModificationTime();
-            org.apache.hadoop.fs.FileStatus[] kids = fs.listStatus(p);
-            Arrays.sort(kids, (a, b) -> a.getPath().compareTo(b.getPath()));
-            for (org.apache.hadoop.fs.FileStatus k : kids) {
-                sig = sig * 31 + k.getModificationTime() + k.getLen();
-            }
-            return sig;
-        } catch (Exception e) {
-            // unlistable path: a unique sentinel per call keeps the
-            // cache COLD (re-read every plan) rather than permanently
-            // stale — the old java.io.File signature returned a
-            // constant 0 for any remote path, which meant wrong rows
-            // after an index rebuild on object storage
-            return NO_SIG.decrementAndGet();
-        }
     }
 
     /** filter(term = kw) over the bucket-partitioned postings, pruned to
      *  the keyword's bucket with the same hash the build used. */
     private Dataset<Row> invertedProbe(IndexRegistry.Entry en, String kw) {
-        Dataset<Row> p = readCached(en.indexPath + "/postings");
+        Dataset<Row> p = readCached(en.indexPath, "postings");
         if (Arrays.asList(p.columns()).contains("bucket")) {
             Column b = functions.abs(functions.hash(functions.lit(kw)))
                     .mod(functions.lit(64));
@@ -929,7 +907,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  index_search.cpp:172-199 hash lookup). */
     private Dataset<Row> exactProbe(IndexRegistry.Entry en, String value) {
         String hex = md5Hex(value);
-        Dataset<Row> d = readCached(en.indexPath + "/digests");
+        Dataset<Row> d = readCached(en.indexPath, "digests");
         if (Arrays.asList(d.columns()).contains("bucket")) {
             d = d.filter(functions.col("bucket")
                     .equalTo(hex.substring(0, 2)));
@@ -940,7 +918,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
     }
 
     private Dataset<Row> inProbe(IndexRegistry.Entry en, List<Object> values) {
-        Dataset<Row> v = readCached(en.indexPath + "/values");
+        Dataset<Row> v = readCached(en.indexPath, "values");
         NumMeta meta = readNumMeta(en.indexPath);
         if (meta != null && Arrays.asList(v.columns()).contains("bucket")) {
             List<Object> buckets = new ArrayList<>();
@@ -958,7 +936,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
     }
 
     private Dataset<Row> rangeProbe(Range r) {
-        Dataset<Row> v = readCached(r.entry.indexPath + "/values");
+        Dataset<Row> v = readCached(r.entry.indexPath, "values");
         NumMeta meta = readNumMeta(r.entry.indexPath);
         boolean hasBucket = Arrays.asList(v.columns()).contains("bucket");
         if (meta != null && hasBucket) {
@@ -990,7 +968,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return Math.max(0, Math.min(63, b));
     }
 
-    /** Numeric-index sidecar: bucket bounds (always) + the 64-bucket
+    /** Numeric-index meta: bucket bounds (always) + the 64-bucket
      *  histogram the range/IN gate estimates from (round-8 builds). */
     private static final class NumMeta {
         double vmin;
@@ -1002,7 +980,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
     private NumMeta readNumMeta(String indexPath) {
         try {
             com.fasterxml.jackson.databind.JsonNode m =
-                    cachedJson(indexPath + "/meta.json");
+                    meta(indexPath);
             if (m == null || !m.has("vmin") || !m.has("width")) {
                 return null;
             }
@@ -1025,7 +1003,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             }
             return nm;
         } catch (Exception ignored) {
-            // sidecar missing: probe stays exact, just unpruned/ungated
+            // no manifest: probe stays exact, just unpruned/ungated
             return null;
         }
     }
@@ -1083,7 +1061,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  the 0.001 default the boundary sits where recall still tracks
      *  the small-k presets (~0.86 at 128k), and past it the stock
      *  exact plan runs (recall 1.0 by definition); unknown corpus
-     *  size (no sidecar n) falls back to the absolute ceiling only. */
+     *  size (no meta n) falls back to the absolute ceiling only. */
     public static final String ANN_MAXK_FRAC_KEY =
             "spark.sql.deeplake.routing.ann.maxKFrac";
     static final double DEFAULT_ANN_MAXK_FRAC = 0.001;
@@ -1093,7 +1071,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
      *  reference never degrades here — it runs top_k with a roaring
      *  prefilter over the FULL index (index_holder.hpp:35-36); we
      *  widen eff-nprobe by 1/selectivity, estimated from the same
-     *  stats sidecars the cost gate reads (routed semijoins bound it
+     *  stats the cost gate reads (routed semijoins bound it
      *  by maxSelectivity — they passed that gate to exist). */
     public static final String ANN_WIDEN_KEY =
             "spark.sql.deeplake.routing.ann.widenFiltered";
@@ -1383,8 +1361,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     instanceof org.apache.spark.sql.types.IntegralType) {
                 List<long[]> rs = cachedRanges(probe,
                         "ann|" + en.indexPath + "|" + pr.cells,
-                        nEst, en.indexPath + ("pq".equals(en.kind)
-                                ? "/codes" : "/assignments"));
+                        nEst, en.indexPath);
                 if (rs != null && !rs.isEmpty()) {
                     Expression p = rangesPred(idAttr, rs);
                     if (p != null) {
@@ -1400,13 +1377,11 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return rebuilt == gl ? null : rebuilt;
     }
 
-    /** Corpus size persisted in the vector index's metadata sidecar;
+    /** Corpus size persisted in the vector index's manifest meta;
      *  -1 when absent (older index — ANN range pruning then stays off,
      *  a safe rollout: no coverage gate means no sound push). */
     private long annN(IndexRegistry.Entry en) {
-        com.fasterxml.jackson.databind.JsonNode r = cachedJson(
-                en.indexPath + ("pq".equals(en.kind)
-                        ? "/codebooks.json" : "/centroids.json"));
+        com.fasterxml.jackson.databind.JsonNode r = meta(en.indexPath);
         return r == null ? -1 : r.path("n").asLong(-1);
     }
 
@@ -1428,7 +1403,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
     }
 
     /** Estimated selectivity of one residual-filter conjunct from the
-     *  same stats sidecars the cost gate reads; -1 = unknown shape or
+     *  same stats the cost gate reads; -1 = unknown shape or
      *  no stats (no widening from this conjunct). */
     private double estimateConjunctSel(Expression c,
                                        Map<String, IndexRegistry.Entry> byCol) {
@@ -1473,15 +1448,11 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                                   double filterSel) {
         try {
             boolean pq = "pq".equals(en.kind);
-            // mtime-validated STATS_CACHE, not a raw read: the
-            // centroid table is multi-MB JSON and this runs per
-            // PLANNED query — annN() already reads the same file
-            // through cachedJson (r15 review)
-            com.fasterxml.jackson.databind.JsonNode root = cachedJson(
-                    en.indexPath
-                            + (pq ? "/codebooks.json" : "/centroids.json"));
+            // the cached manifest, not a raw read: the centroid table
+            // is multi-MB JSON and this runs per PLANNED query
+            com.fasterxml.jackson.databind.JsonNode root = meta(en.indexPath);
             if (root == null) {
-                return null;            // unreadable sidecar: stay stock
+                return null;            // no manifest: stay stock
             }
             com.fasterxml.jackson.databind.JsonNode cents =
                     root.get("centroids");
@@ -1489,7 +1460,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                 return null;            // flat PQ: nothing to prune on
             }
             String assignIdCol = root.get("id_col").asText();
-            String dataDir = pq ? "/codes" : "/assignments";
+            String table = pq ? "codes" : "assignments";
             int n = cents.size();
             if (n == 0) {
                 return null;
@@ -1552,7 +1523,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             Arrays.sort(cells, (x, y) ->
                     Integer.compare((Integer) x, (Integer) y));
             Probe out = new Probe();
-            out.ds = readCached(en.indexPath + dataDir)
+            out.ds = readCached(en.indexPath, table)
                     .filter(functions.col("cluster").isin(cells))
                     .select(functions.col(assignIdCol).alias("row_id"));
             // exact content key for the range memo: the sorted cell set
@@ -1563,7 +1534,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             out.cells = Arrays.toString(cells);
             return out;
         } catch (Exception e) {
-            return null;                // unreadable sidecar: stay stock
+            return null;                // no manifest: stay stock
         }
     }
 

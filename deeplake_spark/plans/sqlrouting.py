@@ -298,20 +298,15 @@ def _term_probe_ranges(spark: SparkSession, view: str, terms):
     probe = _term_hit(p, uniq).select("row_id")
     if dict(probe.dtypes).get("row_id") not in ("bigint", "int"):
         return None
-    # build-time granule view, when register_index_views found one
-    # (always written at DEFAULT_RANGE_GRANULE — the registration
-    # gate): the summary job then reads pre-reduced (g, lo, hi) rows
+    # the build-time granule view register_index_views registered
+    # (always at DEFAULT_RANGE_GRANULE): the summary job reads
+    # pre-reduced (g, lo, hi) rows
     from deeplake_spark.operators.indexes import DEFAULT_RANGE_GRANULE
 
-    granules, gsize = None, None
-    try:
-        granules = (_term_hit(spark.table(f"{view}__granules"), uniq)
-                    .select("g", "lo", "hi"))
-        gsize = DEFAULT_RANGE_GRANULE
-    except Exception:
-        granules = None
+    granules = (_term_hit(spark.table(f"{view}__granules"), uniq)
+                .select("g", "lo", "hi"))
     return routed_scan_ranges(probe, None, granules=granules,
-                              granule_size=gsize)
+                              granule_size=DEFAULT_RANGE_GRANULE)
 
 
 def _coverage_gated(spark: SparkSession, ranges, view: str):
@@ -591,16 +586,7 @@ def register_index_views(spark: SparkSession, view: str,
     idx.postings.createOrReplaceTempView(f"{view}__postings")
     idx.doclens.createOrReplaceTempView(f"{view}__doclens")
     idx.stats.createOrReplaceTempView(f"{view}__stats")
-    # build-time granule summary (VERDICT r15 #8): registered only at
-    # the library default granule so _term_probe_ranges can pass the
-    # size without a meta view — save() always writes at the default
-    from deeplake_spark.operators.indexes import DEFAULT_RANGE_GRANULE
-
-    if idx.granules is not None \
-            and idx.granule_size == DEFAULT_RANGE_GRANULE:
-        idx.granules.createOrReplaceTempView(f"{view}__granules")
-    else:
-        # a granule-less index re-registered under a name that
-        # previously carried one must not leave the STALE view serving
-        # another index's ranges (wrong rows, not just a bad plan)
-        spark.catalog.dropTempView(f"{view}__granules")
+    # build-time granule summary (VERDICT r15 #8): save() always
+    # writes it at DEFAULT_RANGE_GRANULE, in the same manifest as the
+    # postings, so _term_probe_ranges passes that size
+    idx.granules.createOrReplaceTempView(f"{view}__granules")

@@ -49,23 +49,32 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
     return deco
 
 
+def saved_index_path(sf_dir: str, name: str) -> str:
+    """<tmp>/dls_<name>_<digest of sf_dir>: the same directory in every
+    process (the builtin `hash` of a str is salted per process), so a
+    later save lands a new manifest there and GC collects the old
+    files instead of leaving a directory behind per process."""
+    import hashlib
+    import os
+    import tempfile
+
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"dls_{name}_{digest}")
+
+
 def saved_index(spark: SparkSession, sf_dir: str, name: str, kind: str,
                 source, column: str, id_col: str, **options):
     """The `kind` index over `column` of the relation `source()` (a
     zero-arg callable, called on a miss only), built and saved once per
     session and table through indexes.INDEX_KINDS under
-    <tmp>/dls_<name>_<sf_dir hash>, then loaded back — the
-    build-at-ingest, probe-per-query protocol."""
-    import os
-    import tempfile
-
+    `saved_index_path`, then loaded back — the build-at-ingest,
+    probe-per-query protocol."""
     from deeplake_spark import memo
     from deeplake_spark.operators.indexes import INDEX_KINDS
 
     def build():
         spec, df = INDEX_KINDS[kind], source()
-        path = os.path.join(tempfile.gettempdir(),
-                            f"dls_{name}_{abs(hash(sf_dir))}")
+        path = saved_index_path(sf_dir, name)
         spec.save(spec.build(df, column, id_col, options), path)
         return spec.load(spark, path, df)
 

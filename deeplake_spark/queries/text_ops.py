@@ -2215,7 +2215,7 @@ def t38(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(word)-keyed shuffle with map-side bit_or partials (<= mappers x "
     "n_words rows regardless of corpus size); the probe is a pure "
     "expression over a broadcast 1-row side table. At 100 TB the "
-    "persisted filter (sketches.save_bloom/append_bloom_delta — "
+    "persisted filter (sketches.save_sketch/append_bloom_delta — "
     "OR-merge == fresh rebuild bit-for-bit) screens new arrivals at "
     "KB cost; positives fall to exact verification, the LSH-candidate "
     "convention.",

@@ -107,6 +107,17 @@ class MetadataStore:
         """Recursive; no-op when absent."""
         raise NotImplementedError
 
+    def files(self, path: str) -> list[str]:
+        """Paths, relative to `path`, of every file under it whose own
+        name and every directory above it (below `path`) start with
+        neither `_` nor `.` — the files Spark's discovery would read;
+        empty when absent."""
+        raise NotImplementedError
+
+    def rename(self, src: str, dst: str) -> None:
+        """Move one file, creating `dst`'s parent directories."""
+        raise NotImplementedError
+
     def copy_tree(self, src: str, dst: str) -> None:
         """Recursive copy within this store (replication of data files
         between two datasets on the same backend). CONTRACT, uniform
@@ -139,11 +150,25 @@ class PosixMetadataStore(MetadataStore):
             return f.read()
 
     def put_bytes(self, path: str, data: bytes) -> None:
+        """Atomic: the bytes go to a hidden sibling (a `.`-prefixed name
+        no `.json` listing and no Spark discovery picks up), are synced,
+        and replace `path` in one rename — a kill mid-write leaves the
+        old bytes."""
         import os
+        import uuid
 
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "wb") as f:
-            f.write(data)
+        tmp = os.path.join(os.path.dirname(path),
+                           f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def list(self, path: str) -> list[str]:
         import os
@@ -163,6 +188,22 @@ class PosixMetadataStore(MetadataStore):
             shutil.rmtree(path, ignore_errors=True)
         elif os.path.exists(path):
             os.remove(path)
+
+    def files(self, path: str) -> list[str]:
+        import os
+
+        out = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            out += [os.path.relpath(os.path.join(root, n), path)
+                    for n in names if not n.startswith(("_", "."))]
+        return sorted(out)
+
+    def rename(self, src: str, dst: str) -> None:
+        import os
+
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.replace(src, dst)
 
     def copy_tree(self, src: str, dst: str) -> None:
         import os
@@ -274,6 +315,24 @@ class HadoopMetadataStore(MetadataStore):
         if fs.exists(p):
             fs.delete(p, True)
 
+    def files(self, path: str) -> list[str]:
+        fs, root = self._fs(path), self._path(path)
+        if not fs.exists(root):
+            return []
+        base = root.toUri().getPath().rstrip("/") + "/"
+        out, it = [], fs.listFiles(root, True)
+        while it.hasNext():
+            rel = it.next().getPath().toUri().getPath()[len(base):]
+            if not any(p.startswith(("_", ".")) for p in rel.split("/")):
+                out.append(rel)
+        return sorted(out)
+
+    def rename(self, src: str, dst: str) -> None:
+        fs, d = self._fs(dst), self._path(dst)
+        fs.mkdirs(d.getParent())
+        if not fs.rename(self._path(src), d):
+            raise OSError(f"rename {src} -> {dst} failed")
+
     def copy_tree(self, src: str, dst: str) -> None:
         fs = self._fs(src)
         dfs, dp = self._fs(dst), self._path(dst)
@@ -317,10 +376,6 @@ def get_json(path: str):
     import json
 
     return json.loads(metadata_store_for(path).get_bytes(path))
-
-
-def json_exists(path: str) -> bool:
-    return metadata_store_for(path).exists(path)
 
 
 def metadata_store_for(path: str, spark: SparkSession | None = None) -> MetadataStore:

@@ -77,7 +77,7 @@ def stream_source_cap(docs, group_col: str, k: int,
 def stream_bloom_screen(docs: DataFrame, path: str, col: str,
                         out_col: str = "seen_before") -> DataFrame:
     """Streaming ingest admission against a PERSISTED Bloom filter
-    (sketches.save_bloom / append_bloom_delta): flags each arriving row
+    (sketches.save_sketch / append_bloom_delta): flags each arriving row
     with whether its ``col`` value MAY already be in the corpus. No
     false negatives — ``out_col`` false is definitely new; true is a
     candidate for exact verification (the LSH convention). The batch
@@ -94,10 +94,10 @@ def stream_bloom_screen(docs: DataFrame, path: str, col: str,
     made while the query runs are invisible until restart — rebuild
     the query (or screen in foreachBatch) to pick up deltas."""
     from deeplake_spark.operators.sketches import (
-        bloom_contains, load_bloom)
+        bloom_contains, load_sketch)
 
     spark = docs.sparkSession
-    stored = load_bloom(spark, path)
+    stored = load_sketch(spark, path)
     geom = [tuple(r) for r in
             stored.select("n_words", "k_hashes", "seed").distinct()
             .collect()]

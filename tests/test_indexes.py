@@ -118,9 +118,11 @@ def test_probe_all_mode_dedups_case_variant_terms(docs, inv):
 
 def test_exact_index_alpha_probe_on_digit_inferred_buckets(spark):
     """r14 review (confirmed live): when every stored digest prefix is
-    all-digits, partition-type inference loads `bucket` as INT; a probe
-    whose md5 prefix contains a letter must return EMPTY, not crash
-    with an ANSI CAST_INVALID_INPUT."""
+    all-digits, partition-type inference would load `bucket` as INT and
+    a probe whose md5 prefix contains a letter crashed with an ANSI
+    CAST_INVALID_INPUT. The manifest records the written schema, so
+    `bucket` stays a string: the alpha probe returns EMPTY and the
+    digit probe still prunes to its bucket."""
     import hashlib
     import tempfile
 
@@ -143,7 +145,7 @@ def test_exact_index_alpha_probe_on_digit_inferred_buckets(spark):
     with tempfile.TemporaryDirectory() as d:
         build_exact_index(df, "text").save(d)
         idx = ExactTextIndex.load(spark, d)
-        assert dict(idx.digests.dtypes)["bucket"] in ("int", "bigint")
+        assert dict(idx.digests.dtypes)["bucket"] == "string"
         assert idx.probe(alpha_val).count() == 0          # was: crash
         assert idx.probe(digit_vals[0]).count() == 1      # pruning intact
 
@@ -308,7 +310,7 @@ def test_inverted_termstats_sidecar_and_merge(spark, tmp_path):
 
 
 def test_numeric_bucket_counts_sidecar_and_merge(spark, tmp_path):
-    """NumericIndex meta.json carries the 64-bucket histogram the
+    """NumericIndex's manifest meta carries the 64-bucket histogram the
     range/IN gate estimates from; append_to sums the delta's counts
     (out-of-range values clamp to edge buckets, same as the writer)."""
     from deeplake_spark.operators.indexes import NumericIndex
@@ -1597,34 +1599,28 @@ def test_inverted_probe_prunes_term_buckets(spark, sf_dir, tmp_path):
     assert {r.row_id for r in probe.collect()} == want and want
 
 
-def test_corrupt_stats_sidecars_load_stats_less(spark, tmp_path):
-    """Stats sidecars are ADVISORY: a corrupt/half-written
-    termstats.json or meta.json (crashed append) must load the index
-    stats-less (est_* -> None, never gated; numeric probes fall back
-    to unpruned-but-correct) — not brick loading."""
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """A side table's stats live in its manifest, and a manifest lands
+    whole (one atomic put) or not at all: an unreadable newest manifest
+    is damage, not a half-written sidecar, so loading raises instead
+    of serving the index stats-less."""
+    import json
+    import os
+
     from deeplake_spark.operators.indexes import InvertedIndex, NumericIndex
 
     df = spark.createDataFrame(
         [(i, "common filler", float(i)) for i in range(20)],
         "doc_id long, text string, v double")
-    ip = str(tmp_path / "inv")
+    ip, np_ = str(tmp_path / "inv"), str(tmp_path / "num")
     build_inverted_index(df, "text", "doc_id").save(ip)
-    with open(f"{ip}/termstats.json", "w") as f:
-        f.write("{not json")
-    idx = InvertedIndex.load(spark, ip)
-    assert idx.est_selectivity("common") is None
-    # probes still answer correctly without stats
-    assert sorted(r.row_id for r in idx.probe(["common"]).collect()) \
-        == list(range(20))
-
-    np_ = str(tmp_path / "num")
     build_numeric_index(df, "v", id_col="doc_id").save(np_)
-    with open(f"{np_}/meta.json", "w") as f:
-        f.write("\x00garbage")
-    nidx = NumericIndex.load(spark, np_)
-    assert nidx.est_range_selectivity(0, 5) is None
-    assert sorted(r.row_id for r in nidx.probe_between(0, 5).collect()) \
-        == [0, 1, 2, 3, 4, 5]
+    for path, cls in ((ip, InvertedIndex), (np_, NumericIndex)):
+        assert cls.load(spark, path) is not None
+        with open(os.path.join(path, "_log", "00000001.json"), "w") as f:
+            f.write("{not json")
+        with pytest.raises(json.JSONDecodeError):
+            cls.load(spark, path)
 
 
 def test_termstats_merge_recaps_heavy_map(spark, tmp_path, monkeypatch):
@@ -1644,9 +1640,9 @@ def test_termstats_merge_recaps_heavy_map(spark, tmp_path, monkeypatch):
         [(100 + i, "epsilon zeta eta theta") for i in range(8)],
         "doc_id long, text string")
     build_inverted_index(delta, "text", "doc_id").save(p, mode="append")
-    from deeplake_spark.storage import get_json
+    from deeplake_spark import memo
 
-    ts = get_json(f"{p}/termstats.json")
+    ts = memo.manifest(p)[1]["meta"]
     assert len(ts["heavy"]) <= 4
     assert ts["n_docs"] == 16
     # every dropped term had df <= min(kept df) <= floor * n
@@ -2221,26 +2217,31 @@ def test_range_memo_misses_after_probe_file_rewrite(spark, tmp_path):
     assert routed() == list(range(50_000, 50_010))
 
 
-def test_tree_key_sees_files_added_to_subdirectories(tmp_path):
-    """memo.tree_key covers every file under the directory: a file
-    added inside a partition subdirectory changes the key, although
-    the top directory's own mtime does not move. None for a path that
-    is not a local directory."""
-    import os
+def test_manifest_key_changes_with_every_write(spark, tmp_path):
+    """memo.manifest keys a side table on the file_key of its newest
+    manifest: every write lands a new key, and a table dropped and
+    re-created keys apart although its numbering restarts at 1. None
+    for a path with no manifest."""
+    import shutil
 
-    from deeplake_spark.memo import tree_key
+    from deeplake_spark import memo
+    from deeplake_spark.operators.indexes import NumericIndex
 
-    top = tmp_path / "postings"
-    (top / "bucket=3").mkdir(parents=True)
-    (top / "bucket=3" / "part-0.parquet").write_bytes(b"a")
-    before, top_mtime = tree_key(str(top)), os.stat(top).st_mtime_ns
-    assert before and tree_key(f"file://{top}") == before
-    (top / "bucket=3" / "part-1.parquet").write_bytes(b"b")
-    assert os.stat(top).st_mtime_ns == top_mtime
-    assert tree_key(str(top)) != before
-    assert tree_key(str(top / "bucket=3" / "part-0.parquet")) is None
-    assert tree_key(str(tmp_path / "absent")) is None
-    assert tree_key("mem://postings") is None
+    df = spark.createDataFrame([(i, float(i)) for i in range(8)],
+                               "doc_id long, v double")
+    p = str(tmp_path / "num")
+    assert memo.manifest(p) is None
+    build_numeric_index(df, "v").save(p)
+    k1, m1 = memo.manifest(p)
+    build_numeric_index(df, "v").save(p, mode="append")
+    k2, m2 = memo.manifest(p)
+    assert (m1["version"], m2["version"]) == (1, 2) and k1 != k2
+    assert m2["meta"]["n"] == 16
+    shutil.rmtree(p)
+    build_numeric_index(df, "v").save(p)
+    k3, m3 = memo.manifest(p)
+    assert m3["version"] == 1 and k3 not in (k1, k2)
+    assert NumericIndex.load(spark, p).values.count() == 8
 
 
 @pytest.mark.parametrize("change", ["append_delta", "rebuild",
@@ -2248,7 +2249,7 @@ def test_tree_key_sees_files_added_to_subdirectories(tmp_path):
 def test_side_table_memo_misses_after_index_rewrite(spark, sf_dir,
                                                     tmp_path, change):
     """memo.SIDE_TABLE_MEMO keeps a loaded side table across queries,
-    keyed on the tree of files under it. After each way an index's
+    keyed on its newest manifest. After each way an index's
     files change — an append-commit writing an inverted delta into the
     existing bucket=N/ directories, create_index(_rebuild=True), and
     drop_index followed by a re-create — the next routed ds.query must
@@ -2308,8 +2309,9 @@ _TOPK_READ_JOBS = {"bm25": 7, "ann": 3}
 def test_second_query_reads_no_index_side_table(spark, kinds_source,
                                                 tmp_path, monkeypatch):
     """Construction budget: once a dataset's indexes are loaded, a
-    second ds.query on the unchanged dataset calls
-    DataFrameReader.parquet on nothing under _indexes/, and
+    second ds.query on the unchanged dataset reads nothing under
+    _indexes/ (neither DataFrameReader.parquet nor the side-table
+    reader memo.read_files), and
     _load_indexes starts no Spark job (each side-table read used to
     pay a file listing and a footer-schema job per query). A routed
     top-k (BM25, ANN) runs its search once, at construction: the
@@ -2318,6 +2320,7 @@ def test_second_query_reads_no_index_side_table(spark, kinds_source,
     from pyspark.sql.readwriter import DataFrameReader
 
     from deeplake_spark import dataset as dl
+    from deeplake_spark import memo
 
     ds = dl.from_parquet(kinds_source, str(tmp_path / "ds"), spark)
     ds.create_index("text", "inverted")
@@ -2334,7 +2337,14 @@ def test_second_query_reads_no_index_side_table(spark, kinds_source,
         reads.extend(p for p in paths if "_indexes" in str(p))
         return real(self, *paths, **options)
 
+    real_files = memo.read_files
+
+    def counted_files(spark, base, schema, files):
+        reads.extend([base] if "_indexes" in base else [])
+        return real_files(spark, base, schema, files)
+
     monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    monkeypatch.setattr(memo, "read_files", counted_files)
     sc = spark.sparkContext._jsc.sc()
 
     def jobs():
@@ -2717,25 +2727,18 @@ def test_granule_sidetable_ranges_match_posting_job(spark, tmp_path):
     assert routed == stock and len(routed) == 20
 
 
-def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
-    """Append soundness: a delta append extends the granule table and
-    the merged ranges still equal the posting job; a PRE-GRANULE base
-    (no range_granule in the sidecar) must keep granules DISABLED
-    through load and through later appends — a partially-covering
-    granule table would push ranges that exclude true candidates."""
-    import os
-    import shutil
-
+def test_granule_sidetable_append_keeps_ranges_exact(spark, tmp_path):
+    """Append soundness: a delta append extends the granule table (the
+    manifest lists the delta's granules with its postings) and the
+    merged ranges still equal the posting job."""
     from pyspark.sql import functions as F
 
     from deeplake_spark import memo
-    from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
         InvertedIndex,
         build_inverted_index,
         routed_scan_ranges,
     )
-    from deeplake_spark.storage import get_json, put_json
 
     def corpus(lo, hi):
         return (spark.range(lo, hi)
@@ -2760,83 +2763,18 @@ def test_granule_sidetable_append_and_pregranule_base(spark, tmp_path):
     assert any(hi < 240_000 for _, hi in posting)
     assert any(lo >= 2_400_000 for lo, _ in posting)
 
-    # pre-granule base: strip the table + sidecar key (what an index
-    # saved by older code looks like), then append with current code
-    pre = str(tmp_path / "inv_pre")
-    build_inverted_index(corpus(0, 40)).save(pre)
-    shutil.rmtree(os.path.join(pre, "granules"))
-    sc = os.path.join(pre, "termstats.json")
-    ts = get_json(sc)
-    ts.pop("range_granule", None)
-    put_json(sc, ts)
-    assert InvertedIndex.load(spark, pre).granules is None
-    build_inverted_index(corpus(400, 440)).save(pre, mode="append")
-    after = InvertedIndex.load(spark, pre)
-    assert after.granules is None and after.granule_size is None
-    assert not os.path.isdir(os.path.join(pre, "granules"))
-
 
 def test_granule_overwrite_crash_window_is_sound(spark, tmp_path,
                                                  monkeypatch):
-    """An OVERWRITE save onto an existing index dir strips the
-    sidecar's range_granule key BEFORE any data write: a crash after
-    the new granule table but before the new postings then loads
-    granule-less (posting-job fallback) instead of serving ranges from
-    a table that no longer matches the postings."""
+    """An OVERWRITE save that crashes after its granule and posting
+    files reached the table directories, but before its manifest
+    landed, leaves the old manifest serving: granules and postings of
+    one state, so routed ranges never come from a granule table that
+    does not match the postings."""
     from pyspark.sql import functions as F
 
+    from deeplake_spark import storage
     from deeplake_spark.operators.indexes import (
-        InvertedIndex,
-        build_inverted_index,
-    )
-
-    src = (spark.range(50)
-           .select((F.col("id") * 6000).alias("doc_id"),
-                   F.lit("alpha needle").alias("text")))
-    path = str(tmp_path / "inv_ow")
-    build_inverted_index(src).save(path)
-    assert InvertedIndex.load(spark, path).granules is not None
-
-    # re-save, crashing right after the granule write (the first
-    # parquet write of the save): postings/termstats stay OLD
-    idx2 = build_inverted_index(src)
-    calls = {"n": 0}
-    import pyspark.sql.readwriter as rw
-
-    real = rw.DataFrameWriter.parquet
-
-    def crashing(self, p, *a, **k):
-        out = real(self, p, *a, **k)
-        if p.endswith("granules"):
-            calls["n"] += 1
-            raise RuntimeError("simulated crash after granule write")
-        return out
-
-    monkeypatch.setattr(rw.DataFrameWriter, "parquet", crashing)
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="simulated crash"):
-            idx2.save(path)
-    finally:
-        monkeypatch.undo()
-    assert calls["n"] == 1
-    loaded = InvertedIndex.load(spark, path)
-    assert loaded.granules is None and loaded.granule_size is None
-
-
-def test_granule_overwrite_strip_failure_raises(spark, tmp_path,
-                                                monkeypatch):
-    """A failing overwrite-mode sidecar strip aborts the save before any
-    data write: save raises, the old index still loads WITH its granule
-    table, and CONTAINS probes return the same rows as before."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    import deeplake_spark.storage as storage
-    from deeplake_spark.operators.indexes import (
-        DEFAULT_RANGE_GRANULE,
         InvertedIndex,
         build_inverted_index,
         contains_via_index,
@@ -2846,46 +2784,34 @@ def test_granule_overwrite_strip_failure_raises(spark, tmp_path,
            .select((F.col("id") * 6000).alias("doc_id"),
                    F.when(F.col("id") % 5 == 0, F.lit("alpha needle"))
                    .otherwise(F.lit("alpha beta")).alias("text")))
-    path = str(tmp_path / "inv_strip")
+    path = str(tmp_path / "inv_ow")
     build_inverted_index(src).save(path)
 
     def probe():
         idx = InvertedIndex.load(spark, path)
+        assert idx.granules is not None
         return sorted(r.doc_id for r in
                       contains_via_index(src, idx, "needle").collect())
 
     before = probe()
     assert len(before) == 10
-    files = _tree_state(path)
 
-    # only the strip (the save's first sidecar write) fails; the
-    # re-save indexes a different corpus, so any data it wrote would
-    # change the probe
-    real_put, calls = storage.put_json, []
+    def crash(self, p, data):
+        raise OSError("simulated crash before the manifest put")
 
-    def failing_strip(p, obj):
-        calls.append(p)
-        if len(calls) == 1:
-            raise OSError("simulated sidecar write failure")
-        real_put(p, obj)
-
+    # the re-save indexes a different corpus, so any of its files a
+    # reader saw would change the probe
     other = src.withColumn("text", F.lit("alpha needle"))
-    monkeypatch.setattr(storage, "put_json", failing_strip)
-    with pytest.raises(OSError, match="simulated sidecar"):
+    monkeypatch.setattr(storage.PosixMetadataStore, "put_bytes", crash)
+    with pytest.raises(OSError, match="simulated crash"):
         build_inverted_index(other).save(path)
     monkeypatch.undo()
-    assert calls == [os.path.join(path, "termstats.json")]
-    assert _tree_state(path) == files
-
-    loaded = InvertedIndex.load(spark, path)
-    assert loaded.granules is not None
-    assert loaded.granule_size == DEFAULT_RANGE_GRANULE
     assert probe() == before
 
 
 def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
-    """save(mode="append") onto a path with no postings and no sidecar
-    is a fresh save: it records range_granule, and the granule-table
+    """save(mode="append") onto a path with no manifest is a fresh
+    save: it records range_granule, and the granule-table
     ranges equal the posting-row summary."""
     from pyspark.sql import functions as F
 
@@ -2920,42 +2846,34 @@ def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
 # ------------------------------------------------ every kind, end to end
 
 #: per kind: (column, create_index options, side table — also the loaded
-#: index's attribute holding it —, sidecar, sidecar row-count key, sorted
-#: top-level names, partition column per table, sidecar keys in written
-#: order): the on-disk layout the JVM routing rule and older datasets read
+#: index's attribute holding it —, meta row-count key, sorted table
+#: names, partition column per table, meta keys in written order): the
+#: manifest layout the JVM routing rule reads
 _KIND_LAYOUTS = {
-    "inverted": ("text", {}, "doclens", "termstats.json", "n_docs",
-                 ["doclens", "granules", "postings", "stats",
-                  "termstats.json"],
+    "inverted": ("text", {}, "doclens", "n_docs",
+                 ["doclens", "granules", "postings", "stats"],
                  {"granules": "bucket", "postings": "bucket"},
                  ["n_docs", "floor_frac", "heavy", "range_granule"]),
-    "numeric": ("n", {}, "values", "meta.json", "n",
-                ["meta.json", "values"], {"values": "bucket"},
+    "numeric": ("n", {}, "values", "n", ["values"], {"values": "bucket"},
                 ["vmin", "width", "bucket_counts", "n"]),
-    "json": ("meta", {"paths": ["type"]}, "entries", "valstats.json",
-             "n_docs", ["entries", "valstats.json"], {"entries": "path"},
+    "json": ("meta", {"paths": ["type"]}, "entries", "n_docs",
+             ["entries"], {"entries": "path"},
              ["n_docs", "floor_frac", "heavy"]),
-    "exact": ("title", {}, "digests", "digeststats.json", "n_docs",
-              ["digests", "digeststats.json"], {"digests": "bucket"},
-              ["n_docs", "floor_frac", "heavy"]),
-    "clustered": ("emb", {"n_clusters": 4}, "assignments",
-                  "centroids.json", "n", ["assignments", "centroids.json"],
-                  {"assignments": "cluster"},
+    "exact": ("title", {}, "digests", "n_docs", ["digests"],
+              {"digests": "bucket"}, ["n_docs", "floor_frac", "heavy"]),
+    "clustered": ("emb", {"n_clusters": 4}, "assignments", "n",
+                  ["assignments"], {"assignments": "cluster"},
                   ["centroids", "vec_col", "id_col", "n"]),
-    "pooled": ("mat", {}, "pooled", "meta.json", "n",
-               ["meta.json", "pooled"], {},
+    "pooled": ("mat", {}, "pooled", "n", ["pooled"], {},
                ["matrix_col", "id_col", "n"]),
-    "clustered_quantized": ("emb", {}, "bits", "meta.json", "n",
-                            ["bits", "meta.json"], {},
+    "clustered_quantized": ("emb", {}, "bits", "n", ["bits"], {},
                             ["vec_col", "id_col", "n"]),
-    "pq": ("emb", {"m": 4, "nbits": 2, "n_clusters": 2}, "codes",
-           "codebooks.json", "n", ["codebooks.json", "codes"],
-           {"codes": "cluster"},
+    "pq": ("emb", {"m": 4, "nbits": 2, "n_clusters": 2}, "codes", "n",
+           ["codes"], {"codes": "cluster"},
            ["codebooks", "vec_col", "id_col", "centroids", "n"]),
     "fingerprint": ("image", {"modality": "image", "compression": "ppm",
                               "strict": True},
-                    "signatures", "meta.json", "n",
-                    ["meta.json", "signatures"], {},
+                    "signatures", "n", ["signatures"], {},
                     ["modality", "id_col", "params", "nbits", "n"]),
 }
 
@@ -3006,15 +2924,18 @@ def test_every_index_kind_round_trip(spark, kinds_source, tmp_path, kind):
     """Every registered kind through Dataset: create_index, an
     append-only commit under automatic indexing (delta append), then a
     reload through _load_indexes. Existing side-table files stay
-    byte-identical, the sidecar n equals the side table's row count,
-    the appended row is in the reloaded side table, and file names and
-    sidecar keys match the pinned layout."""
+    byte-identical, the manifest meta's n equals the side table's row
+    count, the appended row is in the reloaded side table, the newest
+    manifest lists exactly the files in each table directory, and
+    table names, partition columns and meta keys match the pinned
+    layout."""
     import os
 
     from deeplake_spark import dataset as dl
-    from deeplake_spark.storage import get_json
+    from deeplake_spark import memo
+    from deeplake_spark.storage import PosixMetadataStore
 
-    (column, options, table, sidecar, n_key, names, parts,
+    (column, options, table, n_key, tables, parts,
      keys) = _KIND_LAYOUTS[kind]
     ds = dl.from_parquet(kinds_source, str(tmp_path / "ds"), spark)
     assert ds.indexing_mode == "automatic"
@@ -3036,10 +2957,16 @@ def test_every_index_kind_round_trip(spark, kinds_source, tmp_path, kind):
     frame = getattr(idx, table)  # the loaded side table
     fid = "row_id" if "row_id" in frame.columns else "_row_id"
     assert frame.filter(F.col(fid) == new_id).count() >= 1
-    meta = get_json(os.path.join(idx_dir, sidecar))
+    man = memo.manifest(idx_dir)[1]
+    meta = man["meta"]
+    assert man["version"] == 2
     assert meta[n_key] == frame.count() == 41
 
-    assert sorted(os.listdir(idx_dir)) == names
+    assert sorted(os.listdir(idx_dir)) == ["_log"] + tables
+    assert sorted(man["tables"]) == tables
+    for t in tables:
+        assert sorted(man["tables"][t]["files"]) == \
+            PosixMetadataStore().files(os.path.join(idx_dir, t))
     for sub, col in parts.items():
         dirs = [d for d in os.listdir(os.path.join(idx_dir, sub))
                 if not d.startswith((".", "_"))]

@@ -1082,16 +1082,16 @@ def test_kmv_persisted_incremental_equals_full_build(spark, tmp_path):
     the maintained side table equals a fresh full-corpus build
     hash-exactly, per group and globally (merge == sketch-of-union)."""
     from deeplake_spark.operators.sketches import (
-        append_kmv_delta, kmv_sketch, load_kmv, save_kmv)
+        append_kmv_delta, kmv_sketch, load_sketch, save_sketch)
 
     rows = [(f"g{i % 3}", f"v{i}") for i in range(900)]
     full = spark.createDataFrame(rows, "g string, x string")
     first = full.filter(F.substring("x", 2, 10).cast("long") < 450)
     second = full.filter(F.substring("x", 2, 10).cast("long") >= 450)
     path = str(tmp_path / "kmv")
-    save_kmv(kmv_sketch(first, "x", by=["g"], k=32), path)
+    save_sketch(kmv_sketch(first, "x", by=["g"], k=32), path)
     append_kmv_delta(second, "x", path, by=["g"], k=32)
-    got = {r.g: list(r.sketch) for r in load_kmv(spark, path).collect()}
+    got = {r.g: list(r.sketch) for r in load_sketch(spark, path).collect()}
     want = {r.g: list(r.sketch)
             for r in kmv_sketch(full, "x", by=["g"], k=32).collect()}
     assert got == want
@@ -1104,13 +1104,13 @@ def test_kmv_build_k_persisted_and_guarded(spark, tmp_path):
     sketch read at k=64 would silently return size-as-exact (32.0), a
     biased estimate with no error."""
     from deeplake_spark.operators.sketches import (
-        append_kmv_delta, kmv_estimate, kmv_sketch, load_kmv, save_kmv)
+        append_kmv_delta, kmv_estimate, kmv_sketch, load_sketch, save_sketch)
 
     df = spark.createDataFrame(
         [(f"g{i % 2}", f"v{i}") for i in range(400)], "g string, x string")
     path = str(tmp_path / "kmv")
-    save_kmv(kmv_sketch(df, "x", by=["g"], k=32), path)
-    stored = load_kmv(spark, path)
+    save_sketch(kmv_sketch(df, "x", by=["g"], k=32), path)
+    stored = load_sketch(spark, path)
     assert set(r.k for r in stored.select("k").collect()) == {32}
     # estimate from the persisted k column == estimate at the literal k
     via_col = {r.g: r.e for r in stored.select(
@@ -1188,8 +1188,8 @@ def test_bloom_incremental_equals_full_build(spark, tmp_path):
     geometry raises instead of silently losing the no-false-negative
     guarantee."""
     from deeplake_spark.operators.sketches import (
-        append_bloom_delta, bloom_merge, bloom_sketch, load_bloom,
-        save_bloom)
+        append_bloom_delta, bloom_merge, bloom_sketch, load_sketch,
+        save_sketch)
 
     rows = [(f"g{i % 3}", f"v{i}") for i in range(900)]
     full = spark.createDataFrame(rows, "g string, x string")
@@ -1208,18 +1208,18 @@ def test_bloom_incremental_equals_full_build(spark, tmp_path):
 
     # per-group incremental maintenance == fresh full build
     path = str(tmp_path / "bloom")
-    save_bloom(bloom_sketch(first, "x", by=["g"], n_words=16), path)
+    save_sketch(bloom_sketch(first, "x", by=["g"], n_words=16), path)
     append_bloom_delta(second, "x", path, by=["g"], n_words=16)
-    got = {r.g: list(r.bloom) for r in load_bloom(spark, path).collect()}
+    got = {r.g: list(r.bloom) for r in load_sketch(spark, path).collect()}
     want = {r.g: list(r.bloom) for r in bloom_sketch(
         full, "x", by=["g"], n_words=16).collect()}
     assert got == want
 
     # global lane too (cross-join merge path)
     gpath = str(tmp_path / "bloom_g")
-    save_bloom(bloom_sketch(first, "x", n_words=16), gpath)
+    save_sketch(bloom_sketch(first, "x", n_words=16), gpath)
     append_bloom_delta(second, "x", gpath, n_words=16)
-    assert list(load_bloom(spark, gpath).head().bloom) == list(direct)
+    assert list(load_sketch(spark, gpath).head().bloom) == list(direct)
 
     with pytest.raises(ValueError, match="built with"):
         append_bloom_delta(second, "x", path, by=["g"], n_words=32)
@@ -1235,8 +1235,8 @@ def test_cm_sketch_model_merge_and_bounds(spark, tmp_path):
     from collections import Counter
 
     from deeplake_spark.operators.sketches import (
-        append_cm_delta, cm_estimate, cm_merge, cm_sketch, load_cm,
-        save_cm)
+        append_cm_delta, cm_estimate, cm_merge, cm_sketch, load_sketch,
+        save_sketch)
 
     vals = []
     for i in range(60):
@@ -1275,11 +1275,11 @@ def test_cm_sketch_model_merge_and_bounds(spark, tmp_path):
     gdf = df.withColumn("g", F.concat(F.lit("g"), (F.col("i") % 2)
                                       .cast("string")))
     path = str(tmp_path / "cm")
-    save_cm(cm_sketch(gdf.filter("i < 600"), "x", by=["g"],
+    save_sketch(cm_sketch(gdf.filter("i < 600"), "x", by=["g"],
                       d=d_, w=w_), path)
     append_cm_delta(gdf.filter("i >= 600"), "x", path, by=["g"],
                     d=d_, w=w_)
-    got = {r.g: list(r.cm) for r in load_cm(spark, path).collect()}
+    got = {r.g: list(r.cm) for r in load_sketch(spark, path).collect()}
     want = {r.g: list(r.cm) for r in cm_sketch(
         gdf, "x", by=["g"], d=d_, w=w_).collect()}
     assert got == want
@@ -1299,8 +1299,8 @@ def test_sample_sketch_model_merge_and_quantiles(spark, tmp_path):
     import hashlib
 
     from deeplake_spark.operators.sketches import (
-        append_sample_delta, load_sample, sample_merge, sample_quantile,
-        sample_sketch, save_sample)
+        append_sample_delta, load_sketch, sample_merge, sample_quantile,
+        sample_sketch, save_sketch)
 
     rows = [(i, float(i * i), f"g{i % 2}") for i in range(2000)]
     df = spark.createDataFrame(rows, "id long, v double, g string")
@@ -1335,10 +1335,10 @@ def test_sample_sketch_model_merge_and_quantiles(spark, tmp_path):
     assert [(x["__u"], x["__v"]) for x in merged] == got
 
     path = str(tmp_path / "sample")
-    save_sample(sample_sketch(h1, "v", "id", by=["g"], k=64), path)
+    save_sketch(sample_sketch(h1, "v", "id", by=["g"], k=64), path)
     append_sample_delta(h2, "v", "id", path, by=["g"], k=64)
     got2 = {r.g: [(s["__u"], s["__v"]) for s in r.sample]
-            for r in load_sample(spark, path).collect()}
+            for r in load_sketch(spark, path).collect()}
     want2 = {r.g: [(s["__u"], s["__v"]) for s in r.sample]
              for r in sample_sketch(df, "v", "id", by=["g"],
                                     k=64).collect()}
@@ -1626,92 +1626,63 @@ def test_mrl_funnel_recall_and_exhaustive_equality(spark, sf_dir):
 
 
 def test_sketch_overwrite_crash_safety(spark, tmp_path):
-    """The side-table overwrite is write-then-swap (round-12 VERDICT
-    wrong#2): a kill between ANY two steps leaves a servable table.
-    Simulated kill points: (a) new generation written but _HEAD not
-    flipped -> the OLD data still serves; (b) _HEAD deleted mid-flip ->
-    the newest COMPLETE generation serves; (c) stray dirs from a
-    crashed run are GC'd by the next successful overwrite."""
+    """A sketch save follows the side-table snapshot protocol: a reader
+    serves the newest manifest's files only. (a) Files a crashed write
+    moved into the table directory, and its staged leftovers, are
+    never served; (b) the next successful save GCs them; (c) a plan
+    loaded before a save keeps executing across it (the previous
+    manifest's files survive one more write) but not across two."""
     import os
 
+    from deeplake_spark import memo
     from deeplake_spark.operators.sketches import (
-        _overwrite_via_tmp, append_kmv_delta, kmv_estimate, kmv_sketch,
-        load_kmv, save_kmv)
+        append_kmv_delta, kmv_estimate, kmv_sketch, load_sketch, save_sketch)
+
+    def est(df):
+        return df.select(
+            kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
+
+    def table_files():
+        return sorted(os.listdir(os.path.join(path, "sketch")))
 
     df = spark.createDataFrame([(f"v{i}",) for i in range(50)], "x string")
     path = str(tmp_path / "kmv")
-    save_kmv(kmv_sketch(df, "x", k=128), path)  # legacy flat layout
-    est0 = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est0 == 50.0
-
-    # real overwrite #1: migrates flat -> generation layout
+    save_sketch(kmv_sketch(df, "x", k=128), path)
+    assert est(load_sketch(spark, path)) == 50.0
     d2 = spark.createDataFrame([(f"w{i}",) for i in range(25)], "x string")
     append_kmv_delta(d2, "x", path, k=128)
-    assert os.path.exists(os.path.join(path, "_HEAD"))
-    gen1 = open(os.path.join(path, "_HEAD")).read().strip()
-    est1 = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est1 == 75.0
-    # the flat files this merge READ survive one overwrite cycle
-    # (stale-reader deferral, r13 ADVICE) — GC'd by the NEXT overwrite
-    assert [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert est(load_sketch(spark, path)) == 75.0
+    served = memo.manifest(path)[1]["tables"]["sketch"]["files"]
 
-    # kill point (a): a NEWER complete generation exists but _HEAD was
-    # never flipped — the old generation must keep serving
-    crash_gen = "g-999999"
-    (kmv_sketch(df.limit(10), "x", k=128)
-     .write.parquet(os.path.join(path, crash_gen)))
-    assert open(os.path.join(path, "_HEAD")).read().strip() == gen1
-    est_a = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est_a == 75.0  # NOT the crashed 10-row write
+    # (a) a crashed save: its files reached the table directory and
+    # the staging directory, but no manifest listed them
+    crash = str(tmp_path / "crash")
+    kmv_sketch(df.limit(10), "x", k=128).write.parquet(crash)
+    for name in os.listdir(crash):
+        if name.endswith(".parquet"):
+            os.replace(os.path.join(crash, name),
+                       os.path.join(path, "sketch", "part-crash-" + name))
+    os.makedirs(os.path.join(path, "_staging", "dead", "sketch"))
+    assert est(load_sketch(spark, path)) == 75.0  # NOT the crashed write
 
-    # kill point (b): _HEAD deleted mid-flip — fallback serves the
-    # newest generation WITH _SUCCESS (complete data, never partial)
-    os.remove(os.path.join(path, "_HEAD"))
-    os.remove(os.path.join(path, crash_gen, "_SUCCESS"))  # incomplete
-    est_b = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est_b == 75.0  # gen1 is the newest COMPLETE generation
-
-    # (c) the next successful overwrite restores _HEAD, GCs the
-    # incomplete stray AND the legacy flat files (they are now one
-    # cycle old), but keeps the generation it read for one more cycle
+    # (b) + (c): the next save GCs the strays, keeps the files the
+    # stale plan reads, and the stale plan still executes
+    stale = load_sketch(spark, path)
     d3 = spark.createDataFrame([(f"z{i}",) for i in range(10)], "x string")
-    stale = load_kmv(spark, path)  # plan pinned to gen1's files
     append_kmv_delta(d3, "x", path, k=128)
-    # Hadoop's local ChecksumFileSystem keeps hidden .crc siblings —
-    # compare the visible namespace only
-    names = {n for n in os.listdir(path) if not n.startswith(".")}
-    head = open(os.path.join(path, "_HEAD")).read().strip()
-    assert names == {head, "_HEAD", gen1}, names
-    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
-    est_c = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est_c == 85.0
-    # the pre-overwrite reader plan still executes (gen1 survived)
-    est_stale = stale.select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est_stale == 75.0
+    assert est(load_sketch(spark, path)) == 85.0
+    assert not [f for f in table_files() if "crash" in f]
+    assert not os.path.exists(os.path.join(path, "_staging"))
+    assert set(served) <= set(table_files())
+    assert est(stale) == 75.0
+    assert sorted(os.listdir(os.path.join(path, "_log"))) == [
+        "00000002.json", "00000003.json"]
 
-    # (d) lost-update edge (r13 VERDICT wrong#1): a COMMITTED
-    # generation numbered past the one this writer read (a concurrent
-    # appender's just-flipped write landing between the read and the
-    # GC) must survive the sweep — its data stays loadable for a
-    # re-merge, never deleted.
-    concurrent_gen = "g-2000000"
-    (kmv_sketch(d2, "x", k=128)
-     .write.parquet(os.path.join(path, concurrent_gen)))  # has _SUCCESS
+    # two saves later the stale plan's files are collected
     d4 = spark.createDataFrame([(f"y{i}",) for i in range(5)], "x string")
     append_kmv_delta(d4, "x", path, k=128)
-    names = {n for n in os.listdir(path) if not n.startswith(".")}
-    assert concurrent_gen in names, names
-    assert gen1 not in names  # two cycles old now — collected
-    est_conc = spark.read.parquet(
-        os.path.join(path, concurrent_gen)).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est_conc == 25.0  # the concurrent writer's data, intact
+    assert not set(served) & set(table_files())
+    assert est(load_sketch(spark, path)) == 90.0
 
 
 def test_dedup_release_cached_returns_blocks_to_baseline(spark):
@@ -2144,52 +2115,30 @@ def test_compression_ratio_monotone_on_planted_fixtures(spark):
     assert got == got2
 
 
-def test_sketch_flat_layout_crash_window_and_kmv_seed_guard(spark, tmp_path):
-    """r15 review pins: (1) a crash mid-write of the FIRST generation
-    over a legacy flat table leaves the flat layout servable — the
-    write lands under an underscore-prefixed temp dir Spark's
-    discovery skips, then renames (a partial bare g-NNNNNN dir used to
-    put parquet leaves at two depths and fail the fallback read AND
-    every retry); (2) append_kmv_delta refuses a mismatched seed
+def test_kmv_seed_guard(spark, tmp_path):
+    """r15 review pin: append_kmv_delta refuses a mismatched seed
     (different seed = different hash function — a silent-bias merge),
     including a non-default seed against a pre-seed-column table."""
-    import os
-
     import pytest as pt
 
     from deeplake_spark.operators.sketches import (
-        append_kmv_delta, kmv_estimate, kmv_sketch, load_kmv, save_kmv)
+        append_kmv_delta, kmv_estimate, kmv_sketch, load_sketch, save_sketch)
 
     df = spark.createDataFrame([(f"v{i}",) for i in range(40)], "x string")
-    path = str(tmp_path / "kmvflat")
-    save_kmv(kmv_sketch(df, "x", k=64), path)  # legacy flat layout
-
-    # simulated crash: a partial TEMP generation dir with junk inside
-    os.makedirs(os.path.join(path, "_tmp-g-000001"))
-    with open(os.path.join(path, "_tmp-g-000001", "part-0.parquet"),
-              "wb") as f:
-        f.write(b"not parquet")
-    est = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est == 40.0  # flat layout still serves
-
-    # the retry append succeeds over the stray and GCs it
-    d2 = spark.createDataFrame([(f"w{i}",) for i in range(10)], "x string")
-    append_kmv_delta(d2, "x", path, k=64)
-    est2 = load_kmv(spark, path).select(
-        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
-    assert est2 == 50.0
-    # no bare temp remains after the NEXT successful overwrite
+    path = str(tmp_path / "kmv")
+    save_sketch(kmv_sketch(df, "x", k=64), path)
     d3 = spark.createDataFrame([("z1",)], "x string")
     append_kmv_delta(d3, "x", path, k=64)
-    assert not [n for n in os.listdir(path) if n.startswith("_tmp-g-")]
+    est = load_sketch(spark, path).select(
+        kmv_estimate(F.col("sketch"), F.col("k")).alias("e")).head().e
+    assert est == 41.0
 
     # seed guard: mismatched seed raises instead of silently merging
     with pt.raises(ValueError, match="seed"):
         append_kmv_delta(d3, "x", path, k=64, seed=7)
     # legacy table without the seed column: non-default seed refused
     legacy = str(tmp_path / "kmvlegacy")
-    save_kmv(kmv_sketch(df, "x", k=64).drop("seed"), legacy)
+    save_sketch(kmv_sketch(df, "x", k=64).drop("seed"), legacy)
     with pt.raises(ValueError, match="seed"):
         append_kmv_delta(d3, "x", legacy, k=64, seed=7)
     append_kmv_delta(d3, "x", legacy, k=64)  # seed 0 still appends

@@ -442,9 +442,9 @@ def test_hybrid_and_bm25_sql_match_python_paths(spark, sf_dir):
 
     reg = load_all()
     idx = _inv_index(spark, sf_dir)
-    import tempfile
+    from deeplake_spark.queries import saved_index_path
 
-    idx_path = f"{tempfile.gettempdir()}/dls_inv_{abs(hash(sf_dir))}"
+    idx_path = saved_index_path(sf_dir, "inv")
     rt.register_index_views(spark, "hyb_docs", idx_path)
     spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .createOrReplaceTempView("hyb_docs")
@@ -1189,7 +1189,7 @@ def test_sql_route_pushes_probe_ranges_to_corpus_scan(spark,
 
 def test_sql_range_cache_bounds_plan_time_jobs(spark, clustered_sql_docs):
     """Re-planning the same probe must hit the JVM range memo, not
-    re-run the granule job per query (bounded-LRU, dir-signature
+    re-run the granule job per query (bounded-LRU, manifest
     keyed — the SCAN_CACHE discipline). rangeJobsRun() counts actual
     memo misses, so deleting the cache lookup fails this."""
     jvm = spark._jvm.io.deeplake.spark.ext.IndexRoutingRule
@@ -1284,9 +1284,7 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
             spark.conf.unset(key)
         spark.catalog.dropTempView("clust_emb")
 
-    # the pq (IVFADC) kind prunes through its codes table identically —
-    # this exercises annN's codebooks.json sidecar branch, which the
-    # clustered lane (centroids.json) can't
+    # the pq (IVFADC) kind prunes through its codes table identically
     from deeplake_spark.operators.similarity import build_pq
 
     pp = str(tmp_path / "clustpq")

@@ -191,3 +191,47 @@ def test_set_concurrency_without_session_raises(monkeypatch):
                         staticmethod(lambda: None))
     with pytest.raises(RuntimeError, match="active SparkSession"):
         set_concurrency(32)
+
+
+def test_posix_put_bytes_keeps_old_bytes_when_the_write_fails(
+        tmp_path, monkeypatch):
+    """A metadata put is atomic: a write that fails midway (a kill, a
+    full disk) leaves the old bytes of refs.json in place, not a
+    truncated file that loses the whole dataset, and leaves nothing a
+    `.json` listing or Spark's discovery would pick up."""
+    import builtins
+
+    from deeplake_spark.storage import PosixMetadataStore
+
+    store = PosixMetadataStore()
+    path = str(tmp_path / "refs.json")
+    store.put_bytes(path, b'{"branches": {"main": 1}}')
+    real_open = builtins.open
+
+    class HalfWrite:
+        def __init__(self, f):
+            self.f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, data):
+            self.f.write(data[: len(data) // 2])
+            raise OSError("simulated failure mid-write")
+
+        def __getattr__(self, name):
+            return getattr(self.f, name)
+
+    def failing_open(file, mode="r", *args, **kwargs):
+        f = real_open(file, mode, *args, **kwargs)
+        return HalfWrite(f) if "w" in mode else f
+
+    monkeypatch.setattr(builtins, "open", failing_open)
+    with pytest.raises(OSError, match="mid-write"):
+        store.put_bytes(path, b'{"branches": {"main": 2, "dev": 3}}')
+    monkeypatch.undo()
+    assert store.get_bytes(path) == b'{"branches": {"main": 1}}'
+    assert store.list(str(tmp_path)) == ["refs.json"]

@@ -1109,15 +1109,15 @@ def test_stream_bloom_screen_matches_batch(spark, tmp_path):
     join, unknown groups flag false); a member arrival always flags
     true (no false negatives); mixed-geometry side tables raise."""
     from deeplake_spark.operators.sketches import (
-        bloom_contains, bloom_sketch, save_bloom)
+        bloom_contains, bloom_sketch, load_sketch, save_sketch)
     from deeplake_spark.streaming.sampling import stream_bloom_screen
 
     corpus = spark.createDataFrame(
         [(f"g{i % 2}", f"v{i}") for i in range(60)], "src string, x string")
     gpath = str(tmp_path / "bloom_global")
     ppath = str(tmp_path / "bloom_pergrp")
-    save_bloom(bloom_sketch(corpus, "x", n_words=16), gpath)
-    save_bloom(bloom_sketch(corpus, "x", by=["src"], n_words=16), ppath)
+    save_sketch(bloom_sketch(corpus, "x", n_words=16), gpath)
+    save_sketch(bloom_sketch(corpus, "x", by=["src"], n_words=16), ppath)
 
     arrivals = ([("g0", f"v{i}") for i in range(50, 70)]      # members+new
                 + [("g1", f"v{i+9}") for i in range(55, 65)]
@@ -1141,7 +1141,7 @@ def test_stream_bloom_screen_matches_batch(spark, tmp_path):
                 for r in spark.read.parquet(out_dir).collect()}
 
     arr_df = spark.createDataFrame(arrivals, "src string, x string")
-    gbloom = spark.read.parquet(gpath).head()
+    gbloom = load_sketch(spark, gpath).head()
     # NULL probes flag FALSE (the filter holds no NULLs; "false is
     # definitely new" must hold under ~col filters)
     want_global = {(r.src, r.x): bool(r.f) for r in arr_df.select(
@@ -1155,7 +1155,7 @@ def test_stream_bloom_screen_matches_batch(spark, tmp_path):
                if x is not None and int(x[1:]) < 60 and s != "g9")
 
     pblooms = {r.src: list(r.bloom)
-               for r in spark.read.parquet(ppath).collect()}
+               for r in load_sketch(spark, ppath).collect()}
     want_grp = {}
     for s, x in arrivals:
         if s not in pblooms or x is None:
@@ -1168,8 +1168,8 @@ def test_stream_bloom_screen_matches_batch(spark, tmp_path):
 
     # mixed geometry raises
     mixed = str(tmp_path / "bloom_mixed")
-    save_bloom(bloom_sketch(corpus, "x", n_words=16), mixed)
-    bloom_sketch(corpus, "x", n_words=8).write.mode("append").parquet(mixed)
+    save_sketch(bloom_sketch(corpus, "x", n_words=16).unionByName(
+        bloom_sketch(corpus, "x", n_words=8)), mixed)
     with pytest.raises(ValueError, match="mixed geometries"):
         stream_bloom_screen(
             spark.readStream.format("parquet")

@@ -107,10 +107,12 @@ def test_caches_live_in_memo_module():
 
 def test_side_tables_read_only_through_memo():
     """Index and sketch side tables are read only through
-    memo.side_table (content-keyed, so an unchanged index is read once
-    per session): no `read...parquet(` call in the index, similarity,
-    multimodal and sketch operators. write_side_table's post-write row
-    count reads through the helper too, so there is no exception."""
+    memo.side_table (keyed on the table's newest manifest, so an
+    unchanged index is read once per session) and written only through
+    indexes.write_side_table (the one kill-safe snapshot write): no
+    `read...parquet(` call and no `.write` outside write_side_table in
+    the index, similarity, multimodal and sketch operators."""
+    import ast
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -122,6 +124,34 @@ def test_side_tables_read_only_through_memo():
             src = f.read()
         offenders += [f"{name}.py:{src.count(chr(10), 0, m.start()) + 1}"
                       for m in reader.finditer(src)]
+        tree = ast.parse(src)
+        shared = {id(n) for fn in ast.walk(tree)
+                  if isinstance(fn, ast.FunctionDef)
+                  and fn.name == "write_side_table" for n in ast.walk(fn)}
+        offenders += [f"{name}.py:{n.lineno} .write"
+                      for n in ast.walk(tree)
+                      if isinstance(n, ast.Attribute) and n.attr == "write"
+                      and id(n) not in shared]
     assert offenders == [], offenders
     with open(os.path.join(root, "deeplake_spark", "memo.py")) as f:
-        assert reader.search(f.read()), "memo.side_table must read"
+        assert re.search(r"\.read\(\)[\s\S]*?\.parquet\(", f.read()), \
+            "memo.side_table must read"
+
+
+def test_saved_index_path_is_the_same_in_every_process():
+    """queries.saved_index keys its directory on a digest of sf_dir,
+    not on the per-process salted builtin `hash`: two processes with
+    different PYTHONHASHSEED save into the same directory, so a later
+    save lands a new manifest there instead of a new /tmp directory."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("from deeplake_spark.queries import saved_index_path; "
+            "print(saved_index_path('/data/sf0.1', 'inv'))")
+    paths = {subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "PYTHONHASHSEED": seed}).stdout.strip()
+        for seed in ("1", "2")}
+    assert len(paths) == 1 and "dls_inv_" in paths.pop()
