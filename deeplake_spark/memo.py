@@ -238,9 +238,9 @@ TABLE_MEMO = Memo("table", 64)
 #: (io.ensure_parallelism; the probe forces physical planning).
 PARTITION_PROBE_CACHE = Memo("partition_probe", 512)
 
-#: plan_key of the summarized probe + (granule, max_ranges) -> row-id
-#: ranges (indexes.routed_scan_ranges; the plan-time summary job must
-#: not repeat per query). Same bound as the JVM twin,
+#: plan_key of a probe's (lo, hi) granule rows -> row-id ranges
+#: (indexes.routed_scan_ranges; the plan-time summary job must not
+#: repeat per query). Same bound as the JVM twin,
 #: IndexRoutingRule.RANGE_CACHE.
 RANGE_CACHE = Memo("range", 256)
 

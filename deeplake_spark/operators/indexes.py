@@ -81,40 +81,43 @@ DEFAULT_MIN_CORPUS_ROWS = 200_000
 # The reference's index probes return roaring bitmaps that convert to
 # CHUNK-granular reads — the corpus is never fully scanned
 # (cpp/icm/roaring.hpp; cpp/query_core/index_holder.hpp:37-40). The
-# Spark analog: at route time, aggregate the (partition-pruned) probe
-# into per-granule row-id min/max, coalesce into a bounded set of
-# [lo, hi] ranges, and push them as a LITERAL `id BETWEEN`-OR filter
-# under the semijoin — parquet row-group/page min/max stats then skip
-# the corpus I/O wholesale when the ingest layout is row-id-sorted
-# (ingest writes it that way; see plans/layout.py). The semijoin stays
-# on top, so the ranges are pure I/O pruning, never a correctness
-# surface. Planning-snapshot semantics: ranges reflect the index at
-# plan time, exactly like the reference's bitmap fetched at query
-# start — re-plan after a delta append to see new rows.
+# Spark analog: at route time, read the (partition-pruned) probe's
+# per-granule row-id min/max — prebuilt in the inverted index's
+# granule table, one aggregate over any other probe — coalesce them
+# into a bounded set of [lo, hi] ranges, and push them as a LITERAL
+# `id BETWEEN`-OR filter under the semijoin — parquet row-group/page
+# min/max stats then skip the corpus I/O wholesale when the ingest
+# layout is row-id-sorted (ingest writes it that way; see
+# plans/layout.py). The semijoin stays on top, so the ranges are pure
+# I/O pruning, never a correctness surface. Planning-snapshot
+# semantics: ranges reflect the index at plan time, exactly like the
+# reference's bitmap fetched at query start — re-plan after a delta
+# append to see new rows.
 
-#: row-id granule the probe is summarized at (the "chunk size" of the
-#: bitmap→range conversion). Rows within granule gaps are skipped at
-#: row-group resolution, so align with the ingest row-group target.
-RANGE_GRANULE_KEY = "spark.sql.deeplake.routing.rangeGranule"
-DEFAULT_RANGE_GRANULE = 65536
+#: row-id granule of the range summary (the "chunk size" of the
+#: bitmap→range conversion): each probe becomes at most one [lo, hi]
+#: per granule, so the ranges skip row groups at this resolution.
+#: Aligned with the ingest row-group target.
+RANGE_GRANULE = 65536
 #: max coalesced ranges in the pushed filter (a 100 TB probe may hit
 #: thousands of granules; the filter stays bounded by merging the
 #: nearest-gap ranges — a superset, still sound).
-MAX_RANGES_KEY = "spark.sql.deeplake.routing.maxRanges"
-DEFAULT_MAX_RANGES = 64
+MAX_RANGES = 64
 #: ranges are skipped when they cover more than this fraction of the
 #: corpus (nothing to skip; the per-row OR would be pure overhead).
-MAX_RANGE_COVERAGE_KEY = "spark.sql.deeplake.routing.maxRangeCoverage"
-DEFAULT_MAX_RANGE_COVERAGE = 0.8
+MAX_RANGE_COVERAGE = 0.8
 #: probes hitting more granules than this bail out of range pruning
 #: (bounds the plan-time collect; such probes cannot prune anyway).
 _RANGE_CHUNK_CAP = 4096
 
+#: the kill switch for layouts that are not row-id-sorted, where
+#: parquet stats cannot serve the pushed ranges
 RANGE_PRUNE_KEY = "spark.sql.deeplake.routing.rangePrune"
 
 
 def coalesce_id_ranges(bounds: list[tuple[int, int]],
-                       max_ranges: int) -> list[tuple[int, int]]:
+                       max_ranges: int = MAX_RANGES
+                       ) -> list[tuple[int, int]]:
     """Merge overlapping/adjacent [lo, hi] id ranges, then — if still
     more than `max_ranges` — keep the `max_ranges - 1` LARGEST gaps as
     splits and merge across the rest (minimizes the extra id-space the
@@ -145,147 +148,77 @@ def coalesce_id_ranges(bounds: list[tuple[int, int]],
     return [(lo, hi) for lo, hi in merged]
 
 
-def probe_id_ranges(ids: DataFrame, granule: int,
-                    max_chunks: int = _RANGE_CHUNK_CAP
-                    ) -> list[tuple[int, int]] | None:
-    """Granule-level min/max summary of a probe's row_id relation (the
-    bitmap→chunk-list conversion). One bounded job over the already
-    partition-pruned probe; None when the probe touches more granules
-    than `max_chunks` (too scattered to prune)."""
-    rows = (
-        ids.groupBy(F.expr(f"row_id div {int(granule)}").alias("g"))
-        .agg(F.min("row_id").alias("lo"), F.max("row_id").alias("hi"))
-        .limit(max_chunks + 1)
-        .collect()
-    )
-    if len(rows) > max_chunks:
-        return None
-    return [(int(r["lo"]), int(r["hi"])) for r in rows]
+def granule_bounds(ids: DataFrame) -> DataFrame:
+    """(lo, hi) per RANGE_GRANULE block of a `row_id` relation — the
+    bitmap→chunk-list conversion of a probe whose index keeps no
+    granule table (numeric, exact, json, rerank candidates)."""
+    return ids.groupBy(F.expr(f"row_id div {RANGE_GRANULE}")).agg(
+        F.min("row_id").alias("lo"), F.max("row_id").alias("hi"))
 
 
-def granule_probe_ranges(granules: DataFrame, mult: int,
-                         max_chunks: int = _RANGE_CHUNK_CAP
-                         ) -> list[tuple[int, int]] | None:
-    """`probe_id_ranges` over a BUILD-TIME granule summary instead of
-    the posting rows (VERDICT r15 #8): `granules` carries one
-    (g, lo, hi) row per (term, build-granule) written by
-    InvertedIndex.save, so the plan-time job aggregates O(granules)
-    pre-reduced rows instead of O(df) posting rows — at 100 TB a
-    frequent term's summary drops from a corpus-scale aggregate to a
-    footer-sized side-table read. `mult` = session granule / build
-    granule (an exact regroup: build granules nest inside session
-    granules, and min/max distribute over the merge, so the result is
-    IDENTICAL to summarizing the posting rows at the session granule —
-    test-pinned). Same bail contract as probe_id_ranges."""
-    key = F.expr(f"g div {int(mult)}") if mult > 1 else F.col("g")
-    rows = (
-        granules.groupBy(key.alias("g"))
-        .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
-        .limit(max_chunks + 1)
-        .collect()
-    )
-    if len(rows) > max_chunks:
-        return None
-    return [(int(r["lo"]), int(r["hi"])) for r in rows]
-
-
-def _range_gates(spark) -> tuple[int, int, float] | None:
-    """(granule, max_ranges, max_coverage) from the session conf, or
-    None when range pruning is off or the conf is malformed — the ONE
-    gate every routed lane's range pruning reads."""
-    try:
-        # enabled iff "true" (case-insensitive) — the JVM rule parses the
-        # same way, so the kill switch can't half-work across lanes
-        if spark.conf.get(RANGE_PRUNE_KEY, "true").strip().lower() != "true":
-            return None
-        granule = int(spark.conf.get(RANGE_GRANULE_KEY,
-                                     str(DEFAULT_RANGE_GRANULE)))
-        max_ranges = int(spark.conf.get(MAX_RANGES_KEY,
-                                        str(DEFAULT_MAX_RANGES)))
-        coverage = float(spark.conf.get(MAX_RANGE_COVERAGE_KEY,
-                                        str(DEFAULT_MAX_RANGE_COVERAGE)))
-    except Exception:
-        return None
-    if granule <= 0 or max_ranges <= 0:
-        return None
-    return granule, max_ranges, coverage
+def _range_prune_on(spark) -> bool:
+    """The kill switch, enabled iff "true" (case-insensitive) — the JVM
+    rule parses the same way, so it can't half-work across lanes."""
+    return spark.conf.get(RANGE_PRUNE_KEY, "true").strip().lower() == "true"
 
 
 def _coverage_gate(ranges: list[tuple[int, int]] | None,
-                   n_rows_est: int | None, coverage: float
-                   ) -> list[tuple[int, int]] | None:
+                   n_rows_est: int | None) -> list[tuple[int, int]] | None:
     """`ranges`, or None when empty or spanning ~the corpus (nothing for
     parquet stats to skip; the per-row OR would be pure overhead).
     Unknown corpus size keeps them."""
     if not ranges:
         return None
     if n_rows_est and sum(hi - lo + 1 for lo, hi in ranges) \
-            >= coverage * n_rows_est:
+            >= MAX_RANGE_COVERAGE * n_rows_est:
         return None
     return ranges
 
 
-def routed_scan_ranges(ids: DataFrame, n_rows_est: int | None,
-                       granules: DataFrame | None = None,
-                       granule_size: int | None = None
-                       ) -> list[tuple[int, int]] | None:
-    """[lo, hi] row-id ranges for the corpus scan filter, or None when
-    pruning is off / too scattered / covers ~everything.
-
-    `granules` (with its build `granule_size`) is an optional
-    build-time (g, lo, hi) summary of the SAME probe (e.g.
-    InvertedIndex.probe_granules): when the session granule is a
-    positive multiple of the build granule, the summary job runs over
-    it instead of the probe rows — identical ranges (exact regroup,
-    see granule_probe_ranges), plan-time cost O(granules) instead of
-    O(probe rows). Any mismatch falls back to summarizing `ids`."""
-    gates = _range_gates(ids.sparkSession)
-    if gates is None:
+def summary_ranges(bounds: DataFrame) -> list[tuple[int, int]] | None:
+    """Coalesced ranges of a (lo, hi) relation whose rows each bound
+    the probe ids of one granule: the inverted index's build-time
+    granule rows, or `granule_bounds` of any other probe. One bounded
+    job over the already partition-pruned relation; None when it holds
+    more than _RANGE_CHUNK_CAP rows (too scattered to prune)."""
+    rows = bounds.select("lo", "hi").limit(_RANGE_CHUNK_CAP + 1).collect()
+    if len(rows) > _RANGE_CHUNK_CAP:
         return None
-    granule, max_ranges, coverage = gates
-    # prefer the build-time granule summary when the session granule
-    # aligns (equal, or a multiple — an exact regroup); the cache key
-    # below is computed from whichever relation is actually summarized
-    src = ids
-    mult = 0
-    if granules is not None and granule_size and granule_size > 0 \
-            and granule % int(granule_size) == 0:
-        src = granules
-        mult = granule // int(granule_size)
+    return coalesce_id_ranges([(int(lo), int(hi)) for lo, hi in rows])
+
+
+def routed_scan_ranges(bounds: DataFrame, n_rows_est: int | None
+                       ) -> list[tuple[int, int]] | None:
+    """[lo, hi] row-id ranges for the corpus scan filter from a probe's
+    (lo, hi) granule rows (`summary_ranges`), or None when pruning is
+    off / too scattered / covers ~everything. A granule row is a sound
+    bound whatever granule it was built at, so the rows of every build
+    and append delta summarize alike."""
+    if not _range_prune_on(bounds.sparkSession):
+        return None
     # content key (memo.plan_key): a hit serving ANOTHER probe's ranges
     # would EXCLUDE true candidate rows from the corpus scan — wrong
     # results, not just a bad plan
-    key = memo.plan_key(src)
-    if key is not None:
-        key += (granule, max_ranges)
-
-    def summarize():
-        chunks = (granule_probe_ranges(src, mult) if mult
-                  else probe_id_ranges(ids, granule))
-        return (coalesce_id_ranges(chunks, max_ranges)
-                if chunks is not None else None)
-
-    return _coverage_gate(memo.RANGE_CACHE.get(key, summarize),
-                          n_rows_est, coverage)
+    return _coverage_gate(
+        memo.RANGE_CACHE.get(memo.plan_key(bounds),
+                             lambda: summary_ranges(bounds)),
+        n_rows_est)
 
 
 def collected_id_ranges(spark, ids: list[int], n_rows_est: int | None
                         ) -> list[tuple[int, int]] | None:
     """`routed_scan_ranges` for row ids already on the driver (a
-    top-k's collected hits): the same conf gates and coalescing, with
-    the granule min/max summary done in Python — no job, no memo."""
-    gates = _range_gates(spark)
-    if gates is None:
+    top-k's collected hits): the same gates and coalescing, with the
+    granule min/max summary done in Python — no job, no memo."""
+    if not _range_prune_on(spark):
         return None
-    granule, max_ranges, coverage = gates
     chunks: dict[int, tuple[int, int]] = {}
     for i in ids:
-        g = i // granule
+        g = i // RANGE_GRANULE
         lo, hi = chunks.get(g, (i, i))
         chunks[g] = (min(lo, i), max(hi, i))
-    return _coverage_gate(coalesce_id_ranges(list(chunks.values()),
-                                             max_ranges),
-                          n_rows_est, coverage)
+    return _coverage_gate(coalesce_id_ranges(list(chunks.values())),
+                          n_rows_est)
 
 
 def ranges_predicate(id_col: str, ranges: list[tuple[int, int]]) -> Column:
@@ -299,22 +232,23 @@ def ranges_predicate(id_col: str, ranges: list[tuple[int, int]]) -> Column:
 def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
                       n_rows_est: int | None = None,
                       ids_col: str | None = None,
-                      granules: DataFrame | None = None,
-                      granule_size: int | None = None) -> DataFrame:
+                      granules: DataFrame | None = None) -> DataFrame:
     """`df` with the probe's row-id ranges pushed as a scan filter —
     THE shared prune block for every lazily routed lane (filter
-    semijoins, ANN rerank scans), so the dtype gate, conf/scatter/
-    coverage gates (routed_scan_ranges) and predicate spelling live in
-    exactly one place. The caller's join on top keeps results exact:
-    ranges are always a superset of the probe ids. `ids_col` names the
-    id column in `ids` (default: its first column)."""
+    semijoins, ANN rerank scans), so the dtype gate, kill-switch/
+    scatter/coverage gates (routed_scan_ranges) and predicate spelling
+    live in exactly one place. The caller's join on top keeps results
+    exact: ranges are always a superset of the probe ids. `ids_col`
+    names the id column in `ids` (default: its first column);
+    `granules` is the probe's (lo, hi) granule rows when its index
+    keeps them (default: `granule_bounds` of the ids)."""
     if dict(df.dtypes).get(id_col) in ("bigint", "int"):
-        c = ids_col or ids.columns[0]
-        probe = ids.select(F.col(c).alias("row_id")) \
-            if c != "row_id" or len(ids.columns) > 1 else ids
-        ranges = routed_scan_ranges(probe, n_rows_est,
-                                    granules=granules,
-                                    granule_size=granule_size)
+        if granules is None:
+            c = ids_col or ids.columns[0]
+            granules = granule_bounds(
+                ids.select(F.col(c).alias("row_id"))
+                if c != "row_id" or len(ids.columns) > 1 else ids)
+        ranges = routed_scan_ranges(granules, n_rows_est)
         if ranges:
             df = df.filter(ranges_predicate(id_col, ranges))
     return df
@@ -322,18 +256,16 @@ def prune_scan_to_ids(df: DataFrame, ids: DataFrame, id_col: str,
 
 def routed_semijoin(df: DataFrame, ids: DataFrame, id_col: str,
                     n_rows_est: int | None = None,
-                    granules: DataFrame | None = None,
-                    granule_size: int | None = None) -> DataFrame:
+                    granules: DataFrame | None = None) -> DataFrame:
     """The routed-filter shape: corpus LeftSemi probe — with the probe's
     row-id ranges pushed onto the corpus scan first, so parquet min/max
     stats skip row groups outside them (the reference's chunk-granular
     index read). `ids` is the probe of a saved-and-loaded index, whose
     lineage is a pruned side-table scan, cheap to summarize at plan
-    time. `granules` / `granule_size`: the index's build-time probe
-    summary, when it has one (routed_scan_ranges docstring)."""
+    time. `granules`: the probe's build-time (lo, hi) granule rows,
+    when its index keeps them (prune_scan_to_ids)."""
     df = prune_scan_to_ids(df, ids, id_col, n_rows_est,
-                           ids_col="row_id", granules=granules,
-                           granule_size=granule_size)
+                           ids_col="row_id", granules=granules)
     return df.join(ids.withColumnRenamed("row_id", id_col), id_col,
                    "left_semi")
 
@@ -425,7 +357,6 @@ def _stats_meta(meta: dict) -> dict:
         "n_rows_est": int(meta.get("n_docs", 0)) or None,
         "floor_frac": float(meta.get("floor_frac", _HEAVY_FRAC)),
         "heavy": {k: int(v) for k, v in meta.get("heavy", {}).items()},
-        "range_granule": meta.get("range_granule"),
     }
 
 
@@ -463,14 +394,12 @@ class InvertedIndex:
     heavy: dict | None = None
     n_docs_est: int | None = None
     floor_frac: float = _HEAVY_FRAC
-    #: build-time per-(term, granule) row-id min/max side table
-    #: (g, lo, hi + bucket partition), written by save() at
-    #: DEFAULT_RANGE_GRANULE and recorded in the manifest meta
-    #: (range_granule) — the plan-time range summary aggregates THIS
-    #: instead of the posting rows (VERDICT r15 #8). None on an unsaved
-    #: build (probe paths fall back to the posting job).
+    #: build-time per-(term, RANGE_GRANULE block) row-id min/max side
+    #: table (g, lo, hi + bucket partition), written by save() — the
+    #: plan-time range summary reads THIS instead of the posting rows
+    #: (VERDICT r15 #8). Set by load(); None only on an unsaved build,
+    #: which no probe accepts (require_saved).
     granules: DataFrame | None = None
-    granule_size: int | None = None
     #: (n_docs, avgdl) of the merged `stats` row, collected once per
     #: stats-table content at load so BM25 probes take them as
     #: literals. None on a build until it is saved and loaded.
@@ -516,12 +445,12 @@ class InvertedIndex:
         )
 
     def probe_granules(self, terms: list[str]) -> DataFrame:
-        """Build-time (g, lo, hi) granule rows for `terms`' UNION probe
+        """Build-time (lo, hi) granule rows for `terms`' UNION probe
         (bucket-pruned like the posting probe). The union is exact for
         mode='any' / single-term probes and a sound SUPERSET for 'all'
         (ranges are only ever a scan prefilter under an exact join)."""
         uniq = sorted({t.lower() for t in terms})
-        return _term_hit(self.granules, uniq).select("g", "lo", "hi")
+        return _term_hit(self.granules, uniq).select("lo", "hi")
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Write the side tables; the manifest meta carries the routing
@@ -553,17 +482,17 @@ class InvertedIndex:
             # AND parallel at any scale.
             write_side_table(path, {
                 # Build-time granule summary (VERDICT r15 #8): one
-                # (g, lo, hi) row per (term, DEFAULT_RANGE_GRANULE
-                # block), bucketed like the postings so probes prune
-                # the same way. The plan-time range summary then
-                # aggregates O(granules) pre-reduced rows instead of
-                # O(df) posting rows (routed_scan_ranges). Every
+                # (g, lo, hi) row per (term, RANGE_GRANULE block),
+                # bucketed like the postings so probes prune the
+                # same way. The plan-time range summary then reads
+                # O(granules) pre-reduced rows instead of O(df)
+                # posting rows (routed_scan_ranges). Every
                 # manifest lists granules and postings together, so
                 # its granule table covers its postings.
                 "granules": (
                     self.postings
                     .groupBy("term", F.expr(
-                        f"row_id div {DEFAULT_RANGE_GRANULE}").alias("g"))
+                        f"row_id div {RANGE_GRANULE}").alias("g"))
                     .agg(F.min("row_id").alias("lo"),
                          F.max("row_id").alias("hi"))
                     .withColumn("bucket", bucket)
@@ -572,7 +501,10 @@ class InvertedIndex:
                              .repartitionByRange("bucket", "term"),
                              "bucket"),
                 "stats": (self.stats, None),
-                "doclens": (self.doclens, None),
+                # range-repartitioned like the postings: written at
+                # the upstream's width it left a file per task
+                "doclens": (self.doclens.repartitionByRange("row_id"),
+                            None),
             }, lambda old, staged: self._termstats(old), mode)
         finally:
             self.postings.unpersist()
@@ -590,15 +522,13 @@ class InvertedIndex:
         delta's own floor) so repeated appends cannot erode a frequent
         term's estimate below the gate; a term absent from BOTH maps
         has df < floor*n_i in each segment, hence < max(floor)*n
-        overall — the bound survives. `range_granule` is the granule
-        the granules table summarizes at."""
+        overall — the bound survives."""
         srow = self.stats.agg(
             F.sum("n_docs").cast("long").alias("n")).head()
         n = int(srow["n"] or 0)
         counts = self.postings.groupBy(
             F.col("term").alias("key")).agg(F.count(F.lit(1)).alias("df"))
-        return {**_heavy_map(counts, n, old),
-                "range_granule": DEFAULT_RANGE_GRANULE}
+        return _heavy_map(counts, n, old)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str,
@@ -624,7 +554,6 @@ class InvertedIndex:
             n_docs_est=ts["n_rows_est"],
             floor_frac=ts["floor_frac"],
             granules=memo.side_table(spark, path, "granules"),
-            granule_size=int(ts["range_granule"]),
             corpus=corpus,
         )
 
@@ -677,8 +606,7 @@ def contains_via_index(df: DataFrame, index: InvertedIndex, term: str,
     index (require_saved)."""
     ids = index.probe([term])
     return routed_semijoin(df, ids, id_col, n_rows_est=index.n_docs_est,
-                           granules=index.probe_granules([term]),
-                           granule_size=index.granule_size)
+                           granules=index.probe_granules([term]))
 
 
 def bm25_via_index(index: InvertedIndex, terms: list[str], k: int = 10,

@@ -128,26 +128,23 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
     /** Probe → row-group pruning (mirrors the reference's roaring
      *  bitmap → chunk-granular reads, cpp/icm/roaring.hpp +
      *  cpp/query_core/index_holder.hpp:37-40): at route time the
-     *  probe's row ids are summarized into per-granule min/max,
-     *  coalesced into at most {@code maxRanges} [lo, hi] ranges, and
-     *  pushed as a LITERAL BETWEEN-OR filter on the corpus scan — so
-     *  parquet row-group/page stats skip the corpus I/O outside them
-     *  (the ingest layout is row-id-sorted). The semijoin stays on
-     *  top: ranges are pure I/O pruning, never a correctness surface.
-     *  Skipped when the ranges would cover more than
-     *  {@code maxRangeCoverage} of the corpus (nothing to skip).
-     *  Conf names shared with the TQL route (operators/indexes.py). */
+     *  probe's per-{@code RANGE_GRANULE} row-id min/max rows (the
+     *  inverted index's build-time granule table; one aggregate over
+     *  any other probe) are coalesced into at most {@code MAX_RANGES}
+     *  [lo, hi] ranges and pushed as a LITERAL BETWEEN-OR filter on
+     *  the corpus scan — so parquet row-group/page stats skip the
+     *  corpus I/O outside them (the ingest layout is row-id-sorted).
+     *  The semijoin stays on top: ranges are pure I/O pruning, never a
+     *  correctness surface. Skipped when the ranges would cover more
+     *  than {@code MAX_RANGE_COVERAGE} of the corpus (nothing to skip).
+     *  The same constants as the TQL route (operators/indexes.py);
+     *  {@code rangePrune=false} is the kill switch for layouts that are
+     *  not id-sorted. */
     public static final String RANGE_PRUNE_KEY =
             "spark.sql.deeplake.routing.rangePrune";
-    public static final String RANGE_GRANULE_KEY =
-            "spark.sql.deeplake.routing.rangeGranule";
-    public static final String MAX_RANGES_KEY =
-            "spark.sql.deeplake.routing.maxRanges";
-    public static final String MAX_RANGE_COVERAGE_KEY =
-            "spark.sql.deeplake.routing.maxRangeCoverage";
-    static final long DEFAULT_RANGE_GRANULE = 65536;
-    static final int DEFAULT_MAX_RANGES = 64;
-    static final double DEFAULT_MAX_RANGE_COVERAGE = 0.8;
+    static final long RANGE_GRANULE = 65536;
+    static final int MAX_RANGES = 64;
+    static final double MAX_RANGE_COVERAGE = 0.8;
     /** probes touching more granules than this bail out of range
      *  pruning (bounds the plan-time collect; such probes cannot
      *  prune meaningfully anyway). */
@@ -251,11 +248,7 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         }
 
         List<Expression> residual = new ArrayList<>();
-        List<Dataset<Row>> probes = new ArrayList<>();
-        List<String> probeIdCols = new ArrayList<>();
-        List<String> probeDescs = new ArrayList<>();   // range-cache keys
-        List<String> probeIndexes = new ArrayList<>(); // their manifests key ranges
-        List<Long> probeNEsts = new ArrayList<>();     // corpus-size ests
+        List<Routed> probes = new ArrayList<>();
         Map<String, Range> ranges = new HashMap<>();
         double maxSel = confDouble(MAX_SELECTIVITY_KEY,
                 DEFAULT_MAX_SELECTIVITY);
@@ -275,11 +268,9 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                         && hasAttr(child, en.idCol)
                         && routable(invertedSelectivity(en, tok[1]),
                                 maxSel)) {
-                    probes.add(invertedProbe(en, tok[1]));
-                    probeIdCols.add(en.idCol);
-                    probeDescs.add("inv|" + en.indexPath + "|" + tok[1]);
-                    probeIndexes.add(en.indexPath);
-                    probeNEsts.add(invertedNDocs(en));
+                    probes.add(new Routed(invertedProbe(en, tok[1]), en,
+                            "inv|" + tok[1], invertedNDocs(en),
+                            () -> invertedGranules(en, tok[1])));
                     continue;
                 }
             }
@@ -291,11 +282,8 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                         && corpusFloorOk(exactN(en), minRows)
                         && routable(exactSelectivity(en, eqs[1]),
                                 maxSel)) {
-                    probes.add(exactProbe(en, eqs[1]));
-                    probeIdCols.add(en.idCol);
-                    probeDescs.add("ex|" + en.indexPath + "|" + eqs[1]);
-                    probeIndexes.add(en.indexPath);
-                    probeNEsts.add(exactN(en));
+                    probes.add(new Routed(exactProbe(en, eqs[1]), en,
+                            "ex|" + eqs[1], exactN(en), null));
                     // digest lookup prunes; the equality itself is KEPT
                     // as a residual so an md5 collision can never admit
                     // a wrong row (exactness is ~free: it runs on the
@@ -320,11 +308,8 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                         && corpusFloorOk(numericN(en), minRows)
                         && routable(estInSel(readNumMeta(en.indexPath),
                                 in.values), maxSel)) {
-                    probes.add(inProbe(en, in.values));
-                    probeIdCols.add(en.idCol);
-                    probeDescs.add("in|" + en.indexPath + "|" + in.values);
-                    probeIndexes.add(en.indexPath);
-                    probeNEsts.add(numericN(en));
+                    probes.add(new Routed(inProbe(en, in.values), en,
+                            "in|" + in.values, numericN(en), null));
                     continue;
                 }
             }
@@ -367,12 +352,9 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                 residual.addAll(r.sources);
                 continue;
             }
-            probes.add(rangeProbe(r));
-            probeIdCols.add(r.entry.idCol);
-            probeDescs.add("rg|" + r.entry.indexPath + "|" + r.lo + "|"
-                    + r.loStrict + "|" + r.hi + "|" + r.hiStrict);
-            probeIndexes.add(r.entry.indexPath);
-            probeNEsts.add(numericN(r.entry));
+            probes.add(new Routed(rangeProbe(r), r.entry, "rg|" + r.lo
+                    + "|" + r.loStrict + "|" + r.hi + "|" + r.hiStrict,
+                    numericN(r.entry), null));
         }
         if (probes.isEmpty()) {
             return null;
@@ -383,16 +365,13 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         // BEFORE the semijoins, so parquet min/max stats skip I/O
         Expression rangePred = null;
         if (rangePrune) {
-            for (int i = 0; i < probes.size(); i++) {
-                Attribute idAttr = findAttr(child.output(),
-                        probeIdCols.get(i));
+            for (Routed r : probes) {
+                Attribute idAttr = findAttr(child.output(), r.idCol);
                 if (idAttr == null || !(idAttr.dataType()
                         instanceof org.apache.spark.sql.types.IntegralType)) {
                     continue;
                 }
-                List<long[]> rs = cachedRanges(probes.get(i),
-                        probeDescs.get(i), probeNEsts.get(i),
-                        probeIndexes.get(i));
+                List<long[]> rs = cachedRanges(r);
                 if (rs == null || rs.isEmpty()) {
                     continue;
                 }
@@ -406,13 +385,12 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
 
         LogicalPlan joined = rangePred == null ? child
                 : new Filter(rangePred, child);
-        for (int i = 0; i < probes.size(); i++) {
-            Attribute idAttr = findAttr(child.output(), probeIdCols.get(i));
+        for (Routed r : probes) {
+            Attribute idAttr = findAttr(child.output(), r.idCol);
             if (idAttr == null) {
                 return null;
             }
-            LogicalPlan probePlan =
-                    probes.get(i).queryExecution().optimizedPlan();
+            LogicalPlan probePlan = r.probe.queryExecution().optimizedPlan();
             Attribute probeAttr = findAttr(probePlan.output(), "row_id");
             if (probeAttr == null) {
                 return null;
@@ -643,10 +621,34 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
 
     // ------------------------------------- probe → row-group pruning
 
+    /** A routed probe: its row ids (semijoined on {@code idCol}) and
+     *  what its range summary needs — the memo key {@code desc}, the
+     *  index whose newest manifest keys the memo too, the corpus size
+     *  and the probe's (lo, hi) granule rows, built only on a memo
+     *  miss (default: {@link #granuleBounds} of the probe). */
+    private static final class Routed {
+        final Dataset<Row> probe;
+        final String idCol;
+        final String desc;
+        final String indexPath;
+        final long nEst;
+        final java.util.function.Supplier<Dataset<Row>> bounds;
+
+        Routed(Dataset<Row> probe, IndexRegistry.Entry en, String desc,
+               long nEst, java.util.function.Supplier<Dataset<Row>> bounds) {
+            this.probe = probe;
+            this.idCol = en.idCol;
+            this.desc = desc;
+            this.indexPath = en.indexPath;
+            this.nEst = nEst;
+            this.bounds = bounds != null ? bounds : () -> granuleBounds(probe);
+        }
+    }
+
     /** Computed range sets are memoized (the same probe is re-planned
      *  across queries and the plan-time job must not repeat): key =
-     *  session | probe descriptor | index dir signature | confs, value
-     *  = long[lo,hi][] or a no-ranges sentinel. Bounded LRU like the
+     *  session | probe descriptor | index manifest, value =
+     *  long[lo,hi][] or a no-ranges sentinel. Bounded LRU like the
      *  scan cache. */
     private static final Object NO_RANGES = new Object();
     private static final Map<String, Object> RANGE_CACHE =
@@ -661,33 +663,24 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     });
 
     /** [lo, hi] row-id ranges for the corpus scan filter, or null when
-     *  the probe is too scattered (> RANGE_CHUNK_CAP granules) or the
-     *  ranges would cover more than the conf'd fraction of the corpus.
-     *  Runs ONE bounded job over the (already partition-pruned) probe:
-     *  per-granule min/max, coalesced driver-side. */
+     *  the probe is too scattered (> RANGE_CHUNK_CAP granule rows) or
+     *  the ranges would cover more than MAX_RANGE_COVERAGE of the
+     *  corpus. Runs ONE bounded job over the probe's (already
+     *  partition-pruned) granule rows, coalesced driver-side. */
     @SuppressWarnings("unchecked")
-    private List<long[]> cachedRanges(Dataset<Row> probe, String desc,
-                                      long nEst, String indexPath) {
-        long granule = confLong(RANGE_GRANULE_KEY, DEFAULT_RANGE_GRANULE);
-        int maxRanges = confInt(MAX_RANGES_KEY, DEFAULT_MAX_RANGES);
-        double coverage = confDouble(MAX_RANGE_COVERAGE_KEY,
-                DEFAULT_MAX_RANGE_COVERAGE);
-        if (granule <= 0 || maxRanges <= 0) {
-            return null;
-        }
+    private List<long[]> cachedRanges(Routed p) {
         // keyed on the index's newest manifest: a delta append lands
         // a new one, so pre-append [lo,hi] ranges — whose corpus
         // filter would exclude the newly indexed rows before the
         // semijoin — are never served after it
         String key = ((org.apache.spark.sql.classic.SparkSession) session)
-                .sessionUUID() + "|" + desc + "|" + manifestKey(indexPath)
-                + "|" + granule + "|" + maxRanges + "|" + coverage;
+                .sessionUUID() + "|" + p.desc + "|"
+                + manifestKey(p.indexPath);
         Object hit = RANGE_CACHE.get(key);
         if (hit != null) {
             return hit == NO_RANGES ? null : (List<long[]>) hit;
         }
-        List<long[]> out = computeRanges(probe, granule, maxRanges,
-                coverage, nEst);
+        List<long[]> out = computeRanges(p.bounds, p.nEst);
         RANGE_CACHE.put(key, out == null ? NO_RANGES : out);
         return out;
     }
@@ -701,19 +694,24 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return RANGE_JOBS.get();
     }
 
-    private List<long[]> computeRanges(Dataset<Row> probe, long granule,
-                                       int maxRanges, double coverage,
-                                       long nEst) {
+    /** (lo, hi) per RANGE_GRANULE block of a row_id probe — the
+     *  granule rows of a probe whose index keeps no granule table. */
+    private static Dataset<Row> granuleBounds(Dataset<Row> probe) {
+        return probe.groupBy(functions.expr("row_id div " + RANGE_GRANULE))
+                .agg(functions.min("row_id").alias("lo"),
+                     functions.max("row_id").alias("hi"));
+    }
+
+    private List<long[]> computeRanges(
+            java.util.function.Supplier<Dataset<Row>> granules, long nEst) {
         RANGE_JOBS.incrementAndGet();
         try {
-            if (!(probe.schema().apply("row_id").dataType()
+            Dataset<Row> g = granules.get();
+            if (!(g.schema().apply("lo").dataType()
                     instanceof org.apache.spark.sql.types.IntegralType)) {
                 return null;
             }
-            List<Row> rows = probe
-                    .groupBy(functions.expr("row_id div " + granule))
-                    .agg(functions.min("row_id").alias("lo"),
-                         functions.max("row_id").alias("hi"))
+            List<Row> rows = g.select("lo", "hi")
                     .limit(RANGE_CHUNK_CAP + 1)
                     .collectAsList();
             if (rows.isEmpty() || rows.size() > RANGE_CHUNK_CAP) {
@@ -721,16 +719,16 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             }
             List<long[]> bounds = new ArrayList<>(rows.size());
             for (Row r : rows) {
-                bounds.add(new long[]{((Number) r.get(1)).longValue(),
-                        ((Number) r.get(2)).longValue()});
+                bounds.add(new long[]{((Number) r.get(0)).longValue(),
+                        ((Number) r.get(1)).longValue()});
             }
-            List<long[]> merged = coalesceRanges(bounds, maxRanges);
+            List<long[]> merged = coalesceRanges(bounds);
             if (nEst > 0) {
                 long covered = 0;
                 for (long[] r : merged) {
                     covered += r[1] - r[0] + 1;
                 }
-                if (covered >= coverage * nEst) {
+                if (covered >= MAX_RANGE_COVERAGE * nEst) {
                     return null;   // spans ~the corpus: nothing to skip
                 }
             }
@@ -740,11 +738,11 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         }
     }
 
-    /** Merge overlapping/adjacent ranges; past `maxRanges`, keep the
-     *  maxRanges-1 LARGEST gaps as splits and merge across the rest
+    /** Merge overlapping/adjacent ranges; past MAX_RANGES, keep the
+     *  MAX_RANGES-1 LARGEST gaps as splits and merge across the rest
      *  (minimizes the extra id-space the bounded set admits). Same
      *  algorithm as operators/indexes.py coalesce_id_ranges. */
-    static List<long[]> coalesceRanges(List<long[]> bounds, int maxRanges) {
+    static List<long[]> coalesceRanges(List<long[]> bounds) {
         bounds.sort((a, b) -> Long.compare(a[0], b[0]));
         List<long[]> merged = new ArrayList<>();
         for (long[] r : bounds) {
@@ -756,15 +754,18 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                 merged.add(new long[]{r[0], r[1]});
             }
         }
-        if (merged.size() > maxRanges) {
+        if (merged.size() > MAX_RANGES) {
             long[][] gaps = new long[merged.size() - 1][2];
             for (int i = 0; i < merged.size() - 1; i++) {
                 gaps[i][0] = merged.get(i + 1)[0] - merged.get(i)[1];
                 gaps[i][1] = i;
             }
-            Arrays.sort(gaps, (a, b) -> Long.compare(b[0], a[0]));
+            // largest gap first, ties to the later gap: Python's
+            // sorted((gap, i), reverse=True), so both pick one split set
+            Arrays.sort(gaps, (a, b) -> a[0] != b[0]
+                    ? Long.compare(b[0], a[0]) : Long.compare(b[1], a[1]));
             java.util.TreeSet<Long> splits = new java.util.TreeSet<>();
-            for (int i = 0; i < maxRanges - 1 && i < gaps.length; i++) {
+            for (int i = 0; i < MAX_RANGES - 1 && i < gaps.length; i++) {
                 splits.add(gaps[i][1]);
             }
             List<long[]> out = new ArrayList<>();
@@ -885,20 +886,29 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
         return d;
     }
 
-    /** filter(term = kw) over the bucket-partitioned postings, pruned to
-     *  the keyword's bucket with the same hash the build used. */
+    /** filter(term = kw) over a term-bucketed table of the inverted
+     *  index (postings, granules), pruned to the keyword's bucket with
+     *  the same hash the build used (indexes._term_hit). */
+    private Dataset<Row> termRows(IndexRegistry.Entry en, String table,
+                                  String kw) {
+        Column b = functions.abs(functions.hash(functions.lit(kw)))
+                .mod(functions.lit(64));
+        return readCached(en.indexPath, table)
+                .filter(functions.col("bucket").equalTo(b))
+                .filter(functions.col("term").equalTo(functions.lit(kw)));
+    }
+
     private Dataset<Row> invertedProbe(IndexRegistry.Entry en, String kw) {
-        Dataset<Row> p = readCached(en.indexPath, "postings");
-        if (Arrays.asList(p.columns()).contains("bucket")) {
-            Column b = functions.abs(functions.hash(functions.lit(kw)))
-                    .mod(functions.lit(64));
-            p = p.filter(functions.col("bucket").equalTo(b));
-        }
         // no distinct: postings are unique per (term, row_id) by
         // construction, and the LeftSemi needs no dedup — the shuffle
         // costs more than the whole bucket-pruned scan
-        return p.filter(functions.col("term").equalTo(functions.lit(kw)))
-                .select("row_id");
+        return termRows(en, "postings", kw).select("row_id");
+    }
+
+    /** The term's build-time (lo, hi) granule rows: the range summary
+     *  reads O(granules) of them, never the O(df) postings. */
+    private Dataset<Row> invertedGranules(IndexRegistry.Entry en, String kw) {
+        return termRows(en, "granules", kw).select("lo", "hi");
     }
 
     /** whole-string equality via the exact-text index: md5-hex digest
@@ -1359,9 +1369,8 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
             long nEst = annN(en);
             if (nEst > 0 && idAttr.dataType()
                     instanceof org.apache.spark.sql.types.IntegralType) {
-                List<long[]> rs = cachedRanges(probe,
-                        "ann|" + en.indexPath + "|" + pr.cells,
-                        nEst, en.indexPath);
+                List<long[]> rs = cachedRanges(new Routed(probe, en,
+                        "ann|" + pr.cells, nEst, null));
                 if (rs != null && !rs.isEmpty()) {
                     Expression p = rangesPred(idAttr, rs);
                     if (p != null) {
@@ -1527,8 +1536,8 @@ public class IndexRoutingRule extends Rule<LogicalPlan> {
                     .filter(functions.col("cluster").isin(cells))
                     .select(functions.col(assignIdCol).alias("row_id"));
             // exact content key for the range memo: the sorted cell set
-            // fully determines the probe's id set (with the index dir
-            // signature cachedRanges adds) — a 32-bit plan-hash key
+            // fully determines the probe's id set (with the index
+            // manifest cachedRanges adds) — a 32-bit plan-hash key
             // could collide across query vectors and serve one probe's
             // ranges to another, excluding true candidates (wrong rows)
             out.cells = Arrays.toString(cells);

@@ -277,52 +277,45 @@ def bm25_cte_sql(view: str, terms, n: int,
 
 
 def _term_probe_ranges(spark: SparkSession, view: str, terms):
-    """Coalesced [lo, hi] row-id ranges of the ``{view}__postings``
-    term probe, or None (missing views / non-integral ids / probe too
-    scattered / pruning conf off). One bounded, memoized job over the
-    bucket-pruned postings — the same plan-time protocol as the
-    routed-filter lanes (operators/indexes.py routed_scan_ranges)."""
+    """Coalesced [lo, hi] row-id ranges of the term probe, or None
+    (no ``{view}__granules`` view / non-integral ids / probe too
+    scattered / pruning off). One bounded, memoized job over the
+    bucket-pruned build-time granule rows — the same plan-time protocol
+    as the routed-filter lanes (operators/indexes.py
+    routed_scan_ranges)."""
+    from pyspark.errors import AnalysisException
+
     from deeplake_spark.operators.indexes import (
         _term_hit,
         routed_scan_ranges,
     )
 
     try:
-        p = spark.table(f"{view}__postings")
-    except Exception:
+        granules = spark.table(f"{view}__granules")
+    except AnalysisException:
         return None
-    uniq = list(dict.fromkeys(t.lower() for t in terms))
     # single source of truth for the bucket-pruned term filter
     # (indexes._term_hit) — a copy here would desync if the save-time
     # bucket count/hash ever changed (r14 review)
-    probe = _term_hit(p, uniq).select("row_id")
-    if dict(probe.dtypes).get("row_id") not in ("bigint", "int"):
+    bounds = _term_hit(granules, list(dict.fromkeys(
+        t.lower() for t in terms))).select("lo", "hi")
+    if dict(bounds.dtypes)["lo"] not in ("bigint", "int"):
         return None
-    # the build-time granule view register_index_views registered
-    # (always at DEFAULT_RANGE_GRANULE): the summary job reads
-    # pre-reduced (g, lo, hi) rows
-    from deeplake_spark.operators.indexes import DEFAULT_RANGE_GRANULE
-
-    granules = (_term_hit(spark.table(f"{view}__granules"), uniq)
-                .select("g", "lo", "hi"))
-    return routed_scan_ranges(probe, None, granules=granules,
-                              granule_size=DEFAULT_RANGE_GRANULE)
+    return routed_scan_ranges(bounds, None)
 
 
 def _coverage_gated(spark: SparkSession, ranges, view: str):
     """Drop ranges that span ~the corpus (nothing for parquet stats to
     skip; the per-row OR would be pure overhead) — the routed lanes'
-    own coverage gate (indexes._coverage_gate) under the same conf.
-    Corpus size from the ``{view}__stats`` sidecar view, which
-    register_index_views registers with the postings the ranges came
-    from."""
-    from deeplake_spark.operators.indexes import _coverage_gate, _range_gates
+    own coverage gate (indexes._coverage_gate). Corpus size from the
+    ``{view}__stats`` view, which register_index_views registers with
+    the granules the ranges came from."""
+    from deeplake_spark.operators.indexes import _coverage_gate
 
-    gates = _range_gates(spark)
-    if not ranges or gates is None:
+    if not ranges:
         return None
-    n = spark.table(f"{view}__stats").head()["n_docs"]
-    return _coverage_gate(ranges, n, gates[2])
+    return _coverage_gate(
+        ranges, spark.table(f"{view}__stats").head()["n_docs"])
 
 
 def _fetchback_clause(view: str, fetch_cols, id_col: str,
@@ -355,7 +348,7 @@ def bm25_topk_sql(view: str, terms, k: int = 10,
     bitmap reads (index_holder.hpp:37-40). With `spark` given, the
     fetch-back corpus scan is prefiltered to the TERM PROBE's
     coalesced row-id ranges, computed at statement-build time from the
-    ``{view}__postings`` view (one bounded, memoized job — the same
+    ``{view}__granules`` view (one bounded, memoized job — the same
     plan-time protocol as the routed-filter lanes): every BM25
     winner matches ≥1 query term, so winners ⊆ probe ids and the
     ranges are a sound superset; parquet row-group stats then skip the
@@ -414,9 +407,10 @@ def _hybrid_fetch_ranges(spark: SparkSession, view: str, terms,
     ⊆ (BM25 term-probe ids ∪ vector top-n ids), so push the coalesced
     UNION of both sides' granule summaries — or None when either side
     can't be bounded (missing views / non-integral ids / scattered /
-    conf off), since a one-sided prefilter would drop the other lane's
-    winners. The vector side executes its top-n once at build time
-    (memoized by plan content in the routed lanes' range cache).
+    pruning off), since a one-sided prefilter would drop the other
+    lane's winners. The vector side executes its top-n once at build
+    time (memoized by plan content in the routed lanes' range cache);
+    a failing mirror raises, as the statement itself would.
 
     Declines entirely (None — no prefilter) when an ANN registration
     covers the view: execution could route ``__vl`` approximate, and
@@ -424,8 +418,8 @@ def _hybrid_fetch_ranges(spark: SparkSession, view: str, terms,
     (the BM25 term-probe side alone is unsound for vector-lane
     winners). test_sql_fetchback_execute_routed pins the parity."""
     from deeplake_spark.operators.indexes import (
-        _range_gates,
         coalesce_id_ranges,
+        granule_bounds,
         routed_scan_ranges,
     )
 
@@ -434,39 +428,35 @@ def _hybrid_fetch_ranges(spark: SparkSession, view: str, terms,
     probe_rs = _term_probe_ranges(spark, view, terms)
     if not probe_rs:
         return None
+    # EXACT mirror of the statement's __vl lane (same rounding and
+    # tiebreak) — a different ordering could admit a different
+    # boundary row at rank n, and that row's id must be in-range.
+    # The mirror must run UNROUTED: with the Catalyst rule enabled
+    # on the build session, the ANN route would make it an
+    # APPROXIMATE top-n whose misses the statement's exact lane
+    # (e.g. on a plain no-jar session) later finds — outside the
+    # frozen ranges, silently dropped. Disable routing for the
+    # mirror and restore.
+    prev = spark.conf.get(ENABLED_KEY, None)
+    spark.conf.set(ENABLED_KEY, "false")
     try:
-        # EXACT mirror of the statement's __vl lane (same rounding and
-        # tiebreak) — a different ordering could admit a different
-        # boundary row at rank n, and that row's id must be in-range.
-        # The mirror must run UNROUTED: with the Catalyst rule enabled
-        # on the build session, the ANN route would make it an
-        # APPROXIMATE top-n whose misses the statement's exact lane
-        # (e.g. on a plain no-jar session) later finds — outside the
-        # frozen ranges, silently dropped. Disable routing for the
-        # mirror and restore.
-        prev = spark.conf.get(ENABLED_KEY, None)
-        spark.conf.set(ENABLED_KEY, "false")
-        try:
-            hits = spark.sql(
-                f"SELECT `{id_col}` AS row_id, ROUND({cos_sql}, 6) "
-                f"AS cos FROM {view} "
-                f"ORDER BY cos DESC, row_id LIMIT {int(n)}"
-            ).select("row_id")
-            if dict(hits.dtypes).get("row_id") not in ("bigint", "int"):
-                return None
-            vec_rs = routed_scan_ranges(hits, None)
-        finally:
-            if prev is None:
-                spark.conf.unset(ENABLED_KEY)
-            else:
-                spark.conf.set(ENABLED_KEY, prev)
-    except Exception:
-        return None
-    gates = _range_gates(spark)
-    if not vec_rs or gates is None:
+        hits = spark.sql(
+            f"SELECT `{id_col}` AS row_id, ROUND({cos_sql}, 6) "
+            f"AS cos FROM {view} "
+            f"ORDER BY cos DESC, row_id LIMIT {int(n)}"
+        ).select("row_id")
+        if dict(hits.dtypes).get("row_id") not in ("bigint", "int"):
+            return None
+        vec_rs = routed_scan_ranges(granule_bounds(hits), None)
+    finally:
+        if prev is None:
+            spark.conf.unset(ENABLED_KEY)
+        else:
+            spark.conf.set(ENABLED_KEY, prev)
+    if not vec_rs:
         return None
     return _coverage_gated(
-        spark, coalesce_id_ranges(probe_rs + vec_rs, gates[1]), view)
+        spark, coalesce_id_ranges(probe_rs + vec_rs), view)
 
 
 def hybrid_search_sql(view: str, terms, vec, *, k: int = 10,
@@ -575,7 +565,9 @@ def register_index_views(spark: SparkSession, view: str,
     / ``__doclens`` / ``__stats`` temp views (stats pre-merged across
     delta appends, the InvertedIndex.load contract) so
     :func:`bm25_topk_sql` / :func:`hybrid_search_sql` statements run on
-    a plain session — no jar, no Python operators in the query path."""
+    a plain session — no jar, no Python operators in the query path.
+    ``{view}__granules`` carries the build-time granule rows their
+    fetch-back ranges summarize."""
     from deeplake_spark.operators.indexes import InvertedIndex
 
     # load through InvertedIndex.load so the delta-stats merge has ONE
@@ -586,7 +578,4 @@ def register_index_views(spark: SparkSession, view: str,
     idx.postings.createOrReplaceTempView(f"{view}__postings")
     idx.doclens.createOrReplaceTempView(f"{view}__doclens")
     idx.stats.createOrReplaceTempView(f"{view}__stats")
-    # build-time granule summary (VERDICT r15 #8): save() always
-    # writes it at DEFAULT_RANGE_GRANULE, in the same manifest as the
-    # postings, so _term_probe_ranges passes that size
     idx.granules.createOrReplaceTempView(f"{view}__granules")

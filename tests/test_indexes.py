@@ -5,6 +5,7 @@ py_tests/test_text_search.py style), plus save/load round trips."""
 
 from __future__ import annotations
 
+import re
 import tempfile
 
 import pytest
@@ -1736,11 +1737,21 @@ def test_coalesce_id_ranges_merges_and_bounds():
             assert any(o_lo <= lo and hi <= o_hi for o_lo, o_hi in out)
 
 
+def pushed_ranges(df, col: str) -> list[tuple[int, int]]:
+    """The literal (lo, hi) ranges pushed as filters on `col`, read from
+    the optimized plan (physical plan strings truncate long filters)."""
+    return sorted({(int(lo), int(hi)) for lo, hi in re.findall(
+        rf"\({col}#\d+L? >= (-?\d+)\) AND \({col}#\d+L? <= (-?\d+)\)",
+        df._jdf.queryExecution().optimizedPlan().toString())})
+
+
 @pytest.fixture()
 def clustered_docs(spark, tmp_path):
-    """200k docs, id-sorted multi-row-group layout; 'xclust' marks one
-    contiguous 5% id slice (a crawl batch), 'sparse' hits every 20th
-    doc uniformly (same 5% selectivity, zero locality)."""
+    """200k docs with ids i * 8, so they spread over 25 RANGE_GRANULE
+    blocks; id-sorted multi-row-group layout. 'xclust' marks one
+    contiguous 5% id slice (a crawl batch, granules 6 and 7), 'sparse'
+    hits every 20th doc uniformly (same 5% selectivity, zero
+    locality)."""
     from pyspark.sql import functions as F
 
     from deeplake_spark.operators.indexes import (
@@ -1748,17 +1759,14 @@ def clustered_docs(spark, tmp_path):
         build_inverted_index,
     )
 
-    docs = (spark.range(200_000).withColumnRenamed("id", "doc_id")
-            .withColumn(
-                "text",
-                F.concat(
-                    F.lit("alpha beta gamma"),
-                    F.when((F.col("doc_id") >= 50_000)
-                           & (F.col("doc_id") < 60_000),
-                           F.lit(" xclust")).otherwise(F.lit("")),
-                    F.when(F.col("doc_id") % 20 == 0,
-                           F.lit(" sparse")).otherwise(F.lit("")),
-                )))
+    docs = (spark.range(200_000)
+            .select((F.col("id") * 8).alias("doc_id"), F.concat(
+                F.lit("alpha beta gamma"),
+                F.when((F.col("id") >= 50_000) & (F.col("id") < 60_000),
+                       F.lit(" xclust")).otherwise(F.lit("")),
+                F.when(F.col("id") % 20 == 0,
+                       F.lit(" sparse")).otherwise(F.lit("")),
+            ).alias("text")))
     path = str(tmp_path / "cdocs.parquet")
     (docs.repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id")
      .write.option("parquet.block.size", 256 * 1024).parquet(path))
@@ -1780,21 +1788,17 @@ def test_contains_route_pushes_probe_ranges_to_scan(spark, clustered_docs,
     from deeplake_spark import tql
 
     d, idx, _, _ = clustered_docs
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
-    try:
-        q = "SELECT doc_id WHERE CONTAINS(text, 'xclust')"
-        routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
-        phys = routed._jdf.queryExecution().executedPlan().toString()
-        # (scan Location paths truncate in plan strings — match the
-        # pushed tokens; only the corpus scan carries doc_id filters)
-        assert "GreaterThanOrEqual(doc_id,50000)" in phys, phys[:2000]
-        assert "LessThanOrEqual(doc_id,59999)" in phys
-        stock = sorted(
-            r.doc_id for r in d.filter(F.array_contains(
-                F.split(F.lower("text"), r"\s+"), "xclust")).collect())
-        assert sorted(r.doc_id for r in routed.collect()) == stock
-    finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
+    q = "SELECT doc_id WHERE CONTAINS(text, 'xclust')"
+    routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
+    # one range per granule the slice touches (6 and 7)
+    assert pushed_ranges(routed, "doc_id") == \
+        [(400_000, 458_744), (458_752, 479_992)]
+    phys = routed._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(doc_id,400000)" in phys, phys[:2000]
+    stock = sorted(
+        r.doc_id for r in d.filter(F.array_contains(
+            F.split(F.lower("text"), r"\s+"), "xclust")).collect())
+    assert sorted(r.doc_id for r in routed.collect()) == stock
 
 
 def test_contains_route_skips_ranges_when_coverage_high(spark,
@@ -1805,15 +1809,11 @@ def test_contains_route_skips_ranges_when_coverage_high(spark,
     from deeplake_spark import tql
 
     d, idx, _, _ = clustered_docs
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
-    try:
-        q = "SELECT doc_id WHERE CONTAINS(text, 'sparse')"
-        routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
-        phys = routed._jdf.queryExecution().executedPlan().toString()
-        assert "GreaterThanOrEqual(doc_id" not in phys
-        assert routed.count() == 10_000
-    finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
+    q = "SELECT doc_id WHERE CONTAINS(text, 'sparse')"
+    routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
+    phys = routed._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(doc_id" not in phys
+    assert routed.count() == 10_000
 
 
 def test_unsaved_build_is_refused_by_tql_and_probes(spark, round_trip):
@@ -1855,7 +1855,6 @@ def test_range_prune_conf_disables(spark, clustered_docs):
 
     d, idx, _, _ = clustered_docs
     spark.conf.set("spark.sql.deeplake.routing.rangePrune", "false")
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
     try:
         q = "SELECT doc_id WHERE CONTAINS(text, 'xclust')"
         routed = tql.query(q, default=d, indexes={"text": ("inverted", idx, "doc_id")})
@@ -1864,7 +1863,6 @@ def test_range_prune_conf_disables(spark, clustered_docs):
         assert routed.count() == 10_000
     finally:
         spark.conf.unset("spark.sql.deeplake.routing.rangePrune")
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
 
 
 def test_numeric_between_route_pushes_probe_ranges(spark, tmp_path):
@@ -1879,8 +1877,10 @@ def test_numeric_between_route_pushes_probe_ranges(spark, tmp_path):
         build_numeric_index,
     )
 
-    docs = (spark.range(100_000).withColumnRenamed("id", "doc_id")
-            .withColumn("score", (F.col("doc_id") / 100).cast("double")))
+    # ids i * 8 spread the 100k docs over 13 RANGE_GRANULE blocks
+    docs = spark.range(100_000).select(
+        (F.col("id") * 8).alias("doc_id"),
+        (F.col("id") / 100).cast("double").alias("score"))
     path = str(tmp_path / "ndocs.parquet")
     (docs.repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id")
      .write.option("parquet.block.size", 256 * 1024).parquet(path))
@@ -1888,18 +1888,14 @@ def test_numeric_between_route_pushes_probe_ranges(spark, tmp_path):
     ip = str(tmp_path / "nidx")
     build_numeric_index(d, "score", id_col="doc_id").save(ip)
     idx = NumericIndex.load(spark, ip)
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
-    try:
-        q = "SELECT doc_id WHERE score BETWEEN 100.0 AND 149.99"
-        routed = tql.query(
-            q, default=d, indexes={"score": ("numeric", idx, "doc_id")})
-        phys = routed._jdf.queryExecution().executedPlan().toString()
-        assert "GreaterThanOrEqual(doc_id,10000)" in phys, phys[:2000]
-        assert "LessThanOrEqual(doc_id,14999)" in phys
-        got = sorted(r.doc_id for r in routed.collect())
-        assert got == list(range(10_000, 15_000))
-    finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
+    q = "SELECT doc_id WHERE score BETWEEN 100.0 AND 149.99"
+    routed = tql.query(
+        q, default=d, indexes={"score": ("numeric", idx, "doc_id")})
+    phys = routed._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(doc_id,80000)" in phys, phys[:2000]
+    assert pushed_ranges(routed, "doc_id") == [(80_000, 119_992)]
+    got = sorted(r.doc_id for r in routed.collect())
+    assert got == list(range(80_000, 120_000, 8))
 
 
 def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path):
@@ -1917,13 +1913,14 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path):
         topk_cosine,
     )
 
+    # ids i * 16 spread the corpus over 5 RANGE_GRANULE blocks
     n, lo, hi = 20_000, 12_000, 12_100
-    e = (spark.range(n).withColumnRenamed("id", "vec_id")
-         .withColumn("embedding", F.expr(
-             f"CASE WHEN vec_id >= {lo} AND vec_id < {hi} THEN "
-             "array(1.0D, 0.01D * (vec_id % 7), 0D, 0D, 0D, 0D, 0D, 0D) "
-             "ELSE array(0.01D * (vec_id % 11), 1.0D, 0D, 0D, 0D, 0D, "
-             "0D, 0D) END")))
+    e = spark.range(n).select(
+        (F.col("id") * 16).alias("vec_id"), F.expr(
+            f"CASE WHEN id >= {lo} AND id < {hi} THEN "
+            "array(1.0D, 0.01D * (id % 7), 0D, 0D, 0D, 0D, 0D, 0D) "
+            "ELSE array(0.01D * (id % 11), 1.0D, 0D, 0D, 0D, 0D, "
+            "0D, 0D) END").alias("embedding"))
     path = str(tmp_path / "emb.parquet")
     (e.repartitionByRange(4, "vec_id").sortWithinPartitions("vec_id")
      .write.option("parquet.block.size", 128 * 1024).parquet(path))
@@ -1935,30 +1932,26 @@ def test_ann_rerank_and_fetchback_push_probe_ranges(spark, tmp_path):
     q = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
     tql_q = ("SELECT vec_id, COSINE_SIMILARITY(embedding, ?) AS score "
              "ORDER BY score DESC LIMIT 10")
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "256")
-    try:
-        out = tql.query(tql_q, default=d, params=[q],
-                        indexes={"embedding": ("pq", idx, "vec_id")})
-        phys = out._jdf.queryExecution().executedPlan().toString()
-        assert "GreaterThanOrEqual(vec_id" in phys, phys[:3000]
-        got = {r.vec_id for r in out.collect()}
-        exact = {r.vec_id for r in topk_cosine(
-            d, "embedding", q, k=10, id_col="vec_id").collect()}
-        assert got == exact
-        assert all(lo <= v < hi for v in got)
+    out = tql.query(tql_q, default=d, params=[q],
+                    indexes={"embedding": ("pq", idx, "vec_id")})
+    phys = out._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(vec_id" in phys, phys[:3000]
+    got = {r.vec_id for r in out.collect()}
+    exact = {r.vec_id for r in topk_cosine(
+        d, "embedding", q, k=10, id_col="vec_id").collect()}
+    assert got == exact
+    assert all(lo * 16 <= v < hi * 16 for v in got)
 
-        # the L2 spelling prunes identically (review follow-up: the
-        # lane initially missed the fetch-back conversion)
-        out3 = tql.query(
-            "SELECT vec_id, L2_NORM(embedding - ?) AS dist "
-            "ORDER BY dist ASC LIMIT 10",
-            default=d, params=[q],
-            indexes={"embedding": ("pq", idx, "vec_id")})
-        phys3 = out3._jdf.queryExecution().executedPlan().toString()
-        assert "GreaterThanOrEqual(vec_id" in phys3, phys3[:3000]
-        assert {r.vec_id for r in out3.collect()} == exact
-    finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
+    # the L2 spelling prunes identically (review follow-up: the
+    # lane initially missed the fetch-back conversion)
+    out3 = tql.query(
+        "SELECT vec_id, L2_NORM(embedding - ?) AS dist "
+        "ORDER BY dist ASC LIMIT 10",
+        default=d, params=[q],
+        indexes={"embedding": ("pq", idx, "vec_id")})
+    phys3 = out3._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(vec_id" in phys3, phys3[:3000]
+    assert {r.vec_id for r in out3.collect()} == exact
 
 
 def test_range_cache_distinguishes_same_shape_probes(spark, tmp_path):
@@ -1968,15 +1961,18 @@ def test_range_cache_distinguishes_same_shape_probes(spark, tmp_path):
     candidate rows (wrong results, caught live: canonicalized plan
     strings print relations WITHOUT their paths, so the memo key must
     also pin the scanned files)."""
-    from deeplake_spark.operators.indexes import routed_scan_ranges
+    from deeplake_spark.operators.indexes import (
+        granule_bounds,
+        routed_scan_ranges,
+    )
 
     for tag, lo in (("a", 0), ("b", 5_000)):
         (spark.range(lo, lo + 100).withColumnRenamed("id", "row_id")
          .coalesce(1).write.parquet(str(tmp_path / f"ids_{tag}.parquet")))
-    ra = routed_scan_ranges(
-        spark.read.parquet(str(tmp_path / "ids_a.parquet")), None)
-    rb = routed_scan_ranges(
-        spark.read.parquet(str(tmp_path / "ids_b.parquet")), None)
+    ra = routed_scan_ranges(granule_bounds(
+        spark.read.parquet(str(tmp_path / "ids_a.parquet"))), None)
+    rb = routed_scan_ranges(granule_bounds(
+        spark.read.parquet(str(tmp_path / "ids_b.parquet"))), None)
     assert ra == [(0, 99)]
     assert rb == [(5_000, 5_099)]
 
@@ -1986,16 +1982,18 @@ def test_range_prune_conf_polarity(spark):
     'true' case-insensitively, so 'False'/'0'/'off' disable here just
     as they do in the JVM rule's equalsIgnoreCase('true'). Ranges
     computed from ids already on the driver (a top-k's collected hits)
-    pass the same gates and equal the summary job's."""
+    pass the same gates and equal the summary job's, also when more
+    than MAX_RANGES granules merge across their smallest gaps."""
     from deeplake_spark.operators.indexes import (
-        MAX_RANGES_KEY,
-        RANGE_GRANULE_KEY,
+        MAX_RANGES,
+        RANGE_GRANULE,
         RANGE_PRUNE_KEY,
         collected_id_ranges,
+        granule_bounds,
         routed_scan_ranges,
     )
 
-    ids = spark.range(50).withColumnRenamed("id", "row_id")
+    ids = granule_bounds(spark.range(50).withColumnRenamed("id", "row_id"))
     try:
         for v in ("False", "0", "off", "false"):
             spark.conf.set(RANGE_PRUNE_KEY, v)
@@ -2006,18 +2004,25 @@ def test_range_prune_conf_polarity(spark):
         assert routed_scan_ranges(ids, None) == [(0, 49)]
         assert collected_id_ranges(spark, list(range(50)), None) == \
             [(0, 49)]
-        spark.conf.set(RANGE_GRANULE_KEY, "8")
-        spark.conf.set(MAX_RANGES_KEY, "2")
-        hits = [3, 1, 41, 40, 7, 1000, 18]
-        probe = spark.createDataFrame([(i,) for i in hits], "row_id long")
-        for n in (None, 2000, 50):  # the last: covered >= 0.8 * n
+        # 70 granules, each hit twice; granule g's hits widen with g,
+        # so the gaps shrink and the merge has one answer
+        hits = [i for g in range(70)
+                for i in (g * RANGE_GRANULE + 3,
+                          g * RANGE_GRANULE + 3 + 10 * g)]
+        probe = granule_bounds(spark.createDataFrame(
+            [(i,) for i in reversed(hits)], "row_id long"))
+        for n in (None, 10 ** 9, 50):  # the last: covered >= 0.8 * n
             want = routed_scan_ranges(probe, n)
             assert collected_id_ranges(spark, hits, n) == want, n
-        assert want is None and routed_scan_ranges(probe, None) == \
-            [(1, 41), (1000, 1000)]
+        assert want is None
+        got = routed_scan_ranges(probe, None)
+        # the 6 smallest gaps (between the widest granules) merge
+        assert len(got) == MAX_RANGES
+        assert got[-1] == (63 * RANGE_GRANULE + 3, hits[-1])
+        assert got[:63] == [(hits[2 * g], hits[2 * g + 1])
+                            for g in range(63)]
     finally:
-        for key in (RANGE_PRUNE_KEY, RANGE_GRANULE_KEY, MAX_RANGES_KEY):
-            spark.conf.unset(key)
+        spark.conf.unset(RANGE_PRUNE_KEY)
 
 
 def test_exact_and_json_routes_coverage_gate_uniform_ranges(spark, tmp_path):
@@ -2036,15 +2041,16 @@ def test_exact_and_json_routes_coverage_gate_uniform_ranges(spark, tmp_path):
         build_json_index,
     )
 
+    # ids i * 16 spread the corpus over 3 RANGE_GRANULE blocks
     n = 12_000
-    src = (spark.range(n).withColumnRenamed("id", "doc_id")
-           .withColumn("lang", F.when(F.col("doc_id") % 12 == 0, F.lit("xx"))
+    src = (spark.range(n)
+           .withColumn("lang", F.when(F.col("id") % 12 == 0, F.lit("xx"))
                        .otherwise(F.concat(
-                           F.lit("u"),
-                           (F.col("doc_id") % 97).cast("string"))))
-           .withColumn("meta", F.when(F.col("doc_id") % 12 == 0,
+                           F.lit("u"), (F.col("id") % 97).cast("string"))))
+           .withColumn("meta", F.when(F.col("id") % 12 == 0,
                                       F.lit('{"type": "like"}'))
-                       .otherwise(F.lit('{"type": "post"}'))))
+                       .otherwise(F.lit('{"type": "post"}')))
+           .withColumn("doc_id", F.col("id") * 16).drop("id"))
     path = str(tmp_path / "docs.parquet")
     (src.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id")
      .write.parquet(path))
@@ -2055,22 +2061,18 @@ def test_exact_and_json_routes_coverage_gate_uniform_ranges(spark, tmp_path):
     eidx = ExactTextIndex.load(spark, ep)
     jidx = JsonIndex.load(spark, jp)
     assert eidx.n_rows_est == n and jidx.n_rows_est == n
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "64")
-    try:
-        for q, idxmap in (
-            ("SELECT doc_id WHERE EQUALS(lang, 'xx')",
-             {"lang": ("exact", eidx, "doc_id")}),
-            ("SELECT doc_id WHERE meta['type'] == 'like'",
-             {"meta": ("json", jidx, "doc_id")}),
-        ):
-            routed = tql.query(q, default=docs, indexes=idxmap)
-            phys = routed._jdf.queryExecution().executedPlan().toString()
-            assert "LeftSemi" in phys, q
-            assert "GreaterThanOrEqual(doc_id" not in phys, phys[:2000]
-            assert sorted(r.doc_id for r in routed.collect()) == \
-                list(range(0, n, 12)), q
-    finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
+    for q, idxmap in (
+        ("SELECT doc_id WHERE EQUALS(lang, 'xx')",
+         {"lang": ("exact", eidx, "doc_id")}),
+        ("SELECT doc_id WHERE meta['type'] == 'like'",
+         {"meta": ("json", jidx, "doc_id")}),
+    ):
+        routed = tql.query(q, default=docs, indexes=idxmap)
+        phys = routed._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" in phys, q
+        assert "GreaterThanOrEqual(doc_id" not in phys, phys[:2000]
+        assert sorted(r.doc_id for r in routed.collect()) == \
+            list(range(0, n * 16, 12 * 16)), q
 
 
 def test_corpus_floor_declines_cheap_routes_on_small_corpus(spark, sf_dir,
@@ -2155,18 +2157,19 @@ def test_range_cache_lru_evicts_one_not_all(spark, monkeypatch):
     from deeplake_spark import memo
 
     calls = {"n": 0}
-    real = ix.probe_id_ranges
+    real = ix.summary_ranges
 
-    def counting(ids, granule, max_chunks=4096):
+    def counting(bounds):
         calls["n"] += 1
-        return real(ids, granule, max_chunks)
+        return real(bounds)
 
-    monkeypatch.setattr(ix, "probe_id_ranges", counting)
+    monkeypatch.setattr(ix, "summary_ranges", counting)
     monkeypatch.setattr(memo.RANGE_CACHE, "bound", 3)
     memo.RANGE_CACHE.clear()
 
     def probe(n):
-        return spark.range(n).withColumnRenamed("id", "row_id")
+        return ix.granule_bounds(
+            spark.range(n).withColumnRenamed("id", "row_id"))
 
     a, b, c, d = (probe(n) for n in (11, 22, 33, 44))
     for p in (a, b, c):
@@ -2652,22 +2655,45 @@ def test_index_save_layout_one_file_per_bucket(spark, tmp_path):
     assert per_bucket and max(per_bucket) <= 2, per_bucket
 
 
+def test_doclens_write_is_not_upstream_wide(spark, tmp_path):
+    """InvertedIndex.save range-repartitions `doclens` on row_id like
+    the postings: a 41-row index built from a 32-partition upstream,
+    plus a one-row delta, holds at most two doclens files per write,
+    not one per upstream partition (a 41-row index used to hold 34)."""
+    from deeplake_spark import memo
+    from deeplake_spark.operators.indexes import build_inverted_index
+
+    def files():
+        return memo.manifest(p)[1]["tables"]["doclens"]["files"]
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha w{i % 5}") for i in range(41)],
+        "doc_id long, text string").repartition(32)
+    p = str(tmp_path / "inv")
+    build_inverted_index(docs).save(p)
+    base = files()
+    assert 1 <= len(base) <= 2, base
+    delta = spark.createDataFrame([(41, "alpha new")],
+                                  "doc_id long, text string")
+    build_inverted_index(delta.repartition(32)).save(p, mode="append")
+    assert 1 <= len(files()) - len(base) <= 2, files()
+
+
 def test_granule_sidetable_ranges_match_posting_job(spark, tmp_path):
     """The build-time granule side table (VERDICT r15 #8) must be a
-    DROP-IN for the plan-time posting summary: identical coalesced
-    ranges at the build granule AND at any multiple (exact regroup —
-    min/max distribute over nested granule blocks), posting-job
-    fallback on a non-divisible session granule, and the summarized
-    relation reads ONLY the granules side table. Corpus ids span ~15
-    granules so the equality is non-trivial."""
+    DROP-IN for the plan-time posting summary: a single-term probe's
+    granule rows coalesce to exactly the ranges `granule_bounds` of its
+    posting ids gives; a multi-term union's rows (one per term and
+    granule) give ranges no wider that still cover every probe id; and
+    the summarized relation reads ONLY the granules side table. Corpus
+    ids span ~19 granules so the comparison is non-trivial."""
     from pyspark.sql import functions as F
 
     from deeplake_spark import memo
-    from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
-        DEFAULT_RANGE_GRANULE,
         InvertedIndex,
         build_inverted_index,
+        granule_bounds,
         routed_scan_ranges,
     )
 
@@ -2680,38 +2706,29 @@ def test_granule_sidetable_ranges_match_posting_job(spark, tmp_path):
     path = str(tmp_path / "inv_gran")
     build_inverted_index(src).save(path)
     idx = InvertedIndex.load(spark, path)
-    assert idx.granules is not None
-    assert idx.granule_size == DEFAULT_RANGE_GRANULE
     gp = idx.probe_granules(["needle"])
     assert gp.inputFiles() and all(
         "/granules/" in f for f in gp.inputFiles()), gp.inputFiles()
 
-    def both(terms, granule):
-        spark.conf.set(ix.RANGE_GRANULE_KEY, str(granule))
-        try:
-            ids = idx.probe(terms)
-            memo.RANGE_CACHE.clear()
-            posting = routed_scan_ranges(ids, None)
-            memo.RANGE_CACHE.clear()
-            granular = routed_scan_ranges(
-                ids, None, granules=idx.probe_granules(terms),
-                granule_size=idx.granule_size)
-            return posting, granular
-        finally:
-            spark.conf.unset(ix.RANGE_GRANULE_KEY)
+    def both(terms):
+        ids = idx.probe(terms)
+        memo.RANGE_CACHE.clear()
+        posting = routed_scan_ranges(granule_bounds(ids), None)
+        memo.RANGE_CACHE.clear()
+        granular = routed_scan_ranges(idx.probe_granules(terms), None)
+        return ids, posting, granular
 
-    for terms in (["needle"], ["needle", "beta"]):
-        for g in (DEFAULT_RANGE_GRANULE, DEFAULT_RANGE_GRANULE * 4):
-            posting, granular = both(terms, g)
-            assert posting == granular and posting, (terms, g, posting)
+    _, posting, granular = both(["needle"])
+    assert posting == granular and posting, posting
     # the selective term's ranges actually prune (subset of id space)
-    posting, _ = both(["needle"], DEFAULT_RANGE_GRANULE)
     covered = sum(hi - lo + 1 for lo, hi in posting)
     assert covered < (n - 1) * 6000, posting
-    # non-divisible session granule: granule arg ignored, posting job
-    # result (still correct)
-    posting, granular = both(["needle"], 1000)
-    assert posting == granular
+    ids, posting, granular = both(["needle", "beta"])
+    assert granular and all(
+        any(plo <= lo and hi <= phi for plo, phi in posting)
+        for lo, hi in granular), (posting, granular)
+    assert all(any(lo <= r.row_id <= hi for lo, hi in granular)
+               for r in ids.collect())
 
     # routed CONTAINS row parity against the stock tokenize filter
     from deeplake_spark.functions.text import tokenize
@@ -2737,6 +2754,7 @@ def test_granule_sidetable_append_keeps_ranges_exact(spark, tmp_path):
     from deeplake_spark.operators.indexes import (
         InvertedIndex,
         build_inverted_index,
+        granule_bounds,
         routed_scan_ranges,
     )
 
@@ -2752,11 +2770,9 @@ def test_granule_sidetable_append_keeps_ranges_exact(spark, tmp_path):
     assert idx.granules is not None
     ids = idx.probe(["needle"])
     memo.RANGE_CACHE.clear()
-    posting = routed_scan_ranges(ids, None)
+    posting = routed_scan_ranges(granule_bounds(ids), None)
     memo.RANGE_CACHE.clear()
-    granular = routed_scan_ranges(ids, None,
-                                  granules=idx.probe_granules(["needle"]),
-                                  granule_size=idx.granule_size)
+    granular = routed_scan_ranges(idx.probe_granules(["needle"]), None)
     # both segments' granules present (base cluster < 240k, delta
     # cluster >= 2.4M), ranges identical across the two summary paths
     assert posting == granular and posting, posting
@@ -2811,16 +2827,15 @@ def test_granule_overwrite_crash_window_is_sound(spark, tmp_path,
 
 def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
     """save(mode="append") onto a path with no manifest is a fresh
-    save: it records range_granule, and the granule-table
-    ranges equal the posting-row summary."""
+    save: it writes the granule table, and the granule-table ranges
+    equal the posting-row summary."""
     from pyspark.sql import functions as F
 
     from deeplake_spark import memo
-    from deeplake_spark.operators import indexes as ix
     from deeplake_spark.operators.indexes import (
-        DEFAULT_RANGE_GRANULE,
         InvertedIndex,
         build_inverted_index,
+        granule_bounds,
         routed_scan_ranges,
     )
 
@@ -2831,16 +2846,57 @@ def test_granule_append_onto_empty_path_is_fresh(spark, tmp_path):
     path = str(tmp_path / "inv_empty_append")
     build_inverted_index(src).save(path, mode="append")
     idx = InvertedIndex.load(spark, path)
-    assert idx.granule_size == DEFAULT_RANGE_GRANULE
     assert idx.granules is not None
     ids = idx.probe(["needle"])
     memo.RANGE_CACHE.clear()
-    posting = routed_scan_ranges(ids, None)
+    posting = routed_scan_ranges(granule_bounds(ids), None)
     memo.RANGE_CACHE.clear()
-    granular = routed_scan_ranges(ids, None,
-                                  granules=idx.probe_granules(["needle"]),
-                                  granule_size=idx.granule_size)
+    granular = routed_scan_ranges(idx.probe_granules(["needle"]), None)
     assert posting == granular and posting, posting
+
+
+def test_manifest_with_range_granule_key_still_loads(spark, tmp_path):
+    """Manifests written while the range granule was a session conf
+    carry a `range_granule` meta key. The granule is a constant now and
+    a granule row bounds its ids whatever it was built at, so such an
+    index loads, ignores the key, and routes with the same ranges and
+    rows."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from deeplake_spark import memo
+    from deeplake_spark.operators.indexes import (
+        InvertedIndex,
+        build_inverted_index,
+        contains_via_index,
+        routed_scan_ranges,
+    )
+
+    src = (spark.range(40)
+           .select((F.col("id") * 6000).alias("doc_id"),
+                   F.when(F.col("id") % 4 == 0, F.lit("alpha needle"))
+                   .otherwise(F.lit("alpha beta")).alias("text")))
+    path = str(tmp_path / "inv_old_meta")
+    build_inverted_index(src).save(path)
+
+    def probe():
+        idx = InvertedIndex.load(spark, path)
+        memo.RANGE_CACHE.clear()
+        return (routed_scan_ranges(idx.probe_granules(["needle"]), None),
+                sorted(r.doc_id for r in
+                       contains_via_index(src, idx, "needle").collect()))
+
+    before = probe()
+    _key, man = memo.manifest(path)
+    assert "range_granule" not in man["meta"]
+    old = {**man, "version": man["version"] + 1,
+           "meta": {**man["meta"], "range_granule": 4096}}
+    log = tmp_path / "inv_old_meta" / memo.MANIFEST_DIR
+    (log / f"{old['version']:08d}.json").write_text(json.dumps(old))
+    assert memo.manifest(path)[1]["meta"]["range_granule"] == 4096
+    assert probe() == before
+    assert before[0] and before[1] == list(range(0, 240_000, 24_000))
 
 
 # ------------------------------------------------ every kind, end to end
@@ -2853,7 +2909,7 @@ _KIND_LAYOUTS = {
     "inverted": ("text", {}, "doclens", "n_docs",
                  ["doclens", "granules", "postings", "stats"],
                  {"granules": "bucket", "postings": "bucket"},
-                 ["n_docs", "floor_frac", "heavy", "range_granule"]),
+                 ["n_docs", "floor_frac", "heavy"]),
     "numeric": ("n", {}, "values", "n", ["values"], {"values": "bucket"},
                 ["vmin", "width", "bucket_counts", "n"]),
     "json": ("meta", {"paths": ["type"]}, "entries", "n_docs",

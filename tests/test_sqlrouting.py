@@ -1120,24 +1120,22 @@ def test_probe_scan_cache_sees_index_deltas(spark, sf_dir, tmp_path):
 
 @pytest.fixture()
 def clustered_sql_docs(spark, tmp_path):
-    """Id-sorted multi-row-group corpus with a clustered 5% term
-    ('xclust', one contiguous id slice) and a uniform 5% term
+    """Id-sorted multi-row-group corpus whose ids i * 8 spread over 25
+    RANGE_GRANULE blocks, with a clustered 5% term ('xclust', one
+    contiguous id slice over granules 6 and 7) and a uniform 5% term
     ('sparse') — the two regimes of probe→row-group pruning."""
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
     from deeplake_spark.operators.indexes import build_inverted_index
 
-    docs = (spark.range(200_000).withColumnRenamed("id", "doc_id")
-            .withColumn(
-                "text",
-                F.concat(
-                    F.lit("alpha beta gamma"),
-                    F.when((F.col("doc_id") >= 50_000)
-                           & (F.col("doc_id") < 60_000),
-                           F.lit(" xclust")).otherwise(F.lit("")),
-                    F.when(F.col("doc_id") % 20 == 0,
-                           F.lit(" sparse")).otherwise(F.lit("")),
-                )))
+    docs = (spark.range(200_000)
+            .select((F.col("id") * 8).alias("doc_id"), F.concat(
+                F.lit("alpha beta gamma"),
+                F.when((F.col("id") >= 50_000) & (F.col("id") < 60_000),
+                       F.lit(" xclust")).otherwise(F.lit("")),
+                F.when(F.col("id") % 20 == 0,
+                       F.lit(" sparse")).otherwise(F.lit("")),
+            ).alias("text")))
     path = str(tmp_path / "csql.parquet")
     (docs.repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id")
      .write.option("parquet.block.size", 256 * 1024).parquet(path))
@@ -1147,11 +1145,9 @@ def clustered_sql_docs(spark, tmp_path):
     d.createOrReplaceTempView("csql_docs")
     rt.register_path(spark, path, "text", "inverted", ip, "doc_id")
     rt.enable(spark)
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "4096")
     try:
         yield d
     finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
         rt.disable(spark)
         rt.clear(spark)
         spark.catalog.dropTempView("csql_docs")
@@ -1169,12 +1165,15 @@ def test_sql_route_pushes_probe_ranges_to_corpus_scan(spark,
     skip — the reference's bitmap→chunk reads); uniform-term probes
     whose ranges span the corpus are coverage-gated back to the plain
     semijoin; rows identical to stock in both regimes."""
+    from tests.test_indexes import pushed_ranges
+
     routed = spark.sql(_csql("xclust"))
     phys = routed._jdf.queryExecution().executedPlan().toString()
-    assert "GreaterThanOrEqual(doc_id,50000)" in phys, phys[:2000]
-    assert "LessThanOrEqual(doc_id,59999)" in phys
+    assert "GreaterThanOrEqual(doc_id,400000)" in phys, phys[:2000]
+    assert pushed_ranges(routed, "doc_id") == \
+        [(400_000, 458_744), (458_752, 479_992)]
     assert sorted(r.doc_id for r in routed.collect()) == \
-        list(range(50_000, 60_000))
+        list(range(400_000, 480_000, 8))
 
     uniform = spark.sql(_csql("sparse"))
     uphys = uniform._jdf.queryExecution().executedPlan().toString()
@@ -1184,7 +1183,7 @@ def test_sql_route_pushes_probe_ranges_to_corpus_scan(spark,
 
     rt.disable(spark)
     assert sorted(r.doc_id for r in spark.sql(_csql("xclust")).collect()) \
-        == list(range(50_000, 60_000))
+        == list(range(400_000, 480_000, 8))
 
 
 def test_sql_range_cache_bounds_plan_time_jobs(spark, clustered_sql_docs):
@@ -1200,6 +1199,128 @@ def test_sql_range_cache_bounds_plan_time_jobs(spark, clustered_sql_docs):
     assert jvm.rangeJobsRun() == j0
     # the memo is bounded the same way the probe scan cache is
     assert jvm.scanCacheCap() == 256
+
+
+def test_sql_contains_range_job_reads_granule_table(spark,
+                                                   clustered_sql_docs):
+    """The Catalyst rule's token-CONTAINS range summary reads the
+    index's build-time `granules` table, bucket- and term-pruned —
+    O(granules) rows, like the TQL route — and never the O(df)
+    postings. Seen from the SQL executions the planning starts: the
+    one range job scans (term, lo, hi), no `row_id`."""
+    jvm = spark._jvm.io.deeplake.spark.ext.IndexRoutingRule
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id():
+        sc.listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() \
+            if n else -1
+
+    seen = last_id()
+    j0 = jvm.rangeJobsRun()
+    routed = spark.sql(_csql("xclust"))
+    routed._jdf.queryExecution().optimizedPlan()
+    assert jvm.rangeJobsRun() == j0 + 1
+    last_id()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 20), 20)
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())
+             if execs.apply(i).executionId() > seen]
+    assert len(plans) == 1, plans
+    assert "lo:bigint,hi:bigint" in plans[0], plans[0]
+    assert "row_id" not in plans[0], plans[0]
+    assert "LeftSemi" in _plan(routed)
+
+
+def test_range_merge_matches_python(spark):
+    """Past MAX_RANGES the JVM rule merges ranges across the same gaps
+    as indexes.coalesce_id_ranges, ties included: 70 equally spaced
+    granule rows leave 69 equal gaps, and both keep the 63 latest."""
+    from deeplake_spark.operators.indexes import (
+        RANGE_GRANULE,
+        coalesce_id_ranges,
+    )
+
+    if not rt.is_available(spark):
+        pytest.skip("extension jar not on driver classpath")
+    gw = spark.sparkContext._gateway
+    jvm = gw.jvm
+    rows = [(g * RANGE_GRANULE, g * RANGE_GRANULE + 9) for g in range(70)]
+    bounds = jvm.java.util.ArrayList()
+    for lo, hi in rows:
+        pair = gw.new_array(jvm.long, 2)
+        pair[0], pair[1] = lo, hi
+        bounds.add(pair)
+    params = gw.new_array(jvm.java.lang.Class, 1)
+    params[0] = jvm.java.lang.Class.forName("java.util.List")
+    merge = jvm.java.lang.Class.forName(
+        "io.deeplake.spark.ext.IndexRoutingRule").getDeclaredMethod(
+        "coalesceRanges", params)
+    merge.setAccessible(True)
+    args = gw.new_array(jvm.java.lang.Object, 1)
+    args[0] = bounds
+    got = [(int(r[0]), int(r[1])) for r in merge.invoke(None, args)]
+    assert got == coalesce_id_ranges(rows) and len(got) == 64
+    assert got[0] == (0, 6 * RANGE_GRANULE + 9)  # the 6 earliest gaps merge
+
+
+def test_sql_and_tql_push_the_same_ranges(spark, tmp_path):
+    """Differential: on an id-sorted corpus spanning three RANGE_GRANULE
+    blocks, token-CONTAINS and BETWEEN push the same row-id range
+    literals onto the corpus scan through ``ds.query`` (Catalyst rule
+    disabled, so only the TQL translator routes) and through
+    ``spark.sql`` over ``as_sql_view`` — the two front ends summarize
+    the same granule rows with the same constants — and return the
+    same rows as the stock filter."""
+    if not rt.is_available(spark):
+        pytest.skip("extension jar not on driver classpath")
+    import deeplake_spark as dl
+    from tests.test_indexes import pushed_ranges
+
+    n = 140_000
+    src = str(tmp_path / "diff.parquet")
+    (spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.when((F.col("id") >= 60_000) & (F.col("id") < 80_000),
+               F.lit("alpha xclust")).otherwise(F.lit("alpha beta"))
+        .alias("text"),
+        (F.col("id") / 10).cast("long").alias("n"))
+     .coalesce(1).write.parquet(src))
+    ds = dl.from_parquet(src, str(tmp_path / "diff_ds"), spark)
+    ds.create_index("text", "inverted")
+    ds.create_index("n", "numeric")
+    try:
+        ds.as_sql_view("diff_docs")
+        for where, sql_where in (
+                ("CONTAINS(text, 'xclust')",
+                 "array_contains(split(lower(text), '\\\\s+'), 'xclust')"),
+                ("n BETWEEN 10000 AND 12999",
+                 "n BETWEEN 10000 AND 12999")):
+            rt.disable(spark)
+            tql_df = ds.query(f"SELECT doc_id WHERE {where}").df
+            tql_ranges = pushed_ranges(tql_df, "_row_id")
+            tql_rows = sorted(r.doc_id for r in tql_df.collect())
+            stock = sorted(r.doc_id for r in spark.sql(
+                f"SELECT doc_id FROM diff_docs WHERE {sql_where}").collect())
+            rt.enable(spark)
+            sql_df = spark.sql(
+                f"SELECT doc_id FROM diff_docs WHERE {sql_where}")
+            assert "LeftSemi" in _plan(sql_df), where
+            assert tql_ranges and pushed_ranges(sql_df, "_row_id") == \
+                tql_ranges, where
+            covered = sum(hi - lo + 1 for lo, hi in tql_ranges)
+            assert covered < n // 4, (where, tql_ranges)
+            assert sorted(r.doc_id for r in sql_df.collect()) == \
+                tql_rows == stock and stock, where
+    finally:
+        rt.disable(spark)
+        rt.clear(spark)
+        for v in ("diff_docs", "diff_docs__postings", "diff_docs__doclens",
+                  "diff_docs__stats", "diff_docs__granules"):
+            spark.catalog.dropTempView(v)
 
 
 def test_sql_id_column_predicates_never_route(spark, sf_dir, tmp_path):
@@ -1239,18 +1360,22 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
     onto the corpus scan — parquet min/max skips the row groups the
     rerank can never keep (the reference's bitmap→chunk reads apply to
     ANN probes too, index_holder.hpp:37-40). Coverage-gated on the
-    persisted corpus size; rows stay the exact top-k."""
+    persisted corpus size; rows stay the exact top-k. Ids i * 4 spread
+    the corpus over 2 RANGE_GRANULE blocks; one probed cell keeps the
+    candidates to an eighth of it, below the coverage gate."""
     if not rt.is_available(spark):
         pytest.skip("extension jar not on driver classpath")
     from deeplake_spark.operators.similarity import build_ivf
+    from tests.test_indexes import pushed_ranges
 
-    n, g = 16_000, 2_000  # 8 contiguous id groups, one direction each
-    e = (spark.range(n).withColumnRenamed("id", "vec_id")
-         .withColumn("embedding", F.expr(
-             f"transform(sequence(0, 7), j -> CASE WHEN j = "
-             f"CAST(vec_id DIV {g} AS INT) THEN 1.0D + "
-             "0.001D * CAST(vec_id % 13 AS DOUBLE) ELSE "
-             "0.001D * CAST((vec_id + j) % 17 AS DOUBLE) END)")))
+    n, g = 32_000, 4_000  # 8 contiguous id groups, one direction each
+    e = spark.range(n).select(
+        (F.col("id") * 4).alias("vec_id"), F.expr(
+            f"transform(sequence(0, 7), j -> CASE WHEN j = "
+            f"CAST(id DIV {g} AS INT) THEN 1.0D + "
+            "0.001D * CAST(id % 13 AS DOUBLE) ELSE "
+            "0.001D * CAST((id + j) % 17 AS DOUBLE) END)")
+        .alias("embedding"))
     path = str(tmp_path / "clustemb.parquet")
     (e.repartitionByRange(4, "vec_id").sortWithinPartitions("vec_id")
      .write.option("parquet.block.size", 128 * 1024).parquet(path))
@@ -1265,22 +1390,22 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
          f"{rt.cosine_sql('embedding', qv)} DESC LIMIT 10")
     want = sorted(r.vec_id for r in spark.sql(q).collect())
     rt.enable(spark)
-    spark.conf.set("spark.sql.deeplake.routing.ann.nprobe", "2")
+    spark.conf.set("spark.sql.deeplake.routing.ann.nprobe", "1")
     spark.conf.set("spark.sql.deeplake.routing.ann.accuracyFactor", "1")
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "256")
     try:
         df = spark.sql(q)
         plan = _plan(df)
         assert "LeftSemi" in plan
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "GreaterThanOrEqual(vec_id" in phys, phys[:3000]
+        # the probed cell is group 0: ids [0, 4 * (g - 1)]
+        assert pushed_ranges(df, "vec_id") == [(0, 4 * (g - 1))]
         assert sorted(r.vec_id for r in df.collect()) == want
     finally:
         rt.disable(spark)
         rt.clear(spark)
         for key in ("spark.sql.deeplake.routing.ann.nprobe",
-                    "spark.sql.deeplake.routing.ann.accuracyFactor",
-                    "spark.sql.deeplake.routing.rangeGranule"):
+                    "spark.sql.deeplake.routing.ann.accuracyFactor"):
             spark.conf.unset(key)
         spark.catalog.dropTempView("clust_emb")
 
@@ -1293,21 +1418,20 @@ def test_sql_ann_route_pushes_probe_ranges_for_clustered_cells(
     d.createOrReplaceTempView("clust_emb_pq")
     rt.register_path(spark, path, "embedding", "pq", pp, "vec_id")
     rt.enable(spark)
-    spark.conf.set("spark.sql.deeplake.routing.ann.nprobe", "2")
+    spark.conf.set("spark.sql.deeplake.routing.ann.nprobe", "1")
     spark.conf.set("spark.sql.deeplake.routing.ann.accuracyFactor", "1")
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "256")
     try:
         df2 = spark.sql("SELECT vec_id FROM clust_emb_pq ORDER BY "
                         f"{rt.cosine_sql('embedding', qv)} DESC LIMIT 10")
         phys2 = df2._jdf.queryExecution().executedPlan().toString()
         assert "GreaterThanOrEqual(vec_id" in phys2, phys2[:3000]
+        assert pushed_ranges(df2, "vec_id") == [(0, 4 * (g - 1))]
         assert sorted(r.vec_id for r in df2.collect()) == want
     finally:
         rt.disable(spark)
         rt.clear(spark)
         for key in ("spark.sql.deeplake.routing.ann.nprobe",
-                    "spark.sql.deeplake.routing.ann.accuracyFactor",
-                    "spark.sql.deeplake.routing.rangeGranule"):
+                    "spark.sql.deeplake.routing.ann.accuracyFactor"):
             spark.conf.unset(key)
         spark.catalog.dropTempView("clust_emb_pq")
 
@@ -1716,6 +1840,7 @@ def test_sql_fetchback_rebuild_after_append_sees_new_docs(spark,
         InvertedIndex,
         build_inverted_index,
     )
+    from tests.test_indexes import pushed_ranges
 
     n = 300
     rows = [(i, f"filler{i % 5} words here"
@@ -1729,11 +1854,9 @@ def test_sql_fetchback_rebuild_after_append_sees_new_docs(spark,
                          "doc_id").save(idx_path)
     spark.read.parquet(corpus_path).createOrReplaceTempView("snap_docs")
     rt.register_index_views(spark, "snap_docs", idx_path)
-    # kb-row fixture: the default 64k-row granule folds the whole id
-    # space into one [min,max] range that the coverage gate then
-    # (soundly) declines — shrink the granule so ranges resolve like
-    # they do on a real multi-granule corpus
-    spark.conf.set("spark.sql.deeplake.routing.rangeGranule", "64")
+    # kb-row fixture, one granule: the append delta's granule rows stay
+    # apart from the base's, so the new id gets its own range instead
+    # of widening the old one past the coverage gate
     try:
         q1 = rt.bm25_topk_sql("snap_docs", ["needlezz"], k=10,
                               fetch_cols=["doc_id", "text"],
@@ -1743,10 +1866,8 @@ def test_sql_fetchback_rebuild_after_append_sees_new_docs(spark,
 
         # delta append: one new matching doc at the next ingest id
         # (outside the old snapshot's [10,14] range; contiguous ids are
-        # the ingest layout — a far-flung sparse id would make the
-        # granule span exceed the row-count coverage gate and the
-        # builder would soundly skip the prefilter);
-        # new corpus files + index delta + re-registration
+        # the ingest layout); new corpus files + index delta +
+        # re-registration
         new = spark.createDataFrame(
             [(300, "totally new needlezz document")],
             "doc_id long, text string")
@@ -1762,10 +1883,9 @@ def test_sql_fetchback_rebuild_after_append_sees_new_docs(spark,
         got2 = {r.doc_id for r in spark.sql(q2).collect()}
         assert 300 in got2 and ids1 <= got2
         # and the rebuilt statement still carries a pushed range filter
-        assert "GreaterThanOrEqual(doc_id" in spark.sql(q2) \
-            ._jdf.queryExecution().executedPlan().toString()
+        assert pushed_ranges(spark.sql(q2), "doc_id") == \
+            [(10, 14), (300, 300)]
     finally:
-        spark.conf.unset("spark.sql.deeplake.routing.rangeGranule")
         for v in ("snap_docs", "snap_docs__postings",
                   "snap_docs__doclens", "snap_docs__stats"):
             spark.catalog.dropTempView(v)

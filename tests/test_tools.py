@@ -155,3 +155,65 @@ def test_saved_index_path_is_the_same_in_every_process():
         env={**os.environ, "PYTHONHASHSEED": seed}).stdout.strip()
         for seed in ("1", "2")}
     assert len(paths) == 1 and "dls_inv_" in paths.pop()
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_JVM = os.path.join(_ROOT, "deeplake_spark", "plans", "jvm")
+
+
+def test_routing_constants_match_jvm_rule():
+    """The TQL routes (operators/indexes.py) and the plain-SQL Catalyst
+    rule (IndexRoutingRule.java) gate and prune with the same numbers
+    — selectivity gate and corpus floor defaults, the range granule,
+    range count, coverage and chunk cap — and read the same conf keys,
+    so one query cannot route or prune differently by front end."""
+    import re
+
+    from deeplake_spark.operators import indexes as ix
+
+    with open(os.path.join(_JVM, "src", "io", "deeplake", "spark", "ext",
+                           "IndexRoutingRule.java")) as f:
+        src = f.read()
+
+    def java(name):
+        m = re.search(rf"static final \w+ {name}\s*=\s*([^;]+);", src)
+        assert m, name
+        v = m.group(1).strip()
+        if v.startswith('"'):
+            return v.strip('"')
+        return float(v.rstrip("L").replace("_", ""))
+
+    python = {
+        "DEFAULT_MAX_SELECTIVITY": ix.DEFAULT_MAX_SELECTIVITY,
+        "DEFAULT_MIN_CORPUS_ROWS": ix.DEFAULT_MIN_CORPUS_ROWS,
+        "RANGE_GRANULE": ix.RANGE_GRANULE,
+        "MAX_RANGES": ix.MAX_RANGES,
+        "MAX_RANGE_COVERAGE": ix.MAX_RANGE_COVERAGE,
+        "RANGE_CHUNK_CAP": ix._RANGE_CHUNK_CAP,
+        "MAX_SELECTIVITY_KEY": ix.MAX_SELECTIVITY_KEY,
+        "MIN_CORPUS_ROWS_KEY": ix.MIN_CORPUS_ROWS_KEY,
+        "RANGE_PRUNE_KEY": ix.RANGE_PRUNE_KEY,
+    }
+    assert {name: java(name) for name in python} == python
+
+
+def test_committed_jar_is_built_from_committed_sources():
+    """tools/build_ext_jar.sh stamps the jar with the sha256 of the
+    `sha256sum` listing of its Java sources; a source edit committed
+    without a rebuild leaves a stale jar that every SQL-routing test
+    would silently run instead of the edited rule."""
+    import hashlib
+    import zipfile
+
+    src = os.path.join(_JVM, "src")
+    rels = sorted("./" + os.path.relpath(os.path.join(d, name), src)
+                  for d, _, names in os.walk(src)
+                  for name in names if name.endswith(".java"))
+    listing = ""
+    for rel in rels:
+        with open(os.path.join(src, rel), "rb") as f:
+            listing += f"{hashlib.sha256(f.read()).hexdigest()}  {rel}\n"
+    with zipfile.ZipFile(os.path.join(_JVM, "deeplake-spark-ext.jar")) as z:
+        stamped = z.read("META-INF/deeplake-src.sha256").decode().strip()
+    assert stamped == hashlib.sha256(listing.encode()).hexdigest(), \
+        "stale jar: rebuild it with tools/build_ext_jar.sh"
